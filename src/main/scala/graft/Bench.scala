@@ -28,9 +28,9 @@ object Bench {
       // sets it defensively for sessions built elsewhere.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
-    // ERROR, not WARN: per-query function registration logs one WARN line
-    // each, and at 109 queries those lines crowd the driver's bounded
-    // stdout-tail capture that must end with our bare JSON result line.
+    // ERROR, not WARN: Spark's WARN lines across the whole query suite
+    // would crowd a bounded capture of stdout's tail, which must end with
+    // our bare JSON result line.
     spark.sparkContext.setLogLevel("ERROR")
 
     // JVM/codegen warm-up on the smallest SF so first-query JIT cost does

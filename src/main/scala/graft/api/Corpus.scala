@@ -1,10 +1,13 @@
 package graft.api
 
 import graft.ext.Similarity
-import graft.GraftExtensions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.BpeCount.bpe_count
+import graft.functions.DotProduct.dot_d
+import graft.functions.LevBytes.lev_bytes
+import graft.functions.RollingHash.rolling_hash
 
 /** Fluent corpus-pipeline API: composes the engine's text/dedup/similarity
   * operators into the standard pre-training data flow. Every stage is a
@@ -113,7 +116,6 @@ final case class Corpus(df: DataFrame) {
     * band collisions.
     */
   def dedupNearSimHash(maxHamming: Int = 2): Corpus = chain { d =>
-    GraftExtensions.register(d.sparkSession)
     def sig = d.select(col("doc_id"),
       graft.functions.SimHash32.simhash32(col("text")).as("sh"))
     def banded = graft.ext.Dedup.simhash3Bands(sig)
@@ -305,7 +307,6 @@ final case class Corpus(df: DataFrame) {
     */
   def decontaminateFuzzy(evalDocs: DataFrame, minSim: Double = 0.30): Corpus =
     chain { d =>
-      GraftExtensions.register(d.sparkSession)
       val verifyParallelism =
         d.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
       val sh = Corpus.shingles4(d)
@@ -328,7 +329,7 @@ final case class Corpus(df: DataFrame) {
         // deflates sim on multi-byte text and silently misses paraphrased
         // contamination in non-ASCII corpora (round-7 ADVICE).
         .withColumn("__sim", lit(1.0) -
-          expr("lev_bytes(text, __ev_text)").cast("double") /
+          lev_bytes(col("text"), col("__ev_text")).cast("double") /
             greatest(octet_length(col("text")), octet_length(col("__ev_text"))))
         .filter(col("__sim") >= minSim)
         .select(col("doc_id")).distinct()
@@ -757,8 +758,7 @@ final case class Corpus(df: DataFrame) {
     * or [[lengthBatches]]' tokens argument.
     */
   def withBpeTokenCount(): Corpus = chain { d =>
-    GraftExtensions.register(d.sparkSession)
-    d.withColumn("n_tok_bpe", expr("CAST(bpe_count(text) AS BIGINT)"))
+    d.withColumn("n_tok_bpe", bpe_count(col("text")).cast("bigint"))
   }
 
   /** Unigram-tokenizer token accounting (x_tok3): `n_tok_unigram` — the
@@ -888,12 +888,9 @@ final case class Corpus(df: DataFrame) {
   def epochOrder(epochs: Int, shards: Int = 64): DataFrame =
     graft.ext.PipelineOps7.epochOrder(df, epochs, shards)
 
-  /** Content + bag-of-words fingerprints (rolling_hash needs
-    * GraftExtensions registered on the session).
-    */
+  /** Content (native `rolling_hash`) + bag-of-words fingerprints. */
   def withFingerprints(): Corpus = chain { d =>
-    GraftExtensions.register(d.sparkSession)
-    d.withColumn("content_fp", expr("rolling_hash(text)"))
+    d.withColumn("content_fp", rolling_hash(col("text")))
       .withColumn("bow_fp",
         md5(array_join(array_sort(array_distinct(graft.clean.CleanFns.tokens(col("text")))), " ")))
   }
@@ -1087,9 +1084,8 @@ object Corpus {
         d.withColumn("n_chars", length(col("text")).cast(d.schema("n_chars").dataType))
       else d
     if (chars.columns.contains("n_tok_bpe")) {
-      graft.GraftExtensions.register(chars.sparkSession)
       chars.withColumn("n_tok_bpe",
-        expr("bpe_count(text)").cast(chars.schema("n_tok_bpe").dataType))
+        bpe_count(col("text")).cast(chars.schema("n_tok_bpe").dataType))
     } else chars
   }
 
@@ -1150,10 +1146,9 @@ object Corpus {
     * similarity operators (shares Similarity.intVec).
     */
   def vectors(spark: SparkSession, dir: String): DataFrame = {
-    GraftExtensions.register(spark)
     graft.Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"), expr(Similarity.intVec).as("v"))
-      .withColumn("n2", expr("dot_d(v, v)"))
+      .withColumn("n2", dot_d(col("v"), col("v")))
   }
 
   /** Embedding near-duplicate pairs (x_ded13): banded sign-LSH candidates

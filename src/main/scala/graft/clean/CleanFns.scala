@@ -88,14 +88,10 @@ object CleanFns {
     * inflate token counts — and so batch, streaming, the native codegen
     * expressions, and the DuckDB oracles cannot drift from each other.
     * `tokensDuck` is the same definition in DuckDB's dialect for oracle
-    * SQL; `tokensSpark` the Spark-SQL-dialect fragment for expr() strings.
+    * SQL.
     */
   def tokens(c: Column): Column =
     filter(split(c, "\\s+"), tkn => length(tkn) > 0)
-
-  /** Spark-SQL fragment of [[tokens]] for use inside expr() strings. */
-  def tokensSpark(e: String): String =
-    s"filter(split($e, '\\\\s+'), tkn -> length(tkn) > 0)"
 
   /** DuckDB fragment of [[tokens]] for oracle SQL (`tkn`, not `t`: several
     * oracles alias a CTE `t`, and the lambda parameter must not shadow it).

@@ -45,10 +45,7 @@ object UrlFns {
     * resolution / canonicalization stages stay under janino's 64 KB
     * whole-stage-codegen method limit (round-13 verdict #1).
     */
-  def canonicalUrl(c: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.CanonicalUrl(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
+  def canonicalUrl(c: Column): Column = graft.functions.CanonicalUrl.canonical_url(c)
 
   /** The declarative chain the native expression replicates — kept as
     * the in-engine second implementation (UrlFnsSpec pins native ≡

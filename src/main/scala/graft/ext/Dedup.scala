@@ -3,6 +3,8 @@ package graft.ext
 import graft.{Probe, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.DotProduct.dot_d
+import graft.functions.NfkcCasefold.nfkc_casefold
 
 /** Deduplication operators for a large-scale training-data pipeline.
   *
@@ -108,7 +110,6 @@ object Dedup {
     * declarative form above remains the oracle-checked reference shape.
     */
   def minhashBandsNative(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs.select(col("doc_id"),
         posexplode(graft.functions.MinHashBands.minhash_bands(col("text"))))
       .select(col("doc_id"), col("pos").cast("long").as("band"), col("col").as("sig"))
@@ -175,7 +176,6 @@ object Dedup {
   private val ded2b = Probe(
     "x_ded2b_minhash_native",
     lshPairsOracleSql) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     // narrow signature generation: no persist needed — each join side
     // recomputes a scan-local projection, no shuffle either way
     def bands = Tables(s, dir, "documents")
@@ -702,11 +702,10 @@ object Dedup {
       |WHERE list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2])) /
       |      sqrt(a.n2 * b.n2) >= 0.35
       |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     val n = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         expr(Similarity.intVec).as("v"))
-      .withColumn("n2", expr("dot_d(v, v)"))
+      .withColumn("n2", dot_d(col("v"), col("v")))
       // persisted: unlike the banded chains, the two all-pairs join sides
       // are NOT identical subtrees once the a/b blocks diverge, so
       // ReusedExchange cannot serve them (measured 2x lazily, round 7)
@@ -716,7 +715,7 @@ object Dedup {
     val b = n.select(col("vec_id").as("b_id"), col("label").as("label_b"),
       col("v").as("bv"), col("n2").as("bn2"))
     a.join(b, a("label") === b("label_b") && a("a_id") < b("b_id"))
-      .withColumn("cos", expr("dot_d(av, bv)") / sqrt(col("an2") * col("bn2")))
+      .withColumn("cos", dot_d(col("av"), col("bv")) / sqrt(col("an2") * col("bn2")))
       .filter(col("cos") >= 0.35)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
       .orderBy("a_id", "b_id")
@@ -808,7 +807,6 @@ object Dedup {
   private val ded3c = Probe(
     "x_ded3c_simhash_native",
     simhashOracleSql) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     def sig = Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
         graft.functions.SimHash32.simhash32(col("text")).as("simhash"))
@@ -908,8 +906,7 @@ object Dedup {
     * output to [[minhashBands]] on an already-normalized corpus).
     */
   def minhashBandsNormalized(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
-    minhashBands(docs.withColumn("text", expr("nfkc_casefold(text)")))
+    minhashBands(docs.withColumn("text", nfkc_casefold(col("text"))))
   }
 
   /** X-DED23 — cross-lingual near-dup LSH: the x_ded2 chain over

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.{Probe, Tables}
+import graft.functions.DotProduct.dot_d
 
 /** LSH geometry for embedding near-dup detection: `dims`-dimensional
   * vectors, `planes` hyperplane sign bits, grouped into `bands` bands of
@@ -89,10 +90,9 @@ object EmbedDedup {
   /** Plane bb's sign row as a SQL array literal — `dims` ±1.0 doubles, the
     * broadcast-literal form the native dot product consumes.
     */
-  private def planeLit(cfg: EmbedLsh, bb: Int): String =
-    signsFor(cfg).slice((bb - 1) * cfg.dims, bb * cfg.dims)
-      .map(s => if (s > 0) "1.0D" else "-1.0D")
-      .mkString("array(", ", ", ")")
+  private[ext] def planeLit(cfg: EmbedLsh, bb: Int): Column =
+    array(signsFor(cfg).slice((bb - 1) * cfg.dims, bb * cfg.dims)
+      .map(s => lit(if (s > 0) 1.0 else -1.0)): _*)
 
   /** One native-codegen dot product of the quantized vector against plane
     * bb's literal sign row. This is the load-bearing formulation: the
@@ -106,16 +106,15 @@ object EmbedDedup {
     * algebra, same oracle, 200x faster.
     */
   private def planeDot(cfg: EmbedLsh, bb: Int): Column =
-    expr(s"dot_d(v, ${planeLit(cfg, bb)})")
+    dot_d(col("v"), planeLit(cfg, bb))
 
   /** (vec_id, v, n2, bits): quantized vector, self-dot, and the sign bits
     * as an int array — one narrow projection, zero exchanges.
     */
   def signatures(embeddings: DataFrame, cfg: EmbedLsh = default): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
     embeddings
       .withColumn("v", expr(Similarity.intVec))
-      .withColumn("n2", expr("dot_d(v, v)"))
+      .withColumn("n2", dot_d(col("v"), col("v")))
       .withColumn("bits", array((1 to cfg.planes).map(bb =>
         when(planeDot(cfg, bb) > 0, 1).otherwise(0)): _*))
   }
@@ -127,7 +126,6 @@ object EmbedDedup {
     * codegen.
     */
   def bandSignatures(embeddings: DataFrame, cfg: EmbedLsh = default): DataFrame = {
-    graft.GraftExtensions.register(embeddings.sparkSession)
     val bandCols = (1 to cfg.bands).map { k =>
       (1 to cfg.bandBits).map { j =>
         when(planeDot(cfg, (k - 1) * cfg.bandBits + j) > 0,
@@ -136,7 +134,7 @@ object EmbedDedup {
     }
     embeddings
       .withColumn("v", expr(Similarity.intVec))
-      .withColumn("n2", expr("dot_d(v, v)"))
+      .withColumn("n2", dot_d(col("v"), col("v")))
       .select(col("vec_id"), col("v"), col("n2"), array(bandCols: _*).as("bands"))
   }
 
@@ -200,7 +198,7 @@ object EmbedDedup {
       // division — ANSI mode throws on /0 where the oracle's NaN comparison
       // would merely evaluate false
       .filter(col("an2") > 0 && col("bn2") > 0)
-      .withColumn("cos", expr("dot_d(av, bv)") / sqrt(col("an2") * col("bn2")))
+      .withColumn("cos", dot_d(col("av"), col("bv")) / sqrt(col("an2") * col("bn2")))
       .filter(col("cos") >= tau)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
   }

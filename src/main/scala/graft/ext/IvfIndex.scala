@@ -4,6 +4,7 @@ import graft.{Probe, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.DotProduct.{dot_d, sq_dist}
 
 /** Persisted IVF index: the train-once / query-many ANN pattern.
   *
@@ -26,7 +27,7 @@ object IvfIndex {
 
   private def withD2(vectors: DataFrame, centroids: DataFrame): DataFrame =
     vectors.crossJoin(broadcast(centroids))
-      .withColumn("d2", expr("dot_d(v, v) - 2 * dot_d(v, cv) + dot_d(cv, cv)"))
+      .withColumn("d2", sq_dist(col("v"), col("cv")))
 
   private val byD2 = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_id"))
 
@@ -36,7 +37,6 @@ object IvfIndex {
     */
   def train(spark: SparkSession, embeddings: DataFrame,
       nCentroids: Int = 8, lloydSteps: Int = 1): Handle = {
-    graft.GraftExtensions.register(spark)
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
 
     // deterministic seeds = the nCentroids smallest vec_ids PRESENT (a
@@ -61,7 +61,7 @@ object IvfIndex {
     val assignments = withD2(iv, cent)
       .withColumn("rn", row_number().over(byD2)).filter(col("rn") === 1)
       .select(col("vec_id"), col("c_id").as("cell"), col("v"),
-        expr("dot_d(v, v)").as("n2"))
+        dot_d(col("v"), col("v")).as("n2"))
     Handle(cent, assignments)
   }
 
@@ -76,7 +76,6 @@ object IvfIndex {
   }
 
   def load(spark: SparkSession, dir: String): Handle = {
-    graft.GraftExtensions.register(spark)
     Handle(
       spark.read.parquet(s"$dir/centroids"),
       spark.read.parquet(s"$dir/assignments"))
@@ -93,13 +92,12 @@ object IvfIndex {
     * them) — which is exactly what the x_sim9 oracle recomputes.
     */
   def append(spark: SparkSession, dir: String, newEmbeddings: DataFrame): Unit = {
-    graft.GraftExtensions.register(spark)
     val cent = spark.read.parquet(s"$dir/centroids")
     val iv = newEmbeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
     withD2(iv, cent)
       .withColumn("rn", row_number().over(byD2)).filter(col("rn") === 1)
       .select(col("vec_id"), col("c_id").as("cell"), col("v"),
-        expr("dot_d(v, v)").as("n2"))
+        dot_d(col("v"), col("v")).as("n2"))
       .write.mode("append").partitionBy("cell").parquet(s"$dir/assignments")
   }
 
@@ -112,13 +110,13 @@ object IvfIndex {
     val probes = withD2(q0, h.centroids)
       .withColumn("rn", row_number().over(byD2)).filter(col("rn") <= nProbes)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        expr("dot_d(v, v)").as("qn2"), col("c_id").as("cell"))
+        dot_d(col("v"), col("v")).as("qn2"), col("c_id").as("cell"))
     val wR = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id"))
     h.assignments
       .join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumnRenamed("vec_id", "cand_id")
-      .withColumn("cos", expr("dot_d(qv, v)") / sqrt(col("qn2") * col("n2")))
+      .withColumn("cos", dot_d(col("qv"), col("v")) / sqrt(col("qn2") * col("n2")))
       .withColumn("rnk", row_number().over(wR).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("rnk"), col("cand_id").as("c_id"),

@@ -102,29 +102,8 @@ object KnLm {
 
   /** The trigram-TYPE frame (h3, c3, hab, hbc, hb, c): the single
     * digest-keyed pass over the trigram stream from which every KN table
-    * derives. Exposed so the index/store builders can persist it across
-    * their multiple actions (5 collects / 6 writes would otherwise
-    * recompute the stream aggregation once per consumer).
+    * derives.
     */
-  private[ext] def trigramTypesForProfile(tok: DataFrame): DataFrame = trigramTypes(tok)
-  private[ext] def bigramTypesForProfile(tok: DataFrame): DataFrame = bigramTypes(tok)
-
-  /** Profiler-only staged variant of self-scored knScore: type frames
-    * written once to scratch parquet (no CacheManager involvement — the
-    * bench's clearCache-between-repeats drops persists ASYNC and bills
-    * the drain to the next repeat), scoring reads them back.
-    */
-  private[ext] def knScoreStagedForProfile(docs: DataFrame): DataFrame = {
-    val p = graft.util.TempDirs.scratch("graft_kn_prof")
-    val tok = PipelineOps10.docTokens(graft.Tables.spreadDf(docs))
-    trigramTypes(tok).write.mode("overwrite").parquet(s"$p/t3f")
-    bigramTypes(tok).write.mode("overwrite").parquet(s"$p/b2t")
-    val s = docs.sparkSession
-    knScoreWithTok(tok,
-      knTablesFromTypes(s.read.parquet(s"$p/t3f"), s.read.parquet(s"$p/b2t"),
-        tok.select(explode(col("ws")).as("w")).agg(count_distinct(col("w")).as("v"))))
-  }
-
   private def trigramTypes(tok: DataFrame): DataFrame =
     trigramsTok(tok)
       // digests per TYPE, not per occurrence (guide §1.2 per-task work):
@@ -322,7 +301,6 @@ object KnLm {
     * output, zero exchanges).
     */
   def knScoreNative(score: DataFrame, idx: graft.functions.KnIndex): DataFrame = {
-    graft.GraftExtensions.register(score.sparkSession)
     score
       .withColumn("__kn", graft.functions.KnNll.kn_nll(col("text"), idx))
       .filter(col("__kn").isNotNull)

@@ -157,10 +157,7 @@ object LinkGraph {
     * composition.
     */
   def resolveHref(pageUrl: Column, href: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.ResolveHref(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(pageUrl),
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(href)))
+    graft.functions.ResolveHref.resolve_href(pageUrl, href)
 
   /** The declarative Column twin of the native expression — the
     * in-engine second implementation LinkGraphSpec pins the native

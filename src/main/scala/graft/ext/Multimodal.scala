@@ -228,12 +228,18 @@ object Multimodal {
       // spread pessimization this caused; guide §4.5 init-once-per-task).
       val reader = javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
       rows.map { r =>
+        def undecodable(cause: Throwable) = new IllegalArgumentException(
+          s"doc ${r.doc_id}: content is not a decodable image", cause)
         val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
           new java.io.ByteArrayInputStream(r.content))
-        reader.setInput(iis, true)
-        val img = reader.read(0)
-        iis.close()
-        require(img != null, s"doc ${r.doc_id}: content is not a decodable image")
+        val img =
+          try {
+            reader.setInput(iis, true)
+            reader.read(0)
+          } catch {
+            case e: java.io.IOException => throw undecodable(e)
+          } finally iis.close()
+        if (img == null) throw undecodable(null)
         val raster = img.getRaster
         val w = img.getWidth
         val h = img.getHeight

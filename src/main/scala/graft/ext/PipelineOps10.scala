@@ -275,7 +275,6 @@ object PipelineOps10 {
     * exchanges; the novelty-scoring pattern applied to LM scoring).
     */
   def lmScoreNative(score: DataFrame, idx: graft.functions.LmIndex): DataFrame = {
-    graft.GraftExtensions.register(score.sparkSession)
     score
       .withColumn("__lm", graft.functions.LmNll.lm_nll(col("text"), idx))
       .filter(col("__lm").isNotNull)
@@ -1105,7 +1104,6 @@ object PipelineOps10 {
       |  CAST(MAX(na) AS BIGINT) AS n_a, CAST(MAX(nb) AS BIGINT) AS n_b,
       |  round(sqrt(SUM((ma - mb) * (ma - mb))), 4) AS drift_l2
       |FROM m GROUP BY label ORDER BY label""".stripMargin) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     val iv = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), expr(Similarity.intVec).as("v"))
     val d = iv.select(col("label"), (col("vec_id") % 2).as("side"),

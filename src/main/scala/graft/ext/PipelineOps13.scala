@@ -177,7 +177,6 @@ object PipelineOps13 {
     * RepetitionSignalsSpec pins native ≡ declarative ≡ interpreted).
     */
   def repetitionSignalsNative(docs: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs
       .withColumn("__r", graft.functions.RepetitionSignals.repetition_signals(col("text")))
       .select(col("doc_id"), col("__r.n_segs").as("n_segs"),

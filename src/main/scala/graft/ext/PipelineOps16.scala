@@ -566,14 +566,5 @@ object PipelineOps16 {
       .orderBy("doc_id")
   }
 
-  // dev-profiler access (ProfilePipe8; guide §1 stage timing)
-  private[ext] def pipe8ForProfile(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = pipe8.run(s, dir)
-  private[ext] def pipe8ShardForProfile(docs: org.apache.spark.sql.DataFrame) =
-    pipe8Shard(docs)
-  private[ext] def pipe8FlagsForProfile(s: org.apache.spark.sql.SparkSession,
-      art: String, shard: org.apache.spark.sql.DataFrame, runDir: String) =
-    pipe8Flags(s, art, shard, runDir)
-
   val all: Seq[Probe] = Seq(enc2, enc3, pipe8, pipe9)
 }

@@ -92,7 +92,6 @@ object PipelineOps3 {
     * streaming path (`streaming.DocStreams`).
     */
   def addQualityRuleSignals(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs
       .withColumn("__qs",
         graft.functions.QualitySignals.quality_signals(lower(col("text"))))

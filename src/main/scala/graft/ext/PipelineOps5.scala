@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Probe, Tables}
+import graft.functions.SortedCountIn.sorted_count_in
 
 /** Round-5 pipeline operators: per-domain document caps and corpus-level
   * boilerplate detection — the two curation steps a crawl pipeline runs
@@ -139,11 +140,10 @@ object PipelineOps5 {
     * the broadcast array) — stream-capable, zero doc shuffles.
     */
   def scoreAgainstCommons(docs: DataFrame, commons: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     withTris(docs)
       .crossJoin(broadcast(commons)) // 1-row build side -> broadcast nested loop
       .withColumn("n_tri", size(col("__tris")).cast("long"))
-      .withColumn("n_common", expr("sorted_count_in(__tris, __commons)"))
+      .withColumn("n_common", sorted_count_in(col("__tris"), col("__commons")))
       .withColumn("bp_ppm", expr("(n_common * 1000000) DIV n_tri"))
       .drop("__tris", "__commons")
   }

@@ -5,6 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Probe, Tables}
+import graft.functions.BloomHits.bloom_hits
+import graft.functions.BpeCount.bpe_count
+import graft.functions.NgramMd5.ngram_md5
+import graft.functions.SortedCountIn.sorted_count_in
 
 /** Round-6 curation operators: corpus-level novelty scoring, information-
   * density (token-entropy) scoring, length-bucketed batch assembly, and
@@ -51,11 +55,10 @@ object PipelineOps7 {
     * the cost of a small seen-side false-positive rate).
     */
   def gramSet(docs: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     // native ngram_md5 dedupes per-doc BEFORE the explode, so the
     // distinct's shuffle carries each doc's digest set, not every gram
     // position
-    docs.select(explode(expr("ngram_md5(text, 4)")).as("g")).distinct()
+    docs.select(explode(ngram_md5(col("text"), 4)).as("g")).distinct()
       .agg(sort_array(collect_list(col("g"))).as("__grams"))
   }
 
@@ -67,7 +70,6 @@ object PipelineOps7 {
     * ("how much of this new document is new content").
     */
   def scoreNoveltyAgainst(docs: DataFrame, gramSet: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     // per-ROW distinct-gram digest array (no explode + per-doc aggregation:
     // an agg would make the stage stateful under streaming; this keeps it a
     // pure projection). Native `ngram_md5` — one tight JVM pass per row
@@ -76,11 +78,11 @@ object PipelineOps7 {
     // under 4 tokens yield an empty array and are dropped, exactly the
     // declarative size(ws) >= 4 filter.
     docs
-      .withColumn("__g", expr("ngram_md5(text, 4)"))
+      .withColumn("__g", ngram_md5(col("text"), 4))
       .filter(size(col("__g")) > 0)
       .crossJoin(broadcast(gramSet)) // 1-row build side -> broadcast nested loop
       .withColumn("n_grams", size(col("__g")).cast("long"))
-      .withColumn("n_seen", expr("CAST(sorted_count_in(__g, __grams) AS BIGINT)"))
+      .withColumn("n_seen", sorted_count_in(col("__g"), col("__grams")).cast("bigint"))
       .withColumn("novelty_ppm", expr("(n_grams - n_seen) * 1000000 DIV n_grams"))
       .select(col("doc_id"), col("n_grams"), col("n_seen"), col("novelty_ppm"))
   }
@@ -341,14 +343,13 @@ object PipelineOps7 {
   def gramBloom(docs: DataFrame, hexChars: Int = 4, k: Int = 3): DataFrame = {
     require(hexChars >= 1 && hexChars <= 7, s"hexChars must be in [1, 7]; got $hexChars")
     require(k >= 1 && k * hexChars <= 32, s"need 1 <= k and k*hexChars <= 32; got k=$k")
-    graft.GraftExtensions.register(docs.sparkSession)
     val slotsPerFn = 1L << (4 * hexChars)
     val nWords = (k * slotsPerFn + 63) / 64
     def pos(i: Int) =
       expr(s"$i * ${slotsPerFn}L + conv(substr(g, ${1 + hexChars * i}, $hexChars), 16, 10)")
     // bit_or is idempotent -> no distinct: ONE map-side-combined exchange
     // keyed on the word index, not two (slot-distinct + word)
-    docs.select(explode(expr("ngram_md5(text, 4)")).as("g"))
+    docs.select(explode(ngram_md5(col("text"), 4)).as("g"))
       .select(explode(array((0 until k).map(pos): _*)).as("p"))
       .groupBy(expr("p DIV 64").as("w"))
       .agg(expr("bit_or(shiftleft(1L, CAST(p % 64 AS INT)))").as("bits"))
@@ -370,13 +371,12 @@ object PipelineOps7 {
     */
   def scoreNoveltyBloom(docs: DataFrame, bloom: DataFrame,
       hexChars: Int = 4, k: Int = 3): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs
-      .withColumn("__g", expr("ngram_md5(text, 4)"))
+      .withColumn("__g", ngram_md5(col("text"), 4))
       .filter(size(col("__g")) > 0)
       .crossJoin(broadcast(bloom)) // 1-row bitmap build side -> broadcast NLJ
       .withColumn("n_grams", size(col("__g")).cast("long"))
-      .withColumn("n_seen_bloom", expr(s"bloom_hits(__g, __bloom, $hexChars, $k)"))
+      .withColumn("n_seen_bloom", bloom_hits(col("__g"), col("__bloom"), hexChars, k))
       .withColumn("novelty_ppm", expr("(n_grams - n_seen_bloom) * 1000000 DIV n_grams"))
       .select(col("doc_id"), col("n_grams"), col("n_seen_bloom"), col("novelty_ppm"))
   }
@@ -492,11 +492,10 @@ object PipelineOps7 {
        |  CAST(COALESCE(cnt.n_bpe, 0) AS BIGINT) AS n_tok_bpe
        |FROM t LEFT JOIN cnt ON cnt.doc_id = t.doc_id
        |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     Tables(s, dir, "documents")
       .select(col("doc_id"),
         size(graft.clean.CleanFns.tokens(col("text"))).cast("long").as("n_words"),
-        expr("CAST(bpe_count(text) AS BIGINT)").as("n_tok_bpe"))
+        bpe_count(col("text")).cast("bigint").as("n_tok_bpe"))
       .orderBy("doc_id")
   }
 

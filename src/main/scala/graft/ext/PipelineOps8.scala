@@ -5,6 +5,8 @@ import graft.clean.CleanFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.DotProduct.{dot_d, sq_dist}
+import graft.functions.LevBytes.lev_bytes
 
 /** Round-7 additions (second wave): segment-level dedup with document
   * reconstruction, cluster-scoped semantic dedup (SemDeDup shape), fuzzy
@@ -221,7 +223,7 @@ object PipelineOps8 {
     val assign = semAssign(s, embeddings)
     val close = semCandidates(assign, cap)
       .filter(col("xn2") > 0 && col("yn2") > 0)
-      .filter(expr("dot_d(xv, yv)") / sqrt(col("xn2") * col("yn2")) >= tau)
+      .filter(dot_d(col("xv"), col("yv")) / sqrt(col("xn2") * col("yn2")) >= tau)
       .groupBy("vec_id").agg(count(lit(1)).as("n_close"))
     assign.select(col("vec_id"), col("cell").cast("long").as("cell"))
       .join(close, Seq("vec_id"), "left")
@@ -235,16 +237,15 @@ object PipelineOps8 {
     */
   private def semAssign(s: org.apache.spark.sql.SparkSession,
       embeddings: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(s)
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
     val cent = iv.filter(col("vec_id") < 8)
       .select(col("vec_id").as("c_id"), col("v").as("cv"))
     val wA = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_id"))
     iv.crossJoin(broadcast(cent))
-      .withColumn("d2", expr("dot_d(v, v) - 2 * dot_d(v, cv) + dot_d(cv, cv)"))
+      .withColumn("d2", sq_dist(col("v"), col("cv")))
       .withColumn("rn", row_number().over(wA)).filter(col("rn") === 1)
       .select(col("vec_id"), col("c_id").as("cell"), col("v"),
-        expr("dot_d(v, v)").as("n2"))
+        dot_d(col("v"), col("v")).as("n2"))
   }
 
   /** The bounded candidate pairs (vec_id, y_id, cell, xv/yv, xn2/yn2):
@@ -345,7 +346,6 @@ object PipelineOps8 {
     //    as a no-op (leaving only the aggregate's ENSURE_REQUIREMENTS
     //    exchange, which AQE coalesces to 1); a REPARTITION_BY_NUM
     //    exchange on doc_id survives both the optimizer and AQE.
-    graft.GraftExtensions.register(s)
     val verifyParallelism =
       s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val cand = sh.filter(col("doc_id") % 25 =!= 0)
@@ -359,7 +359,7 @@ object PipelineOps8 {
     cand
       .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
       .join(evalTexts, Seq("eval_id"))
-      .withColumn("lev", expr("lev_bytes(text, ev_text)"))
+      .withColumn("lev", lev_bytes(col("text"), col("ev_text")))
       // byte numerator / byte denominator: octet_length keeps the units
       // consistent on multi-byte text (a char denominator deflates sim
       // below 0 in the worst case); DuckDB's strlen is the byte twin.

@@ -5,6 +5,7 @@ import graft.clean.CleanFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.DotProduct.dot_d
 
 /** Round-7 additions (third wave): KMV distinct-count sketch, duplicated-
   * span extraction, and Johnson-Lindenstrauss random projection — the
@@ -202,14 +203,13 @@ object PipelineOps9 {
        |             sqrt(a.n2p * b.n2p), 6) AS cos_proj
        |FROM n a JOIN n b ON a.vec_id < 5 AND b.vec_id > a.vec_id
        |ORDER BY q_id, c_id""".stripMargin) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     val cfg = EmbedLsh(dims = jlDims, planes = jlPlanes)
     val iv = Tables(s, dir, "embeddings")
       .filter(col("vec_id") < 50)
       .select(col("vec_id"), expr(Similarity.intVec).as("v"))
       .withColumn("p", jlProject(cfg))
-      .withColumn("n2", expr("dot_d(v, v)"))
-      .withColumn("n2p", expr("dot_d(p, p)"))
+      .withColumn("n2", dot_d(col("v"), col("v")))
+      .withColumn("n2p", dot_d(col("p"), col("p")))
     val a = iv.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("av"), col("p").as("ap"),
         col("n2").as("an2"), col("n2p").as("an2p"))
@@ -217,8 +217,8 @@ object PipelineOps9 {
       col("n2").as("bn2"), col("n2p").as("bn2p"))
     broadcast(a).join(b, col("c_id") > col("q_id"))
       .select(col("q_id"), col("c_id"),
-        round(expr("dot_d(av, bv)") / sqrt(col("an2") * col("bn2")), 6).as("cos_orig"),
-        round(expr("dot_d(ap, bp)") / sqrt(col("an2p") * col("bn2p")), 6).as("cos_proj"))
+        round(dot_d(col("av"), col("bv")) / sqrt(col("an2") * col("bn2")), 6).as("cos_orig"),
+        round(dot_d(col("ap"), col("bp")) / sqrt(col("an2p") * col("bn2p")), 6).as("cos_proj"))
       .orderBy("q_id", "c_id")
   }
 
@@ -228,14 +228,9 @@ object PipelineOps9 {
     * doubles) to keep downstream norms inside the 2^53 exact-integer range.
     */
   def jlProject(cfg: EmbedLsh): Column = {
-    val signs = EmbedDedup.signsFor(cfg)
-    val planeCols = (1 to cfg.planes).map { bb =>
-      val lit = signs.slice((bb - 1) * cfg.dims, bb * cfg.dims)
-        .map(s => if (s > 0) "1.0D" else "-1.0D")
-        .mkString("array(", ", ", ")")
-      expr(s"dot_d(v, $lit) / 64.0")
-    }
-    array(planeCols: _*)
+    // DECIMAL(3,1) 64.0, the type the SQL literal 64.0 parses to
+    array((1 to cfg.planes).map(bb =>
+      dot_d(col("v"), EmbedDedup.planeLit(cfg, bb)) / lit(new java.math.BigDecimal("64.0"))): _*)
   }
 
   // -------------------------------------------------- join-size estimation

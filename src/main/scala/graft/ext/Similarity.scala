@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.{Probe, Tables}
 import org.apache.spark.sql.functions._
+import graft.functions.DotProduct.{dot_d, sq_dist}
 
 /** Approximate-nearest-neighbor / similarity search over the embeddings
   * table (`embedding: Array[Float]`, 64-dim).
@@ -44,16 +45,15 @@ object Similarity {
        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, round(cos, 6) AS score
        |FROM r WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(s)
     val iv = Tables(s, dir, "embeddings")
       .select(col("vec_id"), expr(intVec).as("v"))
-      .withColumn("n2", expr("dot_d(v, v)"))
+      .withColumn("n2", dot_d(col("v"), col("v")))
     val q = iv.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
     val c = iv.select(col("vec_id").as("c_id"), col("v").as("cv"), col("n2").as("cn2"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
     broadcast(q).join(c, col("q_id") =!= col("c_id"))
-      .withColumn("cos", expr("dot_d(qv, cv)") / sqrt(col("qn2") * col("cn2")))
+      .withColumn("cos", dot_d(col("qv"), col("cv")) / sqrt(col("qn2") * col("cn2")))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 10)
       .select(col("q_id"), col("rnk"), col("c_id"), round(col("cos"), 6).as("score"))
@@ -146,13 +146,12 @@ object Similarity {
        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, round(cos, 6) AS score
        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(s)
     val iv = Tables(s, dir, "embeddings")
       .select(col("vec_id"), expr(intVec).as("v"))
     val cent = iv.filter(col("vec_id") < 8)
       .select(col("vec_id").as("c_id"), col("v").as("cv"))
     val ad = iv.crossJoin(broadcast(cent))
-      .withColumn("d2", expr("dot_d(v, v) - 2 * dot_d(v, cv) + dot_d(cv, cv)"))
+      .withColumn("d2", sq_dist(col("v"), col("cv")))
     val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_id"))
     val assign = ad
       .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
@@ -160,14 +159,14 @@ object Similarity {
     val probes = ad.filter(col("vec_id") < 5)
       .withColumn("rn", row_number().over(wAssign)).filter(col("rn") <= 2)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
-    val n = iv.withColumn("n2", expr("dot_d(v, v)"))
+    val n = iv.withColumn("n2", dot_d(col("v"), col("v")))
     val cand = probes.join(assign, Seq("cell")).filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("cand_id"))
     val q = n.select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
     val x = n.select(col("vec_id").as("cand_id"), col("v").as("xv"), col("n2").as("xn2"))
     val wRank = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id"))
     cand.join(broadcast(q), "q_id").join(x, "cand_id")
-      .withColumn("cos", expr("dot_d(qv, xv)") / sqrt(col("qn2") * col("xn2")))
+      .withColumn("cos", dot_d(col("qv"), col("xv")) / sqrt(col("qn2") * col("xn2")))
       .withColumn("rnk", row_number().over(wRank).cast("long"))
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("cand_id").as("c_id"), round(col("cos"), 6).as("score"))
@@ -228,14 +227,13 @@ object Similarity {
        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, round(cos, 6) AS score
        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(s)
     val iv = Tables(s, dir, "embeddings").select(col("vec_id"), expr(intVec).as("v"))
     val wA = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_id"))
 
     def assignTo(cent: org.apache.spark.sql.DataFrame) = iv
       .crossJoin(broadcast(cent))
       .withColumn("d2",
-        expr("dot_d(v, v) - 2 * dot_d(v, cv) + dot_d(cv, cv)"))
+        sq_dist(col("v"), col("cv")))
 
     val cent0 = iv.filter(col("vec_id") < 8)
       .select(col("vec_id").as("c_id"), col("v").as("cv"))
@@ -259,14 +257,14 @@ object Similarity {
       .withColumn("rn", row_number().over(wA)).filter(col("rn") <= 2)
       .select(col("vec_id").as("q_id"), col("c_id").as("cell"))
 
-    val n = iv.withColumn("n2", expr("dot_d(v, v)"))
+    val n = iv.withColumn("n2", dot_d(col("v"), col("v")))
     val cand = probes.join(assign1, Seq("cell")).filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("cand_id"))
     val q = n.select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
     val x = n.select(col("vec_id").as("cand_id"), col("v").as("xv"), col("n2").as("xn2"))
     val wR = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand_id"))
     cand.join(broadcast(q), "q_id").join(x, "cand_id")
-      .withColumn("cos", expr("dot_d(qv, xv)") / sqrt(col("qn2") * col("xn2")))
+      .withColumn("cos", dot_d(col("qv"), col("xv")) / sqrt(col("qn2") * col("xn2")))
       .withColumn("rnk", row_number().over(wR).cast("long"))
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("cand_id").as("c_id"), round(col("cos"), 6).as("score"))
@@ -318,15 +316,14 @@ object Similarity {
        |       round(cosq, 6) AS score_q8, round(cosx, 6) AS score_exact
        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin) { (s, dir) =>
     import org.apache.spark.sql.expressions.Window
-    graft.GraftExtensions.register(s)
     val iv = Tables(s, dir, "embeddings")
       .select(col("vec_id"), expr(intVec).as("v"))
       .withColumn("m", greatest(expr("array_max(transform(v, x -> abs(x)))"), lit(1.0d)))
       .withColumn("q", expr(
         """transform(v, x -> CAST((CAST(x AS BIGINT) * 127 + CAST(m AS BIGINT) * 128)
           |                       DIV CAST(m AS BIGINT) - 128 AS DOUBLE))""".stripMargin))
-      .withColumn("n2", expr("dot_d(v, v)"))
-      .withColumn("n2q", expr("dot_d(q, q)"))
+      .withColumn("n2", dot_d(col("v"), col("v")))
+      .withColumn("n2q", dot_d(col("q"), col("q")))
     val q = iv.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("q").as("qq"),
         col("n2").as("qn2"), col("n2q").as("qn2q"))
@@ -334,8 +331,8 @@ object Similarity {
       col("n2").as("cn2"), col("n2q").as("cn2q"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cosq").desc, col("c_id"))
     broadcast(q).join(c, col("q_id") =!= col("c_id"))
-      .withColumn("cosq", expr("dot_d(qq, cq)") / sqrt(col("qn2q") * col("cn2q")))
-      .withColumn("cosx", expr("dot_d(qv, cv)") / sqrt(col("qn2") * col("cn2")))
+      .withColumn("cosq", dot_d(col("qq"), col("cq")) / sqrt(col("qn2q") * col("cn2q")))
+      .withColumn("cosx", dot_d(col("qv"), col("cv")) / sqrt(col("qn2") * col("cn2")))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("c_id"),

@@ -1,9 +1,10 @@
 package graft.ext
 
 import graft.{Probe, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.DotProduct.sq_dist
 
 /** Product quantization — the remaining tier of the similarity family:
   * brute force (x_sim1) → JL projection (x_sim6) → int8 scalar quantization
@@ -95,21 +96,18 @@ object Similarity2 {
 
   /** The PQ + ADC operator behind x_sim7. */
   def pqTopK(s: org.apache.spark.sql.SparkSession, embeddings: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(s)
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
     val sub = iv.select(col("vec_id"), explode(expr(
         s"transform(sequence(1, $m), s -> struct(s AS s, slice(v, (s-1)*$subDim+1, $subDim) AS sv))"))
         .as("t"))
       .select(col("vec_id"), col("t.s").as("s"), col("t.sv").as("sv"))
 
-    def d2(a: String, b: String): Column =
-      expr(s"dot_d($a, $a) - 2 * dot_d($a, $b) + dot_d($b, $b)")
     val wA = Window.partitionBy(col("vec_id"), col("s")).orderBy(col("d2"), col("c_id"))
 
     val cent0 = sub.filter(col("vec_id") < k)
       .select(col("s").as("cs"), col("vec_id").as("c_id"), col("sv").as("cv"))
     val assign0 = sub.join(broadcast(cent0), col("s") === col("cs"))
-      .withColumn("d2", d2("sv", "cv"))
+      .withColumn("d2", sq_dist(col("sv"), col("cv")))
       .withColumn("rn", row_number().over(wA)).filter(col("rn") === 1)
       .select(col("vec_id"), col("s"), col("c_id").as("cell"))
 
@@ -123,7 +121,7 @@ object Similarity2 {
       .select(col("s").as("cs"), col("cell").as("c_id"), col("cv"))
 
     val code = sub.join(broadcast(cent1), col("s") === col("cs"))
-      .withColumn("d2", d2("sv", "cv"))
+      .withColumn("d2", sq_dist(col("sv"), col("cv")))
       .withColumn("rn", row_number().over(wA)).filter(col("rn") === 1)
       .select(col("vec_id"), col("s"), col("c_id").as("code"))
 
@@ -131,7 +129,7 @@ object Similarity2 {
     val lut = broadcast(
       sub.filter(col("vec_id") < 5)
         .join(broadcast(cent1), col("s") === col("cs"))
-        .withColumn("pd2", d2("sv", "cv"))
+        .withColumn("pd2", sq_dist(col("sv"), col("cv")))
         .select(col("vec_id").as("q_id"), col("s").as("ls"),
           col("c_id").as("lc"), col("pd2")))
     val adc = code
@@ -147,7 +145,7 @@ object Similarity2 {
     adc
       .join(broadcast(q), "q_id")
       .join(exact, "c_id")
-      .withColumn("d2_exact", expr("dot_d(qv, qv) - 2 * dot_d(qv, cv2) + dot_d(cv2, cv2)"))
+      .withColumn("d2_exact", sq_dist(col("qv"), col("cv2")))
       .withColumn("rnk", row_number().over(wR).cast("long"))
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("c_id"),
@@ -238,7 +236,6 @@ object Similarity2 {
 
   /** The IVF+PQ operator behind x_sim8. */
   def ivfPqTopK(s: org.apache.spark.sql.SparkSession, embeddings: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(s)
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
 
     // coarse quantizer: x_sim3's assignment + 2-cell probes
@@ -246,7 +243,7 @@ object Similarity2 {
       .select(col("vec_id").as("cc_id"), col("v").as("ccv"))
     val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2c"), col("cc_id"))
     val ad = iv.crossJoin(broadcast(cent))
-      .withColumn("d2c", expr("dot_d(v, v) - 2 * dot_d(v, ccv) + dot_d(ccv, ccv)"))
+      .withColumn("d2c", sq_dist(col("v"), col("ccv")))
     val assign = ad.withColumn("rn", row_number().over(wCell)).filter(col("rn") === 1)
       .select(col("vec_id"), col("cc_id").as("cell"))
     val probes = ad.filter(col("vec_id") < 5)
@@ -258,13 +255,11 @@ object Similarity2 {
         s"transform(sequence(1, $m), s -> struct(s AS s, slice(v, (s-1)*$subDim+1, $subDim) AS sv))"))
         .as("t"))
       .select(col("vec_id"), col("t.s").as("s"), col("t.sv").as("sv"))
-    def d2(a: String, b: String): Column =
-      expr(s"dot_d($a, $a) - 2 * dot_d($a, $b) + dot_d($b, $b)")
     val wA = Window.partitionBy(col("vec_id"), col("s")).orderBy(col("d2"), col("c_id"))
     val cent0 = sub.filter(col("vec_id") < k)
       .select(col("s").as("cs"), col("vec_id").as("c_id"), col("sv").as("cv"))
     val assign0 = sub.join(broadcast(cent0), col("s") === col("cs"))
-      .withColumn("d2", d2("sv", "cv"))
+      .withColumn("d2", sq_dist(col("sv"), col("cv")))
       .withColumn("rn", row_number().over(wA)).filter(col("rn") === 1)
       .select(col("vec_id"), col("s"), col("c_id").as("pcell"))
     val cent1 = assign0.join(sub, Seq("vec_id", "s"))
@@ -275,13 +270,13 @@ object Similarity2 {
       .agg(expr("transform(array_sort(collect_list(struct(pos, mv))), p -> p.mv)").as("cv"))
       .select(col("s").as("cs"), col("pcell").as("c_id"), col("cv"))
     val code = sub.join(broadcast(cent1), col("s") === col("cs"))
-      .withColumn("d2", d2("sv", "cv"))
+      .withColumn("d2", sq_dist(col("sv"), col("cv")))
       .withColumn("rn", row_number().over(wA)).filter(col("rn") === 1)
       .select(col("vec_id"), col("s"), col("c_id").as("code"))
     val lut = broadcast(
       sub.filter(col("vec_id") < 5)
         .join(broadcast(cent1), col("s") === col("cs"))
-        .withColumn("pd2", d2("sv", "cv"))
+        .withColumn("pd2", sq_dist(col("sv"), col("cv")))
         .select(col("vec_id").as("lq_id"), col("s").as("ls"),
           col("c_id").as("lc"), col("pd2")))
 
@@ -303,7 +298,7 @@ object Similarity2 {
     adc
       .join(broadcast(q), "q_id")
       .join(exact, "c_id")
-      .withColumn("d2_exact", expr("dot_d(qv, qv) - 2 * dot_d(qv, cv2) + dot_d(cv2, cv2)"))
+      .withColumn("d2_exact", sq_dist(col("qv"), col("cv2")))
       .withColumn("rnk", row_number().over(wR).cast("long"))
       .filter(col("rnk") <= 5)
       .select(col("q_id"), col("rnk"), col("c_id"),

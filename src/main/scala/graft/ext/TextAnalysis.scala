@@ -130,7 +130,7 @@ object TextAnalysis {
 
   /** X-TXT5 — document fingerprint via the native rolling_hash Catalyst
     * expression (graft.functions.RollingHash: codegen'd Rabin–Karp, no UDF
-    * boundary). Registered for SQL through GraftExtensions.
+    * boundary); SQL text reaches it through GraftExtensions.
     *
     * Oracle-equivalence note: RollingHash folds UTF-8 BYTES; the DuckDB
     * oracle below folds per-character codepoints (ascii/substr). The two
@@ -147,7 +147,6 @@ object TextAnalysis {
       |                   i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))),
       |    (h, c) -> (h * 31 + c) % 1000000007) AS fp
       |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    graft.GraftExtensions.register(s)
     Tables(s, dir, "documents")
       .select(col("doc_id"),
         graft.functions.RollingHash.rolling_hash(col("text")).as("fp"))

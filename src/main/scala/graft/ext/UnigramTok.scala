@@ -2,7 +2,7 @@ package graft.ext
 
 import graft.{Probe, Tables}
 import graft.clean.CleanFns
-import graft.functions.MinSeg
+import graft.functions.{MinSeg, MinSegCost, MinSegPieces}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,12 +64,10 @@ object UnigramTok {
     */
   def withMinSegCount(df: DataFrame, vocab: DataFrame, outCol: String,
       textCol: String = "text"): DataFrame = {
-    graft.GraftExtensions.register(df.sparkSession)
     val vrow = vocab.agg(sort_array(collect_list(col("piece"))).as("__pieces"))
     df.crossJoin(broadcast(vrow)) // 1-row build side → broadcast nested loop
-      .withColumn(outCol, expr(
-        "aggregate(" + CleanFns.tokensSpark(textCol) +
-          ", CAST(0 AS BIGINT), (acc, w) -> acc + min_seg_count(w, __pieces))"))
+      .withColumn(outCol, aggregate(CleanFns.tokens(col(textCol)), lit(0).cast("bigint"),
+        (acc, w) => acc + MinSeg.min_seg_count(w, col("__pieces"))))
       .drop("__pieces")
   }
 
@@ -81,14 +79,12 @@ object UnigramTok {
     * streaming HOF form matches explicitly.
     */
   def minTokenCounts(docs: DataFrame, vocab: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    graft.GraftExtensions.register(s)
     val vrow = vocab.agg(sort_array(collect_list(col("piece"))).as("__pieces"))
     val words = docs.select(col("doc_id"),
       explode(CleanFns.tokens(col("text"))).as("word"))
     val costs = words.select("word").distinct()
       .crossJoin(broadcast(vrow)) // 1-row build side → broadcast nested loop
-      .select(col("word"), expr("min_seg_count(word, __pieces)").as("__c"))
+      .select(col("word"), MinSeg.min_seg_count(col("word"), col("__pieces")).as("__c"))
     words.join(costs, "word")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum(col("__c")).as("n_pieces"))
@@ -133,6 +129,10 @@ object UnigramTok {
         expr("transform(__pc, x -> x.cost)").as("__costs"), col("__unk"))
   }
 
+  /** `word`'s min-cost segmentation against [[pricedVocabRow]]'s columns. */
+  private def minSegCost(word: org.apache.spark.sql.Column) =
+    MinSegCost.min_seg_cost(word, col("__pieces"), col("__costs"), col("__unk"))
+
   /** Annotate `df` with the weighted (bit-cost) segmentation total of
     * `textCol`'s words, as `outCol` — the per-ROW HOF form (every word
     * pays its own DP; no distinct-word join, no exchange): the shared
@@ -141,11 +141,9 @@ object UnigramTok {
     */
   def withMinSegBitCost(df: DataFrame, vocab: DataFrame, outCol: String,
       textCol: String = "text"): DataFrame = {
-    graft.GraftExtensions.register(df.sparkSession)
     df.crossJoin(broadcast(pricedVocabRow(vocab))) // 1-row build side
-      .withColumn(outCol, expr(
-        "aggregate(" + CleanFns.tokensSpark(textCol) +
-          ", CAST(0 AS BIGINT), (acc, w) -> acc + min_seg_cost(w, __pieces, __costs, __unk))"))
+      .withColumn(outCol, aggregate(CleanFns.tokens(col(textCol)), lit(0).cast("bigint"),
+        (acc, w) => acc + minSegCost(w)))
       .drop("__pieces", "__costs", "__unk")
   }
 
@@ -165,12 +163,12 @@ object UnigramTok {
     * corpus token stream is never reshuffled.
     */
   def emVocab(docs: DataFrame, vocab: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     val vrow = pricedVocabRow(vocab)
     corpusWords(docs)
       .crossJoin(broadcast(vrow)) // 1-row build side → broadcast nested loop
       .select(col("cnt"),
-        explode(expr("min_seg_pieces(word, __pieces, __costs, __unk)")).as("piece"))
+        explode(MinSegPieces.min_seg_pieces(
+          col("word"), col("__pieces"), col("__costs"), col("__unk"))).as("piece"))
       // UNK steps come back as single characters; vocabulary pieces are
       // length >= 2 by contract, so the filter is exact
       .filter(length(col("piece")) >= 2)
@@ -178,15 +176,13 @@ object UnigramTok {
   }
 
   def minCostCounts(docs: DataFrame, vocab: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    graft.GraftExtensions.register(s)
     val vrow = pricedVocabRow(vocab)
     val words = docs.select(col("doc_id"),
       explode(CleanFns.tokens(col("text"))).as("word"))
     val costs = words.select("word").distinct()
       .crossJoin(broadcast(vrow)) // 1-row build side → broadcast nested loop
       .select(col("word"),
-        expr("min_seg_cost(word, __pieces, __costs, __unk)").as("__c"))
+        minSegCost(col("word")).as("__c"))
     words.join(costs, "word")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum(col("__c")).as("bit_cost"))

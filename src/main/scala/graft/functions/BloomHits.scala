@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `bloom_hits(digests, bloom, hexChars, k)` — how many of a document's
   * gram DIGESTS (32-hex md5 strings, e.g. `ngram_md5` output) are
@@ -56,6 +58,10 @@ case class BloomHits(left: Expression, right: Expression, hexChars: Int, k: Int)
 }
 
 object BloomHits {
+
+  /** Column API; needs no function registration. */
+  def bloom_hits(digests: Column, bloom: Column, hexChars: Int, k: Int): Column =
+    column(BloomHits(expression(digests), expression(bloom), hexChars, k))
 
   /** Shared by the interpreted and codegen paths — they cannot diverge. */
   def compute(grams: ArrayData, bloom: ArrayData, hexChars: Int, k: Int): Long = {

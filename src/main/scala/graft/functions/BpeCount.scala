@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `bpe_count(text)` — the document's subword token count under the
   * checked-in byte-level BPE vocabulary ([[Bpe.defaultMerges]]): split on
@@ -49,6 +51,9 @@ case class BpeCount(child: Expression) extends UnaryExpression {
 }
 
 object BpeCount {
+
+  /** Column API; needs no function registration. */
+  def bpe_count(text: Column): Column = column(BpeCount(expression(text)))
 
   /** Java-regex `\s` byte classes — same split as `CleanFns.tokens`. */
   @inline private def isWs(b: Byte): Boolean =

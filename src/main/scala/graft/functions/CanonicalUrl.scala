@@ -2,11 +2,13 @@ package graft.functions
 
 import java.util.regex.Pattern
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `canonical_url(url)` — native form of the URL canonicalization rule
   * chain ([[graft.clean.UrlFns]]): fragment drop, authority lowercase,
@@ -50,6 +52,9 @@ case class CanonicalUrl(child: Expression) extends UnaryExpression {
 }
 
 object CanonicalUrl {
+
+  /** Column API; needs no function registration. */
+  def canonical_url(url: Column): Column = column(CanonicalUrl(expression(url)))
 
   // the same patterns the declarative chain runs (java.util.regex is
   // Spark's regexp engine, so equivalence is by construction)

@@ -1,11 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** Native dot product over two ARRAY<DOUBLE> columns.
   *
@@ -83,7 +85,11 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 }
 
 object DotProduct {
-  /** Column API. Requires GraftExtensions.register(spark) first. */
+  /** Column API; needs no function registration. */
   def dot_d(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("dot_d", a, b)
+    column(DotProduct(expression(a), expression(b)))
+
+  /** Squared Euclidean distance as the dot expansion a·a − 2·a·b + b·b. */
+  def sq_dist(a: Column, b: Column): Column =
+    dot_d(a, a) - lit(2) * dot_d(a, b) + dot_d(b, b)
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `kn_nll(text, ...)` — per-row negative log-likelihood of `text` under a
   * TRIGRAM interpolated Kneser-Ney LM (Kneser & Ney 1995; Chen & Goodman
@@ -229,19 +230,20 @@ object KnNll {
     if (i >= 0) counts(i) else 0L
   }
 
-  /** Column API over a driver-built [[KnIndex]]. */
+  /** Column API over a driver-built [[KnIndex]]; needs no function
+    * registration. */
   def kn_nll(text: Column, idx: KnIndex): Column = {
-    import org.apache.spark.sql.functions.{call_function, lit, typedLit}
-    call_function("kn_nll", text,
-      typedLit(idx.h3s), typedLit(idx.c3s),
-      typedLit(idx.habs), typedLit(idx.ctx2s), typedLit(idx.n3fs),
-      typedLit(idx.hbcs), typedLit(idx.cont3s),
-      typedLit(idx.hbs), typedLit(idx.mids), typedLit(idx.n2fs),
-      typedLit(idx.cs), typedLit(idx.cont2s),
-      lit(idx.bt), lit(idx.v))
+    import LmNll.utf8s
+    column(KnNll(expression(text),
+      utf8s(idx.h3s), idx.c3s.toArray,
+      utf8s(idx.habs), idx.ctx2s.toArray, idx.n3fs.toArray,
+      utf8s(idx.hbcs), idx.cont3s.toArray,
+      utf8s(idx.hbs), idx.mids.toArray, idx.n2fs.toArray,
+      utf8s(idx.cs), idx.cont2s.toArray,
+      idx.bt, idx.v))
   }
 
-  /** Registry builder: folds the literal table children into arrays. */
+  /** SQL-text builder: folds the literal table children into arrays. */
   def build(exprs: Seq[Expression]): KnNll = {
     import org.apache.spark.sql.catalyst.util.ArrayData
     def strs(e: Expression): Array[UTF8String] = {

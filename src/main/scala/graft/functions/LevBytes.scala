@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `lev_bytes(a, b)` — Levenshtein edit distance over the strings' UTF-8
   * BYTES: the classic two-row O(|a|·|b|) dynamic program on primitive int
@@ -42,6 +44,10 @@ case class LevBytes(left: Expression, right: Expression)
 }
 
 object LevBytes {
+
+  /** Column API; needs no function registration. */
+  def lev_bytes(a: Column, b: Column): Column =
+    column(LevBytes(expression(a), expression(b)))
 
   /** Shared by the interpreted and codegen paths — they cannot diverge. */
   def compute(a: UTF8String, b: UTF8String): Long = {

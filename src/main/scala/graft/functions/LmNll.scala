@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `lm_nll(text, hb_sorted, c2_aligned, w_sorted, c1_aligned, v)` —
   * per-row negative log-likelihood of `text` under an add-one-smoothed
@@ -132,18 +133,18 @@ object LmNll {
     0L
   }
 
-  /** Column API over a driver-built [[LmIndex]] (requires GraftExtensions
-    * registration): the count tables travel as array literals that the
-    * registry's builder folds into the expression instance once.
+  /** Column API over a driver-built [[LmIndex]]; needs no function
+    * registration. The count tables are baked into the expression
+    * instance once.
     */
-  def lm_nll(text: Column, idx: LmIndex): Column = {
-    import org.apache.spark.sql.functions.{call_function, lit, typedLit}
-    call_function("lm_nll", text,
-      typedLit(idx.hbs), typedLit(idx.c2s), typedLit(idx.ws), typedLit(idx.c1s),
-      lit(idx.v))
-  }
+  def lm_nll(text: Column, idx: LmIndex): Column =
+    column(LmNll(expression(text), utf8s(idx.hbs), idx.c2s.toArray,
+      utf8s(idx.ws), idx.c1s.toArray, idx.v))
 
-  /** Registry builder: folds the literal table children into arrays. */
+  private[functions] def utf8s(xs: Seq[String]): Array[UTF8String] =
+    xs.map(UTF8String.fromString).toArray
+
+  /** SQL-text builder: folds the literal table children into arrays. */
   def build(exprs: Seq[Expression]): LmNll = {
     import org.apache.spark.sql.catalyst.util.ArrayData
     def strs(e: Expression): Array[UTF8String] = {

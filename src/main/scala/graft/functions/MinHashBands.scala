@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** MinHash LSH band signatures of a document, computed per row in ONE
   * narrow pass — exactly `ext.Dedup.minhashBands`'s semantics:
@@ -114,7 +115,6 @@ object MinHashBands {
     new GenericArrayData(Array[Any](bandSig(0), bandSig(4)))
   }
 
-  /** Column API (requires GraftExtensions registration). */
-  def minhash_bands(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("minhash_bands", c)
+  /** Column API; needs no function registration. */
+  def minhash_bands(c: Column): Column = column(MinHashBands(expression(c)))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `min_seg_count(word, sortedPieces)` — the minimal number of pieces
   * that segment `word`, where a step is either any single character
@@ -57,9 +58,9 @@ object MinSeg {
   /** Longest piece the DP tries (and the vocab induction emits). */
   val MaxLen = 8
 
-  /** Column API (requires GraftExtensions registration). */
+  /** Column API; needs no function registration. */
   def min_seg_count(word: Column, sortedPieces: Column): Column =
-    org.apache.spark.sql.functions.call_function("min_seg_count", word, sortedPieces)
+    column(MinSeg(expression(word), expression(sortedPieces)))
 
   /** Shared by the interpreted and codegen paths — they cannot diverge.
     * Positions are CODE POINTS (DuckDB `substr` semantics), not bytes.

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `min_seg_cost(word, sortedPieces, costs, unkCost)` — the minimal
   * TOTAL COST segmentation of `word`, where a step is either any single
@@ -60,11 +61,11 @@ case class MinSegCost(first: Expression, second: Expression,
 
 object MinSegCost {
 
-  /** Column API (requires GraftExtensions registration). */
+  /** Column API; needs no function registration. */
   def min_seg_cost(word: Column, sortedPieces: Column, costs: Column,
       unkCost: Column): Column =
-    org.apache.spark.sql.functions.call_function(
-      "min_seg_cost", word, sortedPieces, costs, unkCost)
+    column(MinSegCost(expression(word), expression(sortedPieces),
+      expression(costs), expression(unkCost)))
 
   /** Shared by the interpreted and codegen paths — they cannot diverge.
     * Positions are CODE POINTS (DuckDB `substr` semantics), not bytes.

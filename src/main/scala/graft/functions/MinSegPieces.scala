@@ -1,11 +1,13 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `min_seg_pieces(word, sortedPieces, costs, unkCost)` — the ARGMIN
   * segmentation behind [[MinSegCost]]: the actual pieces of one
@@ -58,6 +60,12 @@ case class MinSegPieces(first: Expression, second: Expression,
 }
 
 object MinSegPieces {
+
+  /** Column API; needs no function registration. */
+  def min_seg_pieces(word: Column, sortedPieces: Column, costs: Column,
+      unkCost: Column): Column =
+    column(MinSegPieces(expression(word), expression(sortedPieces),
+      expression(costs), expression(unkCost)))
 
   /** Shared by the interpreted and codegen paths — they cannot diverge.
     * Positions are CODE POINTS ([[MinSegCost.compute]]'s convention).

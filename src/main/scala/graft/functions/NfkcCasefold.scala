@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `nfkc_casefold(text)` — Unicode NFKC compatibility normalization
   * followed by Locale.ROOT lowercasing: the script normalization in
@@ -51,8 +52,6 @@ case class NfkcCasefold(child: Expression) extends UnaryExpression {
 }
 
 object NfkcCasefold {
-  def nfkc_casefold(text: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("nfkc_casefold", text)
-  }
+  /** Column API; needs no function registration. */
+  def nfkc_casefold(text: Column): Column = column(NfkcCasefold(expression(text)))
 }

@@ -2,11 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `ngram_md5(text, n)` — the SORTED DISTINCT md5 hex digests of a
   * document's n-word grams over the shared whitespace tokenizer
@@ -99,8 +100,6 @@ object NgramMd5 {
     new GenericArrayData(out)
   }
 
-  /** Column API (requires GraftExtensions registration). */
-  def ngram_md5(c: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("ngram_md5", c,
-      org.apache.spark.sql.functions.lit(n))
+  /** Column API; needs no function registration. */
+  def ngram_md5(c: Column, n: Int): Column = column(NgramMd5(expression(c), Literal(n)))
 }

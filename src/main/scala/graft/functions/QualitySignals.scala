@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `quality_signals(text)` — one pass over a (pre-lowercased) document
   * computing the four Gopher/C4-style quality-rule counters at once:
@@ -119,7 +120,6 @@ object QualitySignals {
     }
   }
 
-  /** Column API (requires GraftExtensions registration). */
-  def quality_signals(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("quality_signals", c)
+  /** Column API; needs no function registration. */
+  def quality_signals(c: Column): Column = column(QualitySignals(expression(c)))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `repetition_signals(text)` — the x_txt23 Gopher repetition family as
   * ONE JVM pass per row: every signal is a function of the document's
@@ -164,9 +165,7 @@ object RepetitionSignals {
       nSegs, dupSegPpm, tops(0), tops(1), tops(2), dup5Ppm, keep))
   }
 
-  /** Column API (requires [[graft.GraftExtensions.register]]). */
-  def repetition_signals(text: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("repetition_signals", text)
-  }
+  /** Column API; needs no function registration. */
+  def repetition_signals(text: Column): Column =
+    column(RepetitionSignals(expression(text)))
 }

@@ -2,11 +2,13 @@ package graft.functions
 
 import java.util.regex.Pattern
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `resolve_href(page_url, href)` — RFC 3986 reference resolution
   * (§5.2), the subset a crawl graph needs, as ONE native call:
@@ -60,6 +62,10 @@ case class ResolveHref(left: Expression, right: Expression)
 }
 
 object ResolveHref {
+
+  /** Column API; needs no function registration. */
+  def resolve_href(pageUrl: Column, href: Column): Column =
+    column(ResolveHref(expression(pageUrl), expression(href)))
 
   private val httpsP = Pattern.compile("^(?i)https?://")
   private val schemeColonP = Pattern.compile("^[A-Za-z][A-Za-z0-9+.-]*:")

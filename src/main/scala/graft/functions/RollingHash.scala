@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** Polynomial rolling hash (Rabin–Karp) of a UTF-8 string:
   *
@@ -66,11 +67,6 @@ case class RollingHash(child: Expression) extends UnaryExpression {
 }
 
 object RollingHash {
-  /** Column API. Requires GraftExtensions.register(spark) (or the
-    * spark.sql.extensions config) — Spark 4's Column no longer exposes a
-    * public Expression constructor, so the bridge is the function registry
-    * + call_function.
-    */
-  def rolling_hash(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("rolling_hash", c)
+  /** Column API; needs no function registration. */
+  def rolling_hash(c: Column): Column = column(RollingHash(expression(c)))
 }

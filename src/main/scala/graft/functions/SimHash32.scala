@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** 32-bit SimHash of a document, computed per row in ONE narrow pass.
   *
@@ -85,7 +86,6 @@ object SimHash32 {
     sig
   }
 
-  /** Column API (requires GraftExtensions registration). */
-  def simhash32(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash32", c)
+  /** Column API; needs no function registration. */
+  def simhash32(c: Column): Column = column(SimHash32(expression(c)))
 }

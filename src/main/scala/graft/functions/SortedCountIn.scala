@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
 /** `sorted_count_in(arr, sortedSet)` — how many elements of `arr`
   * (duplicates counted) are members of the SORTED string array
@@ -50,9 +51,9 @@ case class SortedCountIn(left: Expression, right: Expression)
 
 object SortedCountIn {
 
-  /** Column API (requires GraftExtensions registration). */
+  /** Column API; needs no function registration. */
   def sorted_count_in(arr: Column, sortedSet: Column): Column =
-    org.apache.spark.sql.functions.call_function("sorted_count_in", arr, sortedSet)
+    column(SortedCountIn(expression(arr), expression(sortedSet)))
 
   /** Shared by the interpreted and codegen paths — they cannot diverge. */
   def compute(arr: ArrayData, sorted: ArrayData): Long = {

@@ -25,8 +25,9 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *
   * The full custom-operator chain (SURVEY.md §7.5 / judge tier (c)):
   * logical node → strategy → physical exec with declared distribution +
-  * ordering requirements (EnsureRequirements inserts the exchanges/sorts),
-  * registered through GraftExtensions.
+  * ordering requirements (EnsureRequirements inserts the exchanges/sorts).
+  * [[AsOf.joinBackward]], the only builder of the node, installs the
+  * strategy on its session.
   */
 case class AsOfJoin(
     left: LogicalPlan,
@@ -46,13 +47,19 @@ case class AsOfJoin(
 }
 
 /** Planner rule: AsOfJoin logical → AsOfJoinExec physical. */
-class AsOfJoinStrategy extends SparkStrategy {
+object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case j: AsOfJoin =>
       AsOfJoinExec(planLater(j.left), planLater(j.right),
         j.leftKeys, j.rightKeys, j.leftTime, j.rightTime, j.rightTiebreak) :: Nil
     case _ => Nil
   }
+
+  /** Installs the strategy on `session` once; later calls are no-ops. */
+  def setup(session: SparkSession): Unit =
+    if (!session.experimental.extraStrategies.contains(AsOfJoinStrategy))
+      session.experimental.extraStrategies =
+        session.experimental.extraStrategies :+ AsOfJoinStrategy
 }
 
 /** Physical sort-merge as-of join.
@@ -185,7 +192,7 @@ object AsOf {
       rightTime: String,
       rightTiebreak: Seq[String] = Nil): DataFrame = {
     val spark = left.sparkSession
-    graft.GraftExtensions.register(spark) // idempotent strategy injection
+    AsOfJoinStrategy.setup(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     val dup = left.columns.toSet.intersect(right.columns.toSet)

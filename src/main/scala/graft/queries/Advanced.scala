@@ -62,7 +62,7 @@ object Advanced {
 
   /** X-ASOF2 — the SAME as-of semantics through the custom fused operator
     * (graft.plans.AsOfJoin: logical plan → strategy → sort-merge physical
-    * exec registered via GraftExtensions). No right-side pre-aggregation
+    * exec, installed by AsOf.joinBackward). No right-side pre-aggregation
     * needed: the (r_ts, click_id)-ascending sort makes the last tied row
     * the max event_id, which is exactly the oracle's dedup rule. Same
     * DuckDB ASOF oracle as x_asof_join — two implementations, one truth.

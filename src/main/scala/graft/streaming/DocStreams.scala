@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.BpeCount.bpe_count
+import graft.functions.LevBytes.lev_bytes
 
 /** Structured Streaming surface over the documents table: the corpus
   * pipeline stages that are naturally stream-capable — benchmark
@@ -84,7 +86,6 @@ object DocStreams {
     * text size, which is what makes the stream-side broadcast viable).
     */
   def simhashIndex(docs: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     docs.select(col("doc_id"), graft.functions.SimHash32.simhash32(col("text")).as("sh"))
   }
 
@@ -104,7 +105,6 @@ object DocStreams {
     */
   def nearDupSimHashIds(docs: DataFrame, indexSigs: DataFrame,
       maxHamming: Int = 2): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     val banded = graft.ext.Dedup.simhash3Bands(
       docs.select(col("doc_id"), graft.functions.SimHash32.simhash32(col("text")).as("sh")))
     val idx = graft.ext.Dedup.simhash3Bands(indexSigs)
@@ -134,7 +134,6 @@ object DocStreams {
     */
   def nearDupMinHashIds(docs: DataFrame, index: DataFrame,
       prefixChars: Int = graft.ext.BandIndex.defaultPrefixChars): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     val bands = graft.ext.Dedup.minhashBandsNative(docs)
       .withColumn("sig_p", substring(col("sig"), 1, prefixChars))
     val idx = index.select(col("sig_p").as("sig_p_i"), col("band").as("band_i"),
@@ -441,8 +440,7 @@ object DocStreams {
     * identically batch and stream.
     */
   def bpeCounted(docs: DataFrame): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
-    docs.withColumn("n_tok_bpe", expr("CAST(bpe_count(text) AS BIGINT)"))
+    docs.withColumn("n_tok_bpe", bpe_count(col("text")).cast("bigint"))
   }
 
   /** Stream-capable context-window chunking — x_chunk1's exact expansion
@@ -516,7 +514,6 @@ object DocStreams {
     */
   def fuzzyContaminatedIds(docs: DataFrame, evalDocs: DataFrame,
       minSim: Double = 0.30): DataFrame = {
-    graft.GraftExtensions.register(docs.sparkSession)
     val evSh = broadcast(
       graft.api.Corpus.shingles4(evalDocs)
         .select(col("doc_id").as("eval_id"), col("s")).distinct())
@@ -537,7 +534,7 @@ object DocStreams {
       .join(evSh, Seq("s"))
       .join(evTexts, Seq("eval_id"))
       .withColumn("sim", lit(1.0) -
-        expr("lev_bytes(text, ev_text)").cast("double") /
+        lev_bytes(col("text"), col("ev_text")).cast("double") /
           greatest(octet_length(col("text")), octet_length(col("ev_text"))))
       .filter(col("sim") >= minSim)
       .select(col("doc_id"))

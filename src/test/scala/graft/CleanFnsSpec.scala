@@ -117,7 +117,6 @@ class CleanFnsSpec extends SparkSuite {
 
     // the native codegen expressions share the tokenizer: a dirty doc and
     // its clean twin produce IDENTICAL minhash bands and simhash
-    GraftExtensions.register(spark)
     val sigs = Seq((1L, dirty), (2L, clean)).toDF("doc_id", "text")
       .select(col("doc_id"),
         graft.functions.MinHashBands.minhash_bands(col("text")).as("bands"),

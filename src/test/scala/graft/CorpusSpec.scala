@@ -356,7 +356,6 @@ class CorpusSpec extends SparkSuite {
     val kept = out.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept.nonEmpty && kept.subsetOf(docs.collect().map(_.getLong(0)).toSet))
     // the guarantee: no surviving pair is within the Hamming threshold
-    GraftExtensions.register(spark)
     val sigs = Corpus(docs).df
       .select(col("doc_id"), graft.functions.SimHash32.simhash32(col("text")).as("sh"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

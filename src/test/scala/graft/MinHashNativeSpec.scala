@@ -13,7 +13,6 @@ class MinHashNativeSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("expression == declarative minhashBands on the whole corpus") {
-    GraftExtensions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val native = docs
       .select(col("doc_id"),
@@ -26,7 +25,6 @@ class MinHashNativeSpec extends SparkSuite {
   }
 
   test("interpreted == codegen; short docs yield an empty array") {
-    GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     val cases = Seq("", "one", "one two", "one two three",

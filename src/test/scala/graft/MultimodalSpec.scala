@@ -52,6 +52,17 @@ class MultimodalSpec extends SparkSuite {
     assert(got.nonEmpty)
   }
 
+  test("undecodable bytes fail with the documented IllegalArgumentException") {
+    import spark.implicits._
+    val junk = Seq(Multimodal.MediaRow(7L, "not a png at all".getBytes("UTF-8"),
+      Multimodal.MediaMeta("image/png", 16L, "00000000"))).toDS()
+    val e = intercept[Exception](Multimodal.decodePngStats(junk).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage == "doc 7: content is not a decodable image"),
+      chain.map(c => s"${c.getClass.getName}: ${c.getMessage}").mkString("\n"))
+  }
+
   test("resizeStub preserves ids and carries requested dimensions") {
     val out = Multimodal.resizeStub(Multimodal.mediaTable(spark, dir), 224, 224)
       .collect()

@@ -72,7 +72,6 @@ class PipelineOps7Spec extends SparkSuite {
   test("lengthBatches routes through REAL n_tok_bpe when the corpus carries it") {
     import org.apache.spark.sql.functions.{col, expr, size => fsize}
     import spark.implicits._
-    graft.GraftExtensions.register(spark)
     // the synthetic corpus is simple English whose learned BPE merges
     // whole words (bpe ≈ ws there) — plant the case the denominator
     // exists FOR: single "words" of unmergeable bytes, where ws counts 1

@@ -142,7 +142,6 @@ class PipelineOps8Spec extends SparkSuite {
   }
 
   test("semDedup: every dropped vector has a lower-id in-cell witness at >= tau") {
-    graft.GraftExtensions.register(spark)
     val emb = Tables(spark, dir, "embeddings")
     val out = PipelineOps8.semDedup(spark, emb, tau = 0.35)
     val dropped = out.filter(col("keep") === 0)

@@ -160,7 +160,6 @@ class PipelineOps9Spec extends SparkSuite {
   // -------------------------------------------------------- JL projection
 
   test("JL projection: identical vectors project identically; cos_proj(self-clone) = 1") {
-    graft.GraftExtensions.register(spark)
     val cfg = EmbedLsh(dims = 64, planes = 16)
     val emb = Tables(spark, dir, "embeddings").limit(20)
       .select(col("vec_id"), expr(graft.ext.Similarity.intVec).as("v"))
@@ -173,7 +172,6 @@ class PipelineOps9Spec extends SparkSuite {
   }
 
   test("JL projection signs equal the LSH sign bits (shared hyperplane matrix)") {
-    graft.GraftExtensions.register(spark)
     val cfg = EmbedLsh(dims = 64, planes = 16)
     val emb = Tables(spark, dir, "embeddings").limit(50)
     val proj = emb.select(col("vec_id"), expr(graft.ext.Similarity.intVec).as("v"))

@@ -9,15 +9,23 @@ package graft
 class PlanAuditSpec extends SparkSuite {
 
   test("no probe plans a CartesianProduct") {
+    import scala.util.{Failure, Success, Try}
     val dir = "/root/testdata/sf0.001"
-    val offenders = SparkEntry.probes.flatMap { p =>
-      try {
-        val plan = p.run(spark, dir).queryExecution.executedPlan.toString
-        if (plan.contains("CartesianProduct")) Some(p.name) else None
-      } catch {
-        case _: Throwable => None // execution errors are the oracle's job
+    // a fresh session carries no temp functions, so a probe that still
+    // depends on GraftExtensions.register fails here, by name
+    val fresh = spark.newSession()
+    val audited = SparkEntry.probes.map { p =>
+      Try { val df = p.run(fresh, dir); df.queryExecution.assertAnalyzed(); df } match {
+        case Failure(e) => (Some(s"${p.name}: $e"), None)
+        case Success(df) =>
+          // planning errors past analysis are the oracle's job
+          val plan = Try(df.queryExecution.executedPlan.toString).getOrElse("")
+          (None, if (plan.contains("CartesianProduct")) Some(p.name) else None)
       }
     }
+    val broken = audited.flatMap(_._1)
+    assert(broken.isEmpty, s"probes failing to build or analyse:\n${broken.mkString("\n")}")
+    val offenders = audited.flatMap(_._2)
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }
 

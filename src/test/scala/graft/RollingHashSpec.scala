@@ -3,14 +3,14 @@ package graft
 import graft.functions.RollingHash.rolling_hash
 import org.apache.spark.sql.functions._
 
-/** Native rolling_hash expression: known values, SQL registration, and
-  * interpreted ≡ codegen agreement.
+/** Native rolling_hash and dot_d expressions: known values, SQL
+  * registration, and interpreted ≡ codegen agreement (SQL text ≡ Column
+  * API for every registered function is NativeFunctionsSpec's table).
   */
 class RollingHashSpec extends SparkSuite {
   import spark.implicits._
 
   test("known values via the Column API") {
-    GraftExtensions.register(spark)
     val out = Seq("ab", "", "the fast key").toDF("t")
       .select(rolling_hash(col("t"))).collect().map(_.getLong(0)).toSeq
     // 'ab' = 97*31 + 98; '' folds to 0
@@ -81,7 +81,6 @@ class RollingHashSpec extends SparkSuite {
   }
 
   test("interpreted path equals codegen path") {
-    GraftExtensions.register(spark)
     val data = Seq("a", "abcdefghij", "the batch value merge line", "ズ unicode ズ")
     val codegen = data.toDF("t").select(rolling_hash(col("t"))).collect().map(_.getLong(0)).toSeq
     spark.conf.set("spark.sql.codegen.wholeStage", "false")

@@ -13,7 +13,6 @@ class SimHashNativeSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("expression == declarative simhashSig on the whole corpus") {
-    GraftExtensions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val native = docs
       .select(col("doc_id"), SimHash32.simhash32(col("text")).as("simhash"))
@@ -25,7 +24,6 @@ class SimHashNativeSpec extends SparkSuite {
   }
 
   test("interpreted eval == codegen result; hand cases") {
-    GraftExtensions.register(spark)
     val s = spark
     import s.implicits._
     val cases = Seq("", " ", "a", "a a", "a b c", "the the the quick",
