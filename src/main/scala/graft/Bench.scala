@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -13,21 +12,7 @@ import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 50+ distinct queries x several codegen stages each blow through the
-      // default 100-entry generated-class cache -> recompiles mid-suite.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // session-build-time, not read-time (ADVICE r5): a NANOS-encoded
-      // events file must be readable from the first scan; Tables still
-      // sets it defensively for sessions built elsewhere.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // ERROR, not WARN: Spark's WARN lines across the whole query suite
     // would crowd a bounded capture of stdout's tail, which must end with
     // our bare JSON result line.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Learns the checked-in BPE vocabulary (`src/main/resources/graft/
@@ -21,13 +20,7 @@ object BpeTrain {
     val nMerges = args.lift(1).map(_.toInt).getOrElse(500)
     val out = args.lift(2).getOrElse("src/main/resources/graft/bpe_merges.txt")
     val maxWords = 100000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-bpe-train")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     try {
       val freqs = Tables(spark, dir, "documents")
         .select(explode(graft.clean.CleanFns.tokens(col("text"))).as("w"))

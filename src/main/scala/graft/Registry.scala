@@ -10,6 +10,7 @@ object Registry {
     queries.Breadth.all ++
     queries.Modern.all ++
     ext.Dedup.all ++
+    ext.Decontamination.all ++
     ext.PipelineOps.all ++
     ext.PipelineOps2.all ++
     ext.PipelineOps3.all ++

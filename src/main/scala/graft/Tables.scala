@@ -58,22 +58,25 @@ object Tables {
     val spark = df.sparkSession
     val target = spark.conf.getOption("spark.graft.scan.minPartitions")
       .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
-    if (target > 1 && scanPartitions(df).forall(_ < target)) df.repartition(target)
+    // a frame that is not a pure file scan falls back to its RDD's width,
+    // so an already-wide frame is never shrunk to the floor
+    if (target > 1 && scanPartitions(df).getOrElse(df.rdd.getNumPartitions) < target)
+      df.repartition(target)
     else df
   }
+
+  /** Test access to the gate's estimate (TablesSpec parity pin). */
+  private[graft] def scanPartitionsForTest(df: DataFrame): Option[Int] =
+    scanPartitions(df)
 
   /** Scan-partition count of a frame whose leaves are all file scans,
     * computed from file-index metadata alone: Spark's split-packing
     * algebra (FilePartition.maxSplitBytes + getFilePartitions' greedy
     * bin close) replayed over the listed file sizes. None when any leaf
-    * is not a HadoopFsRelation — [[spreadDf]] then repartitions
-    * unconditionally, which only over-spreads a non-scan frame (safe;
-    * every production call site feeds a parquet read).
+    * is not a HadoopFsRelation — [[spreadDf]] then asks the frame's RDD
+    * (every production call site feeds a parquet read, so that planning
+    * cost is never paid there).
     */
-  /** Test access to the gate's estimate (TablesSpec parity pin). */
-  private[graft] def scanPartitionsForTest(df: DataFrame): Option[Int] =
-    scanPartitions(df)
-
   private def scanPartitions(df: DataFrame): Option[Int] = {
     import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
     val leaves = df.queryExecution.analyzed.collectLeaves()

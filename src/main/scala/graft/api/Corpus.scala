@@ -1,12 +1,11 @@
 package graft.api
 
-import graft.ext.Similarity
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.ext.{Decontamination, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.BpeCount.bpe_count
 import graft.functions.DotProduct.dot_d
-import graft.functions.LevBytes.lev_bytes
 import graft.functions.RollingHash.rolling_hash
 
 /** Fluent corpus-pipeline API: composes the engine's text/dedup/similarity
@@ -252,51 +251,24 @@ final case class Corpus(df: DataFrame) {
 
   /** Remove documents sharing any 4-word shingle with an eval/benchmark
     * set — the x_dec1/x_dec2/x_dec3 semantics as one API with an explicit
-    * size regime:
+    * size regime (shingle, sketch and join all live in
+    * [[graft.ext.Decontamination]]):
     *
     *  - [[Corpus.EvalBroadcast]] (eval ≪ corpus, KBs–MBs): broadcast the
     *    raw eval shingles; corpus never shuffles. Exact.
     *  - [[Corpus.EvalShuffle]] (eval is another corpus): merge join, both
     *    sides shuffle once on the shingle. Exact.
     *  - [[Corpus.EvalBloom]]: fold eval shingles into a fixed-size Bloom
-    *    sketch (k=3 × 4096 slots) — bounded broadcast at ANY eval size,
-    *    deterministic false positives (removal is conservative: a false
-    *    positive drops a clean doc, never keeps a contaminated one).
+    *    sketch (k=3 × 4096 slots) — bounded broadcast at ANY eval size and
+    *    a narrow per-document filter, with deterministic false positives
+    *    (removal is conservative: a false positive drops a clean doc,
+    *    never keeps a contaminated one).
+    *
+    * In every mode a document with NULL text or fewer than 4 tokens has no
+    * shingle and survives.
     */
   def decontaminate(evalDocs: DataFrame, mode: Corpus.EvalMode = Corpus.EvalBroadcast): Corpus =
-    chain { d =>
-      val sh = Corpus.shingles4(d)
-      val evSh = Corpus.shingles4(evalDocs).select(col("s")).distinct()
-      val contaminated = mode match {
-        case Corpus.EvalBroadcast =>
-          sh.join(broadcast(evSh), Seq("s"), "left_semi")
-        case Corpus.EvalShuffle =>
-          sh.join(evSh.hint("merge"), Seq("s"), "left_semi")
-        case Corpus.EvalBloom =>
-          // k=3 × 4096 slots packed into 192 longs (x_dec3's bitmap form:
-          // 1.5 KB broadcast, O(1) membership per probe). The 3 slots are
-          // disjoint 3-hex windows of ONE md5(shingle) — one digest per
-          // shingle yields all k probes (x_dec3's exact construction).
-          def pos(i: Int): Column =
-            expr(s"CAST($i * 4096 + conv(substr(__h, ${1 + 3 * i}, 3), 16, 10) AS INT)")
-          def hit(i: Int): Column = {
-            val q = s"CAST($i * 4096 + conv(substr(__h, ${1 + 3 * i}, 3), 16, 10) AS INT)"
-            expr(s"(element_at(bloom, CAST($q DIV 64 AS INT) + 1) & shiftleft(1L, $q % 64)) <> 0L")
-          }
-          val bloom = broadcast(
-            evSh.withColumn("__h", md5(col("s")))
-              .select(explode(array(pos(0), pos(1), pos(2))).as("p"))
-              .agg(collect_set(col("p")).as("ps"))
-              .select(expr(
-                """transform(sequence(0, 191),
-                  |  w -> aggregate(filter(ps, p -> p DIV 64 = w),
-                  |                 0L, (acc, p) -> acc | shiftleft(1L, CAST(p % 64 AS INT))))""".stripMargin)
-                .as("bloom")))
-          sh.withColumn("__h", md5(col("s")))
-            .join(bloom).filter(hit(0) && hit(1) && hit(2))
-      }
-      d.join(contaminated.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-    }
+    chain(Decontamination.decontaminate(_, evalDocs, mode))
 
   /** FUZZY decontamination (x_dec5): drop documents whose edit-distance
     * similarity to ANY eval doc reaches `minSim` (sim = 1 - lev/max(len)),
@@ -307,32 +279,7 @@ final case class Corpus(df: DataFrame) {
     */
   def decontaminateFuzzy(evalDocs: DataFrame, minSim: Double = 0.30): Corpus =
     chain { d =>
-      val verifyParallelism =
-        d.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      val sh = Corpus.shingles4(d)
-      val evSh = broadcast(
-        Corpus.shingles4(evalDocs)
-          .select(col("doc_id").as("__eval_id"), col("s")).distinct())
-      val cand = sh.join(evSh, Seq("s"))
-        .select(col("doc_id"), col("__eval_id"))
-        .distinct()
-        // expensive-scalar stage over a small-byte row set: explicit
-        // parallelism floor (see PipelineOps8.dec5 / PERF.md round 7)
-        .repartition(verifyParallelism, col("doc_id"))
-      val evTexts = broadcast(
-        evalDocs.select(col("doc_id").as("__eval_id"), col("text").as("__ev_text")))
-      val hits = cand
-        .join(d.select(col("doc_id"), col("text")), Seq("doc_id"))
-        .join(evTexts, Seq("__eval_id"))
-        // numerator counts UTF-8 BYTE edits, so the denominator must be
-        // bytes too (octet_length, not length): a char denominator
-        // deflates sim on multi-byte text and silently misses paraphrased
-        // contamination in non-ASCII corpora (round-7 ADVICE).
-        .withColumn("__sim", lit(1.0) -
-          lev_bytes(col("text"), col("__ev_text")).cast("double") /
-            greatest(octet_length(col("text")), octet_length(col("__ev_text"))))
-        .filter(col("__sim") >= minSim)
-        .select(col("doc_id")).distinct()
+      val hits = Decontamination.fuzzyMatches(d, evalDocs, minSim).select(col("doc_id")).distinct()
       d.join(hits, Seq("doc_id"), "left_anti")
     }
 
@@ -351,10 +298,6 @@ final case class Corpus(df: DataFrame) {
         .drop("text_kept"))
   }
 
-  /** Duplicated-span signals (x_ded20): max_run_grams / span_words /
-    * n_dup_positions appended per doc (0 for docs with no cross-document
-    * duplicated 8-gram).
-    */
   /** Intra-document segment dedup (x_ded22): drop segments repeated
     * WITHIN each document (first occurrence kept) — narrow, zero-exchange;
     * run before [[dedupSegments]] so self-repeating pages can't dominate
@@ -368,6 +311,10 @@ final case class Corpus(df: DataFrame) {
         .withColumnRenamed("text_kept", "text"))
   }
 
+  /** Duplicated-span signals (x_ded20): max_run_grams / span_words /
+    * n_dup_positions appended per doc (0 for docs with no cross-document
+    * duplicated 8-gram).
+    */
   def withDupSpans(n: Int = 8): Corpus = chain { d =>
     d.join(graft.ext.PipelineOps9.dupSpans(d, n), Seq("doc_id"), "left_outer")
       .na.fill(0L, Seq("max_run_grams", "span_words", "n_dup_positions"))
@@ -387,49 +334,12 @@ final case class Corpus(df: DataFrame) {
     d.join(long, Seq("doc_id"), "left_anti")
   }
 
-  /** Per-language length-quantile report (x_skt3): exact p50/p90 next to
-    * the 32-bin histogram-sketch estimates. Returns the REPORT, not a
-    * Corpus.
-    */
-  def lengthQuantiles(): DataFrame =
-    graft.ext.PipelineOps9.histogramQuantiles(df)
-
-  /** Per-language distinct-bigram report (x_skt2): exact count next to the
-    * KMV k=64 estimate. Returns the REPORT, not a Corpus.
-    */
-  def distinctBigramStats(): DataFrame =
-    graft.ext.PipelineOps9.kmvDistinctBigrams(df)
-
-  /** Release data card (x_rep2): ROLLUP over (lang, source) of doc count,
-    * token mass, and quality keep rate. Returns the REPORT, not a Corpus.
-    */
-  def dataCard(): DataFrame =
-    graft.ext.PipelineOps3.addQualityRuleSignals(df)
-      .rollup(col("lang"), col("source"))
-      .agg(grouping(col("lang")).cast("int").as("g_lang"),
-        grouping(col("source")).cast("int").as("g_source"),
-        count(lit(1)).as("n_docs"),
-        sum(col("n_words")).cast("long").as("n_tokens"),
-        expr("CAST(SUM(keep) * 1000000 DIV COUNT(*) AS BIGINT)").as("keep_ppm"))
-      .select(coalesce(col("lang"), lit("ALL")).as("lang"),
-        coalesce(col("source"), lit("ALL")).as("source"),
-        col("g_lang"), col("g_source"), col("n_docs"), col("n_tokens"), col("keep_ppm"))
-
   /** Incremental near-dedup: drop documents of THIS corpus (the new crawl
     * shard) that MinHash-band-collide with an already-released corpus —
     * x_ded9's semantics. Only new×old candidates are generated; the old
     * side is never self-joined (at scale its bands are a persisted index
     * partitioned by signature, so each run shuffles only the new shard).
     */
-  /** Per-document status vs an older snapshot (x_cur3): added / removed /
-    * changed / unchanged by content fingerprint — the audit every corpus
-    * iteration runs, and the feed for incremental pipelines (only
-    * added+changed need re-scoring). Returns the REPORT (not a Corpus):
-    * one doc_id-keyed full-outer join over fingerprints, never text.
-    */
-  def diffAgainst(oldCorpus: DataFrame): DataFrame =
-    graft.ext.PipelineOps7.corpusDiff(oldCorpus, df)
-
   def dedupIncremental(oldCorpus: DataFrame): Corpus = chain { d =>
     val newBands = graft.ext.Dedup.minhashBandsNative(d)
     val oldBands = graft.ext.Dedup.minhashBandsNative(oldCorpus)
@@ -535,28 +445,6 @@ final case class Corpus(df: DataFrame) {
       Seq("doc_id"), "left")
   }
 
-  /** CALIBRATED learned quality (x_qc4): fixed-iteration IRLS logistic
-    * on the 3-feature system — appends (quality_prob, quality_pred)
-    * where quality_prob is a probability in (0, 1). Train = `iters`
-    * aggregation passes over `labeled` (default: self-labeled by the
-    * rules); score = 1-row broadcast + narrow arithmetic.
-    *
-    * DISTILLATION semantics (as [[withLearnedQuality]]): `labeled`
-    * chooses the training SUBSET, y is the rule gate recomputed over
-    * it. For human labels, feed a (doc_id, x1..x3, y) frame to
-    * [[graft.ext.QualityModel.trainIrls3]] directly.
-    */
-  def withCalibratedQuality(labeled: Option[DataFrame] = None,
-      iters: Int = 3): Corpus = chain { d =>
-    val beta = graft.ext.QualityModel.trainIrls3(
-      graft.ext.QualityModel.features3(labeled.getOrElse(d)), iters)
-    d.join(graft.ext.QualityModel.scoreIrls3(
-        graft.ext.QualityModel.features3(d), beta)
-        .select(col("doc_id"), col("prob").as("quality_prob"),
-          col("pred").as("quality_pred")),
-      Seq("doc_id"), "left")
-  }
-
   /** Drop documents failing the quality rules (adds the signals if not
     * already present, then filters on the combined verdict).
     */
@@ -627,29 +515,8 @@ final case class Corpus(df: DataFrame) {
     * array domain (narrow); eval shingles broadcast; the hit table
     * (∝ contamination, not corpus size) re-joins via AQE broadcast.
     */
-  def scoreContamination(evalDocs: DataFrame): Corpus = chain { d =>
-    val withSh = d
-      .withColumn("_ws", graft.clean.CleanFns.tokens(col("text")))
-      .withColumn("_sh", expr(
-      """CASE WHEN size(_ws) >= 4 THEN
-        |  array_distinct(transform(sequence(1, size(_ws) - 3),
-        |    i -> concat_ws(' ', element_at(_ws, i),
-        |                   element_at(_ws, i + 1),
-        |                   element_at(_ws, i + 2),
-        |                   element_at(_ws, i + 3))))
-        |ELSE array() END""".stripMargin))
-    val evSh = broadcast(Corpus.shingles4(evalDocs).select(col("s").as("ev_s")).distinct())
-    val hits = withSh.select(col("doc_id"), explode(col("_sh")).as("s"))
-      .join(evSh, col("s") === col("ev_s"))
-      .groupBy("doc_id").agg(count(lit(1)).cast("long").as("_n_hit"))
-    withSh
-      .withColumn("_n_sh", size(col("_sh")).cast("long"))
-      .join(hits, Seq("doc_id"), "left_outer")
-      .na.fill(0L, Seq("_n_hit"))
-      .withColumn("contam_ppm",
-        expr("CASE WHEN _n_sh = 0 THEN 0L ELSE CAST(_n_hit * 1000000 DIV _n_sh AS BIGINT) END"))
-      .drop("_ws", "_sh", "_n_sh", "_n_hit")
-  }
+  def scoreContamination(evalDocs: DataFrame): Corpus =
+    chain(Decontamination.withContaminationPpm(_, evalDocs))
 
   /** Exact-N deterministic sample (x_smp5): the smallest `n` documents by
     * a content-independent hash order — reproducible at any corpus size,
@@ -714,23 +581,6 @@ final case class Corpus(df: DataFrame) {
   def capPerHost(urlCol: String = "url", cap: Int = 3): Corpus = chain { d =>
     d.join(graft.ext.PipelineOps13.hostCap(d, col(urlCol), cap)
       .select("doc_id"), Seq("doc_id"), "left_semi")
-  }
-
-  /** Robots-exclusion gate from RAW robots.txt files (x_url6): parse
-    * each host's robots.txt per RFC 9309 ([[graft.ext.RobotsTxt]] —
-    * user-agent group selection, Allow/Disallow, `*`/`$` wildcards,
-    * unreserved percent normalization) and keep only documents whose
-    * `urlCol` the selected rules allow. `robots` is a (host,
-    * robots_txt) frame; documents of hosts with no robots.txt (or no
-    * matching group) pass.
-    */
-  def gateByRobotsTxt(robots: DataFrame, urlCol: String = "url",
-      agent: String = graft.ext.RobotsTxt.DefaultAgent): Corpus = chain { d =>
-    val allowed = graft.ext.RobotsTxt.robotsGateWild(
-      d.select(col("doc_id"), col(urlCol).as("url")),
-      graft.ext.RobotsTxt.parseRobots(robots, agent))
-      .filter(col("allowed") === 1L).select("doc_id")
-    d.join(allowed, Seq("doc_id"), "left_semi")
   }
 
   /** Encoding repair (x_enc1): the deterministic ftfy-lite chain of
@@ -921,17 +771,6 @@ final case class Corpus(df: DataFrame) {
         .select(col("doc_id"), col("nll_avg")), Seq("doc_id"), "left")
   }
 
-  /** Bigram-LM NLL against a PERSISTED released-corpus store
-    * (x_txt18d; the `dedupIncremental(indexDir)` pattern): released text
-    * is never re-read — the stored count tables load into the native
-    * scorer. The daily-increment deployment shape.
-    */
-  def withLmScoreFromStore(indexDir: String): Corpus = chain { d =>
-    val idx = graft.ext.LmStore.loadLmIndex(d.sparkSession, indexDir)
-    d.join(graft.ext.PipelineOps10.lmScoreNative(d, idx)
-        .select(col("doc_id"), col("nll_avg")), Seq("doc_id"), "left")
-  }
-
   /** Trigram Kneser-Ney NLL (x_txt22) — one order above [[withLmScore]]:
     * repetitive template text that fools a bigram model (locally fluent
     * pairs) scores high when its trigram continuations are unseen.
@@ -956,16 +795,6 @@ final case class Corpus(df: DataFrame) {
     val idx = graft.ext.KnLm.loadKnIndex(d.sparkSession, indexDir)
     d.join(graft.ext.KnLm.knScoreNative(d, idx)
         .select(col("doc_id"), col("kn_avg")), Seq("doc_id"), "left")
-  }
-
-  /** WITHIN-document repetition signals (x_txt23, the Gopher repetition
-    * family): segment duplication, top-2/3/4-gram character shares,
-    * duplicated-5-gram mass, and the combined verdict — the "same
-    * paragraph pasted fifty times" page is unique corpus-wide and sails
-    * through every cross-document dedup stage. Joined back by doc_id.
-    */
-  def withRepetitionSignals(): Corpus = chain { d =>
-    d.join(graft.ext.PipelineOps13.repetitionSignalsNative(d), Seq("doc_id"), "left")
   }
 
   /** Drop documents failing the Gopher repetition thresholds. Routed
@@ -1012,15 +841,6 @@ final case class Corpus(df: DataFrame) {
   def packPlacements(ctx: Int = 256, shards: Int = 16): DataFrame =
     graft.ext.PipelineOps14.packPlacements(df, ctx, shards)
 
-  /** DSIR importance weight vs a target domain (x_cur4): positive means
-    * "more target-like than crawl-like" under hashed-bigram statistics.
-    * Joined back by doc_id; featureless docs carry NULL.
-    */
-  def withDsirWeight(target: DataFrame): Corpus = chain { d =>
-    d.join(graft.ext.PipelineOps10.dsirWeights(d, target)
-        .select(col("doc_id"), col("dsir_avg")), Seq("doc_id"), "left")
-  }
-
   /** Keep only documents whose DSIR weight vs `target` is positive — the
     * importance-selection pass of a targeted data recipe.
     */
@@ -1028,13 +848,6 @@ final case class Corpus(df: DataFrame) {
     d.join(graft.ext.PipelineOps10.dsirWeights(d, target)
         .filter(col("keep")).select(col("doc_id")), Seq("doc_id"), "left_semi")
   }
-
-  /** BM25 top-k retrieval over this corpus (x_ret1): for each query
-    * document, the k best-matching corpus documents (self excluded),
-    * ranked on 6-dp-rounded scores with doc_id tiebreak.
-    */
-  def retrieveBm25(queries: DataFrame, k: Int = 5): DataFrame =
-    graft.ext.PipelineOps10.bm25TopK(df, queries, k)
 
   /** Per-document top-k keywords after stopword removal: (doc_id, rk, tok,
     * n), deterministic (count DESC, term ASC) tiebreak. Same shape as the
@@ -1122,18 +935,6 @@ object Corpus {
       schema: org.apache.spark.sql.types.StructType): Corpus =
     Corpus(spark.read.schema(schema).json(path))
 
-  /** 4-word shingles — the decontamination unit, shared with the
-    * oracle-checked x_dec1/x_dec2/x_dec3 probes and `DocStreams.shingles`.
-    */
-  def shingles4(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1),
-          |                 element_at(ws, i + 2), element_at(ws, i + 3)))""".stripMargin))
-        .as("s"))
-
   val defaultStopwords: Seq[String] = Seq(
     "the", "a", "of", "and", "to", "in", "is", "it", "for", "on",
     "with", "as", "at", "by", "an", "be", "this", "that", "from", "or")
@@ -1157,20 +958,4 @@ object Corpus {
     */
   def nearDupVectors(spark: SparkSession, dir: String, tau: Double = 0.35): DataFrame =
     graft.ext.EmbedDedup.nearDupPairs(graft.Tables(spark, dir, "embeddings"), tau)
-
-  /** Cluster-scoped semantic dedup (x_ded19, SemDeDup shape): IVF cell
-    * assignment, then within-cell cosine domination by lower id. Returns
-    * (vec_id, cell, n_close, keep) — filter keep = 1 for the survivor set.
-    *
-    * Recall/scale knob: the default `cap = 16` consults only each cell's
-    * 16 lowest-id head vectors — per-vector work is bounded at any cell
-    * skew, but a near-dup pair entirely among NON-heads of a giant cell
-    * survives (the LSH chain [[nearDupVectors]] is the recall path).
-    * Pass `cap <= 0` for UNCAPPED exact-within-cell semantics (a
-    * cell-keyed self-join: |cell|² on the largest cell — fine at
-    * broadcast/moderate scale, the known quadratic at web scale).
-    */
-  def semDedupVectors(spark: SparkSession, dir: String, tau: Double = 0.35,
-      cap: Int = graft.ext.PipelineOps8.semCap): DataFrame =
-    graft.ext.PipelineOps8.semDedup(spark, graft.Tables(spark, dir, "embeddings"), tau, cap)
 }

@@ -451,18 +451,6 @@ object Frontier {
     edges.select("dst", "dst_host").distinct()
       .join(fetched.select(col("canon").as("dst")), Seq("dst"), "left_anti")
 
-  /** [[frontierFromRedirects]] from raw responses in one call. Callers
-    * consuming the edges MORE than once should extract them once
-    * ([[redirectEdges]]), stage, and use [[frontierFromRedirects]] —
-    * the accessor → resolve → canonicalize chain is a deep expression
-    * tree, and letting several consumers inline it repeatedly through
-    * filter pushdown turns OPTIMIZER time into the dominant cost (the
-    * planReset lesson: measured ~10 s of driver-side planning, tasks
-    * idle, on a 500-row fixture before x_url11 staged its edges).
-    */
-  def redirectFrontier(responses: DataFrame, fetched: DataFrame): DataFrame =
-    frontierFromRedirects(redirectEdges(responses), fetched)
-
   /** X-URL11 — the redirect feedback loop: per doc (host r{h}), mode
     * doc%5 plants a 301 (absolute cross-host Location with a tracking
     * param — canonicalization visible), a 302 (RELATIVE Location with a

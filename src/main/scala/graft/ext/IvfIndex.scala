@@ -35,8 +35,7 @@ object IvfIndex {
     * centroids (vec_id < nCentroids), `lloydSteps` exact floor-mean
     * refinements, final cell assignment + cached norms.
     */
-  def train(spark: SparkSession, embeddings: DataFrame,
-      nCentroids: Int = 8, lloydSteps: Int = 1): Handle = {
+  def train(embeddings: DataFrame, nCentroids: Int = 8, lloydSteps: Int = 1): Handle = {
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
 
     // deterministic seeds = the nCentroids smallest vec_ids PRESENT (a
@@ -186,7 +185,7 @@ object IvfIndex {
     // appended index — the per-job production cost
     val idxDir = graft.util.TrainOnce(s"ivf_inc:$dir") {
       val p = graft.util.TempDirs.scratch("graft_ivf_inc")
-      save(train(s, emb.filter(col("vec_id") % 2 === 0)), p)
+      save(train(emb.filter(col("vec_id") % 2 === 0)), p)
       append(s, p, emb.filter(col("vec_id") % 2 =!= 0))
       p
     }

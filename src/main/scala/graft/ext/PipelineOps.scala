@@ -3,158 +3,12 @@ package graft.ext
 import graft.{Probe, Tables}
 import org.apache.spark.sql.functions._
 
-/** Corpus-pipeline operators beyond dedup/similarity: benchmark
-  * decontamination and stratified downsampling — the remaining standard
-  * stages of a pre-training data flow.
-  *
-  * Scale design: decontamination broadcasts the (tiny) eval side so the
-  * corpus is NEVER shuffled — the only wide stage is the per-doc rollup of
-  * matched rows, which is proportional to contamination, not corpus size.
-  * Stratified sampling is a pure narrow filter (hash-bucket arithmetic per
-  * row), exactly like `p_sample_deterministic` but with per-stratum rates.
+/** Corpus-pipeline operators beyond dedup/similarity: stratified
+  * downsampling and the composed end-to-end pipeline. Stratified sampling
+  * is a pure narrow filter (hash-bucket arithmetic per row), exactly like
+  * `p_sample_deterministic` but with per-stratum rates.
   */
 object PipelineOps {
-
-  /** X-DEC1 — benchmark decontamination: find corpus documents sharing any
-    * 4-word shingle with the held-out eval set (here: doc_id % 25 == 0, a
-    * deterministic stand-in for "the benchmark suite"; 4 keeps the check
-    * non-vacuous on the synthetic corpus — 27 contaminated docs at sf0.01).
-    *
-    * Per contaminated doc: how many distinct shingles are compromised and
-    * how many eval docs it overlaps. The eval side is `broadcast()` — eval
-    * benchmarks are KBs-to-MBs against a 100 TB corpus, so the corpus-side
-    * scan joins map-side with zero shuffle; only matched (doc, shingle,
-    * eval_doc) rows reach the rollup.
-    */
-  private val dec1 = Probe(
-    "x_dec1_contamination",
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS s
-      |  FROM (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '') AS ws FROM documents
-      |        WHERE len(list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '')) >= 4),
-      |       UNNEST(generate_series(1, len(ws) - 3)) AS t(i)),
-      |ev AS (SELECT doc_id AS eval_id, s FROM sh WHERE doc_id % 25 = 0),
-      |corp AS (SELECT doc_id, s FROM sh WHERE doc_id % 25 <> 0)
-      |SELECT corp.doc_id,
-      |  CAST(COUNT(DISTINCT corp.s) AS BIGINT) AS n_shingles_hit,
-      |  CAST(COUNT(DISTINCT ev.eval_id) AS BIGINT) AS n_eval_docs
-      |FROM corp JOIN ev ON corp.s = ev.s
-      |GROUP BY corp.doc_id
-      |ORDER BY corp.doc_id""".stripMargin) { (s, dir) =>
-    // no corpus-side distinct: the final count(DISTINCT ...) already
-    // dedupes, and a distinct here would shuffle every corpus shingle —
-    // the exact cost this operator's broadcast design avoids. Only the
-    // tiny eval side is deduplicated (to shrink the broadcast).
-    val sh = Tables(s, dir, "documents")
-      .select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2),
-          |                 element_at(ws, i + 3)))""".stripMargin))
-        .as("s"))
-    val ev = broadcast(
-      sh.filter(col("doc_id") % 25 === 0)
-        .select(col("doc_id").as("eval_id"), col("s").as("ev_s"))
-        .distinct())
-    sh.filter(col("doc_id") % 25 =!= 0)
-      .join(ev, col("s") === col("ev_s"))
-      .groupBy("doc_id")
-      .agg(count_distinct(col("s")).as("n_shingles_hit"),
-        count_distinct(col("eval_id")).as("n_eval_docs"))
-      .orderBy("doc_id")
-  }
-
-  /** X-DEC3 — Bloom-filter decontamination: the FIXED-MEMORY variant of
-    * x_dec1/x_dec2. Eval shingles are folded into a partitioned Bloom
-    * filter — k = 3 slot functions, 4096 slots each; the 3 slots are
-    * DISJOINT 3-hex-digit windows of ONE `md5(shingle)` (hex chars 1-3,
-    * 4-6, 7-9), tagged with the window index. One digest yields all k
-    * probes — the corpus-side hash cost is the dominant narrow cost of
-    * this operator at any scale, and a window split of a uniform digest
-    * is the standard k-from-one-hash Bloom construction. The broadcast is
-    * AT MOST 12,288 short strings NO MATTER HOW LARGE the eval side
-    * grows. This is the regime between dec1
-    * (eval tiny → broadcast raw shingles) and dec2 (eval huge → shuffle
-    * both sides): a bounded-size sketch broadcast keeps the corpus scan
-    * narrow at ANY eval size, at the price of deterministic false
-    * positives, which a candidate-verify stage (x_dec1's exact join on the
-    * bloom-positive slice only) would then clear.
-    *
-    * Counts per corpus doc the distinct shingles whose k slots are ALL
-    * occupied (bloom-positive candidates, false positives included — the
-    * oracle reproduces the same slots, so FP behavior itself is checked).
-    * The corpus side is narrow until the per-doc rollup: slot computation
-    * is per-row arithmetic against the broadcast array.
-    */
-  private val dec3 = Probe(
-    "x_dec3_bloom_contamination",
-    """WITH sh AS (
-      |  SELECT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS s
-      |  FROM (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '') AS ws FROM documents
-      |        WHERE len(list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '')) >= 4),
-      |       UNNEST(generate_series(1, len(ws) - 3)) AS t(i)),
-      |ev AS (SELECT DISTINCT s FROM sh WHERE doc_id % 25 = 0),
-      |bloom AS (
-      |  SELECT DISTINCT CAST(i AS VARCHAR) || ':' ||
-      |         substr(md5(s), 1 + 3 * i, 3) AS p
-      |  FROM ev, UNNEST([0, 1, 2]) AS u(i)),
-      |corp AS (SELECT DISTINCT doc_id, s FROM sh WHERE doc_id % 25 <> 0)
-      |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_candidates
-      |FROM corp
-      |WHERE '0:' || substr(md5(s), 1, 3) IN (SELECT p FROM bloom)
-      |  AND '1:' || substr(md5(s), 4, 3) IN (SELECT p FROM bloom)
-      |  AND '2:' || substr(md5(s), 7, 3) IN (SELECT p FROM bloom)
-      |GROUP BY doc_id
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val sh = Tables(s, dir, "documents")
-      .select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2),
-          |                 element_at(ws, i + 3)))""".stripMargin))
-        .as("s"))
-      // ONE digest per shingle; the 3 slot probes are substrings of it
-      .withColumn("h", md5(col("s")))
-    // slot = window-index tag + 3 md5 hex digits (window i = hex chars
-    // 1+3i .. 3+3i), materialized as an INTEGER position i*4096 + hexval
-    // (bijective with the oracle's string slot '<i>:<hex3>' — membership
-    // is representation-independent)
-    def pos(i: Int): org.apache.spark.sql.Column =
-      expr(s"CAST($i * 4096 + conv(substr(h, ${1 + 3 * i}, 3), 16, 10) AS INT)")
-    // the filter itself: the 12,288 possible slots packed into 192 LONGS —
-    // a 1.5 KB bitmap row, O(1) membership per probe. (A first cut kept
-    // the occupied-slot set as an array and probed with array_contains —
-    // an O(12k) linear scan per probe that cost 46 s at sf0.1; the bitmap
-    // is the actual Bloom-filter representation and is 100× faster.)
-    // build shape (round 7): per-word bit_or aggregation — ONE map-side-
-    // combined exchange keyed on the word index (bit_or is idempotent, so
-    // no distinct is needed), then a tiny (≤192-row) collapse into the
-    // bitmap row. The previous single-row collect_set + per-word
-    // aggregate(filter(...)) walked 192 × |slots| interpreted HOF ops.
-    val bloom = broadcast(
-      sh.filter(col("doc_id") % 25 === 0)
-        .select(explode(array(pos(0), pos(1), pos(2))).as("p"))
-        .groupBy(expr("p DIV 64").as("w"))
-        .agg(expr("bit_or(shiftleft(1L, p % 64))").as("bits"))
-        .agg(expr("map_from_arrays(collect_list(w), collect_list(bits))").as("m"))
-        .select(expr(
-          "transform(sequence(0, 191), w -> coalesce(element_at(m, w), 0L))")
-          .as("bloom")))
-    def hit(i: Int): org.apache.spark.sql.Column = {
-      val q = s"CAST($i * 4096 + conv(substr(h, ${1 + 3 * i}, 3), 16, 10) AS INT)"
-      expr(s"(element_at(bloom, CAST($q DIV 64 AS INT) + 1) & shiftleft(1L, $q % 64)) <> 0L")
-    }
-    // corpus side: narrow slot arithmetic + O(1) bit tests against the
-    // broadcast bitmap; only bloom-positive rows reach the rollup shuffle
-    sh.filter(col("doc_id") % 25 =!= 0)
-      .join(bloom) // broadcast nested-loop against the single sketch row
-      .filter(hit(0) && hit(1) && hit(2))
-      .groupBy("doc_id")
-      .agg(count_distinct(col("s")).as("n_candidates"))
-      .orderBy("doc_id")
-  }
 
   /** X-SMP2 — deterministic stratified downsampling: per-language keep
     * rates (the dominant language is downsampled, the tail kept), decided
@@ -218,52 +72,5 @@ object PipelineOps {
       .orderBy("doc_id")
   }
 
-  /** X-DEC2 — decontamination, SHUFFLE path: identical semantics and output
-    * to x_dec1, but the join is forced to shuffle (MERGE hint) instead of
-    * broadcasting the eval side. This is the regime where the "eval" side
-    * is NOT tiny — decontaminating against another corpus shard, a
-    * multi-GB blocklist, or all previously-released training data — and a
-    * broadcast would OOM the driver (the exact failure mode VERDICT r3
-    * flagged for x_txt8's forced vocabulary broadcast). Both sides shuffle
-    * once on the shingle key; everything after the join is proportional to
-    * contamination. PlanAuditSpec pins the strategy split: x_dec1 plans a
-    * BroadcastHashJoin with zero corpus-side exchange, x_dec2 a
-    * SortMergeJoin.
-    */
-  private val dec2 = Probe(
-    "x_dec2_contamination_shuffle",
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS s
-      |  FROM (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '') AS ws FROM documents
-      |        WHERE len(list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '')) >= 4),
-      |       UNNEST(generate_series(1, len(ws) - 3)) AS t(i)),
-      |ev AS (SELECT doc_id AS eval_id, s FROM sh WHERE doc_id % 25 = 0),
-      |corp AS (SELECT doc_id, s FROM sh WHERE doc_id % 25 <> 0)
-      |SELECT corp.doc_id,
-      |  CAST(COUNT(DISTINCT corp.s) AS BIGINT) AS n_shingles_hit,
-      |  CAST(COUNT(DISTINCT ev.eval_id) AS BIGINT) AS n_eval_docs
-      |FROM corp JOIN ev ON corp.s = ev.s
-      |GROUP BY corp.doc_id
-      |ORDER BY corp.doc_id""".stripMargin) { (s, dir) =>
-    val sh = Tables(s, dir, "documents")
-      .select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2),
-          |                 element_at(ws, i + 3)))""".stripMargin))
-        .as("s"))
-    val ev = sh.filter(col("doc_id") % 25 === 0)
-      .select(col("doc_id").as("eval_id"), col("s").as("ev_s"))
-      .distinct()
-      .hint("merge") // the eval side is too big to broadcast in this regime
-    sh.filter(col("doc_id") % 25 =!= 0)
-      .join(ev, col("s") === col("ev_s"))
-      .groupBy("doc_id")
-      .agg(count_distinct(col("s")).as("n_shingles_hit"),
-        count_distinct(col("eval_id")).as("n_eval_docs"))
-      .orderBy("doc_id")
-  }
-
-  val all: Seq[Probe] = Seq(dec1, dec2, dec3, smp2, pipe1)
+  val all: Seq[Probe] = Seq(smp2, pipe1)
 }

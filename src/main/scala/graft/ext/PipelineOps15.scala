@@ -62,19 +62,7 @@ object PipelineOps15 {
       .filter(col("keep") === 1).select(col("doc_id"), col("text"))
     val dd = q.groupBy(md5(col("text")).as("__h")).agg(min(col("doc_id")).as("doc_id"))
       .join(q, "doc_id").select(col("doc_id"), col("text"))
-    def shingles(d: org.apache.spark.sql.DataFrame) = d
-      .select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1),
-          |                 element_at(ws, i + 2), element_at(ws, i + 3)))""".stripMargin)).as("s"))
-    val ev = broadcast(shingles(docs.filter(col("doc_id") % 25 === 0))
-      .select(col("s").as("ev_s")).distinct())
-    val contaminated = shingles(dd)
-      .join(ev, col("s") === col("ev_s"), "left_semi")
-      .select("doc_id").distinct()
-    val dec = dd.join(contaminated, Seq("doc_id"), "left_anti")
+    val dec = graft.api.Corpus(dd).decontaminate(docs.filter(col("doc_id") % 25 === 0)).df
     def cnt(d: org.apache.spark.sql.DataFrame) = d.agg(count(lit(1)).cast("long").as("n"))
     val rows = Seq(
       ("1_quality_gate", cnt(corpus), cnt(q)),

@@ -451,7 +451,7 @@ object PipelineOps16 {
       BandIndex.build(released, s"$p/bands_idx")
       SegIndex.build(released, s"$p/seg_idx")
       KnLm.buildKnTypes(released, s"$p/kn_base")
-      IvfIndex.save(IvfIndex.train(s, emb.filter(col("vec_id") % 4 =!= 0)), s"$p/ivf")
+      IvfIndex.save(IvfIndex.train(emb.filter(col("vec_id") % 4 =!= 0)), s"$p/ivf")
       // once-per-shard side effects: merge the ACCEPTED docs into the KN
       // store; append their embeddings into the IVF layout
       val kept = pipe8Flags(s, p, shard, s"$p/build_run")

@@ -131,66 +131,6 @@ object PipelineOps4 {
       .select("doc_id", "lang", "n_words", "lang_median")
   }
 
-  /** X-DEC4 — contamination SCORING (the policy-grade companion to
-    * x_dec1's detection): for EVERY corpus document, the fraction (ppm) of
-    * its distinct 4-word shingles that appear in the held-out eval set —
-    * the number a threshold policy ("drop above 200000 ppm, flag above 0")
-    * consumes. Scale shape: the per-doc distinct-shingle count is computed
-    * IN the token-array domain (`array_distinct`, narrow — the corpus
-    * never shuffles for its own denominator); only eval-MATCHED shingles
-    * reach the keyed rollup, and the hit table re-joins doc stats as an
-    * AQE broadcast (hits ∝ contamination, not corpus size).
-    */
-  private val dec4 = Probe(
-    "x_dec4_contamination_score",
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3]
-      |                   for i in range(1, len(ws) - 2)]) AS sh
-      |  FROM (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '') AS ws FROM documents
-      |        WHERE len(list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '')) >= 4)),
-      |ev AS (
-      |  SELECT DISTINCT unnest(sh) AS s FROM t WHERE doc_id % 25 = 0),
-      |hits AS (
-      |  SELECT c.doc_id, CAST(count(*) AS BIGINT) AS n_hit
-      |  FROM (SELECT doc_id, unnest(sh) AS s FROM t WHERE doc_id % 25 <> 0) c
-      |  JOIN ev ON c.s = ev.s GROUP BY c.doc_id)
-      |SELECT t.doc_id,
-      |  CAST(len(t.sh) AS BIGINT) AS n_shingles,
-      |  coalesce(hits.n_hit, 0) AS n_hit,
-      |  CAST(coalesce(hits.n_hit, 0) * 1000000 // len(t.sh) AS BIGINT) AS contam_ppm
-      |FROM t LEFT JOIN hits ON t.doc_id = hits.doc_id
-      |WHERE t.doc_id % 25 <> 0
-      |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
-    // persist: the shingle frame feeds THREE consumers (eval broadcast,
-    // hit scan, per-doc denominators) and Catalyst does not share common
-    // subtrees across joins — without it the corpus is re-shingled 3×
-    // (measured 9.1 s -> the persist collapses it to one build)
-    val t = Tables(s, dir, "documents")
-      .select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), expr(
-        """array_distinct(transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1),
-          |                 element_at(ws, i + 2), element_at(ws, i + 3))))""".stripMargin)
-        .as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ev = broadcast(
-      t.filter(col("doc_id") % 25 === 0)
-        .select(explode(col("sh")).as("ev_s")).distinct())
-    val hits = t.filter(col("doc_id") % 25 =!= 0)
-      .select(col("doc_id"), explode(col("sh")).as("s"))
-      .join(ev, col("s") === col("ev_s"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
-    t.filter(col("doc_id") % 25 =!= 0)
-      .select(col("doc_id"), size(col("sh")).cast("long").as("n_shingles"))
-      .join(hits, Seq("doc_id"), "left_outer") // hit table ∝ contamination -> AQE broadcast
-      .na.fill(0L, Seq("n_hit"))
-      .select(col("doc_id"), col("n_shingles"), col("n_hit").cast("long").as("n_hit"),
-        expr("CAST(n_hit * 1000000 DIV n_shingles AS BIGINT)").as("contam_ppm"))
-      .orderBy("doc_id")
-  }
-
   /** X-SMP5 — exact-N deterministic sample: the smallest N documents by a
     * content-independent hash order — "give me exactly 100 reproducible
     * docs" at any corpus size. Plans as TakeOrderedAndProject (per-partition
@@ -366,5 +306,5 @@ object PipelineOps4 {
           .as("decile"))
   }
 
-  val all: Seq[Probe] = Seq(chunk1, rep1, txt12, dec4, smp5, mix2, pipe2, ded11, cur1)
+  val all: Seq[Probe] = Seq(chunk1, rep1, txt12, smp5, mix2, pipe2, ded11, cur1)
 }

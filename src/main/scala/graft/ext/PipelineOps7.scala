@@ -32,7 +32,7 @@ object PipelineOps7 {
     * quadratic and no task ever holds more than one gram bucket.
     */
   def noveltyScores(docs: DataFrame): DataFrame = {
-    val grams = graft.api.Corpus.shingles4(docs)
+    val grams = Decontamination.shingles(docs)
       .select(col("doc_id"), md5(col("s")).as("g"))
       .distinct()
     val firstDoc = grams

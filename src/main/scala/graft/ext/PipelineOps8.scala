@@ -6,15 +6,14 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.DotProduct.{dot_d, sq_dist}
-import graft.functions.LevBytes.lev_bytes
 
 /** Round-7 additions (second wave): segment-level dedup with document
-  * reconstruction, cluster-scoped semantic dedup (SemDeDup shape), fuzzy
-  * edit-distance decontamination, and a count-min heavy-hitter sketch.
+  * reconstruction, cluster-scoped semantic dedup (SemDeDup shape) and a
+  * count-min heavy-hitter sketch.
   *
   * Scale design notes per operator are on each probe; the shared theme is
   * that every candidate-generation stage is bounded (segment digests,
-  * IVF cells, shingle hits, fixed-width sketches) — nothing here pairs the
+  * IVF cells, fixed-width sketches) — nothing here pairs the
   * corpus with itself globally.
   */
 object PipelineOps8 {
@@ -200,7 +199,7 @@ object PipelineOps8 {
        |       CAST(CASE WHEN c.n_close IS NULL THEN 1 ELSE 0 END AS INT) AS keep
        |FROM assign a LEFT JOIN close c ON c.vec_id = a.vec_id
        |ORDER BY a.vec_id""".stripMargin) { (s, dir) =>
-    semDedup(s, Tables(s, dir, "embeddings"), semTau).orderBy("vec_id")
+    semDedup(Tables(s, dir, "embeddings"), semTau).orderBy("vec_id")
   }
 
   /** The reusable operator behind x_ded19: (vec_id, cell, n_close, keep)
@@ -218,9 +217,8 @@ object PipelineOps8 {
     *     |cell|² on the largest cell: correct at broadcast/moderate
     *     scale, the known quadratic at web scale (round-7 verdict).
     */
-  def semDedup(s: org.apache.spark.sql.SparkSession, embeddings: DataFrame,
-      tau: Double, cap: Int = semCap): DataFrame = {
-    val assign = semAssign(s, embeddings)
+  def semDedup(embeddings: DataFrame, tau: Double, cap: Int = semCap): DataFrame = {
+    val assign = semAssign(embeddings)
     val close = semCandidates(assign, cap)
       .filter(col("xn2") > 0 && col("yn2") > 0)
       .filter(dot_d(col("xv"), col("yv")) / sqrt(col("xn2") * col("yn2")) >= tau)
@@ -235,8 +233,7 @@ object PipelineOps8 {
   /** (vec_id, cell, v, n2) with each vector's nearest of the 8 fixed
     * centroids — narrow map over broadcast centroids.
     */
-  private def semAssign(s: org.apache.spark.sql.SparkSession,
-      embeddings: DataFrame): DataFrame = {
+  private def semAssign(embeddings: DataFrame): DataFrame = {
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
     val cent = iv.filter(col("vec_id") < 8)
       .select(col("vec_id").as("c_id"), col("v").as("cv"))
@@ -283,92 +280,8 @@ object PipelineOps8 {
   }
 
   /** Candidate pairs for a raw embeddings frame — spec entry point. */
-  private[graft] def semDedupCandidates(s: org.apache.spark.sql.SparkSession,
-      embeddings: DataFrame, cap: Int = semCap): DataFrame =
-    semCandidates(semAssign(s, embeddings), cap)
-
-  /** X-DEC5 — FUZZY decontamination: eval overlap that survives light
-    * paraphrase. Candidates come from the exact 4-word-shingle hit (the
-    * x_dec1 broadcast join — corpus never shuffles, matches are
-    * proportional to contamination), then each candidate (corpus doc, eval
-    * doc) pair is verified with FULL edit distance and kept at normalized
-    * similarity >= 0.30 (sim = 1 - lev / max(len)). Exact-match
-    * decontamination misses "the benchmark answer with two words changed";
-    * this is the standard candidates-then-verify fix, with the expensive
-    * O(len^2) levenshtein confined to the candidate slice — never the
-    * corpus cross eval product.
-    */
-  private val dec5 = Probe(
-    "x_dec5_fuzzy_decontamination",
-    """WITH sh AS (
-      |  SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] AS s
-      |  FROM (SELECT doc_id, list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '') AS ws FROM documents
-      |        WHERE len(list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '')) >= 4),
-      |       UNNEST(generate_series(1, len(ws) - 3)) AS t(i)),
-      |ev AS (SELECT doc_id AS eval_id, s FROM sh WHERE doc_id % 25 = 0),
-      |cand AS (
-      |  SELECT DISTINCT corp.doc_id, ev.eval_id
-      |  FROM sh corp JOIN ev ON corp.s = ev.s
-      |  WHERE corp.doc_id % 25 <> 0),
-      |scored AS (
-      |  SELECT c.doc_id, c.eval_id,
-      |         levenshtein(d.text, e.text) AS lev,
-      |         1 - CAST(levenshtein(d.text, e.text) AS DOUBLE) /
-      |             GREATEST(strlen(d.text), strlen(e.text)) AS sim
-      |  FROM cand c
-      |  JOIN documents d ON d.doc_id = c.doc_id
-      |  JOIN documents e ON e.doc_id = c.eval_id)
-      |SELECT doc_id, eval_id, CAST(lev AS BIGINT) AS lev, round(sim, 6) AS sim
-      |FROM scored WHERE sim >= 0.30
-      |ORDER BY doc_id, eval_id""".stripMargin) { (s, dir) =>
-    val docs = Tables(s, dir, "documents")
-    val sh = docs
-      .select(col("doc_id"), CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1), element_at(ws, i + 2),
-          |                 element_at(ws, i + 3)))""".stripMargin)).as("s"))
-    val ev = broadcast(
-      sh.filter(col("doc_id") % 25 === 0)
-        .select(col("doc_id").as("eval_id"), col("s").as("ev_s"))
-        .distinct())
-    // The candidate set is tiny in BYTES but each row's verify is O(len^2)
-    // — the regime where AQE's size-based coalesce is WRONG: it folded the
-    // whole verify stage into one task (2,874 pairs x ~0.4 ms/levenshtein
-    // x filter+projection re-evaluation x the sort's re-execution = 13 s
-    // single-threaded at sf0.1). Two fixes, both general patterns for
-    // expensive-scalar stages over small-byte row sets:
-    //  - lev_bytes, a native primitive-int byte DP (1.6x the built-in's
-    //    per-pair speed, and codegen-friendly);
-    //  - an explicitly-NUMBERED repartition on a key subset DIFFERENT from
-    //    the distinct's grouping keys. Same-keys-same-N would be removed
-    //    as a no-op (leaving only the aggregate's ENSURE_REQUIREMENTS
-    //    exchange, which AQE coalesces to 1); a REPARTITION_BY_NUM
-    //    exchange on doc_id survives both the optimizer and AQE.
-    val verifyParallelism =
-      s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val cand = sh.filter(col("doc_id") % 25 =!= 0)
-      .join(ev, col("s") === col("ev_s"))
-      .select(col("doc_id"), col("eval_id"))
-      .distinct()
-      .repartition(verifyParallelism, col("doc_id"))
-    val evalTexts = broadcast(
-      docs.filter(col("doc_id") % 25 === 0)
-        .select(col("doc_id").as("eval_id"), col("text").as("ev_text")))
-    cand
-      .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
-      .join(evalTexts, Seq("eval_id"))
-      .withColumn("lev", lev_bytes(col("text"), col("ev_text")))
-      // byte numerator / byte denominator: octet_length keeps the units
-      // consistent on multi-byte text (a char denominator deflates sim
-      // below 0 in the worst case); DuckDB's strlen is the byte twin.
-      .withColumn("sim",
-        lit(1.0) - col("lev").cast("double") / greatest(octet_length(col("text")), octet_length(col("ev_text"))))
-      .filter(col("sim") >= 0.30)
-      .select(col("doc_id"), col("eval_id"), col("lev"), round(col("sim"), 6).as("sim"))
-      .orderBy("doc_id", "eval_id")
-  }
+  private[graft] def semDedupCandidates(embeddings: DataFrame, cap: Int = semCap): DataFrame =
+    semCandidates(semAssign(embeddings), cap)
 
   // --------------------------------------------------------- count-min
 
@@ -523,5 +436,5 @@ object PipelineOps8 {
     intraDocSegmentDedup(Tables(s, dir, "documents")).orderBy("doc_id")
   }
 
-  val all: Seq[Probe] = Seq(ded18, ded19, ded22, dec5, skt1)
+  val all: Seq[Probe] = Seq(ded18, ded19, ded22, skt1)
 }

@@ -1,7 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only same-JVM A/B harness for any registered query: times the
   * query through the noop sink with the spread gate at its default
   * (spark.graft.scan.minPartitions unset → defaultParallelism) vs forced
@@ -14,16 +12,7 @@ object ProfileQuery {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileQuery <query> [sfDir] [reps]"))
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.drop(2).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(name)
 

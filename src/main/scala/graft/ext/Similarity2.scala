@@ -91,11 +91,11 @@ object Similarity2 {
        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id,
        |       CAST(adc_d2 AS BIGINT) AS adc_d2, CAST(d2 AS BIGINT) AS d2_exact
        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin) { (s, dir) =>
-    pqTopK(s, Tables(s, dir, "embeddings")).orderBy("q_id", "rnk")
+    pqTopK(Tables(s, dir, "embeddings")).orderBy("q_id", "rnk")
   }
 
   /** The PQ + ADC operator behind x_sim7. */
-  def pqTopK(s: org.apache.spark.sql.SparkSession, embeddings: DataFrame): DataFrame = {
+  def pqTopK(embeddings: DataFrame): DataFrame = {
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
     val sub = iv.select(col("vec_id"), explode(expr(
         s"transform(sequence(1, $m), s -> struct(s AS s, slice(v, (s-1)*$subDim+1, $subDim) AS sv))"))
@@ -231,11 +231,11 @@ object Similarity2 {
        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id,
        |       CAST(adc_d2 AS BIGINT) AS adc_d2, CAST(d2 AS BIGINT) AS d2_exact
        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin) { (s, dir) =>
-    ivfPqTopK(s, Tables(s, dir, "embeddings")).orderBy("q_id", "rnk")
+    ivfPqTopK(Tables(s, dir, "embeddings")).orderBy("q_id", "rnk")
   }
 
   /** The IVF+PQ operator behind x_sim8. */
-  def ivfPqTopK(s: org.apache.spark.sql.SparkSession, embeddings: DataFrame): DataFrame = {
+  def ivfPqTopK(embeddings: DataFrame): DataFrame = {
     val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
 
     // coarse quantizer: x_sim3's assignment + 2-cell probes

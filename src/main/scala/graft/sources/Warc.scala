@@ -600,7 +600,7 @@ object Warc {
       payload.substr(locate(httpSep, payload) + 4, length(payload)))
       .otherwise(lit(""))
 
-  /** DuckDB twins of the four HTTP accessors, over a payload expression. */
+  /** DuckDB twins of the HTTP header accessors, over a payload expression. */
   private def httpHeadDuck(e: String): String = {
     val sep = "chr(13) || chr(10) || chr(13) || chr(10)"
     s"(CASE WHEN strpos($e, $sep) > 0 THEN substr($e, 1, strpos($e, $sep) - 1) ELSE $e END)"
@@ -611,10 +611,6 @@ object Warc {
     s"nullif(trim(lower(regexp_extract(${httpHeadDuck(e)}, '(?i)' || chr(13) || chr(10) || 'content-type:[ \\t]*([^' || chr(13) || ';]+)', 1))), '')"
   def httpCharsetDuck(e: String): String =
     s"nullif(lower(regexp_extract(${httpHeadDuck(e)}, '${charsetRe.replace("'", "''")}', 1)), '')"
-  def httpBodyDuck(e: String): String = {
-    val sep = "chr(13) || chr(10) || chr(13) || chr(10)"
-    s"(CASE WHEN strpos($e, $sep) > 0 THEN substr($e, strpos($e, $sep) + 4) ELSE '' END)"
-  }
 
   private val locRe = "(?i)\r\nlocation:[ \t]*([^\r]+)"
 

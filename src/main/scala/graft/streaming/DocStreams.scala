@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ext.Decontamination
 import graft.functions.BpeCount.bpe_count
-import graft.functions.LevBytes.lev_bytes
 
 /** Structured Streaming surface over the documents table: the corpus
   * pipeline stages that are naturally stream-capable — benchmark
@@ -13,7 +13,8 @@ import graft.functions.LevBytes.lev_bytes
   *
   * The transforms are written against a plain DataFrame so the SAME code
   * runs in batch (the oracle-checked x_dec1 / x_smp2 shapes live in
-  * `ext.PipelineOps`) and in streaming; StreamingSpec pins stream ≡ batch.
+  * `ext.Decontamination` / `ext.PipelineOps`) and in streaming;
+  * StreamingSpec pins stream ≡ batch.
   */
 object DocStreams {
 
@@ -31,21 +32,10 @@ object DocStreams {
       .option("pathGlobFilter", "documents.parquet")
       .load(dir)
 
-  /** 4-word shingles of a documents frame — the x_dec1 shingle definition,
-    * shared verbatim between the batch probe semantics and the streaming
-    * decontamination path so the two cannot drift.
-    */
-  def shingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1),
-          |                 element_at(ws, i + 2), element_at(ws, i + 3)))""".stripMargin))
-        .as("s"))
-
   /** Stream-capable decontamination: doc_ids of documents sharing any
-    * 4-word shingle with the (static) held-out eval set.
+    * 4-word shingle with the (static) held-out eval set. `evalShingles`
+    * carries an `s` column of [[graft.ext.Decontamination.shingles]], the
+    * same definition the batch path and the x_dec probes call.
     *
     * Scale design mirrors x_dec1: the eval side is `broadcast()` — eval
     * benchmarks are KBs-to-MBs against an unbounded stream — so the join is
@@ -54,7 +44,7 @@ object DocStreams {
     * its state is proportional to CONTAMINATED doc count, not corpus size.
     */
   def contaminatedIds(docs: DataFrame, evalShingles: DataFrame): DataFrame =
-    shingles(docs)
+    Decontamination.shingles(docs)
       .join(broadcast(evalShingles.select(col("s"))), Seq("s"), "left_semi")
       .select(col("doc_id"))
       .dropDuplicates("doc_id")
@@ -192,16 +182,6 @@ object DocStreams {
   def noveltyScoredBloom(docs: DataFrame, bloom: DataFrame,
       hexChars: Int = 4, k: Int = 3): DataFrame =
     graft.ext.PipelineOps7.scoreNoveltyBloom(docs, bloom, hexChars, k)
-
-  /** Stream-capable INTRA-document segment dedup — x_ded22's within-page
-    * repeat remover: a pure narrow indexed-lambda filter over each row's
-    * own segment array (zero state, zero shuffle — no other row is
-    * consulted, so stream ≡ batch by construction). Runs BEFORE the
-    * stateful cross-corpus [[segmentsFirstSeen]] so self-repeating pages
-    * can't dominate their own fingerprints.
-    */
-  def intraDocSegments(docs: DataFrame): DataFrame =
-    graft.ext.PipelineOps8.intraDocSegmentDedup(docs)
 
   /** Stream-capable LM quality scoring — x_txt18's semantics in the
     * incremental-crawl regime: each streamed document's NLL under the
@@ -507,36 +487,20 @@ object DocStreams {
 
   /** Stream-capable FUZZY decontamination — x_dec5 at ingest: candidates
     * from the stream-static broadcast shingle join (the corpus side is
-    * never shuffled), verified per candidate pair with the native
-    * `lev_bytes` edit distance against the broadcast eval texts. Stateless
-    * except the final per-doc dropDuplicates (state proportional to
-    * FLAGGED docs, not stream size). Emits contaminated doc_ids.
+    * never shuffled), verified per candidate pair by the batch path's own
+    * narrow `lev_bytes` similarity against the broadcast eval texts.
+    * Stateless except the final per-doc dropDuplicates (state proportional
+    * to FLAGGED docs, not stream size). Emits contaminated doc_ids.
     */
   def fuzzyContaminatedIds(docs: DataFrame, evalDocs: DataFrame,
       minSim: Double = 0.30): DataFrame = {
-    val evSh = broadcast(
-      graft.api.Corpus.shingles4(evalDocs)
-        .select(col("doc_id").as("eval_id"), col("s")).distinct())
-    val evTexts = broadcast(
-      evalDocs.select(col("doc_id").as("eval_id"), col("text").as("ev_text")))
     // text rides THROUGH the shingle explode: re-joining `docs` for the
     // text would be a stream-stream self-join. A (doc, eval) pair hit by
     // several shingles verifies once per hit — bounded by hit count, and
     // lev_bytes is cheap; the batch path's pair-distinct would be state.
-    docs
-      .select(col("doc_id"), col("text"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
-      .filter(size(col("ws")) >= 4)
-      .select(col("doc_id"), col("text"), explode(expr(
-        """transform(sequence(1, size(ws) - 3),
-          |  i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1),
-          |                 element_at(ws, i + 2), element_at(ws, i + 3)))""".stripMargin))
-        .as("s"))
-      .join(evSh, Seq("s"))
-      .join(evTexts, Seq("eval_id"))
-      .withColumn("sim", lit(1.0) -
-        lev_bytes(col("text"), col("ev_text")).cast("double") /
-          greatest(octet_length(col("text")), octet_length(col("ev_text"))))
-      .filter(col("sim") >= minSim)
+    val cand = Decontamination.shingles(docs, col("text"))
+      .join(Decontamination.evalShingles(evalDocs), Seq("s"))
+    Decontamination.verified(cand, evalDocs, minSim)
       .select(col("doc_id"))
       .dropDuplicates("doc_id")
   }

@@ -192,6 +192,18 @@ class CorpusSpec extends SparkSuite {
       .run(spark, dir).select("doc_id").collect().map(_.getLong(0)).toSet
     val all = corpus.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(bc == all -- contaminated)
+    // bloom drops exactly the oracle-checked x_dec3 bloom-positive docs
+    val bloomPositive = Registry.all.find(_.name == "x_dec3_bloom_contamination").get
+      .run(spark, dir).select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(bl == all -- bloomPositive)
+    // no shingle, nothing to match: NULL text and a 3-token prefix of an
+    // eval document survive every mode
+    import spark.implicits._
+    val prefix = ev.orderBy("doc_id").select("text").head().getString(0)
+      .split("\\s+").filter(_.nonEmpty).take(3).mkString(" ")
+    val short = Seq((-1L, Option.empty[String]), (-2L, Some(prefix))).toDF("doc_id", "text")
+    for (mode <- Seq(Corpus.EvalBroadcast, Corpus.EvalShuffle, Corpus.EvalBloom))
+      assert(ids(Corpus(short).decontaminate(ev, mode)) == Set(-1L, -2L), mode)
   }
 
   test("dedupIncremental drops exactly the band-colliding new docs (x_ded9 semantics)") {

@@ -80,7 +80,7 @@ class EmptyInputSpec extends SparkSuite {
   test("segment dedup, semdedup, fuzzy decontamination on empty inputs") {
     assert(graft.ext.PipelineOps8.segmentDedup(emptyDocs).count() == 0)
     assert(Corpus(emptyDocs).dedupSegments().df.count() == 0)
-    assert(graft.ext.PipelineOps8.semDedup(spark, emptyEmb, tau = 0.35).count() == 0)
+    assert(graft.ext.PipelineOps8.semDedup(emptyEmb, tau = 0.35).count() == 0)
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents").limit(10)
     // empty eval set: nothing is contaminated, corpus passes through
     assert(Corpus(docs).decontaminateFuzzy(emptyDocs).df.count() == 10)
@@ -95,8 +95,8 @@ class EmptyInputSpec extends SparkSuite {
     assert(PipelineOps9.histogramQuantiles(
       emptyDocs.withColumn("n_chars", col("n_chars"))).count() == 0)
     assert(PipelineOps9.dupSpans(emptyDocs).count() == 0)
-    assert(Similarity2.pqTopK(spark, emptyEmb).count() == 0)
-    assert(Similarity2.ivfPqTopK(spark, emptyEmb).count() == 0)
+    assert(Similarity2.pqTopK(emptyEmb).count() == 0)
+    assert(Similarity2.ivfPqTopK(emptyEmb).count() == 0)
   }
 
   test("exact gram set + sorted_count_in novelty against an empty release") {

@@ -13,7 +13,7 @@ class IvfIndexSpec extends SparkSuite {
 
   test("query(trained index) == x_sim4_ivf_trained (oracle-checked) rows") {
     val emb = Tables(spark, dir, "embeddings")
-    val h = IvfIndex.train(spark, emb)
+    val h = IvfIndex.train(emb)
     val got = IvfIndex.query(h, emb.filter(col("vec_id") < 5), k = 5)
       .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
     val want = Registry.all.find(_.name == "x_sim4_ivf_trained").get
@@ -26,7 +26,7 @@ class IvfIndexSpec extends SparkSuite {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val shard = emb.filter(col("vec_id") % 2 =!= 0)
     val out = graft.util.TempDirs.scratch("ivf_inc_spec")
-    IvfIndex.save(IvfIndex.train(spark, base), out)
+    IvfIndex.save(IvfIndex.train(base), out)
     IvfIndex.append(spark, out, shard)
     val appended = IvfIndex.load(spark, out)
     // every vector present exactly once after the append
@@ -44,7 +44,7 @@ class IvfIndexSpec extends SparkSuite {
 
   test("save/load round trip is lossless and cell-pruned at the scan") {
     val emb = Tables(spark, dir, "embeddings")
-    val h = IvfIndex.train(spark, emb)
+    val h = IvfIndex.train(emb)
     val out = java.nio.file.Files.createTempDirectory("ivf_idx").toString
     IvfIndex.save(h, out)
     val loaded = IvfIndex.load(spark, out)

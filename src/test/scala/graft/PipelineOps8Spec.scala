@@ -87,7 +87,7 @@ class PipelineOps8Spec extends SparkSuite {
     val v0 = base.filter(col("vec_id") === 20L).select(col("embedding"))
       .collect().head.getSeq[Float](0)
     val clones = (1 to 5).map(i => (1000L + i, v0)).toDF("vec_id", "embedding")
-    val out = PipelineOps8.semDedup(spark,
+    val out = PipelineOps8.semDedup(
         base.select(col("vec_id"), col("embedding")).unionByName(clones), tau = 0.35)
       .filter(col("vec_id") >= 1000L).orderBy("vec_id").collect()
     // identical vectors share a cell; only the first clone can be kept, and
@@ -108,11 +108,11 @@ class PipelineOps8Spec extends SparkSuite {
     val clones = (1 to 200).map(i => (2000L + i, v0)).toDF("vec_id", "embedding")
     val storm = base.unionByName(clones)
     val cap = 16
-    val cand = PipelineOps8.semDedupCandidates(spark, storm, cap)
+    val cand = PipelineOps8.semDedupCandidates(storm, cap)
     val perVec = cand.groupBy("vec_id").count()
     assert(perVec.agg(max("count")).collect().head.getLong(0) <= cap.toLong)
     assert(cand.count() <= cap.toLong * storm.count())
-    val cl = PipelineOps8.semDedup(spark, storm, tau = 0.35)
+    val cl = PipelineOps8.semDedup(storm, tau = 0.35)
       .filter(col("vec_id") >= 2000L)
     assert(cl.filter(col("keep") =!= 0).count() == 0)
     assert(cl.filter(col("n_close") === 0).count() == 0)
@@ -129,7 +129,7 @@ class PipelineOps8Spec extends SparkSuite {
       Seq((10L, v(20, 50f)), (11L, v(21, 50f)),
         (30L, v(30, 30f)), (31L, v(30, 30f)))).toDF("vec_id", "embedding")
     def keepOf(cap: Int): Map[Long, Int] =
-      PipelineOps8.semDedup(spark, emb, tau = 0.35, cap = cap)
+      PipelineOps8.semDedup(emb, tau = 0.35, cap = cap)
         .collect().map(r => r.getLong(0) -> r.getInt(3)).toMap
     val capped = keepOf(2)
     val exact = keepOf(0)
@@ -143,7 +143,7 @@ class PipelineOps8Spec extends SparkSuite {
 
   test("semDedup: every dropped vector has a lower-id in-cell witness at >= tau") {
     val emb = Tables(spark, dir, "embeddings")
-    val out = PipelineOps8.semDedup(spark, emb, tau = 0.35)
+    val out = PipelineOps8.semDedup(emb, tau = 0.35)
     val dropped = out.filter(col("keep") === 0)
     // n_close > 0 IS the witness count; keep == (n_close == 0) must hold
     assert(dropped.filter(col("n_close") === 0).count() == 0)

@@ -202,7 +202,7 @@ class StreamingSpec extends SparkSuite {
     import graft.streaming.DocStreams
     val batchDocs = Tables(spark, dir, "documents")
     // static eval side: the x_dec1 held-out set (doc_id % 25 == 0), deduped
-    val ev = DocStreams.shingles(batchDocs.filter(col("doc_id") % 25 === 0)).distinct()
+    val ev = graft.ext.Decontamination.shingles(batchDocs.filter(col("doc_id") % 25 === 0)).distinct()
     def corpus(df: org.apache.spark.sql.DataFrame) = df.filter(col("doc_id") % 25 =!= 0)
     val q = DocStreams.contaminatedIds(corpus(DocStreams.readStream(spark, dir)), ev)
       .writeStream.outputMode("append").format("memory").queryName("dec_out").start()
@@ -212,7 +212,7 @@ class StreamingSpec extends SparkSuite {
       val want = DocStreams.contaminatedIds(corpus(batchDocs), ev)
         .collect().map(_.getLong(0)).sorted.toSeq
       // and both must agree with the oracle-checked batch probe's doc set
-      val oracle = graft.ext.PipelineOps.all.find(_.name == "x_dec1_contamination").get
+      val oracle = Registry.all.find(_.name == "x_dec1_contamination").get
         .run(spark, dir).select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(got.nonEmpty)
       assert(got == want)

@@ -66,6 +66,15 @@ class TablesSpec extends SparkSuite {
     assert(Tables.spreadDf(local).rdd.getNumPartitions >= 2)
   }
 
+  test("spreadDf keeps a non-file frame that is already wider than the floor") {
+    val target = spark.conf.getOption("spark.graft.scan.minPartitions")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    val width = 4 * target
+    val out = Tables.spreadDf(spark.range(0, 64, 1, width).toDF())
+    assert(!out.queryExecution.logical.toString.contains("Repartition"))
+    assert(out.rdd.getNumPartitions == width)
+  }
+
   test("both encodings yield identical wall-clock instants") {
     assume(haveData)
     // Round-trip the real data through the nanos encoding and compare: the
