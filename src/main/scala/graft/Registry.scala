@@ -11,12 +11,13 @@ object Registry {
     queries.Modern.all ++
     ext.Dedup.all ++
     ext.Decontamination.all ++
+    ext.Sampling.all ++
+    ext.TokenLayout.all ++
     ext.PipelineOps.all ++
     ext.PipelineOps2.all ++
     ext.PipelineOps3.all ++
     ext.PipelineOps4.all ++
     ext.PipelineOps5.all ++
-    ext.PipelineOps6.all ++
     ext.PipelineOps7.all ++
     ext.PipelineOps8.all ++
     ext.PipelineOps9.all ++

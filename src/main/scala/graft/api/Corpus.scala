@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.ext.{Decontamination, Similarity}
+import graft.ext.{Decontamination, Sampling, Similarity, TokenLayout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -386,26 +386,11 @@ final case class Corpus(df: DataFrame) {
     }
 
   /** Global token-budget shard assignment (adds `n_tok` and `shard`):
-    * x_pack2's exact two-level prefix sum — within-group cumsum over
-    * bounded (lang, grp) windows plus an exclusive cumsum of group totals,
-    * never a whole-language window partition.
+    * x_pack2's exact two-level prefix sum per `lang` over `grpSize`-doc
+    * blocks, never a whole-language window partition.
     */
-  def shardByTokenBudget(budgetTokens: Long, grpSize: Long = 1000L): Corpus = chain { d =>
-    val t = d.withColumn("__grp", expr(s"doc_id DIV $grpSize"))
-      .withColumn("n_tok", size(graft.clean.CleanFns.tokens(col("text"))).cast("long"))
-    val wIn = Window.partitionBy("lang", "__grp").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = t.withColumn("__cum_in", sum("n_tok").over(wIn))
-    val wG = Window.partitionBy("lang").orderBy("__grp")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = t.groupBy("lang", "__grp").agg(sum("n_tok").as("__g_tok"))
-      .withColumn("__g_off", coalesce(sum("__g_tok").over(wG), lit(0L)))
-      .select(col("lang").as("__lang_o"), col("__grp").as("__grp_o"), col("__g_off"))
-    within
-      .join(offsets, within("lang") === offsets("__lang_o") && within("__grp") === offsets("__grp_o"))
-      .withColumn("shard", expr(s"(__g_off + __cum_in - n_tok) DIV $budgetTokens"))
-      .drop("__grp", "__cum_in", "__lang_o", "__grp_o", "__g_off")
-  }
+  def shardByTokenBudget(budgetTokens: Long, grpSize: Long = 1000L): Corpus =
+    chain(TokenLayout.shardByTokenBudget(_, budgetTokens, grpSize))
 
   /** PII redaction over `text` (x_txt10's patterns: emails, IPv4, phones →
     * typed placeholder tokens). Narrow; order email → IP → phone.
@@ -475,38 +460,21 @@ final case class Corpus(df: DataFrame) {
     withStats.chain(_.filter(col("dup_ppm") <= maxDupPpm))
   }
 
-  /** Source-weighted data mixing (x_smp3's semantics, generic weights):
-    * replicate each doc `weight` times — integer epochs exactly, the
-    * fractional epoch kept iff a fixed md5 prefix of (doc_id, epoch)
-    * falls under the weight's hex threshold. Fully deterministic (no
-    * rand()), content-independent, and cluster-size-independent. Weights
-    * are given in ppm (2_500_000 = 2.5 epochs); sources absent from the
-    * map keep weight 1.0. The weights table is sources-sized → joined
-    * via AQE broadcast; the expansion itself is narrow.
+  /** Source-weighted data mixing (x_smp3's semantics, generic weights in
+    * ppm, 2_500_000 = 2.5 epochs): the deterministic epoch replication of
+    * [[graft.ext.Sampling.mixExpand]]; sources absent from the map keep
+    * weight 1.0. The sources-sized weights table joins as a broadcast.
     */
-  def mixBySourceWeights(weightsPpm: Map[String, Long]): Corpus = chain { d =>
-    val s = d.sparkSession
-    import s.implicits._
-    val w = weightsPpm.toSeq.map { case (src, ppm) =>
-      require(ppm >= 0, s"negative weight for $src")
-      (src, ppm)
-    }.toDF("source", "weight_ppm")
-    Corpus.mixExpand(d, w)
-  }
+  def mixBySourceWeights(weightsPpm: Map[String, Long]): Corpus =
+    chain(Sampling.mixBySourceWeights(_, weightsPpm))
 
-  /** Temperature-scaled mixing (T = 1/invTemp): compute per-source
-    * upsampling weights `(n_max / n_source)^invTemp` from the corpus's own
-    * composition (x_mix2's oracle-checked rule at invTemp = 0.5), then
-    * replicate through the same deterministic epoch expansion as
-    * [[mixBySourceWeights]]. Two corpus scans (count + expand), zero
-    * corpus shuffles — the weights live on a sources-sized aggregate that
-    * joins back as a broadcast.
+  /** Temperature-scaled mixing (T = 1/invTemp): per-source weights
+    * `(n_max / n_source)^invTemp` from the corpus's own composition
+    * (x_mix2's rule at invTemp = 0.5), replicated as in
+    * [[mixBySourceWeights]]. Two corpus scans, zero corpus shuffles.
     */
-  def mixByTemperature(invTemp: Double = 0.5): Corpus = chain { d =>
-    Corpus.mixExpand(d,
-      graft.ext.PipelineOps4.temperatureWeights(d, invTemp)
-        .select("source", "weight_ppm"))
-  }
+  def mixByTemperature(invTemp: Double = 0.5): Corpus =
+    chain(Sampling.mixByTemperature(_, invTemp))
 
   /** Contamination scoring (x_dec4): annotate every document with the ppm
     * of its distinct 4-word shingles found in `evalDocs` — the number a
@@ -523,11 +491,7 @@ final case class Corpus(df: DataFrame) {
     * planned as per-partition top-k (TakeOrderedAndProject), never a
     * global sort.
     */
-  def sampleExactN(n: Int): Corpus = chain { d =>
-    d.withColumn("_h", md5(col("doc_id").cast("string")))
-      .orderBy(col("_h"), col("doc_id")).limit(n)
-      .drop("_h")
-  }
+  def sampleExactN(n: Int): Corpus = chain(Sampling.sampleExactN(_, n))
 
   /** Per-domain document cap (x_cur2): keep at most `n` documents per
     * `groupCol`, preferring higher `orderCol` (doc_id tiebreak) — the
@@ -543,17 +507,13 @@ final case class Corpus(df: DataFrame) {
   }
 
   /** Leakage-safe deterministic split (x_smp6): adds a `split` column so
-    * every document whose `groupCol` hashes alike lands in the same split —
-    * near-duplicates sharing a domain/source can never straddle train and
-    * test. Pure per-row hash algebra: no shuffle, reproducible across
-    * re-crawls. `cuts` are cumulative percent cut-points (Seq(80, 90) =
-    * 80/10/10).
+    * every document whose `groupCol` hashes alike lands in the same split.
+    * `cuts` are cumulative percent cut-points (Seq(80, 90) = 80/10/10).
     */
   def splitByGroup(groupCol: String = "source",
       names: Seq[String] = Seq("train", "val", "test"),
-      cuts: Seq[Int] = Seq(80, 90)): Corpus = chain { d =>
-    graft.ext.PipelineOps6.splitByGroup(d, col(groupCol), names, cuts)
-  }
+      cuts: Seq[Int] = Seq(80, 90)): Corpus =
+    chain(Sampling.splitByGroup(_, col(groupCol), names, cuts))
 
   /** Frontier politeness report (x_url3): per-host raw/canonical counts
     * and variant-noise ppm for the top-`k` hosts by canonical page
@@ -601,15 +561,14 @@ final case class Corpus(df: DataFrame) {
 
   /** Honest subword token accounting (x_tok1): adds `n_tok_bpe`, the
     * byte-level BPE count under the checked-in vocabulary — the
-    * token-denominated operators' alternative to whitespace word counts
-    * (which undercount code/CJK by multiples). A pure narrow native
-    * expression; feed it to [[takeTokenBudget]]-class operators via
-    * `PipelineOps6.takeTokenBudgetSharded(df, g, col("n_tok_bpe"), b)`
-    * or [[lengthBatches]]' tokens argument.
+    * alternative to whitespace word counts (which undercount code/CJK by
+    * multiples). A pure narrow native expression. Once the column is
+    * present, every token-denominated operator counts in it
+    * ([[TokenLayout.tokenCount]]): [[takeTokenBudget]],
+    * [[shardByTokenBudget]], [[lengthBatches]], [[packPlacements]],
+    * [[planMixture]] and `TokenLayout.ctxAdvisor`.
     */
-  def withBpeTokenCount(): Corpus = chain { d =>
-    d.withColumn("n_tok_bpe", bpe_count(col("text")).cast("bigint"))
-  }
+  def withBpeTokenCount(): Corpus = chain(TokenLayout.withBpeTokenCount)
 
   /** Unigram-tokenizer token accounting (x_tok3): `n_tok_unigram` — the
     * minimal-piece subword count under an induced (or caller-provided)
@@ -625,15 +584,13 @@ final case class Corpus(df: DataFrame) {
   }
 
   /** Greedy per-group token budget (x_mix3b's sharded algebra). The
-    * budget is DENOMINATED in `n_tok_bpe` subword counts when the corpus
-    * carries them ([[withBpeTokenCount]]) — "2B tokens of code" in word
-    * units over-fills by multiples — and whitespace words otherwise.
+    * budget is DENOMINATED in [[TokenLayout.tokenCount]]: `n_tok_bpe`
+    * subword counts when the corpus carries them ([[withBpeTokenCount]])
+    * — "2B tokens of code" in word units over-fills by multiples — and
+    * whitespace words otherwise.
     */
   def takeTokenBudget(budget: Long, groupCol: String = "lang"): Corpus = chain { d =>
-    val tokens =
-      if (d.columns.contains("n_tok_bpe")) col("n_tok_bpe").cast("long")
-      else size(graft.clean.CleanFns.tokens(col("text"))).cast("long")
-    graft.ext.PipelineOps6.takeTokenBudgetSharded(d, col(groupCol), tokens, budget)
+    TokenLayout.takeTokenBudgetSharded(d, col(groupCol), TokenLayout.tokenCount(d), budget)
   }
 
   /** Corpus boilerplate score (x_txt13): annotate each document with the
@@ -685,7 +642,7 @@ final case class Corpus(df: DataFrame) {
     * Narrow explode — no shuffle at any corpus size.
     */
   def chunkTokens(window: Int = 16, stride: Int = 12): Corpus =
-    chain(graft.ext.PipelineOps4.chunkTokenWindows(_, window, stride))
+    chain(TokenLayout.chunkTokenWindows(_, window, stride))
 
   /** Corpus composition report (x_rep1): per (source, lang) doc/token/char
     * volumes and corpus share in ppm — the mixture table
@@ -729,14 +686,14 @@ final case class Corpus(df: DataFrame) {
     * sequence by construction, so no global sort is needed.
     */
   def lengthBatches(bucketWidth: Int = 16, batchSize: Int = 8): DataFrame =
-    graft.ext.PipelineOps7.lengthBatches(df, bucketWidth, batchSize)
+    TokenLayout.lengthBatches(df, bucketWidth, batchSize)
 
   /** Per-epoch deterministic sharded data order (x_smp7): each epoch a
     * different reproducible permutation, ordered within epoch x shard —
     * no RNG state, no global sort.
     */
   def epochOrder(epochs: Int, shards: Int = 64): DataFrame =
-    graft.ext.PipelineOps7.epochOrder(df, epochs, shards)
+    Sampling.epochOrder(df, epochs, shards)
 
   /** Content (native `rolling_hash`) + bag-of-words fingerprints. */
   def withFingerprints(): Corpus = chain { d =>
@@ -824,22 +781,15 @@ final case class Corpus(df: DataFrame) {
     * Sources absent from `targetsPpm` get weight 0 (dropped by the mix).
     * The collect is sources-bounded.
     */
-  def planMixture(targetsPpm: Map[String, Long]): Map[String, Long] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val targets = targetsPpm.toSeq.toDF("source", "target_ppm")
-    graft.ext.PipelineOps14.mixturePlan(df, targets)
-      .select("source", "weight_ppm")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
-  }
+  def planMixture(targetsPpm: Map[String, Long]): Map[String, Long] =
+    Sampling.planMixture(df, targetsPpm)
 
   /** Sequential context-window packing placements (x_pack6): each doc's
     * shard/offset/bin under the concat-then-split layout, with the
     * split-across-bins flag.
     */
   def packPlacements(ctx: Int = 256, shards: Int = 16): DataFrame =
-    graft.ext.PipelineOps14.packPlacements(df, ctx, shards)
+    TokenLayout.packPlacements(df, ctx, shards)
 
   /** Keep only documents whose DSIR weight vs `target` is positive — the
     * importance-selection pass of a targeted data recipe.
@@ -887,8 +837,9 @@ object Corpus {
     * data card). Recompute it from the current `text`, preserving its
     * declared type; frames without the column pass through untouched.
     * A carried `n_tok_bpe` ([[Corpus.withBpeTokenCount]]) is refreshed the
-    * same way — token-budget operators switch to it silently, so a stale
-    * count after `dedupSegments`/`fromHtml` would budget against the
+    * same way — every token-denominated operator switches to it silently
+    * ([[graft.ext.TokenLayout.tokenCount]]), so a stale count after
+    * `dedupSegments`/`fromHtml` would budget, batch and pack against the
     * PRE-rewrite text (round-9 ADVICE).
     */
   private[api] def refreshNChars(d: DataFrame): DataFrame = {
@@ -907,26 +858,6 @@ object Corpus {
   case object EvalBroadcast extends EvalMode
   case object EvalShuffle extends EvalMode
   case object EvalBloom extends EvalMode
-
-  /** Deterministic weighted replication shared by `mixBySourceWeights`
-    * and `mixByTemperature`: a (source, weight_ppm) table — sources-sized,
-    * so the left-outer join broadcasts — drives integer-epoch explode plus
-    * an md5-threshold keep for the fractional epoch. Sources absent from
-    * the weights table keep weight 1.0; weight 0 drops the source.
-    */
-  private[api] def mixExpand(d: DataFrame, weightsPpm: DataFrame): DataFrame =
-    d.join(
-        weightsPpm.select(col("source"),
-          expr("CAST(weight_ppm DIV 1000000 AS INT)").as("full_ep"),
-          expr("""CASE WHEN weight_ppm % 1000000 = 0 THEN ''
-                 |ELSE lower(lpad(hex(weight_ppm % 1000000 * 65536 DIV 1000000), 4, '0'))
-                 |END""".stripMargin).as("thr")),
-        Seq("source"), "left_outer")
-      .na.fill(1, Seq("full_ep")).na.fill("", Seq("thr"))
-      .withColumn("epoch", explode(expr("sequence(0, full_ep)")))
-      .filter(expr(
-        "epoch < full_ep OR substr(md5(concat(CAST(doc_id AS STRING), ':', CAST(epoch AS STRING))), 1, 4) < thr"))
-      .drop("full_ep", "thr")
 
   /** Read a [[Corpus.writeJsonl]] export back with an explicit schema
     * (schema-on-read; no sampling inference pass over a 100 TB layout).

@@ -3,37 +3,8 @@ package graft.ext
 import graft.{Probe, Tables}
 import org.apache.spark.sql.functions._
 
-/** Corpus-pipeline operators beyond dedup/similarity: stratified
-  * downsampling and the composed end-to-end pipeline. Stratified sampling
-  * is a pure narrow filter (hash-bucket arithmetic per row), exactly like
-  * `p_sample_deterministic` but with per-stratum rates.
-  */
+/** The composed quality → dedup → downsample corpus pipeline (x_pipe1). */
 object PipelineOps {
-
-  /** X-SMP2 — deterministic stratified downsampling: per-language keep
-    * rates (the dominant language is downsampled, the tail kept), decided
-    * by a content-independent md5 bucket of the document id — reproducible
-    * across engines, partitionings, and cluster sizes, and NO shuffle (a
-    * pure filter; the ORDER BY is presentation only).
-    *
-    * Rates: 'en' keeps 2/16 of docs, every other language 8/16 — the
-    * rebalancing move every multilingual corpus build performs.
-    */
-  private val smp2 = Probe(
-    "x_smp2_stratified",
-    """SELECT doc_id, lang, source
-      |FROM documents
-      |WHERE CASE WHEN lang = 'en'
-      |        THEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0', '1')
-      |        ELSE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8' END
-      |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val bucket = substring(md5(col("doc_id").cast("string")), 1, 1)
-    Tables(s, dir, "documents")
-      .filter(when(col("lang") === "en", bucket.isin("0", "1"))
-        .otherwise(bucket < "8"))
-      .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy("doc_id")
-  }
 
   /** X-PIPE1 — the composed corpus pipeline END-TO-END through the fluent
     * `api.Corpus` API: quality signals → word-count gate → exact dedup
@@ -72,5 +43,5 @@ object PipelineOps {
       .orderBy("doc_id")
   }
 
-  val all: Seq[Probe] = Seq(smp2, pipe1)
+  val all: Seq[Probe] = Seq(pipe1)
 }

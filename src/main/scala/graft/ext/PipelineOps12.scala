@@ -299,62 +299,5 @@ object PipelineOps12 {
       .orderBy("n_a")
   }
 
-  /** X-PACK5 — length batching under a SUBSTITUTED token denominator:
-    * `n_tok_bpe` is planted as strlen(text) DIV 4 (a SQL-expressible
-    * subword-count stand-in), and the oracle computes the batch layout
-    * from the same expression. A hash match is only possible if
-    * [[PipelineOps7.lengthBatches]] actually routes through the column —
-    * the whitespace denominator would bucket every document differently.
-    * (The REAL BPE denominator is the same code path with bpe_count's
-    * output; x_tok1 pins that count, PipelineOps7Spec pins the
-    * composition.)
-    */
-  private val pack5 = Probe(
-    "x_pack5_bpe_denominated",
-    """WITH d AS (
-      |  SELECT doc_id, CAST(strlen(text) // 4 AS BIGINT) AS n_tok FROM documents),
-      |b AS (
-      |  SELECT doc_id, n_tok, n_tok // 16 AS bucket,
-      |         (row_number() OVER (PARTITION BY n_tok // 16 ORDER BY n_tok, doc_id) - 1) // 8 AS batch
-      |  FROM d)
-      |SELECT bucket, batch, CAST(count(*) AS BIGINT) AS n_docs,
-      |       CAST(max(n_tok) AS BIGINT) AS max_tok,
-      |       CAST(sum(n_tok) AS BIGINT) AS sum_tok,
-      |       CAST(count(*) * max(n_tok) - sum(n_tok) AS BIGINT) AS pad_waste
-      |FROM b GROUP BY bucket, batch ORDER BY bucket, batch""".stripMargin) { (s, dir) =>
-    PipelineOps7.lengthBatches(
-      Tables(s, dir, "documents")
-        .withColumn("n_tok_bpe", expr("CAST(octet_length(text) DIV 4 AS BIGINT)")))
-      .orderBy("bucket", "batch")
-  }
-
-  /** X-MIX4 — the greedy token budget under the same substituted subword
-    * denominator: `Corpus.takeTokenBudget` must fill against
-    * `n_tok_bpe`, not whitespace words, when the column is present. The
-    * oracle is x_mix3's single-window algebra with the substituted count
-    * (sharded ≡ single window is already pinned by x_mix3b).
-    */
-  private val mix4 = Probe(
-    "x_mix4_budget_bpe_denominated",
-    """WITH d AS (
-      |  SELECT doc_id, lang, CAST(strlen(text) // 4 AS BIGINT) AS n_tok FROM documents),
-      |c AS (
-      |  SELECT doc_id, lang, n_tok,
-      |         sum(n_tok) OVER (PARTITION BY lang
-      |                          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-      |                          ROWS UNBOUNDED PRECEDING) AS cum_tok
-      |  FROM d)
-      |SELECT doc_id, lang, n_tok, CAST(cum_tok AS BIGINT) AS cum_tok
-      |FROM c WHERE cum_tok <= 2000 ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    graft.api.Corpus(
-      Tables(s, dir, "documents")
-        .select(col("doc_id"), col("lang"), col("text"))
-        .withColumn("n_tok_bpe", expr("CAST(octet_length(text) DIV 4 AS BIGINT)")))
-      .takeTokenBudget(budget = 2000L)
-      .df
-      .select(col("doc_id"), col("lang"), col("n_tok_bpe").as("n_tok"), col("cum_tok"))
-      .orderBy("doc_id")
-  }
-
-  val all: Seq[Probe] = Seq(html1, html2, html3, html4, skt6, pack5, mix4)
+  val all: Seq[Probe] = Seq(html1, html2, html3, html4, skt6)
 }

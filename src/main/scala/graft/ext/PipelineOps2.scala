@@ -5,15 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Second batch of corpus-pipeline operators: sequence packing, prefix
-  * dedup, TF-IDF term scoring, and vocabulary statistics — the remaining
-  * standard stages between "cleaned corpus" and "training batches".
+/** Prefix dedup, TF-IDF term scoring, and vocabulary statistics.
   *
   * Scale design notes (100 TB):
-  * - Packing windows are partitioned by (lang, shard) where shard buckets
-  *   doc_id into fixed-size ranges, so no window partition ever holds more
-  *   than a bounded number of rows — a per-lang global prefix sum would
-  *   serialize a whole language onto one task.
   * - TF-IDF's document-frequency table is vocabulary-sized (≪ corpus), so
   *   it broadcasts; the corpus-side term stream is shuffled exactly once
   *   (the (doc, term) aggregation, with map-side combine).
@@ -21,99 +15,6 @@ import org.apache.spark.storage.StorageLevel
   *   a two-level aggregation with partial combine at every step.
   */
 object PipelineOps2 {
-
-  /** X-PACK1 — sequence packing: concatenate each (lang, shard) stratum's
-    * token stream in doc_id order and chunk it into fixed 256-token bins
-    * (the GPT-style "concat and chunk" packing step); a document belongs to
-    * the bin where its first token lands. Reports per-bin document count
-    * and token mass — the fill-efficiency signal a packing stage is tuned
-    * on. Shard = doc_id DIV 10000 bounds every window partition to at most
-    * 10k rows regardless of corpus size.
-    */
-  private val pack1 = Probe(
-    "x_pack1_sequence_packing",
-    """WITH t AS (
-      |  SELECT doc_id, lang, doc_id // 10000 AS shard,
-      |    CAST(len(list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '')) AS BIGINT) AS n_tok
-      |  FROM documents),
-      |c AS (
-      |  SELECT lang, shard, n_tok,
-      |    SUM(n_tok) OVER (PARTITION BY lang, shard ORDER BY doc_id
-      |                     ROWS UNBOUNDED PRECEDING) AS cum
-      |  FROM t)
-      |SELECT lang, CAST(shard AS BIGINT) AS shard,
-      |  CAST((cum - n_tok) // 256 AS BIGINT) AS bin,
-      |  CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(sum(n_tok) AS BIGINT) AS bin_tokens
-      |FROM c GROUP BY 1, 2, 3 ORDER BY lang, shard, bin""".stripMargin) { (s, dir) =>
-    val w = Window.partitionBy("lang", "shard").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables(s, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-        expr("doc_id DIV 10000").as("shard"),
-        size(graft.clean.CleanFns.tokens(col("text"))).cast("long").as("n_tok"))
-      .withColumn("cum", sum("n_tok").over(w))
-      .withColumn("bin", expr("(cum - n_tok) DIV 256"))
-      .groupBy("lang", "shard", "bin")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("bin_tokens"))
-      .orderBy("lang", "shard", "bin")
-  }
-
-  /** X-PACK2 — GLOBAL shard assignment by token budget, computed as a
-    * two-level (distributed) prefix sum: each doc's global token offset
-    * within its language decides its 4096-token output shard. The naive
-    * formulation is one `SUM OVER (PARTITION BY lang ORDER BY doc_id)` —
-    * which serializes an entire language onto a single task and is exactly
-    * what cannot run at 100 TB. The scalable identity computed here:
-    *
-    *   offset(doc) = cumsum_within(lang, grp) + exclusive_cumsum(grp totals)
-    *
-    * where grp = doc_id DIV 1000 bounds every within-window partition to
-    * ≤ 1000 rows, and the group-totals table is 1000× smaller than the
-    * corpus (at extreme scale the same identity recurses, or the totals
-    * pass becomes a driver-side scan of per-group sums — it is the
-    * classic two-pass parallel prefix sum). The oracle computes the SAME
-    * offsets with the naive single window — pinning that the two-level
-    * decomposition is exact, not approximate.
-    */
-  private val pack2 = Probe(
-    "x_pack2_token_sharding",
-    """WITH t AS (
-      |  SELECT doc_id, lang,
-      |    CAST(len(list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '')) AS BIGINT) AS n_tok
-      |  FROM documents),
-      |c AS (
-      |  SELECT lang, n_tok,
-      |    SUM(n_tok) OVER (PARTITION BY lang ORDER BY doc_id
-      |                     ROWS UNBOUNDED PRECEDING) AS cum_end
-      |  FROM t)
-      |SELECT lang, CAST((cum_end - n_tok) // 4096 AS BIGINT) AS shard,
-      |  CAST(count(*) AS BIGINT) AS n_docs,
-      |  CAST(sum(n_tok) AS BIGINT) AS shard_tokens
-      |FROM c GROUP BY 1, 2 ORDER BY lang, shard""".stripMargin) { (s, dir) =>
-    val t = Tables(s, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-        expr("doc_id DIV 1000").as("grp"),
-        size(graft.clean.CleanFns.tokens(col("text"))).cast("long").as("n_tok"))
-    // level 1: prefix sum inside each bounded (lang, grp) window
-    val wIn = Window.partitionBy("lang", "grp").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = t.withColumn("cum_in", sum("n_tok").over(wIn))
-    // level 2: exclusive prefix sum over the (tiny) per-group totals
-    val wG = Window.partitionBy("lang").orderBy("grp")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = t.groupBy("lang", "grp").agg(sum("n_tok").as("g_tok"))
-      .withColumn("g_off", coalesce(sum("g_tok").over(wG), lit(0L)))
-      .select(col("lang").as("lang_o"), col("grp").as("grp_o"), col("g_off"))
-    // no broadcast() hint (the x_txt8 lesson): the totals table is
-    // corpus/1000 rows — AQE broadcasts it while small, shuffles when not
-    within
-      .join(offsets, within("lang") === offsets("lang_o") && within("grp") === offsets("grp_o"))
-      .withColumn("shard", expr("(g_off + cum_in - n_tok) DIV 4096"))
-      .groupBy("lang", "shard")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("shard_tokens"))
-      .orderBy("lang", "shard")
-  }
 
   /** X-DED8 — prefix dedup: documents sharing their first 8 tokens are
     * near-certain boilerplate/template duplicates (the cheap URL-prefix /
@@ -222,5 +123,5 @@ object PipelineOps2 {
       .orderBy("lang")
   }
 
-  val all: Seq[Probe] = Seq(pack1, pack2, ded8, txt8, txt9)
+  val all: Seq[Probe] = Seq(ded8, txt8, txt9)
 }

@@ -220,73 +220,6 @@ object PipelineOps3 {
     bucketedFor = dir
   }
 
-  /** X-SMP3 — source-weighted data mixing: the "mixture weights" stage
-    * that up/down-samples each source to its target epoch count before
-    * training (e.g. curated sources ×2.5, raw crawl ×0.25). Fully
-    * deterministic: integer epochs replicate via explode(sequence),
-    * fractional epochs keep a doc iff a fixed md5 prefix of
-    * (doc_id, epoch) falls under a lexicographic hex threshold — the
-    * same content-independent coin at any cluster size, no rand().
-    * Narrow (explode + filter): no shuffle anywhere; weight lookup is a
-    * CASE on the source id (a real deployment joins a broadcast weights
-    * table — see `api.Corpus.mixBySourceWeights`).
-    */
-  private val smp3 = Probe(
-    "x_smp3_weighted_mix",
-    """WITH t AS (
-      |  SELECT doc_id, source, CAST(substr(source, 4) AS INT) AS sid FROM documents),
-      |w AS (
-      |  SELECT doc_id, source,
-      |    CASE WHEN sid < 5 THEN 2 WHEN sid < 10 THEN 1 ELSE 0 END AS full_ep,
-      |    CASE WHEN sid < 5 THEN '8000' WHEN sid < 10 THEN '' ELSE '4000' END AS thr
-      |  FROM t),
-      |e AS (
-      |  SELECT doc_id, source, full_ep, thr, unnest(range(0, full_ep + 1)) AS epoch FROM w)
-      |SELECT doc_id, CAST(epoch AS BIGINT) AS epoch, source
-      |FROM e
-      |WHERE epoch < full_ep
-      |   OR substr(md5(concat(CAST(doc_id AS VARCHAR), ':', CAST(epoch AS VARCHAR))), 1, 4) < thr
-      |ORDER BY doc_id, epoch""".stripMargin) { (s, dir) =>
-    Tables(s, dir, "documents")
-      .withColumn("sid", expr("CAST(substr(source, 4) AS INT)"))
-      .withColumn("full_ep", expr("CASE WHEN sid < 5 THEN 2 WHEN sid < 10 THEN 1 ELSE 0 END"))
-      .withColumn("thr", expr("CASE WHEN sid < 5 THEN '8000' WHEN sid < 10 THEN '' ELSE '4000' END"))
-      .withColumn("epoch", explode(expr("sequence(0, full_ep)")))
-      .filter(expr(
-        "epoch < full_ep OR substr(md5(concat(CAST(doc_id AS STRING), ':', CAST(epoch AS STRING))), 1, 4) < thr"))
-      .select(col("doc_id"), col("epoch").cast("long").as("epoch"), col("source"))
-      .orderBy("doc_id", "epoch")
-  }
-
-  /** X-SMP4 — deterministic distributed shuffle: the final corpus
-    * permutation before packing, as a two-level (shard, position) order
-    * instead of one global sort. shard = first md5 byte (256 shards),
-    * position = row_number within the shard by the md5 tail — every
-    * window partition holds ~corpus/256 rows, so no task ever sees a
-    * global order, yet (shard, pos) is a total, content-independent,
-    * reproducible permutation at any cluster size.
-    */
-  private val smp4 = Probe(
-    "x_smp4_shuffle",
-    """WITH t AS (
-      |  SELECT doc_id,
-      |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
-      |    substr(md5(CAST(doc_id AS VARCHAR)), 3, 16) AS ord
-      |  FROM documents)
-      |SELECT doc_id, shard,
-      |  CAST(row_number() OVER (PARTITION BY shard ORDER BY ord, doc_id) AS BIGINT) AS pos
-      |FROM t ORDER BY shard, pos""".stripMargin) { (s, dir) =>
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("shard").orderBy("ord", "doc_id")
-    Tables(s, dir, "documents")
-      .select(col("doc_id"),
-        substring(md5(col("doc_id").cast("string")), 1, 2).as("shard"),
-        substring(md5(col("doc_id").cast("string")), 3, 16).as("ord"))
-      .withColumn("pos", row_number().over(w).cast("long"))
-      .select("doc_id", "shard", "pos")
-      .orderBy("shard", "pos")
-  }
-
   /** X-LAY1 — Z-order (Morton) layout key: `util.Scale.zValue2` over
     * (l_partkey, l_suppkey), rolled up per curve segment. The oracle
     * recomputes the interleave with independent bit arithmetic — pinning
@@ -318,5 +251,5 @@ object PipelineOps3 {
       .orderBy("zbucket")
   }
 
-  val all: Seq[Probe] = Seq(ded10, txt11, skew1, bkt1, lay1, smp3, smp4)
+  val all: Seq[Probe] = Seq(ded10, txt11, skew1, bkt1, lay1)
 }

@@ -3,16 +3,11 @@ package graft.ext
 import graft.{Probe, Tables}
 import org.apache.spark.sql.functions._
 
-/** Fourth batch of corpus-pipeline operators: context-window chunking and
-  * the corpus composition report.
+/** Corpus composition report, per-language adaptive quality threshold,
+  * survivor-policy dedup, curriculum deciles, and the composed
+  * chunk → pack pipeline (x_pipe2).
   *
   * Scale design notes (100 TB):
-  * - Chunking is explode-only (one narrow pass, no shuffle): every doc
-  *   emits its window starts via `sequence`, each chunk is a bounded
-  *   `slice` of the token array. Output size is corpus_tokens / stride ×
-  *   window — linear, and each task holds only its own documents. The
-  *   chunk digest (16-hex of md5) keeps the shuffled payload fixed-width
-  *   when downstream ops group by chunk.
   * - The composition report aggregates the full corpus down to a
   *   (source × lang)-sized table FIRST (partial-combine hash agg), then
   *   computes corpus shares with a window over that tiny aggregate — the
@@ -21,44 +16,6 @@ import org.apache.spark.sql.functions._
   *   metadata cardinality, not data size.
   */
 object PipelineOps4 {
-
-  /** X-CHUNK1 — context-window chunking: split each document's tokens
-    * into windows of 16 with stride 12 (4-token overlap), the standard
-    * pretraining pre-tokenization chunking step. Trailing windows keep
-    * their natural (shorter) length; every token lands in ≥1 chunk.
-    * Chunks surface as (doc_id, chunk_idx, n_tokens, chunk_hash).
-    */
-  private val chunk1 = Probe(
-    "x_chunk1_token_windows",
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '') AS toks FROM documents),
-      |c AS (
-      |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 12)) AS s FROM t)
-      |SELECT doc_id,
-      |  CAST((s - 1) // 12 AS BIGINT) AS chunk_idx,
-      |  CAST(len(toks[s:s+15]) AS BIGINT) AS n_tokens,
-      |  substr(md5(array_to_string(toks[s:s+15], ' ')), 1, 16) AS chunk_hash
-      |FROM c ORDER BY doc_id, chunk_idx""".stripMargin) { (s, dir) =>
-    chunkTokenWindows(Tables(s, dir, "documents"), 16, 12)
-      .orderBy("doc_id", "chunk_idx")
-  }
-
-  /** Shared implementation (also the `api.Corpus.chunkTokens` backend):
-    * narrow explode of window starts, bounded slices, no shuffle.
-    */
-  def chunkTokenWindows(docs: org.apache.spark.sql.DataFrame,
-      window: Int, stride: Int): org.apache.spark.sql.DataFrame = {
-    require(window > 0 && stride > 0, s"window=$window stride=$stride")
-    docs
-      .select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        explode(expr(s"sequence(1, size(toks), $stride)")).as("s"))
-      .select(col("doc_id"),
-        expr(s"CAST((s - 1) DIV $stride AS BIGINT)").as("chunk_idx"),
-        expr(s"CAST(size(slice(toks, s, $window)) AS BIGINT)").as("n_tokens"),
-        expr(s"substr(md5(concat_ws(' ', slice(toks, s, $window))), 1, 16)")
-          .as("chunk_hash"))
-  }
 
   /** X-REP1 — corpus composition report: per (source, lang) document
     * counts, token/char volumes, and the corpus share in ppm — the
@@ -131,65 +88,6 @@ object PipelineOps4 {
       .select("doc_id", "lang", "n_words", "lang_median")
   }
 
-  /** X-SMP5 — exact-N deterministic sample: the smallest N documents by a
-    * content-independent hash order — "give me exactly 100 reproducible
-    * docs" at any corpus size. Plans as TakeOrderedAndProject (per-partition
-    * top-k, then a k-sized merge): no global sort, no full shuffle — the
-    * cluster moves N rows, not the corpus.
-    */
-  private val smp5 = Probe(
-    "x_smp5_exact_n",
-    """SELECT doc_id, lang, source FROM documents
-      |ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 100""".stripMargin) { (s, dir) =>
-    Tables(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), col("source"),
-        md5(col("doc_id").cast("string")).as("h"))
-      .orderBy("h", "doc_id").limit(100)
-      .drop("h")
-  }
-
-  /** X-MIX2 — temperature-scaled mixture weights (T = 2): per-source
-    * upsampling factors `(n_max / n_source)^(1/2)` in ppm — the standard
-    * multilingual/multi-source rebalancing rule (sampling ∝ share^(1/T)
-    * flattens the source distribution; T=2 here because `sqrt` is
-    * IEEE-correctly-rounded, so the oracle is bit-exact where a general
-    * `pow` would not be). Computed entirely on the sources-sized
-    * aggregate; the corpus contributes one partial-combine count. The
-    * output IS the weights table `Corpus.mixBySourceWeights`-style
-    * expansion consumes (see `Corpus.mixByTemperature`).
-    */
-  private val mix2 = Probe(
-    "x_mix2_temperature_weights",
-    """WITH a AS (
-      |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-      |  FROM documents GROUP BY source)
-      |SELECT source, n_docs,
-      |  CAST(floor(sqrt(CAST(max(n_docs) OVER () AS DOUBLE) / CAST(n_docs AS DOUBLE))
-      |             * 1000000) AS BIGINT) AS weight_ppm
-      |FROM a ORDER BY source""".stripMargin) { (s, dir) =>
-    temperatureWeights(Tables(s, dir, "documents"), 0.5).orderBy("source")
-  }
-
-  /** Per-source upsampling weights `(n_max / n_source)^invTemp` in ppm.
-    * invTemp = 1/T; 0.5 (T=2) is the oracle-checked case. Runs on the
-    * sources-sized aggregate — the unpartitioned max sees one row per
-    * source, never documents.
-    */
-  def temperatureWeights(docs: org.apache.spark.sql.DataFrame, invTemp: Double)
-      : org.apache.spark.sql.DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
-    // sqrt is IEEE-correctly-rounded, pow is not — route the T=2 case
-    // through sqrt so the cross-engine oracle stays bit-exact
-    val scaled =
-      if (invTemp == 0.5) "sqrt(CAST(max_docs AS DOUBLE) / CAST(n_docs AS DOUBLE))"
-      else s"power(CAST(max_docs AS DOUBLE) / CAST(n_docs AS DOUBLE), $invTemp)"
-    docs.groupBy("source").agg(count(lit(1)).as("n_docs"))
-      .withColumn("max_docs", max(col("n_docs")).over(w))
-      .select(col("source"), col("n_docs"),
-        expr(s"CAST(floor($scaled * 1000000) AS BIGINT)").as("weight_ppm"))
-  }
-
   /** X-PIPE2 — composed chunk → pack: context-window chunking (x_chunk1's
     * exact expansion) feeding sequence packing (x_pack1's cumsum-bin
     * rule) — chunks pack into 64-token bins per 1000-doc shard. The
@@ -200,10 +98,7 @@ object PipelineOps4 {
     */
   private val pipe2 = Probe(
     "x_pipe2_chunk_pack",
-    """WITH t AS (
-      |  SELECT doc_id, list_filter(string_split_regex(text, '\s+'), tkn -> tkn <> '') AS toks FROM documents),
-      |c AS (
-      |  SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 12)) AS s FROM t),
+    s"""${TokenLayout.chunkStartsDuck},
       |ch AS (
       |  SELECT doc_id, CAST((s - 1) // 12 AS BIGINT) AS chunk_idx,
       |    CAST(len(toks[s:s+15]) AS BIGINT) AS n_tokens,
@@ -219,13 +114,10 @@ object PipelineOps4 {
       |  CAST(count(*) AS BIGINT) AS n_chunks,
       |  CAST(sum(n_tokens) AS BIGINT) AS bin_tokens
       |FROM p GROUP BY 1, 2 ORDER BY shard, bin""".stripMargin) { (s, dir) =>
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("shard").orderBy("doc_id", "chunk_idx")
-      .rowsBetween(Long.MinValue, 0)
-    chunkTokenWindows(Tables(s, dir, "documents"), 16, 12)
+    val chunks = TokenLayout.chunkTokenWindows(Tables(s, dir, "documents"), 16, 12)
       .withColumn("shard", expr("doc_id DIV 1000"))
-      .withColumn("cum", sum("n_tokens").over(w))
-      .withColumn("bin", expr("(cum - n_tokens) DIV 64"))
+    TokenLayout.runningOffset(chunks, Seq("shard"), Seq("doc_id", "chunk_idx"), "n_tokens")
+      .withColumn("bin", TokenLayout.bin("cum - n_tokens", "64"))
       .groupBy("shard", "bin")
       .agg(count(lit(1)).as("n_chunks"), sum("n_tokens").as("bin_tokens"))
       .select(col("shard").cast("long").as("shard"), col("bin"),
@@ -306,5 +198,5 @@ object PipelineOps4 {
           .as("decile"))
   }
 
-  val all: Seq[Probe] = Seq(chunk1, rep1, txt12, smp5, mix2, pipe2, ded11, cur1)
+  val all: Seq[Probe] = Seq(rep1, txt12, pipe2, ded11, cur1)
 }

@@ -6,14 +6,12 @@ import org.apache.spark.sql.functions._
 
 import graft.{Probe, Tables}
 import graft.functions.BloomHits.bloom_hits
-import graft.functions.BpeCount.bpe_count
 import graft.functions.NgramMd5.ngram_md5
 import graft.functions.SortedCountIn.sorted_count_in
 
-/** Round-6 curation operators: corpus-level novelty scoring, information-
-  * density (token-entropy) scoring, length-bucketed batch assembly, and
-  * per-epoch sharded data ordering — the remaining curation/assembly steps
-  * between a deduplicated corpus and a training run.
+/** Curation operators: corpus-level novelty scoring, information-density
+  * (token-entropy) scoring and corpus version diffs, plus the composed
+  * split → budget → batch chain (x_pipe3).
   */
 object PipelineOps7 {
 
@@ -145,44 +143,6 @@ object PipelineOps7 {
     tokenEntropy(Tables(s, dir, "documents")).orderBy("doc_id")
   }
 
-  /** Length-bucketed batch assembly: documents are ranged into token-count
-    * buckets of width `bucketWidth`, ordered (n_tok, doc_id) inside each
-    * bucket, and grouped into batches of `batchSize`; per batch the
-    * padding waste (docs x max_len - sum_len) is reported. This is the
-    * dynamic-batching layout step of an inference/training pipeline: the
-    * bucket bound caps padding waste at (bucketWidth - 1) per sequence by
-    * CONSTRUCTION, so the expensive exact global sort is unnecessary.
-    *
-    * Scale shape: the only exchange is the bucket-keyed window shuffle,
-    * and buckets are numerous and balanced (length distribution over
-    * width-16 ranges), so the per-bucket ordered scan parallelizes across
-    * the cluster — this is precisely why the operator buckets FIRST
-    * instead of running one global row_number, which would funnel the
-    * corpus through a single task.
-    */
-  def lengthBatches(docs: DataFrame, bucketWidth: Int = 16, batchSize: Int = 8): DataFrame = {
-    // token-DENOMINATED operators default to the honest subword count
-    // when the corpus carries one (Corpus.withBpeTokenCount /
-    // DocStreams.bpeCounted add `n_tok_bpe`): whitespace words
-    // undercount code/CJK by multiples, so padding-waste accounting in
-    // word units misplans real batches. Routing pinned by
-    // x_pack5_bpe_denominated (substituted denominator, oracle-checked)
-    // and PipelineOps7Spec (real bpe counts).
-    val nTok =
-      if (docs.columns.contains("n_tok_bpe")) col("n_tok_bpe").cast("long")
-      else size(graft.clean.CleanFns.tokens(col("text"))).cast("long")
-    val d = docs.select(col("doc_id"), nTok.as("n_tok"))
-      .withColumn("bucket", expr(s"n_tok DIV $bucketWidth"))
-    d.withColumn("batch", expr(s"(row_number() OVER (PARTITION BY bucket ORDER BY n_tok, doc_id) - 1) DIV $batchSize"))
-      .groupBy("bucket", "batch").agg(
-        count(lit(1)).as("n_docs"),
-        max(col("n_tok")).as("max_tok"),
-        sum(col("n_tok")).as("sum_tok"))
-      .select(col("bucket"), col("batch"), col("n_docs").cast("long").as("n_docs"),
-        col("max_tok"), col("sum_tok"),
-        (col("n_docs") * col("max_tok") - col("sum_tok")).as("pad_waste"))
-  }
-
   /** X-TXT16 — the incremental-novelty regime oracle-checked: documents
     * with odd doc_ids scored against the even-doc_id half as the released
     * corpus. The Spark side is the stream-capable broadcast +
@@ -217,72 +177,6 @@ object PipelineOps7 {
       .orderBy("doc_id")
   }
 
-  /** X-PACK3 — length-bucketed batches of the documents table (width-16
-    * buckets, batches of 8). The oracle runs the identical bucket /
-    * row_number / batch arithmetic.
-    */
-  private val pack3 = Probe(
-    "x_pack3_length_batching",
-    s"""WITH d AS (
-      |  SELECT doc_id, len(${graft.clean.CleanFns.tokensDuck("text")}) AS n_tok
-      |  FROM documents),
-      |b AS (
-      |  SELECT doc_id, n_tok, n_tok // 16 AS bucket,
-      |         (row_number() OVER (PARTITION BY n_tok // 16 ORDER BY n_tok, doc_id) - 1) // 8 AS batch
-      |  FROM d)
-      |SELECT bucket, batch, CAST(count(*) AS BIGINT) AS n_docs,
-      |       CAST(max(n_tok) AS BIGINT) AS max_tok,
-      |       CAST(sum(n_tok) AS BIGINT) AS sum_tok,
-      |       CAST(count(*) * max(n_tok) - sum(n_tok) AS BIGINT) AS pad_waste
-      |FROM b GROUP BY bucket, batch ORDER BY bucket, batch""".stripMargin) { (s, dir) =>
-    lengthBatches(Tables(s, dir, "documents")).orderBy("bucket", "batch")
-  }
-
-  /** Per-epoch sharded data order: each training epoch gets its own
-    * deterministic permutation by hashing (epoch, doc_id) into `shards`
-    * md5 buckets and ordering within each (epoch, shard) by the same
-    * digest — the multi-epoch form of the x_smp4 sharded shuffle. Epochs
-    * see genuinely different orders (the digest mixes the epoch into
-    * every decision) yet the whole schedule is reproducible algebra: no
-    * RNG state, no global sort — shard count bounds the window width, so
-    * ordering parallelizes across epochs x shards.
-    */
-  def epochOrder(docs: DataFrame, epochs: Int, shards: Int): DataFrame = {
-    // sequence(0, epochs - 1) with epochs <= 0 would emit a DESCENDING
-    // range (implicit -1 step) — bogus negative epochs — instead of erroring
-    require(epochs >= 1, s"epochs must be >= 1; got $epochs")
-    require(shards >= 1, s"shards must be >= 1; got $shards")
-    val d = docs.select(col("doc_id"),
-        explode(sequence(lit(0), lit(epochs - 1))).as("epoch"))
-      .withColumn("key", md5(concat(col("epoch").cast("string"), lit(":"), col("doc_id").cast("string"))))
-      .withColumn("shard",
-        conv(substring(col("key"), 1, 4), 16, 10).cast("long") % shards)
-    d.withColumn("rk",
-        row_number().over(Window.partitionBy("epoch", "shard").orderBy(col("key"), col("doc_id"))))
-      .select(col("epoch").cast("long").as("epoch"), col("shard"),
-        col("doc_id"), col("rk").cast("long").as("rk"))
-  }
-
-  /** X-SMP7 — 3-epoch, 8-shard order over the documents table; the oracle
-    * recomputes the identical digest/bucket/rank algebra.
-    */
-  private val smp7 = Probe(
-    "x_smp7_epoch_order",
-    """WITH e AS (
-      |  SELECT doc_id, epoch,
-      |         md5(CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) AS key
-      |  FROM documents, UNNEST(generate_series(0, 2)) AS t(epoch)),
-      |s AS (
-      |  SELECT doc_id, epoch, key,
-      |         ('0x' || substr(key, 1, 4))::BIGINT % 8 AS shard
-      |  FROM e)
-      |SELECT CAST(epoch AS BIGINT) AS epoch, shard, doc_id,
-      |       CAST(row_number() OVER (PARTITION BY epoch, shard ORDER BY key, doc_id) AS BIGINT) AS rk
-      |FROM s ORDER BY epoch, shard, rk""".stripMargin) { (s, dir) =>
-    epochOrder(Tables(s, dir, "documents").select("doc_id"), epochs = 3, shards = 8)
-      .orderBy("epoch", "shard", "rk")
-  }
-
   /** X-PIPE3 — the round-6 assembly chain composed end to end through the
     * Corpus API and oracle-checked as a WHOLE: leakage-safe 80/10/10
     * source split → train split only → ~3000-token greedy budget per
@@ -309,15 +203,7 @@ object PipelineOps7 {
       |                          ROWS UNBOUNDED PRECEDING) AS cum_tok
       |  FROM d),
       |k AS (SELECT doc_id, n_tok FROM c WHERE cum_tok <= 3000),
-      |bb AS (
-      |  SELECT doc_id, n_tok, n_tok // 16 AS bucket,
-      |         (row_number() OVER (PARTITION BY n_tok // 16 ORDER BY n_tok, doc_id) - 1) // 8 AS batch
-      |  FROM k)
-      |SELECT bucket, batch, CAST(count(*) AS BIGINT) AS n_docs,
-      |       CAST(max(n_tok) AS BIGINT) AS max_tok,
-      |       CAST(sum(n_tok) AS BIGINT) AS sum_tok,
-      |       CAST(count(*) * max(n_tok) - sum(n_tok) AS BIGINT) AS pad_waste
-      |FROM bb GROUP BY bucket, batch ORDER BY bucket, batch""".stripMargin) { (s, dir) =>
+      |${TokenLayout.lengthBatchesDuck("k", "bb")}""".stripMargin) { (s, dir) =>
     val train = graft.api.Corpus(s, dir).splitByGroup()
     graft.api.Corpus(train.df.filter(col("split") === "train"))
       .takeTokenBudget(3000L)
@@ -424,81 +310,6 @@ object PipelineOps7 {
       .orderBy("doc_id")
   }
 
-  /** The 89 checked-in merges as a DuckDB struct-literal list, symbols
-    * as lowercase hex of the latin-1 byte strings: `k` is the delimited
-    * adjacent-pair key, `p` its merged replacement (each symbol wrapped
-    * `_hex_`, so `replace(s, k, p)` merges every left-to-right
-    * non-overlapping occurrence — exactly [[graft.functions.Bpe]]
-    * .encodeWord's inner pass).
-    */
-  private def bpeMergeLits: String = {
-    def hx(sym: String) = sym.map(c => f"${c.toInt}%02x").mkString
-    // inlined at each use site DELIBERATELY: hoisting the list into a
-    // one-row CTE cross-joined into the recursive term trips DuckDB
-    // 1.0's binder ("cannot extract field from expression" on the
-    // CTE-carried list); measured cost of the inline form is 0.4 s at
-    // the gate's sf0.01 — acceptable for the correctness oracle
-    graft.functions.Bpe.defaultMerges.zipWithIndex.map { case ((a, b), i) =>
-      s"{'r': $i, 'k': '_${hx(a)}__${hx(b)}_', 'p': '_${hx(a)}${hx(b)}_'}"
-    }.mkString(", ")
-  }
-
-  /** X-TOK1 — honest subword token accounting (round 7 stretch):
-    * per-document whitespace word count vs byte-level BPE subword count
-    * under the checked-in vocabulary (`graft.BpeTrain` recipe; Sennrich
-    * et al. 2016 greedy merges). ORACLE-CHECKED since round 11 — the
-    * registry's last `unchecked` entry falls: the oracle replays greedy
-    * lowest-rank-first merging as a RECURSIVE CTE over per-word symbol
-    * strings (UTF-8 bytes as delimited lowercase hex; one recursion
-    * level = one merge round — pick the minimum applicable rank, then
-    * `replace()` merges every left-to-right occurrence with both
-    * engines' identical non-overlap semantics; a word's terminal state
-    * is the one where no rank applies). Distinct words recurse once and
-    * join back to the token stream, mirroring bpe_count's memo. BpeSpec
-    * still pins encode round-trips, count bounds, determinism, and
-    * interpreted ≡ codegen on top. The column exists to re-denominate
-    * the token-budget/packing operators (`Corpus.withBpeTokenCount`
-    * feeds `takeTokenBudget*` / `lengthBatches`), where whitespace
-    * counts undercount code/CJK by multiples.
-    */
-  private val tok1 = Probe(
-    "x_tok1_bpe_token_counts",
-    s"""WITH RECURSIVE t AS (
-       |  SELECT doc_id, ${graft.clean.CleanFns.tokensDuck("text")} AS ws FROM documents),
-       |wrd AS (SELECT DISTINCT w FROM (SELECT UNNEST(ws) AS w FROM t)),
-       |st AS (
-       |  SELECT w,
-       |    array_to_string(list_transform(
-       |      regexp_extract_all(lower(hex(encode(w))), '[0-9a-f][0-9a-f]'),
-       |      g -> '_' || g || '_'), '') AS s
-       |  FROM wrd
-       |  UNION ALL
-       |  SELECT w, replace(s, ([$bpeMergeLits])[b + 1].k, ([$bpeMergeLits])[b + 1].p)
-       |  FROM (
-       |    SELECT w, s,
-       |      list_min(list_filter(list_transform([$bpeMergeLits],
-       |        m -> CASE WHEN contains(s, m.k) THEN m.r END), x -> x IS NOT NULL)) AS b
-       |    FROM st) WHERE b IS NOT NULL),
-       |fin AS (
-       |  SELECT w, CAST((length(s) - length(replace(s, '_', ''))) // 2 AS BIGINT) AS n_sym
-       |  FROM st
-       |  WHERE list_min(list_filter(list_transform([$bpeMergeLits],
-       |    m -> CASE WHEN contains(s, m.k) THEN m.r END), x -> x IS NOT NULL)) IS NULL),
-       |tok AS (SELECT doc_id, UNNEST(ws) AS w FROM t),
-       |cnt AS (
-       |  SELECT tok.doc_id, SUM(fin.n_sym) AS n_bpe
-       |  FROM tok JOIN fin ON fin.w = tok.w GROUP BY tok.doc_id)
-       |SELECT t.doc_id, CAST(len(t.ws) AS BIGINT) AS n_words,
-       |  CAST(COALESCE(cnt.n_bpe, 0) AS BIGINT) AS n_tok_bpe
-       |FROM t LEFT JOIN cnt ON cnt.doc_id = t.doc_id
-       |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
-    Tables(s, dir, "documents")
-      .select(col("doc_id"),
-        size(graft.clean.CleanFns.tokens(col("text"))).cast("long").as("n_words"),
-        bpe_count(col("text")).cast("bigint").as("n_tok_bpe"))
-      .orderBy("doc_id")
-  }
-
   /** Corpus version diff: per-document status between two snapshots of a
     * corpus (crawl N vs N+1) — `added` (new only), `removed` (old only),
     * `changed` (both, content hash differs), `unchanged`. The audit step
@@ -553,5 +364,5 @@ object PipelineOps7 {
       .orderBy("doc_id")
   }
 
-  val all: Seq[Probe] = Seq(txt14, txt15, txt16, txt17, pack3, smp7, pipe3, tok1, cur3)
+  val all: Seq[Probe] = Seq(txt14, txt15, txt16, txt17, pipe3, cur3)
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.ext.Decontamination
-import graft.functions.BpeCount.bpe_count
+import graft.ext.{Decontamination, Sampling, TokenLayout}
 
 /** Structured Streaming surface over the documents table: the corpus
   * pipeline stages that are naturally stream-capable — benchmark
@@ -13,7 +12,7 @@ import graft.functions.BpeCount.bpe_count
   *
   * The transforms are written against a plain DataFrame so the SAME code
   * runs in batch (the oracle-checked x_dec1 / x_smp2 shapes live in
-  * `ext.Decontamination` / `ext.PipelineOps`) and in streaming;
+  * `ext.Decontamination` / `ext.Sampling`) and in streaming;
   * StreamingSpec pins stream ≡ batch.
   */
 object DocStreams {
@@ -153,7 +152,7 @@ object DocStreams {
     * algebra: stateless, zero shuffle.
     */
   def withSplit(docs: DataFrame): DataFrame =
-    graft.ext.PipelineOps6.splitByGroup(docs, col("source"),
+    Sampling.splitByGroup(docs, col("source"),
       Seq("train", "val", "test"), Seq(80, 90))
 
   /** Stream-capable novelty scoring — x_txt14's semantics in the
@@ -419,17 +418,14 @@ object DocStreams {
     * own documents — so token-budget decisions downstream are denominated
     * identically batch and stream.
     */
-  def bpeCounted(docs: DataFrame): DataFrame = {
-    docs.withColumn("n_tok_bpe", bpe_count(col("text")).cast("bigint"))
-  }
+  def bpeCounted(docs: DataFrame): DataFrame = TokenLayout.withBpeTokenCount(docs)
 
   /** Stream-capable context-window chunking — x_chunk1's exact expansion
-    * (shared code with the oracle-checked probe via
-    * `ext.PipelineOps4.chunkTokenWindows`): a pure narrow explode, zero
+    * (`TokenLayout.chunkTokenWindows`): a pure narrow explode, zero
     * state, zero shuffle — each micro-batch chunks its own documents.
     */
   def chunkWindows(docs: DataFrame, window: Int = 16, stride: Int = 12): DataFrame =
-    graft.ext.PipelineOps4.chunkTokenWindows(docs, window, stride)
+    TokenLayout.chunkTokenWindows(docs, window, stride)
 
   /** Stream-capable source-weighted mixing — `Corpus.mixBySourceWeights`'s
     * exact expansion: the sources-sized weights table joins as a
@@ -437,19 +433,13 @@ object DocStreams {
     * narrow, so replication factors hold per micro-batch with zero state.
     */
   def weightedMix(docs: DataFrame, weightsPpm: Map[String, Long]): DataFrame =
-    graft.api.Corpus(docs).mixBySourceWeights(weightsPpm).df
+    Sampling.mixBySourceWeights(docs, weightsPpm)
 
-  /** Stream-capable stratified downsampling — x_smp2's exact filter ('en'
-    * keeps 2/16 of docs, every other language 8/16, decided by a
-    * content-independent md5 bucket of the id). A pure narrow filter: runs
+  /** Stream-capable stratified downsampling — x_smp2's exact filter
+    * (`Sampling.stratifiedSample`). A pure narrow filter: runs
     * identically over a stream with zero state, zero shuffle.
     */
-  def stratifiedSample(docs: DataFrame): DataFrame = {
-    val bucket = substring(md5(col("doc_id").cast("string")), 1, 1)
-    docs.filter(when(col("lang") === "en", bucket.isin("0", "1"))
-        .otherwise(bucket < "8"))
-      .select(col("doc_id"), col("lang"), col("source"))
-  }
+  def stratifiedSample(docs: DataFrame): DataFrame = Sampling.stratifiedSample(docs)
 
   /** Stream-capable SEGMENT dedup — x_ded18's first-occurrence semantics
     * at ingest: each arriving document explodes into its 16-word segments

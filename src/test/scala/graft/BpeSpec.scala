@@ -107,10 +107,10 @@ class BpeSpec extends SparkSuite {
       .select(col("doc_id"), col("lang"),
         expr("CAST(bpe_count(text) AS BIGINT)").as("n_tok_bpe"))
     for (budget <- Seq(300L, 5000L)) {
-      val a = graft.ext.PipelineOps6
+      val a = graft.ext.TokenLayout
         .takeTokenBudget(d, col("lang"), col("n_tok_bpe"), budget)
         .select("doc_id", "lang", "n_tok_bpe", "cum_tok")
-      val b = graft.ext.PipelineOps6
+      val b = graft.ext.TokenLayout
         .takeTokenBudgetSharded(d, col("lang"), col("n_tok_bpe"), budget)
         .select("doc_id", "lang", "n_tok_bpe", "cum_tok")
       assert(a.exceptAll(b).count() == 0L && b.exceptAll(a).count() == 0L,

@@ -221,17 +221,42 @@ class CorpusSpec extends SparkSuite {
 
   test("shardByTokenBudget equals the naive single-window shard assignment") {
     import org.apache.spark.sql.expressions.Window
-    val got = Corpus(spark, dir).shardByTokenBudget(4096L)
+    // every 7th document loses its lang: the naive window keeps NULL-lang
+    // documents as one group of their own, so the two-level form must too
+    val docs = Tables(spark, dir, "documents")
+      .withColumn("lang", when(col("doc_id") % 7 =!= 0, col("lang")))
+    val got = Corpus(docs).shardByTokenBudget(4096L)
       .df.select("doc_id", "shard")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val naive = Window.partitionBy("lang").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val want = Tables(spark, dir, "documents")
+    val want = docs
       .withColumn("n_tok", size(graft.clean.CleanFns.tokens(col("text"))).cast("long"))
       .withColumn("cum_end", sum("n_tok").over(naive))
       .select(col("doc_id"), expr("(cum_end - n_tok) DIV 4096").as("shard"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(want.keySet.exists(_ % 7 == 0))
     assert(got.nonEmpty && got == want)
+  }
+
+  test("withBpeTokenCount re-denominates packPlacements and shardByTokenBudget") {
+    import spark.implicits._
+    // the corpus's BPE merges whole words (bpe == ws there): plant two
+    // single "words" of unmergeable bytes, where ws counts 1 and bpe dozens
+    val planted = Tables(spark, dir, "documents").select("doc_id", "text", "lang")
+      .unionByName(Seq((900001L, "zq7#" * 40, "en"), (900002L, "x9!k" * 60, "en"))
+        .toDF("doc_id", "text", "lang"))
+    val bpe = Corpus(planted).withBpeTokenCount()
+    val want = bpe.df.select("doc_id", "n_tok_bpe")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(want(900001L) > 1L && want(900002L) > 1L, "fixture cannot discriminate bpe from ws")
+    val placed = bpe.packPlacements().select("doc_id", "n_tok")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // packing skips empty documents; every placed one counts BPE tokens
+    assert(placed.nonEmpty && placed == want.filter(_._2 > 0))
+    val sharded = bpe.shardByTokenBudget(4096L).df.select("doc_id", "n_tok")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(sharded == want)
   }
 
   test("redactPii scrubs planted emails/IPs/phones and touches nothing else") {

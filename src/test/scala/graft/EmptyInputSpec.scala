@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.Corpus
-import graft.ext.{Dedup, EmbedDedup, PipelineOps6, PipelineOps7}
+import graft.ext.{Dedup, EmbedDedup, PipelineOps7, Sampling, TokenLayout}
 
 /** Empty-input robustness: at 100 TB an operator routinely receives an
   * EMPTY frame (a filter that matched nothing, an empty partition of a
@@ -56,11 +56,11 @@ class EmptyInputSpec extends SparkSuite {
 
   test("token budget (both forms), split, epoch order on an empty corpus") {
     val d = emptyDocs.select(col("doc_id"), col("lang"), lit(1L).as("n_tok"))
-    assert(PipelineOps6.takeTokenBudget(d, col("lang"), col("n_tok"), 100L).count() == 0)
-    assert(PipelineOps6.takeTokenBudgetSharded(d, col("lang"), col("n_tok"), 100L).count() == 0)
-    assert(PipelineOps6.splitByGroup(emptyDocs, col("source"),
+    assert(TokenLayout.takeTokenBudget(d, col("lang"), col("n_tok"), 100L).count() == 0)
+    assert(TokenLayout.takeTokenBudgetSharded(d, col("lang"), col("n_tok"), 100L).count() == 0)
+    assert(Sampling.splitByGroup(emptyDocs, col("source"),
       Seq("train", "val", "test"), Seq(80, 90)).count() == 0)
-    assert(PipelineOps7.epochOrder(emptyDocs, epochs = 2, shards = 4).count() == 0)
+    assert(Sampling.epochOrder(emptyDocs, epochs = 2, shards = 4).count() == 0)
   }
 
   test("Bloom build and scoring against an EMPTY released corpus") {
@@ -122,9 +122,9 @@ class EmptyInputSpec extends SparkSuite {
     import spark.implicits._
     assert(graft.ext.PipelineOps13.repetitionSignals(emptyDocs).count() == 0)
     assert(graft.ext.PipelineOps13.ppxBuckets(emptyDocs).count() == 0)
-    assert(graft.ext.PipelineOps14.packPlacements(emptyDocs).count() == 0)
+    assert(TokenLayout.packPlacements(emptyDocs).count() == 0)
     val targets = Seq(("src0", 1000000L)).toDF("source", "target_ppm")
-    assert(graft.ext.PipelineOps14.mixturePlan(emptyDocs, targets).count() == 0)
+    assert(Sampling.mixturePlan(emptyDocs, targets).count() == 0)
     assert(Corpus.fromHtml(emptyDocs.withColumnRenamed("text", "html")).df.count() == 0)
     // KN tables from an empty corpus: empty index, loud nothing
     val idx = graft.ext.KnLm.knIndex(emptyDocs)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.PipelineOps14
+import graft.ext.{Sampling, TokenLayout}
 
 /** Mixture planning: identity and skew algebra, plan → mix composition;
   * sequential packing: hand-computed placements and per-shard
@@ -19,7 +19,7 @@ class PipelineOps14Spec extends SparkSuite {
     val d = corpus("a" -> 100, "b" -> 100, "c" -> 100, "d" -> 100)
     val t = Seq(("a", 250000L), ("b", 250000L), ("c", 250000L), ("d", 250000L))
       .toDF("source", "target_ppm")
-    val out = PipelineOps14.mixturePlan(d, t).collect()
+    val out = Sampling.mixturePlan(d, t).collect()
       .map(r => r.getString(0) -> r).toMap
     out.values.foreach { r =>
       assert(r.getAs[Long]("weight_ppm") == 1000000L)
@@ -32,7 +32,7 @@ class PipelineOps14Spec extends SparkSuite {
     val d = corpus("a" -> 100, "b" -> 200, "c" -> 700) // T = 1000
     val t = Seq(("a", 333333L), ("b", 333333L), ("c", 333334L))
       .toDF("source", "target_ppm")
-    val out = PipelineOps14.mixturePlan(d, t).collect()
+    val out = Sampling.mixturePlan(d, t).collect()
       .map(r => r.getString(0) -> r).toMap
     // weight_ppm = target * T DIV tokens
     assert(out("a").getAs[Long]("weight_ppm") == 333333L * 1000 / 100)
@@ -56,7 +56,7 @@ class PipelineOps14Spec extends SparkSuite {
     val counts = Seq(("a", 20000000000000L), ("b", 5000000000000L))
       .toDF("source", "n_tokens")
     val t = Seq(("a", 600000L), ("b", 400000L)).toDF("source", "target_ppm")
-    val out = PipelineOps14.mixturePlanFromCounts(counts, t).collect()
+    val out = Sampling.mixturePlanFromCounts(counts, t).collect()
       .map(r => r.getString(0) -> r).toMap
     // independent BigInt recomputation
     val T = BigInt(25000000000000L)
@@ -79,7 +79,7 @@ class PipelineOps14Spec extends SparkSuite {
       .toDF("source", "n_tokens")
     val t = Seq(("tiny", 500000L), ("big", 500000L)).toDF("source", "target_ppm")
     val e = intercept[Exception] {
-      PipelineOps14.mixturePlanFromCounts(counts, t).collect()
+      Sampling.mixturePlanFromCounts(counts, t).collect()
     }
     def msgs(x: Throwable): Seq[String] =
       if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
@@ -114,7 +114,7 @@ class PipelineOps14Spec extends SparkSuite {
       (0L, (1 to 100).map(i => s"a$i").mkString(" ")),
       (16L, (1 to 200).map(i => s"b$i").mkString(" ")),
       (32L, (1 to 100).map(i => s"c$i").mkString(" "))).toDF("doc_id", "text")
-    val out = PipelineOps14.packPlacements(d).collect()
+    val out = TokenLayout.packPlacements(d).collect()
       .map(r => r.getLong(0) -> r).toMap
     def row(id: Long) = {
       val r = out(id)
@@ -127,7 +127,7 @@ class PipelineOps14Spec extends SparkSuite {
   }
 
   test("packPlacements: per-shard offsets are contiguous on the real corpus") {
-    val out = PipelineOps14.packPlacements(
+    val out = TokenLayout.packPlacements(
       Tables(spark, "/root/testdata/sf0.001", "documents"))
     val rows = out.collect().groupBy(_.getAs[Long]("shard"))
     assert(rows.nonEmpty)

@@ -17,7 +17,7 @@ class PipelineOps4Spec extends SparkSuite {
     //   chunk 0 = t1..t16, chunk 1 = t13..t28, chunk 2 = t25..t30 (6 toks)
     val docs = Seq((1L, (1 to 30).map(i => s"t$i").mkString(" ")),
       (2L, "solo")).toDF("doc_id", "text")
-    val out = ext.PipelineOps4.chunkTokenWindows(docs, 16, 12)
+    val out = ext.TokenLayout.chunkTokenWindows(docs, 16, 12)
       .orderBy("doc_id", "chunk_idx").collect()
     val d1 = out.filter(_.getLong(0) == 1L)
     assert(d1.map(r => (r.getLong(1), r.getLong(2))).toSeq ==
@@ -44,7 +44,7 @@ class PipelineOps4Spec extends SparkSuite {
       assert(idx.toSeq == (0L until idx.length))
     }
     // the chunk expansion itself is narrow: no exchange before the sort
-    val plan = ext.PipelineOps4
+    val plan = ext.TokenLayout
       .chunkTokenWindows(docs, 16, 12).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"chunking must not shuffle:\n$plan")
   }

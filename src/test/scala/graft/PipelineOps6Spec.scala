@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.PipelineOps6
+import graft.ext.{Sampling, TokenLayout}
 
 /** Split and token-budget operators: group coherence, budget maximality,
   * and determinism.
@@ -11,7 +11,7 @@ class PipelineOps6Spec extends SparkSuite {
   private def docs = Tables(spark, dir, "documents")
 
   test("splitByGroup: every group lands wholly in one split") {
-    val out = PipelineOps6.splitByGroup(docs, col("source"),
+    val out = Sampling.splitByGroup(docs, col("source"),
       Seq("train", "val", "test"), Seq(80, 90))
     val perGroup = out.groupBy("source")
       .agg(countDistinct(col("split")).as("n")).collect()
@@ -21,10 +21,10 @@ class PipelineOps6Spec extends SparkSuite {
   test("splitByGroup: all three splits populated, deterministic across runs") {
     // key on doc_id (500 groups) for the population check: the 20-source
     // fixture legitimately leaves a 10% bucket empty at this group count
-    val run1 = PipelineOps6.splitByGroup(docs, col("doc_id"),
+    val run1 = Sampling.splitByGroup(docs, col("doc_id"),
       Seq("train", "val", "test"), Seq(80, 90))
       .select("doc_id", "split").collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    val run2 = PipelineOps6.splitByGroup(docs, col("doc_id"),
+    val run2 = Sampling.splitByGroup(docs, col("doc_id"),
       Seq("train", "val", "test"), Seq(80, 90))
       .select("doc_id", "split").collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(run1 == run2)
@@ -52,16 +52,16 @@ class PipelineOps6Spec extends SparkSuite {
   test("splitByGroup: malformed cut-points fail loudly, not mislabel") {
     val d = docs.select(col("doc_id"), col("source"))
     intercept[IllegalArgumentException] {
-      PipelineOps6.splitByGroup(d, col("source"), Seq("a", "b", "c"), Seq(90, 80))
+      Sampling.splitByGroup(d, col("source"), Seq("a", "b", "c"), Seq(90, 80))
     }
     intercept[IllegalArgumentException] {
-      PipelineOps6.splitByGroup(d, col("source"), Seq("a", "b"), Seq(0))
+      Sampling.splitByGroup(d, col("source"), Seq("a", "b"), Seq(0))
     }
     intercept[IllegalArgumentException] {
-      PipelineOps6.splitByGroup(d, col("source"), Seq("a", "b"), Seq(100))
+      Sampling.splitByGroup(d, col("source"), Seq("a", "b"), Seq(100))
     }
     intercept[IllegalArgumentException] {
-      PipelineOps6.splitByGroup(d, col("source"), Seq("a", "b", "c"), Seq(80, 80))
+      Sampling.splitByGroup(d, col("source"), Seq("a", "b", "c"), Seq(80, 80))
     }
   }
 
@@ -69,7 +69,7 @@ class PipelineOps6Spec extends SparkSuite {
     val budget = 800L
     val withTok = docs.select(col("doc_id"), col("lang"),
       size(graft.clean.CleanFns.tokens(col("text"))).cast("long").as("n_tok"))
-    val kept = PipelineOps6.takeTokenBudget(withTok, col("lang"), col("n_tok"), budget)
+    val kept = TokenLayout.takeTokenBudget(withTok, col("lang"), col("n_tok"), budget)
     val sums = kept.groupBy("lang").agg(sum("n_tok").as("s"), max("cum_tok").as("m"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(sums.nonEmpty)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.PipelineOps7
+import graft.ext.{PipelineOps7, Sampling, TokenLayout}
 
 /** Novelty, entropy, length batching, epoch ordering: hand-built fixture
   * semantics plus invariants on the real tables.
@@ -60,7 +60,7 @@ class PipelineOps7Spec extends SparkSuite {
       1L -> "a b c", 2L -> "d e f", 3L -> "g h i",
       4L -> Seq.fill(17)("w").mkString(" "), 5L -> Seq.fill(18)("w").mkString(" "),
       6L -> Seq.fill(19)("w").mkString(" "), 7L -> Seq.fill(20)("w").mkString(" "))
-    val out = PipelineOps7.lengthBatches(d, bucketWidth = 16, batchSize = 2)
+    val out = TokenLayout.lengthBatches(d, bucketWidth = 16, batchSize = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     assert(out((0L, 0L)) == ((2L, 3L, 6L, 0L)))   // two 3-token docs, no padding
@@ -80,7 +80,7 @@ class PipelineOps7Spec extends SparkSuite {
       Seq((900001L, Seq.fill(40)("zq7#").mkString),
           (900002L, Seq.fill(60)("x9!k").mkString)).toDF("doc_id", "text"))
     val withBpe = graft.api.Corpus(planted).withBpeTokenCount().df
-    val out = PipelineOps7.lengthBatches(withBpe, bucketWidth = 16, batchSize = 8)
+    val out = TokenLayout.lengthBatches(withBpe, bucketWidth = 16, batchSize = 8)
     def hist(df: org.apache.spark.sql.DataFrame, tok: String): Map[Long, Long] = df
       .select(expr(s"$tok DIV 16").as("b")).groupBy("b").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -98,7 +98,7 @@ class PipelineOps7Spec extends SparkSuite {
   }
 
   test("lengthBatches: waste bounded by construction on the real corpus") {
-    val out = PipelineOps7.lengthBatches(docs, bucketWidth = 16, batchSize = 8).collect()
+    val out = TokenLayout.lengthBatches(docs, bucketWidth = 16, batchSize = 8).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val (nDocs, waste) = (r.getLong(2), r.getLong(5))
@@ -110,7 +110,7 @@ class PipelineOps7Spec extends SparkSuite {
   test("epochOrder: epochs permute differently, ranks contiguous, deterministic") {
     val base = docs.select("doc_id")
     val n = base.count()
-    val out = PipelineOps7.epochOrder(base, epochs = 3, shards = 8)
+    val out = Sampling.epochOrder(base, epochs = 3, shards = 8)
     assert(out.count() == 3 * n)
     // each (epoch, shard) ranks exactly 1..count
     val bad = out.groupBy("epoch", "shard")
@@ -122,15 +122,15 @@ class PipelineOps7Spec extends SparkSuite {
       .agg(countDistinct(concat_ws(":", col("shard"), col("rk"))).as("pos"))
     assert(perDoc.filter(col("pos") > 1).count() > n / 2)
     // reproducible algebra: two plans, identical schedule
-    val again = PipelineOps7.epochOrder(base, epochs = 3, shards = 8)
+    val again = Sampling.epochOrder(base, epochs = 3, shards = 8)
     assert(out.exceptAll(again).isEmpty && again.exceptAll(out).isEmpty)
   }
 
   test("epochOrder: non-positive epochs/shards fail loudly") {
     val base = docs.select("doc_id")
-    intercept[IllegalArgumentException] { PipelineOps7.epochOrder(base, epochs = 0, shards = 8) }
-    intercept[IllegalArgumentException] { PipelineOps7.epochOrder(base, epochs = -1, shards = 8) }
-    intercept[IllegalArgumentException] { PipelineOps7.epochOrder(base, epochs = 3, shards = 0) }
+    intercept[IllegalArgumentException] { Sampling.epochOrder(base, epochs = 0, shards = 8) }
+    intercept[IllegalArgumentException] { Sampling.epochOrder(base, epochs = -1, shards = 8) }
+    intercept[IllegalArgumentException] { Sampling.epochOrder(base, epochs = 3, shards = 0) }
   }
 
   test("corpus invariants: first doc fully novel, ppm bounded, entropy bounded") {
@@ -152,7 +152,7 @@ class PipelineOps7Spec extends SparkSuite {
     val total = docs
       .select(sum(size(graft.clean.CleanFns.tokens(col("text")))).cast("long"))
       .collect().head.getLong(0)
-    val packed = PipelineOps7.lengthBatches(docs)
+    val packed = TokenLayout.lengthBatches(docs)
       .agg(sum("sum_tok").cast("long")).collect().head.getLong(0)
     assert(packed == total)
   }

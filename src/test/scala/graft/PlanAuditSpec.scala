@@ -420,13 +420,39 @@ class PlanAuditSpec extends SparkSuite {
     // exchange means the type-dedup regressed to shuffling the full
     // occurrence stream as token payloads.
     assert(plan.contains("BroadcastHashJoin"), plan)
-    val lines = plan.linesIterator.toVector
-    val rawKeyed = lines.zipWithIndex.filter { case (l, _) =>
-      "Exchange hashpartitioning\\([^)]*\\b(a|b)#".r.findFirstIn(l).isDefined }
-    val unaggregated = rawKeyed.filterNot { case (_, i) =>
-      lines.slice(i + 1, i + 2).exists(_.contains("partial_")) }
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
+    }
+    def beneath(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => beneath(w.child)
+      case i: InputAdapter => beneath(i.child)
+      case r: AQEShuffleReadExec => beneath(r.child)
+      case q: QueryStageExec => beneath(q.plan)
+      case n => n
+    }
+    val rawKeyed = nodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.exists(_.references.exists(r => r.name == "a" || r.name == "b"))
+        case _ => false
+      }) => e
+    }
+    assert(rawKeyed.nonEmpty, s"no exchange keyed on a#/b# found: nothing was checked\n$plan")
+    // the partial (map-side) aggregate is the one that needs no child
+    // distribution; a string min plans it as a SortAggregate, not a hash one
+    val unaggregated = rawKeyed.filterNot(e => beneath(e.child) match {
+      case a: BaseAggregateExec => a.requiredChildDistributionExpressions.isEmpty
+      case _ => false
+    })
     assert(unaggregated.isEmpty,
-      s"raw-token-keyed exchange WITHOUT map-side combine: ${unaggregated.map(_._1)}\n$plan")
+      s"raw-token-keyed exchange WITHOUT map-side combine: ${unaggregated.map(_.simpleString(200))}\n$plan")
   }
 
   test("x_txt23: gram payloads shuffle as digests, never gram strings") {

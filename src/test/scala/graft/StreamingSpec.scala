@@ -360,7 +360,7 @@ class StreamingSpec extends SparkSuite {
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
       val want = DocStreams.stratifiedSample(Tables(spark, dir, "documents"))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
-      val oracle = graft.ext.PipelineOps.all.find(_.name == "x_smp2_stratified").get
+      val oracle = Registry.all.find(_.name == "x_smp2_stratified").get
         .run(spark, dir)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
       assert(got.nonEmpty)
@@ -540,7 +540,7 @@ class StreamingSpec extends SparkSuite {
       def key(r: org.apache.spark.sql.Row) =
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))
       val got = spark.table("chunk_out").collect().map(key).sorted.toSeq
-      val oracle = graft.ext.PipelineOps4.all.find(_.name == "x_chunk1_token_windows").get
+      val oracle = Registry.all.find(_.name == "x_chunk1_token_windows").get
         .run(spark, dir).collect().map(key).sorted.toSeq
       assert(got.nonEmpty && got == oracle)
     } finally q.stop()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.PipelineOps6.{takeTokenBudget, takeTokenBudgetSharded}
+import graft.ext.TokenLayout.{takeTokenBudget, takeTokenBudgetSharded}
 
 /** The sharded two-level token-budget fill ≡ the single-window form —
   * including on a planted mega-group — and its plan never funnels a
