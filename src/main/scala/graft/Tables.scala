@@ -1,6 +1,14 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, RecordReader, TaskAttemptContext}
+import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -78,7 +86,7 @@ object Tables {
     * cost is never paid there).
     */
   private def scanPartitions(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val leaves = df.queryExecution.analyzed.collectLeaves()
     val rels = leaves.collect {
       case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
@@ -102,6 +110,44 @@ object Tables {
       if (open) n += 1
       n
     }.sum)
+  }
+
+  /** `newAPIHadoopFile` over `path` with one split rule for every
+    * Hadoop-file reader (XML elements, WARC records, sitemaps):
+    * `maxSplitBytes` caps the Hadoop split size when given; otherwise the
+    * cap is Spark's own file-source rule (`FilePartition.maxSplitBytes`:
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+    * `minPartitionNum`, else the default parallelism) over the files
+    * Hadoop itself lists for `path`. A single file therefore splits
+    * across the session's cores like a `spark.read` scan of it, where the
+    * bare Hadoop default would cut only at the store's block size (32 MB
+    * locally: a 64 MB file read as 2 tasks on 4 cores). `settings` are
+    * extra Hadoop conf entries for the input format (e.g. its row tag).
+    */
+  def hadoopFile[F <: FileInputFormat[LongWritable, Text]](spark: SparkSession,
+      path: String, format: Class[F], maxSplitBytes: Option[Long],
+      settings: (String, String)*): RDD[(LongWritable, Text)] = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    settings.foreach { case (k, v) => conf.set(k, v) }
+    val split = maxSplitBytes.getOrElse {
+      val job = Job.getInstance(conf)
+      FileInputFormat.setInputPaths(job, path)
+      val files = HadoopListing.files(job)
+      FilePartition.maxSplitBytes(spark, Seq(PartitionDirectory(InternalRow.empty, files)))
+    }
+    conf.set(FileInputFormat.SPLIT_MAXSIZE, split.toString)
+    spark.sparkContext.newAPIHadoopFile(path, format,
+      classOf[LongWritable], classOf[Text], conf)
+  }
+
+  /** Hadoop's own input listing (glob expansion, directory children,
+    * hidden-file filter), so the split rule sizes exactly the files that
+    * `getSplits` will cut.
+    */
+  private object HadoopListing extends FileInputFormat[LongWritable, Text] {
+    def files(job: JobContext): Array[FileStatus] = listStatus(job).toArray(Array.empty[FileStatus])
+    override def createRecordReader(split: InputSplit, ctx: TaskAttemptContext)
+        : RecordReader[LongWritable, Text] = throw new UnsupportedOperationException
   }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -1,7 +1,5 @@
 package graft.osm
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -20,19 +18,14 @@ import org.apache.spark.sql.types.StructType
 object OsmSplittable {
 
   /** DataFrame over every `rowTag` element of (possibly) one huge file.
-    * `maxSplitBytes` bounds the Hadoop split size (else the default block
-    * sizing applies — on a real cluster, the HDFS/object-store block size).
+    * `maxSplitBytes` bounds the Hadoop split size (else Spark's file-split
+    * rule applies, [[graft.Tables.hadoopFile]]: a single file splits across
+    * the session's cores, and a large input cuts at the smaller of
+    * `spark.sql.files.maxPartitionBytes` and the store's block size).
     */
   def readElements(spark: SparkSession, path: String, rowTag: String,
       schema: StructType, maxSplitBytes: Option[Long] = None): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(XmlElementInputFormat.ROW_TAG_KEY, rowTag)
-    maxSplitBytes.foreach { b =>
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", b.toString)
-    }
-    val records = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[XmlElementInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
+    val records = XmlElementInputFormat.elements(spark, path, rowTag, maxSplitBytes)
       .map(_._2.toString)
     spark.createDataset(records)(Encoders.STRING)
       .select(from_xml(col("value"), schema).as("e"))

@@ -3,10 +3,12 @@ package graft.osm
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{DataOutputBuffer, LongWritable, Text}
+import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.hadoop.mapreduce.{InputSplit, JobContext, RecordReader, TaskAttemptContext}
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 
 /** Splittable XML-element input format: one record per `<rowTag ...>`
   * element, from a SINGLE (possibly huge) uncompressed XML file.
@@ -20,6 +22,13 @@ import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
   * of a 100 GB .osm parallelize, where delimiter-record tricks blow up on
   * sparse row tags (the text before the first `</way>` is the entire
   * nodes section).
+  *
+  * The reader scans its own `byte[]` window (1 MiB, or the split length
+  * when smaller): the tag searches are array loops and a record's bytes
+  * go into its `Text` as one slice of the window. Bytes before the
+  * element being read are dropped whenever the window refills, so the
+  * window only grows (doubling) while one element is longer than it, and
+  * memory stays O(one element + window).
   *
   * XML assumptions (hold for any conformant writer, incl. OSM exports):
   * `<` is escaped inside attribute values, so raw `<rowTag` / `</rowTag>`
@@ -43,6 +52,14 @@ class XmlElementInputFormat extends FileInputFormat[LongWritable, Text] {
 object XmlElementInputFormat {
   /** Configuration key naming the element to extract (e.g. "node"). */
   val ROW_TAG_KEY = "graft.xml.rowtag"
+
+  /** Every `rowTag` element under `path`, keyed by its start tag's byte
+    * offset, split by [[graft.Tables.hadoopFile]]'s rule.
+    */
+  def elements(spark: SparkSession, path: String, rowTag: String,
+      maxSplitBytes: Option[Long]): RDD[(LongWritable, Text)] =
+    graft.Tables.hadoopFile(spark, path, classOf[XmlElementInputFormat],
+      maxSplitBytes, ROW_TAG_KEY -> rowTag)
 }
 
 class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
@@ -50,12 +67,18 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
   private var endTag: Array[Byte] = _
   private var start = 0L
   private var end = 0L
-  private var pos = 0L
-  private var in: java.io.DataInputStream = _
   private var fsIn: org.apache.hadoop.fs.FSDataInputStream = _
+  // the window: buf(0 until lim) holds the file bytes from offset bufStart;
+  // p is the next byte to scan, mark the first byte of the element being
+  // read (-1 between elements); the file position is bufStart + p
+  private var buf: Array[Byte] = _
+  private var bufStart = 0L
+  private var lim = 0
+  private var p = 0
+  private var mark = -1
+  private var eof = false
   private val key = new LongWritable
   private val value = new Text
-  private val buffer = new DataOutputBuffer
 
   override def initialize(genericSplit: InputSplit, ctx: TaskAttemptContext): Unit = {
     val split = genericSplit.asInstanceOf[FileSplit]
@@ -76,46 +99,55 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
     val fs = split.getPath.getFileSystem(ctx.getConfiguration)
     fsIn = fs.open(split.getPath)
     fsIn.seek(start)
-    in = new java.io.DataInputStream(new java.io.BufferedInputStream(fsIn, 1 << 20))
-    pos = start
+    buf = new Array[Byte](math.max(64, math.min(1L << 20, split.getLength).toInt))
+    bufStart = start
   }
 
-  private def readByte(): Int = {
-    val b = in.read()
-    if (b >= 0) pos += 1
-    b
-  }
-
-  /** Scan forward for `tag`; when `record` is true, copy scanned bytes into
-    * `buffer`. Returns false at EOF, or — when not recording — once the
-    * scan position passes the split end with no match in progress (the next
-    * element belongs to the next split). In non-recording (start-tag
-    * search) mode a match is accepted only if its FIRST byte lies before
-    * the split end: a start tag beginning at/after `end`, reached through
-    * a partial-match run crossing the boundary (e.g. "<nod<node"), is the
-    * next split's element — emitting it here would duplicate it.
+  /** Make `n` unread bytes available at `p`; false only at EOF. A full
+    * window first drops the bytes before `mark` (or `p`), and grows only
+    * when nothing can be dropped.
     */
-  private def readUntilMatch(tag: Array[Byte], record: Boolean): Boolean = {
-    var i = 0
-    var matchStart = 0L
-    while (true) {
-      val b = readByte()
-      if (b == -1) return false
-      if (record) buffer.write(b)
-      if (b == tag(i)) {
-        if (i == 0) matchStart = pos - 1
-        i += 1
-        if (i >= tag.length) {
-          if (record || matchStart < end) return true
-          return false // tag begins in the next split: not ours
-        }
-      } else {
-        if (b == tag(0)) { i = 1; matchStart = pos - 1 } else i = 0
-        if (!record && i == 0 && pos >= end) return false
+  private def fill(n: Int): Boolean = {
+    while (lim - p < n && !eof) {
+      if (lim == buf.length) {
+        val keep = if (mark >= 0) mark else p
+        if (keep > 0) {
+          System.arraycopy(buf, keep, buf, 0, lim - keep)
+          bufStart += keep; lim -= keep; p -= keep
+          if (mark >= 0) mark = 0
+        } else buf = java.util.Arrays.copyOf(buf, buf.length * 2)
       }
+      val r = fsIn.read(buf, lim, buf.length - lim)
+      if (r < 0) eof = true else lim += r
+    }
+    lim - p >= n
+  }
+
+  /** Move `p` onto the next occurrence of `tag` (whose only `<` is its
+    * first byte, so every match starts at a `<`). Returns false at EOF,
+    * or once the scan reaches file offset `stopAt` with no match starting
+    * before it. In start-tag search (`stopAt` = split end) a match is
+    * accepted only if its FIRST byte lies before the split end: a start
+    * tag beginning at/after `end`, even one reached through a partial
+    * match crossing the boundary (e.g. "<nod<node"), is the next split's
+    * element — emitting it here would duplicate it.
+    */
+  private def seek(tag: Array[Byte], stopAt: Long): Boolean = {
+    while (true) {
+      while (p < lim && buf(p) != '<') p += 1
+      if (bufStart + p >= stopAt) return false
+      if (p == lim) { if (!fill(1)) return false }
+      else if (!fill(tag.length)) return false
+      else if (java.util.Arrays.equals(buf, p, p + tag.length, tag, 0, tag.length)) return true
+      else p += 1
     }
     false
   }
+
+  /** The next byte (0..255) at `p`, advancing; -1 at EOF. */
+  private def next(): Int =
+    if (p == lim && !fill(1)) -1
+    else { val b = buf(p) & 0xff; p += 1; b }
 
   /** After the start-tag bytes matched: boundary byte must terminate the
     * tag name ("<node" must not match "<nodeset").
@@ -125,14 +157,13 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
 
   override def nextKeyValue(): Boolean = {
     while (true) {
-      buffer.reset()
-      if (!readUntilMatch(startTag, record = false)) return false
-      val elementStart = pos - startTag.length
-      val b0 = readByte()
+      mark = -1
+      if (!seek(startTag, end)) return false
+      mark = p
+      p += startTag.length
+      val b0 = next()
       if (b0 == -1) return false
       if (boundaryOk(b0)) {
-        buffer.write(startTag)
-        buffer.write(b0)
         // phase 1: the root tag itself, quote-aware ('>' is legal inside
         // attribute values). Ends at '>' — "/>" completes the element.
         var rootClosed = b0 == '>'
@@ -140,27 +171,27 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
         var prev = b0
         var inQuote = 0 // 0 = none, else the active quote char
         while (!rootClosed && !selfClosed) {
-          val b = readByte()
+          val b = next()
           if (b == -1) return false // malformed tail: drop it
-          buffer.write(b)
           if (inQuote != 0) { if (b == inQuote) inQuote = 0 }
           else if (b == '"' || b == '\'') inQuote = b
           else if (b == '>') { if (prev == '/') selfClosed = true else rootClosed = true }
           prev = b
         }
-        // phase 2 (open element): copy bytes through the matching end tag.
+        // phase 2 (open element): scan through the matching end tag.
         // Same-name elements do not nest and '<' is escaped in values, so a
         // raw end-tag byte match is the element end.
-        if (selfClosed || readUntilMatch(endTag, record = true)) {
-          key.set(elementStart)
-          value.set(buffer.getData, 0, buffer.getLength)
+        if (selfClosed || seek(endTag, Long.MaxValue)) {
+          if (!selfClosed) p += endTag.length
+          key.set(bufStart + mark)
+          value.set(buf, mark, p - mark)
           return true
         }
         return false // EOF inside an element: malformed tail, drop it
       }
       // not a real start tag (e.g. "<nodeset"): keep scanning, unless we
       // are already past the split end
-      if (pos >= end) return false
+      if (bufStart + p >= end) return false
     }
     false
   }
@@ -168,6 +199,7 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
   override def getCurrentKey: LongWritable = key
   override def getCurrentValue: Text = value
   override def getProgress: Float =
-    if (end == start) 1.0f else math.min(1.0f, (pos - start).toFloat / (end - start))
-  override def close(): Unit = if (in != null) in.close()
+    if (end == start) 1.0f
+    else math.min(1.0f, (bufStart + p - start).toFloat / (end - start))
+  override def close(): Unit = if (fsIn != null) fsIn.close()
 }

@@ -1,8 +1,6 @@
 package graft.sources
 
 import graft.{Probe, Tables}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -125,10 +123,7 @@ object Revisit {
     * the column the revisit resolve joins on. Same splittable reader.
     */
   def readRecordsDigest(spark: SparkSession, path: String): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[WarcInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
+    val rows = Tables.hadoopFile(spark, path, classOf[WarcInputFormat], None)
       .map { case (off, t) =>
         val s = new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8)
         val hEnd = s.indexOf("\r\n\r\n")

@@ -1,8 +1,6 @@
 package graft.sources
 
 import graft.{Probe, Tables}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,18 +33,12 @@ object Sitemap {
   /** DataFrame of every `<url>` entry under `path`: (loc, lastmod,
     * changefreq, priority) — loc entity-decoded, absent fields ''.
     * Splittable exactly like the OSM scan; `maxSplitBytes` bounds the
-    * Hadoop split size.
+    * Hadoop split size (else Spark's file-split rule applies,
+    * [[graft.Tables.hadoopFile]]).
     */
   def readUrlEntries(spark: SparkSession, path: String,
       maxSplitBytes: Option[Long] = None): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(graft.osm.XmlElementInputFormat.ROW_TAG_KEY, "url")
-    maxSplitBytes.foreach { b =>
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", b.toString)
-    }
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[graft.osm.XmlElementInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
+    val rows = graft.osm.XmlElementInputFormat.elements(spark, path, "url", maxSplitBytes)
       .map { case (_, t) =>
         Row(new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8))
       }
@@ -291,11 +283,7 @@ object Sitemap {
     * `sitemap`: (loc, lastmod).
     */
   def readIndexEntries(spark: SparkSession, path: String): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(graft.osm.XmlElementInputFormat.ROW_TAG_KEY, "sitemap")
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[graft.osm.XmlElementInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
+    val rows = graft.osm.XmlElementInputFormat.elements(spark, path, "sitemap", None)
       .map { case (_, t) =>
         Row(new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8))
       }

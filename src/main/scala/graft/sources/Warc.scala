@@ -1,8 +1,6 @@
 package graft.sources
 
 import graft.{Probe, Tables}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -72,19 +70,14 @@ object Warc {
       .map(_.toLong).getOrElse(-1L)
 
   /** DataFrame over every record of the WARC file(s) at `path`.
-    * `maxSplitBytes` bounds the Hadoop split size (else block sizing
-    * applies). Payloads decode as UTF-8 text — binary payloads belong
-    * to the multimodal tier (`ext.Multimodal`), not this reader.
+    * `maxSplitBytes` bounds the Hadoop split size (else Spark's file-split
+    * rule applies, [[graft.Tables.hadoopFile]]). Payloads decode as UTF-8
+    * text — binary payloads belong to the multimodal tier
+    * (`ext.Multimodal`), not this reader.
     */
   def readRecords(spark: SparkSession, path: String,
       maxSplitBytes: Option[Long] = None): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    maxSplitBytes.foreach { b =>
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", b.toString)
-    }
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[WarcInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
+    val rows = Tables.hadoopFile(spark, path, classOf[WarcInputFormat], maxSplitBytes)
       .map { case (off, t) =>
         val s = new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8)
         val hEnd = s.indexOf("\r\n\r\n")
@@ -122,17 +115,12 @@ object Warc {
     * spec), the payload surfaced as the exact bytes Content-Length
     * framed. The front door for non-UTF-8 crawl content — compose with
     * [[httpBody]] over an ISO-8859-1 (byte-identity) view and
-    * [[graft.clean.CharsetFns.decodeCharset]].
+    * [[graft.clean.CharsetFns.decodeCharset]]. `maxSplitBytes` bounds the
+    * Hadoop split size (else Spark's file-split rule applies).
     */
   def readRecordsBinary(spark: SparkSession, path: String,
       maxSplitBytes: Option[Long] = None): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    maxSplitBytes.foreach { b =>
-      conf.set("mapreduce.input.fileinputformat.split.maxsize", b.toString)
-    }
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[WarcInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
+    val rows = Tables.hadoopFile(spark, path, classOf[WarcInputFormat], maxSplitBytes)
       .map { case (off, t) =>
         val bytes = t.copyBytes()
         // first CRLFCRLF by BYTE scan (the reader's emission contract

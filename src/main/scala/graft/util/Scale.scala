@@ -116,7 +116,9 @@ object Scale {
         coalesce(min(col("mx_a")), lit(0L)).as("mx_a"),
         coalesce(min(col("n_b")), lit(0L)).as("n_b"),
         coalesce(min(col("mx_b")), lit(0L)).as("mx_b"),
-        coalesce(min(col("dot")), lit(0L)).as("est"))
+        // the x_skt6 oracle's inner join: a row with no matched slot
+        // (dot = 0) takes no part in the min; no match in any row -> 0
+        coalesce(min(when(col("dot") > 0, col("dot"))), lit(0L)).as("est"))
       .collect()(0)
     val (na, mka, nb, mkb, est) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))

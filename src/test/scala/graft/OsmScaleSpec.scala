@@ -1,8 +1,13 @@
 package graft
 
-import graft.osm.OsmPipeline
+import graft.osm.{OsmPipeline, XmlElementInputFormat}
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
 /** ETL at the reference's actual input scale (~100 MB XML for the real
   * Elgin extract): generate a comparable synthetic OSM file, run the full
@@ -135,6 +140,27 @@ class OsmScaleSpec extends SparkSuite {
     assert(rows(ts.wayNodes, "id", "position") == rows(t0.wayNodes, "id", "position"))
   }
 
+  /** Every element the input format yields for `path` when Hadoop cuts
+    * it at `splitBytes`, read split by split through the record reader
+    * itself (no Spark job): (start-tag offset, element text).
+    */
+  private def readerElements(path: String, rowTag: String, splitBytes: Long): Seq[(Long, String)] = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(XmlElementInputFormat.ROW_TAG_KEY, rowTag)
+    conf.setLong(FileInputFormat.SPLIT_MAXSIZE, splitBytes)
+    val job = Job.getInstance(conf)
+    FileInputFormat.setInputPaths(job, path)
+    val format = new XmlElementInputFormat
+    format.getSplits(job).asScala.toSeq.flatMap { split =>
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+      val reader = format.createRecordReader(split, ctx)
+      reader.initialize(split, ctx)
+      try Iterator.continually(reader.nextKeyValue()).takeWhile(identity)
+        .map(_ => (reader.getCurrentKey.get, reader.getCurrentValue.toString)).toVector
+      finally reader.close()
+    }
+  }
+
   test("splittable XML source: split boundaries cannot drop or duplicate elements") {
     // tiny file, splits far smaller than one element's byte length — every
     // element straddles a boundary; the ownership rule (element belongs to
@@ -145,6 +171,11 @@ class OsmScaleSpec extends SparkSuite {
     val w = Files.newBufferedWriter(Paths.get(xml), java.nio.charset.StandardCharsets.UTF_8)
     w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n")
     (1 to 200).foreach { i =>
+      // near misses of the start tag: a longer name ("<nodeset" must not
+      // match "<node"), and a prefix right before a real start tag, so
+      // some boundary falls inside the run "<nod/><node"
+      if (i % 10 == 0) w.write(s"""  <nodeset id="-$i"/>\n""")
+      if (i % 7 == 0) w.write("  <nod/>")
       if (i % 2 == 0)
         // self-closing, with '>' inside an attribute value (legal XML)
         w.write(s"""  <node id="$i" lat="30.$i" lon="-97.$i" version="1" timestamp="2016-01-01T00:00:00Z" changeset="1" uid="1" user="a&gt;b>c"/>\n""")
@@ -162,6 +193,67 @@ class OsmScaleSpec extends SparkSuite {
         .select("_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(got == (1L to 200L), s"splitBytes=$splitBytes: got ${got.length} ids")
     }
+
+    // every split size from 1 to 300 bytes, at the reader: the same
+    // elements, at the same offsets, as one split over the whole file
+    val whole = readerElements(xml, "node", Long.MaxValue)
+    val ids = whole.map { case (_, e) => "id=\"(\\d+)\"".r.findFirstMatchIn(e).get.group(1).toLong }
+    assert(ids == (1L to 200L))
+    for (splitBytes <- 1L to 300L) {
+      val got = readerElements(xml, "node", splitBytes)
+      assert(got == whole, s"splitBytes=$splitBytes: got ${got.length} elements")
+    }
+  }
+
+  test("splittable XML source: an element longer than the reader's window") {
+    // a 3 MB element (80,000 child tags), far past the reader's 1 MiB
+    // initial window, and a 600 KB root tag (two attributes with raw '>'),
+    // between ordinary nodes; the smaller splits cut inside both. (The
+    // stock XML parser drops a root tag much longer than that, and every
+    // element after it.)
+    val dir = Files.createTempDirectory("osm_split_long").toString
+    val xml = s"$dir/long.osm"
+    val w = Files.newBufferedWriter(Paths.get(xml), java.nio.charset.StandardCharsets.UTF_8)
+    w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n")
+    (1 to 60).foreach { i =>
+      val extra = if (i == 40) s""" x="${"u>v" * 100000}"""" else ""
+      val user = if (i == 40) "u>v" * 100000 else s"u$i"
+      w.write(s"""  <node id="$i" lat="30.$i" lon="-97.$i" version="1" timestamp="2016-01-01T00:00:00Z" changeset="1" uid="1" user="$user"$extra>
+    <tag k="name" v="n$i"/>\n""")
+      if (i == 20) (1 to 80000).foreach(t => w.write(s"""    <tag k="k$t" v="abcdefghij$t"/>\n"""))
+      w.write("  </node>\n")
+    }
+    w.write("</osm>\n")
+    w.close()
+    assert(Files.size(Paths.get(xml)) > 3L * 1000 * 1000)
+
+    def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("_id").collect().map(_.toSeq).toSeq
+    val stock = rows(OsmPipeline.readNodesRaw(spark, xml))
+    assert(stock.length == 60)
+    for (split <- Seq(Some(64L * 1024), Some(1L << 20), Some(3L << 20), None)) {
+      val got = rows(graft.osm.OsmSplittable.readNodesRaw(spark, xml, split))
+      assert(got == stock, s"split=$split: ${got.length} rows")
+    }
+  }
+
+  test("splittable XML source: default split width follows Spark's file-split rule") {
+    // ~12 MB: under the local 32 MB block, over the 4 MB split Spark's rule
+    // gives a file this size at the suite's parallelism
+    val dir = Files.createTempDirectory("osm_split_width").toString
+    val xml = s"$dir/width.osm"
+    val nNodes = 45000
+    generate(xml, nNodes, 0)
+    val bytes = Files.size(Paths.get(xml))
+    assert(bytes > 10L * 1000 * 1000 && bytes < 16L * 1000 * 1000, s"$bytes bytes")
+
+    val nodes = graft.osm.OsmSplittable.readNodesRaw(spark, xml)
+    val n = nodes.rdd.getNumPartitions
+    val text = spark.read.text(xml).rdd.getNumPartitions
+    assert(n > 1, s"single file did not split: $n partitions")
+    // Hadoop folds a tail of up to 10% of a split into the last split,
+    // where Spark's file source gives the tail a partition of its own
+    assert(n == text || n == text - 1, s"$n splits vs spark.read.text's $text")
+    assert(nodes.count() == nNodes)
   }
 
   test("full pipeline over a reference-scale XML input") {

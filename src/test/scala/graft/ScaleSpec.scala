@@ -160,4 +160,34 @@ class ScaleSpec extends SparkSuite {
     assert(adv.estJoin >= exact, s"est ${adv.estJoin} < exact $exact")
     assert(adv.nA == li.count() && adv.nB == o.count())
   }
+
+  test("adviseJoin est follows the x_skt6 oracle when keys collide in some sketch rows only") {
+    import spark.implicits._
+    // x_skt4's slots: the three disjoint 4-hex windows of md5(key)
+    def slots(k: Long): Seq[String] = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(k.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      (0 until 3).map(r => hex.substring(4 * r, 4 * r + 4))
+    }
+    // two disjoint one-key sets whose slots meet in one sketch row but not
+    // in every row: the first window-0 collision among small integers
+    val (a, b) = (0L until 5000L).groupBy(k => slots(k).head).values
+      .filter(_.size >= 2).map(ks => (ks(0), ks(1)))
+      .filter { case (x, y) => slots(x) != slots(y) }
+      .minBy(_._1)
+    val (as, bs) = (Seq(a), Seq(b))
+    // the oracle's algebra by hand: count-min cells per side, the INNER
+    // join on (r, slot), SUM(ca.c * cb.c) per r, MIN over the joined rows
+    def cells(ks: Seq[Long]): Map[(Int, String), Long] =
+      ks.flatMap(k => slots(k).zipWithIndex.map { case (s, r) => (r, s) })
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+    val cb = cells(bs)
+    val dots = cells(as).toSeq
+      .flatMap { case (rs, c) => cb.get(rs).map(d => rs._1 -> c * d) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    val oracleEst = if (dots.isEmpty) 0L else dots.values.min
+    assert(dots.size < 3 && oracleEst > 0, s"keys $a, $b: matched rows $dots")
+    val adv = Scale.adviseJoin(as.toDF("k"), "k", bs.toDF("k"), "k")
+    assert(adv.estJoin == oracleEst, s"keys $a, $b: $adv vs oracle est $oracleEst")
+  }
 }

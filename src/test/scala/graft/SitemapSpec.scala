@@ -45,6 +45,27 @@ class SitemapSpec extends SparkSuite {
     assert(single.size == 200 && many == single)
   }
 
+  test("default split width follows Spark's file-split rule") {
+    // ~7 MB: one local 32 MB block, but more than one split under Spark's
+    // rule at the suite's parallelism
+    val entries = (0 until 90000).map(i =>
+      s"<url><loc>https://h${i % 5}.com/p/$i</loc><lastmod>2026-02-0${1 + i % 9}</lastmod></url>")
+    val dir = write("<urlset>\n" + entries.mkString("\n") + "\n</urlset>")
+    val bytes = Files.size(Paths.get(dir, "sitemap.xml"))
+    assert(bytes > 5L * 1000 * 1000 && bytes < 9L * 1000 * 1000, s"$bytes bytes")
+    val df = Sitemap.readUrlEntries(spark, dir)
+    val n = df.rdd.getNumPartitions
+    val text = spark.read.text(dir).rdd.getNumPartitions
+    assert(n > 1, s"single file did not split: $n partitions")
+    // Hadoop folds a tail of up to 10% of a split into the last split,
+    // where Spark's file source gives the tail a partition of its own
+    assert(n == text || n == text - 1, s"$n splits vs spark.read.text's $text")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val got = rows(df)
+    assert(got.size == 90000 && got == rows(Sitemap.readUrlEntries(spark, dir, Some(Long.MaxValue))))
+  }
+
   test("double-escaped entities decode exactly one level (&amp;lt; -> &lt;)") {
     val dir = write("<urlset><url><loc>https://a.com/?t=&amp;lt;tag&amp;gt;</loc></url></urlset>")
     val got = Sitemap.readUrlEntries(spark, dir).collect()(0).getString(0)
