@@ -12,6 +12,7 @@ object Registry {
     ext.Dedup.all ++
     ext.Decontamination.all ++
     ext.Sampling.all ++
+    ext.Sketches.all ++
     ext.TokenLayout.all ++
     ext.PipelineOps.all ++
     ext.PipelineOps2.all ++
@@ -33,7 +34,6 @@ object Registry {
     ext.LinkGraph.all ++
     ext.PageSignals.all ++
     ext.UnigramTok.all ++
-    ext.SketchStore.all ++
     ext.LmStore.all ++
     ext.KnLm.all ++
     ext.SegIndex.all ++

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted LM count-table store — the train-once / score-many regime
-  * for statistical quality scoring, the [[SketchStore]] / [[BandIndex]]
+  * for statistical quality scoring, the [[Sketches]] store / [[BandIndex]]
   * pattern applied to the x_txt18 bigram LM: the released corpus is
   * scanned ONCE to produce its vocabulary-bounded count tables; every
   * later shard/stream is scored against the store without re-reading

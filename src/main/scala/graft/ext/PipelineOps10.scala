@@ -6,13 +6,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Round-7 additions (fourth wave): statistical language-model scoring,
-  * BM25 retrieval, DSIR-style importance weighting, PMI collocations,
-  * HyperLogLog distinct sketching, and event-rate anomaly detection —
-  * the model-based selection and monitoring layer of a training-data
-  * pipeline (every signal so far was rule- or hash-based; these score
-  * documents against LEARNED corpus statistics, all still exact,
-  * deterministic, and oracle-checkable).
+/** Statistical language-model scoring and the LM quality gate, BM25
+  * retrieval and hard negatives, DSIR-style importance weighting, PMI
+  * collocations, event-rate anomalies, corpus gram overlap, embedding
+  * centroid drift and the composed LM + DSIR pipeline (x_pipe5) — the
+  * model-based selection and monitoring layer of a training-data
+  * pipeline: these score documents against LEARNED corpus statistics,
+  * all still exact, deterministic, and oracle-checkable.
   */
 object PipelineOps10 {
 
@@ -539,88 +539,6 @@ object PipelineOps10 {
       .orderBy(col("pmi").desc, col("b")).limit(topK)
   }
 
-  // --------------------------------------------------- HyperLogLog sketch
-
-  private val hllM = 64 // registers (p = 6)
-
-  /** The per-(lang, register) HLL state: max over hashed values of
-    * (leading zeros in the 48-bit suffix + 1). Integer-exact on both
-    * engines via length(bin(w)) = floor(log2 w) + 1; merge = MAX per
-    * register (idempotent, commutative — shards sketch independently,
-    * the spec pins sharded == whole).
-    */
-  def hllRegisters(docs: DataFrame): DataFrame = docs
-    .select(col("lang"), explode(CleanFns.tokens(col("text"))).as("tok"))
-    .select(col("lang"),
-      (expr("conv(substr(md5(tok), 1, 2), 16, 10)").cast("long") % hllM).as("idx"),
-      expr("conv(substr(md5(tok), 3, 12), 16, 10)").cast("long").as("wv"))
-    .withColumn("rank", when(col("wv") === 0, lit(49L))
-      .otherwise(lit(49L) - length(expr("bin(wv)"))))
-    .groupBy("lang", "idx").agg(max(col("rank")).as("m"))
-
-  /** (lang, n_exact, n_est) from the 64-register state. Σ 2^−M is a sum of
-    * exact dyadics (multiples of 2⁻⁴⁹ totalling < 64) so it is EXACT and
-    * order-independent in doubles; the only inexact steps are the final
-    * α·m²/denom and the ln of the small-range correction, identical
-    * single IEEE ops in both engines.
-    */
-  def hllDistinct(docs: DataFrame): DataFrame = {
-    val alpha = 0.7213 / (1 + 1.079 / hllM)
-    val reg = hllRegisters(docs)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n_present"),
-        sum(pow(lit(2.0), -col("m"))).as("s2"))
-      .withColumn("zeros", lit(hllM) - col("n_present"))
-      .withColumn("raw", lit(alpha * hllM * hllM) / (col("zeros") + col("s2")))
-      .withColumn("n_est",
-        when(col("raw") <= 2.5 * hllM && col("zeros") > 0,
-          round(lit(hllM.toDouble) * log(lit(hllM.toDouble) / col("zeros")), 0))
-          .otherwise(round(col("raw"), 0)).cast("long"))
-    val exact = docs
-      .select(col("lang"), explode(CleanFns.tokens(col("text"))).as("tok"))
-      .groupBy("lang").agg(count_distinct(col("tok")).as("n_exact"))
-    exact.join(reg.select(col("lang"), col("n_est")), "lang")
-      .select(col("lang"), col("n_exact"), col("n_est"))
-  }
-
-  /** X-SKT5 — HyperLogLog distinct-token counts per language, exact count
-    * beside the estimate so the sketch error is itself checked. The
-    * complement of x_skt2's KMV: HLL state is 64 six-bit registers that
-    * merge by MAX (KMV merges by k-smallest-of-union); at 100 TB both
-    * sketch in one map-side-combined pass, but HLL's state is constant
-    * bytes per group at ANY k. The oracle rebuilds registers, the dyadic
-    * sum, and both estimator branches relationally.
-    */
-  private val skt5 = Probe(
-    "x_skt5_hll_distinct",
-    s"""WITH tok AS (
-       |  SELECT lang, UNNEST(${CleanFns.tokensDuck("text")}) AS tok FROM documents),
-       |h AS (
-       |  SELECT lang,
-       |    CAST('0x' || substr(md5(tok), 1, 2) AS BIGINT) % $hllM AS idx,
-       |    CAST('0x' || substr(md5(tok), 3, 12) AS BIGINT) AS wv
-       |  FROM tok),
-       |reg AS (
-       |  SELECT lang, idx,
-       |    MAX(CASE WHEN wv = 0 THEN 49 ELSE 49 - length(bin(wv)) END) AS m
-       |  FROM h GROUP BY lang, idx),
-       |agg AS (
-       |  SELECT lang, COUNT(*) AS n_present, SUM(power(2.0, -m)) AS s2
-       |  FROM reg GROUP BY lang),
-       |est AS (
-       |  SELECT lang, ($hllM - n_present) AS zeros,
-       |    CAST(${0.7213 / (1 + 1.079 / hllM) * hllM * hllM} AS DOUBLE) / (($hllM - n_present) + s2) AS raw
-       |  FROM agg),
-       |ex AS (SELECT lang, COUNT(DISTINCT tok) AS n_exact FROM tok GROUP BY lang)
-       |SELECT ex.lang, CAST(ex.n_exact AS BIGINT) AS n_exact,
-       |  CAST(CASE WHEN est.raw <= ${2.5 * 64} AND est.zeros > 0
-       |            THEN round($hllM.0 * ln($hllM.0 / est.zeros), 0)
-       |            ELSE round(est.raw, 0) END AS BIGINT) AS n_est
-       |FROM ex JOIN est ON est.lang = ex.lang
-       |ORDER BY ex.lang""".stripMargin) { (s, dir) =>
-    hllDistinct(Tables(s, dir, "documents")).orderBy("lang")
-  }
-
   // ------------------------------------------------- event-rate anomalies
 
   /** P-EVT7 — event-rate anomaly detection: hourly counts per event type,
@@ -881,7 +799,7 @@ object PipelineOps10 {
        |GROUP BY d.lang ORDER BY d.lang""".stripMargin) { (s, dir) =>
     val docs = Tables.spread(s, dir, "documents")
     // ONE tokenization pass, materialized as a parquet stage boundary
-    // (the SketchStore/x_ded21 artifact pattern): pre-round-8 this probe
+    // (the Sketches store/x_ded21 artifact pattern): pre-round-8 this probe
     // re-ran the regex tokenizer over the corpus FOUR times (LM count
     // tables, LM scoring, DSIR features, final rollup). Every stage now
     // reads the tokenized columnar stage; at 100 TB this is the
@@ -1124,6 +1042,6 @@ object PipelineOps10 {
   }
 
   val all: Seq[Probe] = Seq(
-    txt18, txt18b, txt18c, ret1, ret2, cur4, txt19, txt20, skt5,
+    txt18, txt18b, txt18c, ret1, ret2, cur4, txt19, txt20,
     evt7, evt7b, pipe5, rep3, rep4)
 }

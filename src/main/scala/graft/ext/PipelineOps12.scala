@@ -247,57 +247,5 @@ object PipelineOps12 {
       .orderBy("doc_id")
   }
 
-  /** X-SKT6 — the join ADVISOR wired to the x_skt4 primitive
-    * ([[graft.util.Scale.adviseJoin]]): side counts, count-min join-size
-    * estimate, per-side heaviest-key upper bounds, and the
-    * broadcast/salt/shuffle verdict for lineitem ⋈ orders — every number
-    * AND the strategy string recomputed relationally by the oracle
-    * (thresholds here force the non-broadcast path so the skew rule is
-    * exercised; ScaleSpec drives all three branches on planted shapes
-    * against actual join plans).
-    */
-  private val skt6 = Probe(
-    "x_skt6_join_advice",
-    s"""WITH la AS (SELECT CAST(l_orderkey AS VARCHAR) AS k FROM lineitem),
-       |ob AS (SELECT CAST(o_orderkey AS VARCHAR) AS k FROM orders),
-       |ca AS (
-       |  SELECT r, slot, COUNT(*) AS c FROM (
-       |    SELECT 0 AS r, substr(md5(k), 1, 4) AS slot FROM la
-       |    UNION ALL SELECT 1, substr(md5(k), 5, 4) FROM la
-       |    UNION ALL SELECT 2, substr(md5(k), 9, 4) FROM la)
-       |  GROUP BY r, slot),
-       |cb AS (
-       |  SELECT r, slot, COUNT(*) AS c FROM (
-       |    SELECT 0 AS r, substr(md5(k), 1, 4) AS slot FROM ob
-       |    UNION ALL SELECT 1, substr(md5(k), 5, 4) FROM ob
-       |    UNION ALL SELECT 2, substr(md5(k), 9, 4) FROM ob)
-       |  GROUP BY r, slot),
-       |sa AS (SELECT MIN(n) AS n, MIN(mx) AS mx
-       |       FROM (SELECT r, SUM(c) AS n, MAX(c) AS mx FROM ca GROUP BY r)),
-       |sb AS (SELECT MIN(n) AS n, MIN(mx) AS mx
-       |       FROM (SELECT r, SUM(c) AS n, MAX(c) AS mx FROM cb GROUP BY r)),
-       |ip AS (SELECT MIN(dot) AS est FROM (
-       |  SELECT ca.r, SUM(ca.c * cb.c) AS dot
-       |  FROM ca JOIN cb ON ca.r = cb.r AND ca.slot = cb.slot GROUP BY ca.r))
-       |SELECT CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-       |  CAST(COALESCE(ip.est, 0) AS BIGINT) AS est_join,
-       |  CAST(sa.mx AS BIGINT) AS max_key_a, CAST(sb.mx AS BIGINT) AS max_key_b,
-       |  CASE WHEN LEAST(sa.n, sb.n) <= 1000
-       |         THEN CASE WHEN sa.n <= sb.n THEN 'broadcast_a' ELSE 'broadcast_b' END
-       |       WHEN sa.mx * 32 >= 8 * sa.n OR sb.mx * 32 >= 8 * sb.n THEN 'salt'
-       |       ELSE 'shuffle' END AS strategy
-       |FROM sa, sb, ip ORDER BY n_a""".stripMargin) { (s, dir) =>
-    import s.implicits._
-    val adv = graft.util.Scale.adviseJoin(
-      Tables(s, dir, "lineitem"), "l_orderkey",
-      Tables(s, dir, "orders"), "o_orderkey",
-      broadcastMaxRows = 1000L, skewRatio = 8L)
-    Seq(adv).toDS().select(
-      col("nA").as("n_a"), col("nB").as("n_b"), col("estJoin").as("est_join"),
-      col("maxKeyA").as("max_key_a"), col("maxKeyB").as("max_key_b"),
-      col("strategy"))
-      .orderBy("n_a")
-  }
-
-  val all: Seq[Probe] = Seq(html1, html2, html3, html4, skt6)
+  val all: Seq[Probe] = Seq(html1, html2, html3, html4)
 }

@@ -7,14 +7,13 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.DotProduct.{dot_d, sq_dist}
 
-/** Round-7 additions (second wave): segment-level dedup with document
-  * reconstruction, cluster-scoped semantic dedup (SemDeDup shape) and a
-  * count-min heavy-hitter sketch.
+/** Segment-level dedup with document reconstruction (corpus-wide and
+  * within one document) and cluster-scoped semantic dedup (SemDeDup
+  * shape).
   *
   * Scale design notes per operator are on each probe; the shared theme is
   * that every candidate-generation stage is bounded (segment digests,
-  * IVF cells, fixed-width sketches) — nothing here pairs the
-  * corpus with itself globally.
+  * IVF cells) — nothing here pairs the corpus with itself globally.
   */
 object PipelineOps8 {
 
@@ -283,119 +282,6 @@ object PipelineOps8 {
   private[graft] def semDedupCandidates(embeddings: DataFrame, cap: Int = semCap): DataFrame =
     semCandidates(semAssign(embeddings), cap)
 
-  // --------------------------------------------------------- count-min
-
-  private val cmsRows = 3 // k hash rows, disjoint 2-hex-digit windows of one md5
-  private val cmsSlotHex = 2 // 2 hex digits -> 256 slots per row
-
-  /** Spark-SQL fragment: row r's slot (0-255) for token column `tkn` —
-    * hex window r of one md5, the x_dec3 k-from-one-hash construction.
-    */
-  private[ext] def slotSpark(r: Int): String =
-    s"CAST(conv(substr(md5(tkn), ${1 + cmsSlotHex * r}, $cmsSlotHex), 16, 10) AS INT)"
-
-  /** The count-min sketch cells (r, slot, c) of a documents frame — ONE
-    * map-side-combined aggregation of the token stream into <= 768 cells.
-    * Shared by the x_skt1 probe, the streaming build
-    * (`DocStreams.countMinCells`), and the persisted [[SketchStore]].
-    */
-  def countMinCells(docs: DataFrame): DataFrame =
-    countMinCellsOfTokens(docs.select(explode(CleanFns.tokens(col("text"))).as("tkn")))
-
-  /** The same build over an already-tokenized stream (one `tkn` column) —
-    * lets any keyed stream (words, shingles, ids) be sketched.
-    */
-  def countMinCellsOfTokens(tokens: DataFrame): DataFrame = tokens
-    .select(explode(array((0 until cmsRows).map(r =>
-      struct(lit(r).as("r"), expr(slotSpark(r)).as("slot"))): _*)).as("rs"))
-    .groupBy(col("rs.r").as("r"), col("rs.slot").as("slot"))
-    .agg(count(lit(1)).as("c"))
-
-  /** The exact top-10 tokens with their per-row sketch slots — the query
-    * side of the count-min probes.
-    */
-  private[ext] def topTokensWithSlots(docs: DataFrame): DataFrame = {
-    val tok = docs.select(explode(CleanFns.tokens(col("text"))).as("tkn"))
-    tok.groupBy("tkn").agg(count(lit(1)).as("n_exact"))
-      // top-k via orderBy+limit -> TakeOrderedAndProject, not a
-      // global-window SinglePartition shuffle
-      .orderBy(col("n_exact").desc, col("tkn"))
-      .limit(10)
-      .select(col("tkn"), col("n_exact"),
-        explode(array((0 until cmsRows).map(r =>
-          struct(lit(r).as("r"), expr(slotSpark(r)).as("slot"))): _*)).as("q"))
-  }
-
-  /** x_skt1's oracle SQL — shared verbatim with x_skt1b (the persisted-
-    * sketch route must produce the identical table).
-    */
-  private[ext] lazy val countMinOracleSql: String =
-    s"""WITH tok AS (
-       |  SELECT tkn FROM (SELECT ${CleanFns.tokensDuck("text")} AS ws FROM documents),
-       |       UNNEST(ws) AS u(tkn)),
-       |cms AS (
-       |  SELECT r, slot, COUNT(*) AS c FROM (
-       |    SELECT 0 AS r, ${slotDuck(0)} AS slot, tkn FROM tok
-       |    UNION ALL SELECT 1, ${slotDuck(1)}, tkn FROM tok
-       |    UNION ALL SELECT 2, ${slotDuck(2)}, tkn FROM tok)
-       |  GROUP BY r, slot),
-       |exact AS (
-       |  SELECT tkn, COUNT(*) AS n_exact FROM tok GROUP BY tkn),
-       |top AS (
-       |  SELECT tkn, n_exact FROM (
-       |    SELECT tkn, n_exact, row_number() OVER (ORDER BY n_exact DESC, tkn) AS rn FROM exact)
-       |  WHERE rn <= 10),
-       |est AS (
-       |  SELECT t.tkn, t.n_exact, MIN(m.c) AS n_est
-       |  FROM top t
-       |  JOIN cms m ON (m.r = 0 AND m.slot = ${slotDuck(0).replace("md5(tkn)", "md5(t.tkn)")})
-       |             OR (m.r = 1 AND m.slot = ${slotDuck(1).replace("md5(tkn)", "md5(t.tkn)")})
-       |             OR (m.r = 2 AND m.slot = ${slotDuck(2).replace("md5(tkn)", "md5(t.tkn)")})
-       |  GROUP BY t.tkn, t.n_exact)
-       |SELECT tkn, CAST(n_exact AS BIGINT) AS n_exact, CAST(n_est AS BIGINT) AS n_est
-       |FROM est ORDER BY n_exact DESC, tkn""".stripMargin
-
-  /** DuckDB keeps the slot as the raw hex window (membership/grouping is
-    * representation-independent; Spark groups on the integer form).
-    */
-  private def slotDuck(r: Int): String =
-    s"substr(md5(tkn), ${1 + cmsSlotHex * r}, $cmsSlotHex)"
-
-  /** X-SKT1 — count-min sketch heavy hitters: token frequencies estimated
-    * from a FIXED-SIZE sketch (3 rows x 256 slots), surfaced next to the
-    * exact counts for the exact top-10 tokens so the one-sided sketch error
-    * (estimate >= exact, never under) is visible in the checked output.
-    *
-    * Scale story: the sketch build is ONE map-side-combined aggregation of
-    * the token stream into <= 768 cells — the shuffle moves at most 768
-    * rows per mapper no matter the corpus size, and sketches merge by cell
-    * addition (associative), so a 1000-executor build is the same plan.
-    * The exact top-10 here is the oracle-side ground truth; at 100 TB the
-    * sketch IS the product (exact per-token counts need a corpus-wide
-    * groupBy on a potentially huge vocabulary; the sketch answers point
-    * queries from kilobytes). Slot functions are disjoint hex windows of
-    * one md5 per token — deterministic and engine-portable, so the
-    * estimate column (collisions included) is itself oracle-checked.
-    */
-  private val skt1 = Probe(
-    "x_skt1_countmin_heavy", countMinOracleSql) { (s, dir) =>
-    estimateTopTokens(Tables(s, dir, "documents"),
-      countMinCells(Tables(s, dir, "documents")))
-  }
-
-  /** Estimate the exact top-10 tokens' counts from a cells frame — the
-    * query stage shared by x_skt1 (inline build) and x_skt1b (persisted
-    * sketch).
-    */
-  def estimateTopTokens(docs: DataFrame, cms: DataFrame): DataFrame =
-    topTokensWithSlots(docs)
-      .join(broadcast(cms),
-        col("q.r") === col("r") && col("q.slot") === col("slot"))
-      .groupBy(col("tkn"), col("n_exact"))
-      .agg(min(col("c")).as("n_est"))
-      .select(col("tkn"), col("n_exact"), col("n_est"))
-      .orderBy(col("n_exact").desc, col("tkn"))
-
   /** The NARROW intra-document form of segment dedup: drop segments
     * repeated WITHIN the same document (keep each first occurrence),
     * entirely inside one row — an indexed-lambda filter over the segment
@@ -436,5 +322,5 @@ object PipelineOps8 {
     intraDocSegmentDedup(Tables(s, dir, "documents")).orderBy("doc_id")
   }
 
-  val all: Seq[Probe] = Seq(ded18, ded19, ded22, skt1)
+  val all: Seq[Probe] = Seq(ded18, ded19, ded22)
 }

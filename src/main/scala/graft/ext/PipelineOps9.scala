@@ -7,89 +7,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.DotProduct.dot_d
 
-/** Round-7 additions (third wave): KMV distinct-count sketch, duplicated-
-  * span extraction, and Johnson-Lindenstrauss random projection — the
-  * remaining sketch/measurement tools of a corpus-statistics layer.
+/** Duplicated-span extraction (x_ded20), Johnson-Lindenstrauss random
+  * projection (x_sim6), the release data card (x_rep2) and the composed
+  * segment-dedup → decontamination → quality pipeline (x_pipe4).
   */
 object PipelineOps9 {
-
-  // ----------------------------------------------------------------- KMV
-
-  private val kmvK = 64
-
-  /** X-SKT2 — KMV (k-minimum-values) distinct-count sketch: per language,
-    * the number of DISTINCT token bigrams estimated from only the k = 64
-    * smallest md5 fractions, surfaced next to the exact count so the
-    * estimation error is visible in the checked output.
-    *
-    * The estimator is the classic (k-1)/h_(k) with h the hash mapped to
-    * (0,1); when a group has <= k distinct values the sketch IS the exact
-    * set. The hash fraction is the first 12 md5 hex digits over 2^48 —
-    * integer-exact on both engines, and the division by a power of two is
-    * exact in doubles, so even the ESTIMATE hash-matches cross-engine.
-    *
-    * Scale story: KMV state is k values per group, merge = k-smallest of
-    * the union (associative/commutative), so shards sketch independently
-    * and combine without re-reading text — the spec pins merge == direct.
-    * The declarative form here ranks the distinct stream with a window (its
-    * exact-oracle twin); a production aggregate holds a bounded k-heap, but
-    * the algebra and the result are identical by the merge property.
-    */
-  private val skt2 = Probe(
-    "x_skt2_kmv_distinct",
-    s"""WITH bg AS (
-       |  SELECT DISTINCT lang, ws[i] || ' ' || ws[i+1] AS b
-       |  FROM (SELECT lang, ${CleanFns.tokensDuck("text")} AS ws FROM documents
-       |        WHERE len(${CleanFns.tokensDuck("text")}) >= 2),
-       |       UNNEST(generate_series(1, len(ws) - 1)) AS t(i)),
-       |h AS (
-       |  SELECT lang, b,
-       |         CAST(CAST('0x' || substr(md5(b), 1, 12) AS BIGINT) AS DOUBLE) / 281474976710656 AS f
-       |  FROM bg),
-       |r AS (
-       |  SELECT lang, f, row_number() OVER (PARTITION BY lang ORDER BY f, b) AS rn,
-       |         COUNT(*) OVER (PARTITION BY lang) AS n_exact
-       |  FROM h)
-       |SELECT lang, CAST(MAX(n_exact) AS BIGINT) AS n_exact,
-       |       CAST(CASE WHEN MAX(n_exact) <= $kmvK THEN MAX(n_exact)
-       |                 ELSE CAST(round(($kmvK - 1) / MAX(CASE WHEN rn = $kmvK THEN f END), 0) AS BIGINT)
-       |            END AS BIGINT) AS n_est
-       |FROM r WHERE rn <= $kmvK
-       |GROUP BY lang ORDER BY lang""".stripMargin) { (s, dir) =>
-    kmvDistinctBigrams(Tables(s, dir, "documents")).orderBy("lang")
-  }
-
-  /** Distinct bigrams per language with KMV hash fractions — shared by the
-    * probe and the spec's merge-property pin.
-    */
-  def bigramFractions(docs: DataFrame): DataFrame = docs
-    .select(col("lang"), CleanFns.tokens(col("text")).as("ws"))
-    .filter(size(col("ws")) >= 2)
-    .select(col("lang"), explode(expr(
-      "transform(sequence(1, size(ws) - 1), i -> concat_ws(' ', element_at(ws, i), element_at(ws, i + 1)))"))
-      .as("b"))
-    .distinct()
-    .withColumn("f",
-      expr("CAST(conv(substr(md5(b), 1, 12), 16, 10) AS DOUBLE) / 281474976710656"))
-
-  /** (lang, n_exact, n_est): exact distinct-bigram count next to the KMV
-    * k=64 estimate.
-    */
-  def kmvDistinctBigrams(docs: DataFrame, k: Int = kmvK): DataFrame = {
-    val h = bigramFractions(docs)
-    val w = Window.partitionBy(col("lang")).orderBy(col("f"), col("b"))
-    val wAll = Window.partitionBy(col("lang"))
-    h.withColumn("rn", row_number().over(w))
-      .withColumn("n_exact", count(lit(1)).over(wAll))
-      .filter(col("rn") <= k)
-      .groupBy(col("lang"))
-      .agg(max(col("n_exact")).cast("long").as("n_exact"),
-        max(when(col("rn") === k, col("f"))).as("__fk"))
-      .withColumn("n_est",
-        when(col("n_exact") <= k, col("n_exact"))
-          .otherwise(round(lit(k - 1) / col("__fk"), 0).cast("long")))
-      .select(col("lang"), col("n_exact"), col("n_est"))
-  }
 
   // ------------------------------------------------------ duplicate spans
 
@@ -233,166 +155,6 @@ object PipelineOps9 {
       dot_d(col("v"), EmbedDedup.planeLit(cfg, bb)) / lit(new java.math.BigDecimal("64.0"))): _*)
   }
 
-  // -------------------------------------------------- join-size estimation
-
-  /** X-SKT4 — join-cardinality estimation from count-min sketches:
-    * |lineitem ⋈ orders on orderkey| estimated as the minimum over sketch
-    * rows of the cell-wise inner product Σ_slot a[r][slot]·b[r][slot],
-    * surfaced next to the exact join size. The estimate is ONE-SIDED
-    * (collisions only add), so est >= exact always — exactly what a
-    * planner needs for the broadcast-vs-shuffle decision at 100 TB: two
-    * fixed-size mergeable sketches answer "how big is this join" without
-    * running it.
-    *
-    * Width matters: the collision noise is ~N_a·N_b/w, so resolving a
-    * join of size J needs w >> N_a·N_b/J. Here 3 rows x 65,536 slots
-    * (disjoint 4-hex windows of one md5 — the x_dec3 k-from-one-hash
-    * construction, wider windows) puts the noise an order of magnitude
-    * below the signal at bench SF; a 256-slot sketch (x_skt1's width,
-    * sized for heavy-hitter queries) would be pure noise here. Both the
-    * cells and the inner product are exact integer arithmetic, so the
-    * estimate itself hash-matches the oracle.
-    */
-  private val skt4 = Probe(
-    "x_skt4_join_size",
-    s"""WITH la AS (SELECT CAST(l_orderkey AS VARCHAR) AS k FROM lineitem),
-       |ob AS (SELECT CAST(o_orderkey AS VARCHAR) AS k FROM orders),
-       |ca AS (
-       |  SELECT r, slot, COUNT(*) AS c FROM (
-       |    SELECT 0 AS r, substr(md5(k), 1, 4) AS slot FROM la
-       |    UNION ALL SELECT 1, substr(md5(k), 5, 4) FROM la
-       |    UNION ALL SELECT 2, substr(md5(k), 9, 4) FROM la)
-       |  GROUP BY r, slot),
-       |cb AS (
-       |  SELECT r, slot, COUNT(*) AS c FROM (
-       |    SELECT 0 AS r, substr(md5(k), 1, 4) AS slot FROM ob
-       |    UNION ALL SELECT 1, substr(md5(k), 5, 4) FROM ob
-       |    UNION ALL SELECT 2, substr(md5(k), 9, 4) FROM ob)
-       |  GROUP BY r, slot),
-       |ip AS (
-       |  SELECT ca.r, SUM(ca.c * cb.c) AS dot
-       |  FROM ca JOIN cb ON ca.r = cb.r AND ca.slot = cb.slot
-       |  GROUP BY ca.r),
-       |exact AS (
-       |  SELECT COUNT(*) AS n FROM la JOIN ob ON la.k = ob.k)
-       |SELECT CAST(exact.n AS BIGINT) AS n_exact, CAST(MIN(ip.dot) AS BIGINT) AS n_est
-       |FROM exact, ip GROUP BY exact.n ORDER BY n_exact""".stripMargin) { (s, dir) =>
-    // md5 ONCE per row in a projection below the explode (the generator
-    // input is evaluated without subexpression elimination, so the inline
-    // form computed the digest three times per row — r17 plan audit)
-    def side(df: DataFrame): DataFrame = df
-      .select(md5(col("k")).as("m"))
-      .select(explode(array((0 until 3).map(r =>
-        struct(lit(r).as("r"), substring(col("m"), 1 + 4 * r, 4).as("slot"))): _*))
-        .as("rs"))
-      .groupBy(col("rs.r").as("r"), col("rs.slot").as("slot"))
-      .agg(count(lit(1)).as("c"))
-    val la = Tables(s, dir, "lineitem").select(col("l_orderkey").cast("string").as("k"))
-    val ob = Tables(s, dir, "orders").select(col("o_orderkey").cast("string").as("k"))
-    val ip = side(la).alias("a")
-      .join(side(ob).alias("b"),
-        col("a.r") === col("b.r") && col("a.slot") === col("b.slot"))
-      .groupBy(col("a.r"))
-      .agg(sum(col("a.c") * col("b.c")).as("dot"))
-    // exact join on the raw LONG keys (cast-to-string is injective, so the
-    // count is identical; long hash/compare beats string)
-    val exact = Tables(s, dir, "lineitem").select(col("l_orderkey").as("xk"))
-      .join(Tables(s, dir, "orders").select(col("o_orderkey").as("yk")),
-        col("xk") === col("yk"))
-      .agg(count(lit(1)).as("n_exact"))
-    exact.join(ip)
-      .groupBy(col("n_exact"))
-      .agg(min(col("dot")).as("n_est"))
-      .select(col("n_exact"), col("n_est"))
-      .orderBy("n_exact")
-  }
-
-  // ----------------------------------------------------- histogram sketch
-
-  private val histBins = 32
-  private val histWidth = 20 // n_chars domain [0, 640); overflow clamps
-
-  /** X-SKT3 — histogram quantile sketch: per-language p50/p90 of document
-    * length estimated from a FIXED 32-bin equi-width histogram (bin
-    * addition = merge, like the count-min cells), surfaced next to the
-    * exact percentiles so the binning error is visible in the checked
-    * output.
-    *
-    * The estimator is standard linear interpolation inside the bin that
-    * crosses the target rank: est = lo + width * (q*n - cum_below) / c.
-    * The histogram state is 32 longs per group at ANY corpus size, and the
-    * bin domain is FIXED (not data-dependent) so the sketch needs no
-    * pre-pass and merges across shards/epochs — the property t-digest
-    * buys with far more machinery. Exact percentiles need a per-group
-    * sort; the sketch answers from kilobytes.
-    */
-  private val skt3 = Probe(
-    "x_skt3_histogram_quantiles",
-    s"""WITH h AS (
-       |  SELECT lang, LEAST(CAST(n_chars // $histWidth AS INT), ${histBins - 1}) AS bin, COUNT(*) AS c
-       |  FROM documents GROUP BY lang, LEAST(CAST(n_chars // $histWidth AS INT), ${histBins - 1})),
-       |cum AS (
-       |  SELECT lang, bin, c, SUM(c) OVER (PARTITION BY lang ORDER BY bin) AS cs,
-       |         SUM(c) OVER (PARTITION BY lang) AS n
-       |  FROM h),
-       |est AS (
-       |  SELECT q.q, cum.lang,
-       |         bin * $histWidth + $histWidth * (q.q * n - (cs - c)) / c AS e,
-       |         row_number() OVER (PARTITION BY q.q, lang ORDER BY bin) AS rn
-       |  FROM cum, (SELECT UNNEST([0.5, 0.9]) AS q) q
-       |  WHERE cs >= q.q * n),
-       |ex AS (
-       |  SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |         percentile_cont(0.5) WITHIN GROUP (ORDER BY n_chars) AS p50x,
-       |         percentile_cont(0.9) WITHIN GROUP (ORDER BY n_chars) AS p90x
-       |  FROM documents GROUP BY lang)
-       |SELECT ex.lang, ex.n_docs,
-       |       round(ex.p50x, 4) AS p50_exact, round(MAX(CASE WHEN e50.rn = 1 THEN e50.e END), 4) AS p50_est,
-       |       round(ex.p90x, 4) AS p90_exact, round(MAX(CASE WHEN e90.rn = 1 THEN e90.e END), 4) AS p90_est
-       |FROM ex
-       |JOIN est e50 ON e50.lang = ex.lang AND e50.q = 0.5
-       |JOIN est e90 ON e90.lang = ex.lang AND e90.q = 0.9
-       |GROUP BY ex.lang, ex.n_docs, ex.p50x, ex.p90x
-       |ORDER BY ex.lang""".stripMargin) { (s, dir) =>
-    histogramQuantiles(Tables(s, dir, "documents")).orderBy("lang")
-  }
-
-  /** The 32-cell per-group histogram (lang, bin, c) — the mergeable sketch
-    * state (bin addition), shared by the probe and the spec's merge pin.
-    */
-  def histCells(docs: DataFrame): DataFrame = docs
-    .groupBy(col("lang"),
-      least((col("n_chars") / histWidth).cast("int"), lit(histBins - 1)).as("bin"))
-    .agg(count(lit(1)).as("c"))
-
-  /** (lang, n_docs, p50_exact, p50_est, p90_exact, p90_est). */
-  def histogramQuantiles(docs: DataFrame): DataFrame = {
-    val cum = histCells(docs)
-      .withColumn("cs", sum(col("c")).over(
-        Window.partitionBy(col("lang")).orderBy(col("bin"))))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(col("lang"))))
-    val qs = docs.sparkSession.range(1)
-      .select(explode(array(lit(0.5), lit(0.9))).as("q"))
-    val est = cum.join(broadcast(qs))
-      .filter(col("cs") >= col("q") * col("n"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("q"), col("lang")).orderBy(col("bin"))))
-      .filter(col("rn") === 1)
-      .withColumn("e",
-        col("bin") * histWidth + lit(histWidth) * (col("q") * col("n") - (col("cs") - col("c"))) / col("c"))
-      .select(col("q"), col("lang"), col("e"))
-    val ex = docs.groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"),
-        expr("percentile(n_chars, 0.5)").as("p50x"),
-        expr("percentile(n_chars, 0.9)").as("p90x"))
-    ex
-      .join(est.filter(col("q") === 0.5).select(col("lang"), col("e").as("e50")), "lang")
-      .join(est.filter(col("q") === 0.9).select(col("lang"), col("e").as("e90")), "lang")
-      .select(col("lang"), col("n_docs"),
-        round(col("p50x"), 4).as("p50_exact"), round(col("e50"), 4).as("p50_est"),
-        round(col("p90x"), 4).as("p90_exact"), round(col("e90"), 4).as("p90_est"))
-  }
-
   // -------------------------------------------------------------- datacard
 
   /** X-REP2 — the release data card: ROLLUP over (lang, source) of doc
@@ -524,5 +286,5 @@ object PipelineOps9 {
       .orderBy("doc_id")
   }
 
-  val all: Seq[Probe] = Seq(skt2, skt3, skt4, ded20, sim6, rep2, pipe4)
+  val all: Seq[Probe] = Seq(ded20, sim6, rep2, pipe4)
 }

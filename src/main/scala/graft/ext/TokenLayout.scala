@@ -211,8 +211,9 @@ object TokenLayout {
     * tail waste — plus the documented decision: the SMALLEST ctx whose
     * split fraction meets `splitBudgetPpm` (attention is quadratic in
     * ctx, so you take the shortest window the split budget allows; if
-    * none qualifies, the largest candidate). The x_skt6 adviseJoin
-    * pattern: the advice itself is a checked output, not a comment.
+    * none qualifies, the largest candidate). The x_skt6
+    * [[Sketches.adviseJoin]] pattern: the advice itself is a checked
+    * output, not a comment.
     *
     * Shape: the per-shard running offsets of [[packPlacements]] are
     * computed ONCE (they don't depend on ctx); each candidate then costs

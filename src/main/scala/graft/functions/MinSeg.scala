@@ -62,44 +62,53 @@ object MinSeg {
   def min_seg_count(word: Column, sortedPieces: Column): Column =
     column(MinSeg(expression(word), expression(sortedPieces)))
 
-  /** Shared by the interpreted and codegen paths — they cannot diverge.
-    * Positions are CODE POINTS (DuckDB `substr` semantics), not bytes.
+  /** Shared by the interpreted and codegen paths — they cannot diverge:
+    * the unit-cost [[suffixCosts]] at position 0.
     */
-  def compute(word: UTF8String, sorted: ArrayData): Long = {
+  def compute(word: UTF8String, sorted: ArrayData): Long =
+    suffixCosts(word, sorted, null, 1L)(0)
+
+  /** The one segmentation DP behind `min_seg_count`, `min_seg_cost` and
+    * `min_seg_pieces`: b(p) = the minimal cost of segmenting word[p..n),
+    * where one character costs `unkCost` (the UNK fallback, so every
+    * position is coverable) and piece `sorted(j)` costs `costs(j)` — or 1
+    * when `costs` is null. Positions are CODE POINTS (DuckDB `substr`
+    * semantics), not bytes.
+    */
+  private[functions] def suffixCosts(word: UTF8String, sorted: ArrayData,
+      costs: ArrayData, unkCost: Long): Array[Long] = {
     val n = word.numChars()
-    if (n == 0) return 0L
     val k = sorted.numElements()
-    val dp = new Array[Int](n + 1)
-    java.util.Arrays.fill(dp, 1, n + 1, Int.MaxValue)
-    var i = 0
-    while (i < n) {
-      val base = dp(i)
-      if (base != Int.MaxValue) {
-        // UNK fallback: one character, cost 1 — total coverage
-        if (base + 1 < dp(i + 1)) dp(i + 1) = base + 1
-        var L = 2
-        val maxL = math.min(MaxLen, n - i)
-        while (L <= maxL) {
-          if (contains(sorted, k, word.substring(i, i + L))) {
-            if (base + 1 < dp(i + L)) dp(i + L) = base + 1
-          }
-          L += 1
+    val b = new Array[Long](n + 1)
+    var p = n - 1
+    while (p >= 0) {
+      var best = unkCost + b(p + 1)
+      var L = 2
+      val maxL = math.min(MaxLen, n - p)
+      while (L <= maxL) {
+        val j = indexOf(sorted, k, word.substring(p, p + L))
+        if (j >= 0) {
+          val c = (if (costs == null) 1L else costs.getLong(j)) + b(p + L)
+          if (c < best) best = c
         }
+        L += 1
       }
-      i += 1
+      b(p) = best
+      p -= 1
     }
-    dp(n).toLong
+    b
   }
 
-  private def contains(sorted: ArrayData, k: Int, x: UTF8String): Boolean = {
+  /** Position of `x` among the first `k` elements of `sorted`, or -1. */
+  private[functions] def indexOf(sorted: ArrayData, k: Int, x: UTF8String): Int = {
     var lo = 0
     var hi = k - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
       val c = sorted.getUTF8String(mid).compareTo(x)
-      if (c == 0) return true
+      if (c == 0) return mid
       if (c < 0) lo = mid + 1 else hi = mid - 1
     }
-    false
+    -1
   }
 }

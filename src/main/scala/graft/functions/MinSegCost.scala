@@ -67,46 +67,10 @@ object MinSegCost {
     column(MinSegCost(expression(word), expression(sortedPieces),
       expression(costs), expression(unkCost)))
 
-  /** Shared by the interpreted and codegen paths — they cannot diverge.
-    * Positions are CODE POINTS (DuckDB `substr` semantics), not bytes.
+  /** Shared by the interpreted and codegen paths — they cannot diverge:
+    * [[MinSeg.suffixCosts]] at position 0.
     */
   def compute(word: UTF8String, sorted: ArrayData, costs: ArrayData,
-      unkCost: Long): Long = {
-    val n = word.numChars()
-    if (n == 0) return 0L
-    val k = sorted.numElements()
-    val dp = new Array[Long](n + 1)
-    java.util.Arrays.fill(dp, 1, n + 1, Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      val base = dp(i)
-      if (base != Long.MaxValue) {
-        if (base + unkCost < dp(i + 1)) dp(i + 1) = base + unkCost
-        var L = 2
-        val maxL = math.min(MinSeg.MaxLen, n - i)
-        while (L <= maxL) {
-          val j = indexOf(sorted, k, word.substring(i, i + L))
-          if (j >= 0) {
-            val c = base + costs.getLong(j)
-            if (c < dp(i + L)) dp(i + L) = c
-          }
-          L += 1
-        }
-      }
-      i += 1
-    }
-    dp(n)
-  }
-
-  private def indexOf(sorted: ArrayData, k: Int, x: UTF8String): Int = {
-    var lo = 0
-    var hi = k - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val c = sorted.getUTF8String(mid).compareTo(x)
-      if (c == 0) return mid
-      if (c < 0) lo = mid + 1 else hi = mid - 1
-    }
-    -1
-  }
+      unkCost: Long): Long =
+    MinSeg.suffixCosts(word, sorted, costs, unkCost)(0)
 }

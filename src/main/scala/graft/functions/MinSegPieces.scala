@@ -68,31 +68,14 @@ object MinSegPieces {
       expression(costs), expression(unkCost)))
 
   /** Shared by the interpreted and codegen paths — they cannot diverge.
-    * Positions are CODE POINTS ([[MinSegCost.compute]]'s convention).
+    * Positions are CODE POINTS ([[MinSeg.suffixCosts]]'s convention).
     */
   def compute(word: UTF8String, sorted: ArrayData, costs: ArrayData,
       unkCost: Long): ArrayData = {
     val n = word.numChars()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
     val k = sorted.numElements()
-    // suffix DP: b(p) = min cost of segmenting word[p..n)
-    val b = new Array[Long](n + 1)
-    var p = n - 1
-    while (p >= 0) {
-      var best = unkCost + b(p + 1)
-      var L = 2
-      val maxL = math.min(MinSeg.MaxLen, n - p)
-      while (L <= maxL) {
-        val j = indexOf(sorted, k, word.substring(p, p + L))
-        if (j >= 0) {
-          val c = costs.getLong(j) + b(p + L)
-          if (c < best) best = c
-        }
-        L += 1
-      }
-      b(p) = best
-      p -= 1
-    }
+    val b = MinSeg.suffixCosts(word, sorted, costs, unkCost)
     // reconstruction: at each position the step with minimal
     // cost + b(next); ties -> longest step, then binary-smallest piece.
     // Scanning L ascending and replacing on (strictly cheaper) OR
@@ -111,7 +94,7 @@ object MinSegPieces {
       val maxL = math.min(MinSeg.MaxLen, n - i)
       while (L <= maxL) {
         val cand = word.substring(i, i + L)
-        val j = indexOf(sorted, k, cand)
+        val j = MinSeg.indexOf(sorted, k, cand)
         if (j >= 0) {
           val tot = costs.getLong(j) + b(i + L)
           if (tot < bestTot || (tot == bestTot && L > bestLen)) {
@@ -124,17 +107,5 @@ object MinSegPieces {
       i += bestLen
     }
     new GenericArrayData(out.toArray)
-  }
-
-  private def indexOf(sorted: ArrayData, k: Int, x: UTF8String): Int = {
-    var lo = 0
-    var hi = k - 1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      val c = sorted.getUTF8String(mid).compareTo(x)
-      if (c == 0) return mid
-      if (c < 0) lo = mid + 1 else hi = mid - 1
-    }
-    -1
   }
 }

@@ -473,7 +473,7 @@ object DocStreams {
     * final table equals the batch build cell-for-cell (StreamingSpec).
     */
   def countMinCells(docs: DataFrame): DataFrame =
-    graft.ext.PipelineOps8.countMinCells(docs) // shared build, cannot drift
+    graft.ext.Sketches.countMinCells(docs) // shared build, cannot drift
 
   /** Stream-capable FUZZY decontamination — x_dec5 at ingest: candidates
     * from the stream-static broadcast shingle join (the corpus side is

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.Corpus
-import graft.ext.{Dedup, EmbedDedup, PipelineOps7, Sampling, TokenLayout}
+import graft.ext.{Dedup, EmbedDedup, PipelineOps7, Sampling, Sketches, TokenLayout}
 
 /** Empty-input robustness: at 100 TB an operator routinely receives an
   * EMPTY frame (a filter that matched nothing, an empty partition of a
@@ -89,10 +89,10 @@ class EmptyInputSpec extends SparkSuite {
   }
 
   test("sketches, spans, PQ on empty inputs") {
-    import graft.ext.{PipelineOps8, PipelineOps9, Similarity2}
-    assert(PipelineOps8.countMinCells(emptyDocs).count() == 0)
-    assert(PipelineOps9.kmvDistinctBigrams(emptyDocs).count() == 0)
-    assert(PipelineOps9.histogramQuantiles(
+    import graft.ext.{PipelineOps9, Similarity2}
+    assert(Sketches.countMinCells(emptyDocs).count() == 0)
+    assert(Sketches.kmvDistinctBigrams(emptyDocs).count() == 0)
+    assert(Sketches.histogramQuantiles(
       emptyDocs.withColumn("n_chars", col("n_chars"))).count() == 0)
     assert(PipelineOps9.dupSpans(emptyDocs).count() == 0)
     assert(Similarity2.pqTopK(emptyEmb).count() == 0)
@@ -112,7 +112,7 @@ class EmptyInputSpec extends SparkSuite {
     assert(PipelineOps10.bm25TopK(emptyDocs, emptyDocs, 5).count() == 0)
     assert(PipelineOps10.dsirWeights(emptyDocs, emptyDocs).count() == 0)
     assert(PipelineOps10.pmiCollocations(emptyDocs, 5, 20).count() == 0)
-    assert(PipelineOps10.hllDistinct(emptyDocs).count() == 0)
+    assert(Sketches.hllDistinct(emptyDocs).count() == 0)
     import spark.implicits._
     val noEvents = Seq.empty[(java.sql.Timestamp, String)].toDF("ts", "event_type")
     assert(PipelineOps10.rateAnomalies(noEvents).count() == 0)
@@ -130,7 +130,7 @@ class EmptyInputSpec extends SparkSuite {
     val idx = graft.ext.KnLm.knIndex(emptyDocs)
     assert(idx.v == 0L && idx.h3s.isEmpty && idx.bt == 0L)
     // join advice with an EMPTY side degrades to broadcast, never NPEs
-    val adv = graft.util.Scale.adviseJoin(
+    val adv = Sketches.adviseJoin(
       emptyDocs.select(col("doc_id")), "doc_id",
       (1L to 100L).toDF("doc_id"), "doc_id")
     assert(adv.nA == 0L && adv.estJoin == 0L && adv.strategy == "broadcast_a")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.PipelineOps10
+import graft.ext.{PipelineOps10, Sketches}
 
 /** Fourth-wave round-7 operators: LM scoring, BM25, DSIR, PMI, HLL, and
   * rate anomalies — planted-fixture behavior pins on top of the probes'
@@ -108,10 +108,10 @@ class PipelineOps10Spec extends SparkSuite {
   // ----------------------------------------------------------------- HLL
 
   test("HLL registers merge by per-register MAX (sharded == whole)") {
-    val whole = PipelineOps10.hllRegisters(docs)
+    val whole = Sketches.hllRegisters(docs)
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val a = PipelineOps10.hllRegisters(docs.filter($"doc_id" % 2 === 0))
-    val b = PipelineOps10.hllRegisters(docs.filter($"doc_id" % 2 === 1))
+    val a = Sketches.hllRegisters(docs.filter($"doc_id" % 2 === 0))
+    val b = Sketches.hllRegisters(docs.filter($"doc_id" % 2 === 1))
     val merged = a.select($"lang", $"idx", $"m").unionAll(b.select($"lang", $"idx", $"m"))
       .groupBy("lang", "idx").agg(max($"m").as("m"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -119,7 +119,7 @@ class PipelineOps10Spec extends SparkSuite {
   }
 
   test("HLL estimate lands within 50% of the exact distinct count") {
-    PipelineOps10.hllDistinct(docs).collect().foreach { r =>
+    Sketches.hllDistinct(docs).collect().foreach { r =>
       val (exact, est) = (r.getLong(1), r.getLong(2))
       assert(est > exact / 2 && est < exact * 2,
         s"lang ${r.getString(0)}: est $est vs exact $exact")

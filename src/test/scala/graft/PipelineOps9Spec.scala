@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{EmbedDedup, EmbedLsh, PipelineOps9}
+import graft.ext.{EmbedDedup, EmbedLsh, PipelineOps9, Sketches}
 
 /** KMV sketch (merge property, exact-below-k), duplicated spans (planted
   * fixtures), JL projection (self-similarity, sign agreement with the LSH
@@ -17,7 +17,7 @@ class PipelineOps9Spec extends SparkSuite {
   test("KMV: merging per-shard k-minima equals sketching the union directly") {
     val docs = Tables(spark, dir, "documents")
     val k = 16
-    val h = PipelineOps9.bigramFractions(docs)
+    val h = Sketches.bigramFractions(docs)
     import org.apache.spark.sql.expressions.Window
     val byLang = Window.partitionBy(col("lang")).orderBy(col("f"), col("b"))
     // direct: k-th smallest fraction per lang over the whole corpus
@@ -40,14 +40,14 @@ class PipelineOps9Spec extends SparkSuite {
       (1L, "a b c", "xx"), (2L, "b c d", "xx"), (3L, "a b", "yy"))
       .toDF("doc_id", "text", "lang")
       .select(col("doc_id"), col("text"), col("lang"))
-    val out = PipelineOps9.kmvDistinctBigrams(docs).orderBy("lang").collect()
+    val out = Sketches.kmvDistinctBigrams(docs).orderBy("lang").collect()
     // xx: bigrams {a b, b c, c d} = 3; yy: {a b} = 1 — all <= 64 -> exact
     assert(out.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq ==
       Seq(("xx", 3L, 3L), ("yy", 1L, 1L)))
   }
 
   test("KMV estimate on the real corpus is positive and in a sane band") {
-    val out = PipelineOps9.kmvDistinctBigrams(
+    val out = Sketches.kmvDistinctBigrams(
       Tables(spark, "/root/testdata/sf0.01", "documents")).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
@@ -95,14 +95,14 @@ class PipelineOps9Spec extends SparkSuite {
     val docs = Tables(spark, "/root/testdata/sf0.01", "documents")
     def cells(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).sorted.toSeq
-    val merged = PipelineOps9.histCells(docs.filter(col("doc_id") % 2 === 0))
-      .unionByName(PipelineOps9.histCells(docs.filter(col("doc_id") % 2 === 1)))
+    val merged = Sketches.histCells(docs.filter(col("doc_id") % 2 === 0))
+      .unionByName(Sketches.histCells(docs.filter(col("doc_id") % 2 === 1)))
       .groupBy(col("lang"), col("bin")).agg(sum(col("c")).as("c"))
-    assert(cells(merged) == cells(PipelineOps9.histCells(docs)))
+    assert(cells(merged) == cells(Sketches.histCells(docs)))
   }
 
   test("histogram quantile estimates land within one bin width of exact") {
-    val out = PipelineOps9.histogramQuantiles(
+    val out = Sketches.histogramQuantiles(
       Tables(spark, "/root/testdata/sf0.01", "documents")).collect()
     assert(out.nonEmpty)
     out.foreach { r =>

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+
 /** Plan-shape regression guard: NO registered query may plan an
   * unconstrained CartesianProduct — the join shapes are broadcast-NLJ
   * (small side broadcast) or keyed joins by construction, and a silent
@@ -7,6 +10,24 @@ package graft
   * a correctness gate but dies at 100 TB.
   */
 class PlanAuditSpec extends SparkSuite {
+
+  /** Every node of an executed plan, through adaptive and query-stage
+    * wrappers and subqueries.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
+    case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
+  }
+
+  /** The operator under codegen, shuffle-read and query-stage wrappers. */
+  private def beneath(p: SparkPlan): SparkPlan = p match {
+    case w: WholeStageCodegenExec => beneath(w.child)
+    case i: InputAdapter => beneath(i.child)
+    case r: AQEShuffleReadExec => beneath(r.child)
+    case q: QueryStageExec => beneath(q.plan)
+    case n => n
+  }
 
   test("no probe plans a CartesianProduct") {
     import scala.util.{Failure, Success, Try}
@@ -362,6 +383,48 @@ class PlanAuditSpec extends SparkSuite {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
+  test("x_skt1, x_skt4, x_skt6: every sketch explode reads a projected md5, never computes one") {
+    // A generator's input gets no subexpression elimination: an md5 inside
+    // the (r, slot) explode is computed k times per key. Each cell
+    // build and each query-side slot lookup must digest once per key in
+    // the projection that feeds its explode (a Project, or the top-10's
+    // TakeOrderedAndProject). x_skt6 builds its sketches inside
+    // adviseJoin's own action, so the executed plans are collected from
+    // every action.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.expressions.Md5
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def digests(p: SparkPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[Md5]))
+    spark.listenerManager.register(listener)
+    try for (name <- Seq("x_skt1_countmin_heavy", "x_skt4_join_size", "x_skt6_join_advice")) {
+      seen.clear()
+      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      df.collect()
+      // listener events arrive in order, after the action returns
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_ eq df.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.asScala.exists(_ eq df.queryExecution), s"$name: no plan reached the listener")
+      val gens = seen.asScala.toSeq.flatMap(qe => nodes(qe.executedPlan))
+        .collect { case g: GenerateExec => g }
+      val inline = gens.filter(digests)
+      assert(inline.isEmpty,
+        s"$name: md5 computed inside a generator: ${inline.map(_.simpleString(400))}")
+      // two explodes read a projected digest: both sides' cell builds, or
+      // x_skt1's build and its top-10 slot lookup
+      val projected = gens.filter(g => digests(beneath(g.child)))
+      assert(projected.size == 2,
+        s"$name: ${projected.size} explodes over a projected md5:\n${gens.map(_.simpleString(400))}")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("x_ded19: cell assignment broadcasts centroids; within-cell join is keyed by cell") {
     val df = SparkEntry.queries("x_ded19_semdedup")(spark, "/root/testdata/sf0.001")
     df.write.format("noop").mode("overwrite").save()
@@ -421,22 +484,8 @@ class PlanAuditSpec extends SparkSuite {
     // occurrence stream as token payloads.
     assert(plan.contains("BroadcastHashJoin"), plan)
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case n => n +: (n.children ++ n.subqueries).flatMap(nodes)
-    }
-    def beneath(p: SparkPlan): SparkPlan = p match {
-      case w: WholeStageCodegenExec => beneath(w.child)
-      case i: InputAdapter => beneath(i.child)
-      case r: AQEShuffleReadExec => beneath(r.child)
-      case q: QueryStageExec => beneath(q.plan)
-      case n => n
-    }
     val rawKeyed = nodes(df.queryExecution.executedPlan).collect {
       case e: ShuffleExchangeExec if (e.outputPartitioning match {
         case h: HashPartitioning =>

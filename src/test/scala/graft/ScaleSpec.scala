@@ -1,5 +1,6 @@
 package graft
 
+import graft.ext.Sketches
 import graft.util.Scale
 import org.apache.spark.sql.functions._
 
@@ -9,6 +10,13 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** x_skt4's slots: the three disjoint 4-hex windows of md5(key). */
+  private def slots(k: Long): Seq[String] = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(k.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    (0 until 3).map(r => hex.substring(4 * r, 4 * r + 4))
+  }
 
   test("saltedJoin == plain inner join (orders x customer)") {
     val o = Tables(spark, dir, "orders")
@@ -109,7 +117,7 @@ class ScaleSpec extends SparkSuite {
     import spark.implicits._
     val big = (1L to 50000L).map(k => (k, "p")).toDF("k", "p")
     val dim = (1L to 100L).map(k => (k, s"d$k")).toDF("k", "name")
-    val adv = Scale.adviseJoin(big, "k", dim, "k")
+    val adv = Sketches.adviseJoin(big, "k", dim, "k")
     assert(adv.strategy == "broadcast_b", adv.toString)
     assert(adv.nA == 50000L && adv.nB == 100L)
     // est is one-sided and tight here (distinct keys, 100 matches)
@@ -124,7 +132,7 @@ class ScaleSpec extends SparkSuite {
     import spark.implicits._
     val a = (1L to 20000L).map(k => (k, "a")).toDF("k", "p")
     val b = (1L to 20000L).map(k => (k, "b")).toDF("k", "q")
-    val adv = Scale.adviseJoin(a, "k", b, "k", broadcastMaxRows = 1000L)
+    val adv = Sketches.adviseJoin(a, "k", b, "k", broadcastMaxRows = 1000L)
     assert(adv.strategy == "shuffle", adv.toString)
     // uniform distinct keys: heaviest-key upper bound stays far below a
     // reducer's fair share (collision noise only)
@@ -141,7 +149,7 @@ class ScaleSpec extends SparkSuite {
     val big = (1 to 50000).map(_ => (7L, "dup")).toDF("k", "p")
       .unionAll((1L to 5000L).map(k => (k + 100L, "u")).toDF("k", "p"))
     val other = (1L to 6000L).map(k => (k, s"d$k")).toDF("k", "name")
-    val adv = Scale.adviseJoin(big, "k", other, "k", broadcastMaxRows = 1000L)
+    val adv = Sketches.adviseJoin(big, "k", other, "k", broadcastMaxRows = 1000L)
     assert(adv.strategy == "salt", adv.toString)
     assert(adv.maxKeyA >= 50000L, "hot key must dominate the sketch bound")
     // following the advice: salted result == plain join result
@@ -155,7 +163,7 @@ class ScaleSpec extends SparkSuite {
   test("adviseJoin estimate is one-sided: est >= exact join size") {
     val li = Tables(spark, dir, "lineitem")
     val o = Tables(spark, dir, "orders")
-    val adv = Scale.adviseJoin(li, "l_orderkey", o, "o_orderkey")
+    val adv = Sketches.adviseJoin(li, "l_orderkey", o, "o_orderkey")
     val exact = li.join(o, col("l_orderkey") === col("o_orderkey")).count()
     assert(adv.estJoin >= exact, s"est ${adv.estJoin} < exact $exact")
     assert(adv.nA == li.count() && adv.nB == o.count())
@@ -163,12 +171,6 @@ class ScaleSpec extends SparkSuite {
 
   test("adviseJoin est follows the x_skt6 oracle when keys collide in some sketch rows only") {
     import spark.implicits._
-    // x_skt4's slots: the three disjoint 4-hex windows of md5(key)
-    def slots(k: Long): Seq[String] = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(k.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      (0 until 3).map(r => hex.substring(4 * r, 4 * r + 4))
-    }
     // two disjoint one-key sets whose slots meet in one sketch row but not
     // in every row: the first window-0 collision among small integers
     val (a, b) = (0L until 5000L).groupBy(k => slots(k).head).values
@@ -187,7 +189,51 @@ class ScaleSpec extends SparkSuite {
       .groupMapReduce(_._1)(_._2)(_ + _)
     val oracleEst = if (dots.isEmpty) 0L else dots.values.min
     assert(dots.size < 3 && oracleEst > 0, s"keys $a, $b: matched rows $dots")
-    val adv = Scale.adviseJoin(as.toDF("k"), "k", bs.toDF("k"), "k")
+    val adv = Sketches.adviseJoin(as.toDF("k"), "k", bs.toDF("k"), "k")
     assert(adv.estJoin == oracleEst, s"keys $a, $b: $adv vs oracle est $oracleEst")
+  }
+
+  test("x_skt4's n_est equals adviseJoin's estJoin: one join-size algebra") {
+    val li = Tables(spark, dir, "lineitem")
+    val o = Tables(spark, dir, "orders")
+    val rows = SparkEntry.queries("x_skt4_join_size")(spark, dir).collect()
+    assert(rows.length == 1)
+    val adv = Sketches.adviseJoin(li, "l_orderkey", o, "o_orderkey")
+    assert(rows(0).getLong(1) == adv.estJoin, s"x_skt4 ${rows(0)} vs $adv")
+  }
+
+  test("disjoint join keys: x_skt4 returns no row, x_skt6 advises with est_join = 0") {
+    import spark.implicits._
+    // 20 lineitem keys x 3 rows against 10 order keys whose slots meet the
+    // lineitem slots in NO sketch row, so every oracle inner join is empty
+    val liKeys = (1L to 20L)
+    val taken = (0 until 3).map(r => liKeys.map(k => slots(k)(r)).toSet)
+    val oKeys = Iterator.from(1001).map(_.toLong)
+      .filter(k => slots(k).zipWithIndex.forall { case (s, r) => !taken(r)(s) })
+      .take(10).toSeq
+    val tmp = java.nio.file.Files.createTempDirectory("graft_disjoint").toString
+    def rmr(f: java.io.File): Unit = {
+      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmr))
+      f.delete()
+    }
+    try {
+      liKeys.flatMap(Seq.fill(3)(_)).toDF("l_orderkey")
+        .write.parquet(s"$tmp/lineitem.parquet")
+      oKeys.toDF("o_orderkey").write.parquet(s"$tmp/orders.parquet")
+      // the oracle's `FROM exact, ip` with an empty ip is empty
+      assert(SparkEntry.queries("x_skt4_join_size")(spark, tmp).collect().isEmpty)
+      val adv = SparkEntry.queries("x_skt6_join_advice")(spark, tmp).collect()
+      assert(adv.length == 1)
+      val r = adv(0)
+      val (na, nb, est, mxa, mxb) =
+        (r.getAs[Long]("n_a"), r.getAs[Long]("n_b"), r.getAs[Long]("est_join"),
+          r.getAs[Long]("max_key_a"), r.getAs[Long]("max_key_b"))
+      // the x_skt6 oracle on these tables: (60, 10, 0, 3, 1, broadcast_b)
+      assert(na == 60L && nb == 10L && est == 0L, r.toString)
+      assert(mxa == 3L && mxb == 1L, r.toString)
+      assert(r.getAs[String]("strategy") ==
+        Sketches.strategyFor(na, nb, mxa, mxb, 1000L, 8L, 32), r.toString)
+      assert(r.getAs[String]("strategy") == "broadcast_b", r.toString)
+    } finally rmr(new java.io.File(tmp))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{PipelineOps8, SketchStore}
+import graft.ext.Sketches
 
 /** Persisted count-min store: round-trip identity, shard-merge == whole,
   * and estimates stay one-sided through the store.
@@ -17,9 +17,9 @@ class SketchStoreSpec extends SparkSuite {
   test("store round-trip: loaded cells == built cells") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_skt_rt").toString
     try {
-      SketchStore.buildCms(docs, tmp)
-      assert(cells(SketchStore.loadCms(spark, tmp)) ==
-        cells(PipelineOps8.countMinCells(docs)))
+      Sketches.buildCms(docs, tmp)
+      assert(cells(Sketches.loadCms(spark, tmp)) ==
+        cells(Sketches.countMinCells(docs)))
     } finally {
       def rmr(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rmr))
@@ -30,16 +30,16 @@ class SketchStoreSpec extends SparkSuite {
   }
 
   test("shard sketches merge to the whole-corpus sketch (cell addition)") {
-    val a = PipelineOps8.countMinCells(docs.filter(col("doc_id") % 2 === 0))
-    val b = PipelineOps8.countMinCells(docs.filter(col("doc_id") % 2 === 1))
-    assert(cells(SketchStore.mergeCms(a, b)) == cells(PipelineOps8.countMinCells(docs)))
+    val a = Sketches.countMinCells(docs.filter(col("doc_id") % 2 === 0))
+    val b = Sketches.countMinCells(docs.filter(col("doc_id") % 2 === 1))
+    assert(cells(Sketches.mergeCms(a, b)) == cells(Sketches.countMinCells(docs)))
   }
 
   test("estimates from the merged store are one-sided over exact counts") {
-    val merged = SketchStore.mergeCms(
-      PipelineOps8.countMinCells(docs.filter(col("doc_id") % 2 === 0)),
-      PipelineOps8.countMinCells(docs.filter(col("doc_id") % 2 === 1)))
-    val out = PipelineOps8.estimateTopTokens(docs, merged).collect()
+    val merged = Sketches.mergeCms(
+      Sketches.countMinCells(docs.filter(col("doc_id") % 2 === 0)),
+      Sketches.countMinCells(docs.filter(col("doc_id") % 2 === 1)))
+    val out = Sketches.estimateTopTokens(docs, merged).collect()
     assert(out.length == 10)
     out.foreach(r => assert(r.getLong(2) >= r.getLong(1)))
   }
