@@ -503,7 +503,7 @@ final case class Corpus(df: DataFrame) {
   def capPerGroup(n: Int, groupCol: String = "source",
       orderCol: String = "n_chars"): Corpus = chain { d =>
     graft.ext.PipelineOps5.cappedPerGroup(d, group = col(groupCol),
-      order = Seq(col(orderCol).desc, col("doc_id")), key = col("doc_id"), n = n)
+      order = Seq(col(orderCol).desc, col("doc_id")), key = col("doc_id"), n = lit(n))
   }
 
   /** Leakage-safe deterministic split (x_smp6): adds a `split` column so
@@ -524,7 +524,7 @@ final case class Corpus(df: DataFrame) {
     */
   def frontierReport(urlCol: String = "url", k: Int = 5,
       approxBuffer: Option[Int] = None): DataFrame =
-    graft.ext.PipelineOps13.frontierReport(
+    graft.ext.Frontier.frontierReport(
       df.select(col(urlCol).as("url")), k, approxBuffer)
 
   /** Pipeline funnel report (x_pipe7): per-stage in/out counts and drop
@@ -539,7 +539,7 @@ final case class Corpus(df: DataFrame) {
     * flat window).
     */
   def capPerHost(urlCol: String = "url", cap: Int = 3): Corpus = chain { d =>
-    d.join(graft.ext.PipelineOps13.hostCap(d, col(urlCol), cap)
+    d.join(graft.ext.Frontier.hostCap(d, col(urlCol), cap)
       .select("doc_id"), Seq("doc_id"), "left_semi")
   }
 

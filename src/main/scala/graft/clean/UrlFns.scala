@@ -233,4 +233,28 @@ object UrlFns {
     s"""(${idnNormalizeDuck(s"($authNoPort)")} || $path ||
        |  CASE WHEN $kept = '' THEN '' ELSE '?' || $kept END)""".stripMargin
   }
+
+  private val hostRe = "^[a-z0-9+.-]+://([^/:?#]+)"
+  private val authRe = "^[a-z0-9+.-]+://[^/?#]*"
+
+  /** Host of a CANONICAL URL (lowercase scheme and authority, as
+    * [[canonicalUrl]] emits): the authority up to the first `:`, `/`,
+    * `?` or `#` — so a port never reaches the host key; empty when the
+    * string has no `scheme://` prefix. The one host split every crawl
+    * operator (frontier dedup, robots gate, per-host caps, link graph
+    * rollups) keys on.
+    */
+  def host(c: Column): Column = regexp_extract(c, hostRe, 1)
+
+  /** Path, query and fragment of a CANONICAL URL: everything after the
+    * authority (port included in the authority); '' for `https://h.com`.
+    */
+  def path(c: Column): Column = regexp_replace(c, authRe, "")
+
+  /** [[host]] in DuckDB's dialect, for oracles. */
+  def hostDuck(e: String): String = s"regexp_extract($e, '$hostRe', 1)"
+
+  /** [[path]] in DuckDB's dialect, for oracles. */
+  def pathDuck(e: String): String = s"regexp_replace($e, '$authRe', '', 'g')"
+
 }

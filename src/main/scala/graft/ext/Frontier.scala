@@ -1,27 +1,407 @@
 package graft.ext
 
 import graft.{Probe, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.clean.UrlFns
+import graft.util.TempDirs
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The CRAWL-PLANNING side composed end to end (round-11 verdict #4):
-  * sitemap discovery → frontier canonicalization → robots wildcard
-  * gate → per-host fetch cap → crawl-delay politeness schedule. The
-  * ingest side got its flagship compositions (x_warc2/5, x_pipe6/8/9);
-  * until x_pipe10 the planning tiers were only INDIVIDUALLY green
-  * (x_url4/6/7/8) — this pins the stage interactions: gated-out URLs
-  * never reach the schedule, and the schedule prices the CAPPED fetch
-  * count, not the raw discovery count.
+/** The crawl FRONTIER: every decision between a discovered URL and a
+  * fetch, each with one owner — canonical keys and frontier dedup
+  * (x_url1/2/13), the politeness report (x_url3), the robots gate
+  * probe (x_url5, over [[RobotsTxt.robotsGate]]), the per-host
+  * document cap (x_url4), the redirect feedback loop (x_url11,
+  * x_pipe13), and the planning side composed end to end (x_pipe10/12):
+  * sitemap discovery → canonicalization → robots wildcard gate →
+  * per-host fetch cap → crawl-delay politeness schedule. The composed
+  * plans pin the stage interactions: gated-out URLs never reach the
+  * schedule, and the schedule prices the CAPPED fetch count, not the
+  * raw discovery count. Host and path always come from
+  * [[graft.clean.UrlFns.host]]/[[graft.clean.UrlFns.path]] over a
+  * canonical URL.
   *
   * Shape at scale: discovery scans split XML; canonicalization is one
   * distinct (exchange on canon); the gate joins rules host-keyed with
-  * per-URL winners from a bounded window (≤ rules-per-host matches);
-  * the cap is the salted two-level top-K ([[PipelineOps13.hostCap]]'s
-  * discipline — a mega-host never becomes one task); the schedule is
-  * one host-keyed aggregation joined to the tiny parsed-delays table.
+  * per-URL winners from one doc-keyed aggregation (≤ rules-per-host
+  * matches per URL); every per-host cap is
+  * [[PipelineOps5.cappedPerGroup]]'s salted two-level top-K (a
+  * mega-host never becomes one task); the schedule is one host-keyed
+  * aggregation joined to the tiny parsed-delays table.
   */
 object Frontier {
+
+  // --------------------------------------------- URL canonicalization
+
+  /** X-URL1 — URL canonicalization over synthetic crawl URLs built
+    * deterministically from doc_id INSIDE the query (the x_html1
+    * convention: both engines canonicalize byte-identical inputs).
+    * Mixed-case scheme/host, default and non-default ports, tracking
+    * params, unsorted queries, and fragments all collapse through the
+    * [[graft.clean.UrlFns]] rule chain; the surfaced distinct-canonical
+    * count is the frontier-dedup number the raw strings would overstate.
+    */
+  private val url1 = Probe(
+    "x_url1_canonicalize",
+    s"""WITH u AS (
+       |  SELECT doc_id,
+       |    (CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'HTTPS' END) ||
+       |    '://WWW.Example' || CAST(doc_id % 7 AS VARCHAR) || '.COM' ||
+       |    (CASE WHEN doc_id % 3 = 0
+       |          THEN (CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END)
+       |          WHEN doc_id % 3 = 1 THEN ':8080' ELSE '' END) ||
+       |    '/Path/To/Item' ||
+       |    (CASE doc_id % 3 WHEN 0 THEN '/a%7eb' WHEN 1 THEN '/a%7Eb' ELSE '/a~b' END) ||
+       |    '/v%41r%330' ||
+       |    '?id=' || CAST(doc_id % 5 AS VARCHAR) || '&utm_source=feed&Z=1' ||
+       |    (CASE WHEN doc_id % 2 = 0 THEN '&ref=tw&a=2&q=x%2Fy' ELSE '&q=x%2fy' END) ||
+       |    '#sec' || CAST(doc_id AS VARCHAR) AS url
+       |  FROM documents)
+       |SELECT doc_id, ${UrlFns.canonicalUrlDuck("url")} AS canon
+       |FROM u ORDER BY doc_id""".stripMargin) { (s, dir) =>
+    val url = concat(
+      when(col("doc_id") % 2 === 0, lit("HTTP")).otherwise(lit("HTTPS")),
+      lit("://WWW.Example"), (col("doc_id") % 7).cast("string"), lit(".COM"),
+      when(col("doc_id") % 3 === 0,
+        when(col("doc_id") % 2 === 0, lit(":80")).otherwise(lit(":443")))
+        .when(col("doc_id") % 3 === 1, lit(":8080")).otherwise(lit("")),
+      lit("/Path/To/Item"),
+      when(col("doc_id") % 3 === 0, lit("/a%7eb"))
+        .when(col("doc_id") % 3 === 1, lit("/a%7Eb")).otherwise(lit("/a~b")),
+      lit("/v%41r%330"),
+      lit("?id="), (col("doc_id") % 5).cast("string"), lit("&utm_source=feed&Z=1"),
+      when(col("doc_id") % 2 === 0, lit("&ref=tw&a=2&q=x%2Fy"))
+        .otherwise(lit("&q=x%2fy")),
+      lit("#sec"), col("doc_id").cast("string"))
+    Tables(s, dir, "documents")
+      .select(col("doc_id"), UrlFns.canonicalUrl(url).as("canon"))
+      .orderBy("doc_id")
+  }
+
+  /** The synthetic crawl frontier x_url2–4 share (x_url1's template
+    * without its path-encoding variants): its id/host moduli make
+    * distinct raw URLs collide after canonicalization.
+    */
+  private def frontierUrl: Column = concat(
+    when(col("doc_id") % 2 === 0, lit("HTTP")).otherwise(lit("HTTPS")),
+    lit("://WWW.Example"), (col("doc_id") % 7).cast("string"), lit(".COM"),
+    when(col("doc_id") % 3 === 0,
+      when(col("doc_id") % 2 === 0, lit(":80")).otherwise(lit(":443")))
+      .when(col("doc_id") % 3 === 1, lit(":8080")).otherwise(lit("")),
+    lit("/Path/To/Item"),
+    lit("?id="), (col("doc_id") % 5).cast("string"), lit("&utm_source=feed&Z=1"),
+    when(col("doc_id") % 2 === 0, lit("&ref=tw&a=2")).otherwise(lit("")),
+    lit("#sec"), col("doc_id").cast("string"))
+
+  /** [[frontierUrl]] in DuckDB's dialect, for oracles. */
+  private val frontierUrlDuck: String =
+    """(CASE WHEN doc_id % 2 = 0 THEN 'HTTP' ELSE 'HTTPS' END) ||
+      |    '://WWW.Example' || CAST(doc_id % 7 AS VARCHAR) || '.COM' ||
+      |    (CASE WHEN doc_id % 3 = 0
+      |          THEN (CASE WHEN doc_id % 2 = 0 THEN ':80' ELSE ':443' END)
+      |          WHEN doc_id % 3 = 1 THEN ':8080' ELSE '' END) ||
+      |    '/Path/To/Item' ||
+      |    '?id=' || CAST(doc_id % 5 AS VARCHAR) || '&utm_source=feed&Z=1' ||
+      |    (CASE WHEN doc_id % 2 = 0 THEN '&ref=tw&a=2' ELSE '' END) ||
+      |    '#sec' || CAST(doc_id AS VARCHAR)""".stripMargin
+
+  /** Frontier dedup over a (doc_id, url) frame: canonical key → survivor
+    * = min doc_id per key → per-host rollup of raw vs canonical counts —
+    * the fetch-scheduler's number ("how much of this host's frontier is
+    * variant noise"). One exchange on the canonical key, one on host.
+    * Output: (host, n_raw, n_canonical, first_survivor).
+    */
+  def frontierDedup(urls: DataFrame): DataFrame =
+    urls
+      .select(col("doc_id"), UrlFns.canonicalUrl(col("url")).as("canon"))
+      .groupBy("canon")
+      .agg(min(col("doc_id")).as("survivor_id"), count(lit(1)).as("n_raw"))
+      .groupBy(UrlFns.host(col("canon")).as("host"))
+      .agg(sum(col("n_raw")).cast("long").as("n_raw"),
+        count(lit(1)).as("n_canonical"),
+        min(col("survivor_id")).cast("long").as("first_survivor"))
+
+  /** [[frontierDedup]]'s oracle tail over a CTE `c(doc_id, canon)`. */
+  private val frontierDedupDuck: String =
+    s"""s AS (
+       |  SELECT canon, MIN(doc_id) AS survivor_id, COUNT(*) AS n_raw
+       |  FROM c GROUP BY canon)
+       |SELECT ${UrlFns.hostDuck("canon")} AS host,
+       |  CAST(SUM(n_raw) AS BIGINT) AS n_raw,
+       |  CAST(COUNT(*) AS BIGINT) AS n_canonical,
+       |  CAST(MIN(survivor_id) AS BIGINT) AS first_survivor
+       |FROM s GROUP BY 1 ORDER BY host""".stripMargin
+
+  /** X-URL2 — frontier dedup COMPOSED over the synthetic frontier
+    * ([[frontierUrl]]): canonical key → survivor → per-host rollup.
+    */
+  private val url2 = Probe(
+    "x_url2_frontier_dedup",
+    s"""WITH u AS (
+       |  SELECT doc_id,
+       |    $frontierUrlDuck AS url
+       |  FROM documents),
+       |c AS (
+       |  SELECT doc_id, ${UrlFns.canonicalUrlDuck("url")} AS canon FROM u),
+       |$frontierDedupDuck""".stripMargin) { (s, dir) =>
+    frontierDedup(Tables(s, dir, "documents").select(col("doc_id"), frontierUrl.as("url")))
+      .orderBy("host")
+  }
+
+  /** X-URL13 — IDN host normalization (the bounded table-driven subset
+    * [[graft.clean.UrlFns.idnPairs]] documents): Unicode, punycode, and
+    * UPPERCASE-Unicode spellings of the same host must land on ONE
+    * canonical frontier key (lowercase runs first in the rule chain, so
+    * `MÜNCHEN` reaches the table as `münchen` — both engines' Unicode
+    * lower() pinned against each other by the hash). Per collapsed
+    * host: raw count, canonical count, first survivor.
+    */
+  private val url13 = Probe(
+    "x_url13_idn_hosts",
+    s"""WITH u AS (
+       |  SELECT doc_id,
+       |    'https://' ||
+       |    (CASE doc_id % 3 WHEN 0 THEN 'münchen' WHEN 1 THEN 'xn--mnchen-3ya'
+       |      ELSE 'MÜNCHEN' END) ||
+       |    '.example' || CAST(doc_id % 2 AS VARCHAR) || '.com/p/' ||
+       |    CAST(doc_id % 5 AS VARCHAR) ||
+       |    (CASE WHEN doc_id % 4 = 0 THEN '?utm_source=f&a=1' ELSE '' END) AS url
+       |  FROM documents),
+       |c AS (SELECT doc_id, ${UrlFns.canonicalUrlDuck("url")} AS canon FROM u),
+       |$frontierDedupDuck""".stripMargin) { (s, dir) =>
+    val url = concat(lit("https://"),
+      when(col("doc_id") % 3 === 0, lit("münchen"))
+        .when(col("doc_id") % 3 === 1, lit("xn--mnchen-3ya"))
+        .otherwise(lit("MÜNCHEN")),
+      lit(".example"), (col("doc_id") % 2).cast("string"), lit(".com/p/"),
+      (col("doc_id") % 5).cast("string"),
+      when(col("doc_id") % 4 === 0, lit("?utm_source=f&a=1")).otherwise(lit("")))
+    frontierDedup(Tables(s, dir, "documents").select(col("doc_id"), url.as("url")))
+      .orderBy("host")
+  }
+
+  // ------------------------------------------ frontier politeness report
+
+  /** Per-host frontier politeness report over canonical URL keys — the
+    * fetch-scheduler's planning table: for the top-`k` hosts by
+    * CANONICAL page count, how many raw frontier entries they hold, how
+    * many distinct pages that really is, and the variant-noise ppm
+    * (raw entries that canonicalization collapses — re-fetch waste).
+    *
+    * Shape: one exchange on the canonical key, one on host; the top-k
+    * selection is EXACT by default — the per-host aggregate (already
+    * computed for the stats) feeds a distributed take-ordered by
+    * (n_canonical DESC, host ASC), so correctness never depends on a
+    * buffer size. A crawl-scale frontier has millions of hosts and the
+    * take-ordered keeps k rows per partition, never the host table.
+    * Expects a (…, url) frame; exposed on the corpus as
+    * [[graft.api.Corpus.frontierReport]].
+    *
+    * `approxBuffer`: opt-in single-pass approximate ranking through the
+    * bounded [[graft.functions.TopKByCount]] aggregator (map-side
+    * partials, capped buffer) — exact only while the buffer exceeds the
+    * DISTINCT HOST count; beyond it rarest partials evict and the top-k
+    * is approximate. Useful when the ranking pass must avoid the second
+    * exchange; the DEFAULT is the exact path precisely because a
+    * defaults-trusting caller must not get a silently-approximate
+    * politeness report (round-10 ADVICE).
+    */
+  def frontierReport(urls: DataFrame, k: Int = 5,
+      approxBuffer: Option[Int] = None): DataFrame = {
+    val s = urls.sparkSession
+    import s.implicits._
+    val canon = urls
+      .select(UrlFns.canonicalUrl(col("url")).as("canon"))
+      .groupBy("canon").agg(count(lit(1)).as("n_raw"))
+      .withColumn("host", UrlFns.host(col("canon")))
+    val perHost = canon.groupBy("host")
+      .agg(sum(col("n_raw")).cast("long").as("n_raw"),
+        count(lit(1)).cast("long").as("n_canonical"))
+      .withColumn("variant_noise_ppm",
+        expr("(n_raw - n_canonical) * 1000000 DIV n_raw"))
+    val ranked = approxBuffer match {
+      case Some(maxBuffer) =>
+        // hosts have no ':' (the extractor's class excludes it), so the
+        // aggregator's "value:count" rendering splits back unambiguously
+        canon.select(col("host")).as[String]
+          .select(new graft.functions.TopKByCount(k, maxBuffer).toColumn)
+          .toDF("top")
+          .select(posexplode(col("top")).as(Seq("rk", "hc")))
+          .select((col("rk") + 1).cast("long").as("rank"),
+            expr("substring_index(hc, ':', 1)").as("host"))
+      case None =>
+        // TakeOrderedAndProject: k rows per partition then k at the
+        // driver-side merge — exact at any host cardinality. The k-row
+        // local window only ranks the already-taken rows.
+        perHost.select(col("host"), col("n_canonical"))
+          .orderBy(col("n_canonical").desc, col("host").asc)
+          .limit(k)
+          .select(row_number().over(
+            Window.orderBy(col("n_canonical").desc, col("host").asc)).cast("long").as("rank"),
+            col("host"))
+    }
+    perHost.join(broadcast(ranked), "host")
+      .select(col("rank"), col("host"), col("n_raw"), col("n_canonical"),
+        col("variant_noise_ppm"))
+      .orderBy("rank")
+  }
+
+  /** X-URL3 — the politeness report over the synthetic frontier
+    * ([[frontierUrl]]): top-5 hosts by canonical count with
+    * raw/canonical/noise stats, the TopKByCount (count desc, host asc)
+    * ranking recomputed by the oracle as a window.
+    */
+  private val url3 = Probe(
+    "x_url3_frontier_report",
+    s"""WITH u AS (
+       |  SELECT doc_id,
+       |    $frontierUrlDuck AS url
+       |  FROM documents),
+       |c AS (
+       |  SELECT doc_id, ${UrlFns.canonicalUrlDuck("url")} AS canon FROM u),
+       |sv AS (SELECT canon, COUNT(*) AS n_raw FROM c GROUP BY canon),
+       |h AS (
+       |  SELECT ${UrlFns.hostDuck("canon")} AS host,
+       |         SUM(n_raw) AS n_raw, COUNT(*) AS n_canonical
+       |  FROM sv GROUP BY 1),
+       |r AS (
+       |  SELECT host, n_raw, n_canonical,
+       |         (n_raw - n_canonical) * 1000000 // n_raw AS variant_noise_ppm,
+       |         row_number() OVER (ORDER BY n_canonical DESC, host) AS rank
+       |  FROM h)
+       |SELECT CAST(rank AS BIGINT) AS rank, host,
+       |  CAST(n_raw AS BIGINT) AS n_raw,
+       |  CAST(n_canonical AS BIGINT) AS n_canonical,
+       |  CAST(variant_noise_ppm AS BIGINT) AS variant_noise_ppm
+       |FROM r WHERE rank <= 5 ORDER BY rank""".stripMargin) { (s, dir) =>
+    frontierReport(Tables(s, dir, "documents").select(frontierUrl.as("url")))
+  }
+
+  // --------------------------------------------------- robots exclusion
+
+  /** X-URL5 — [[RobotsTxt.robotsGate]] over a synthetic frontier with
+    * four path shapes per host and a 3-rule robots table (Disallow
+    * /private, Allow /private/ok, Allow /pub): exercises the longest-
+    * match win (an /private/ok/... URL is allowed THROUGH the broader
+    * /private disallow), the plain disallow, and the no-matching-rule
+    * default. The rules carry no `*` or `$`, so the gate routes them
+    * all to startsWith. Oracle recomputes the canonicalization, the
+    * prefix matching, and the specificity ordering relationally.
+    */
+  private val url5 = Probe(
+    "x_url5_robots_gate",
+    s"""WITH u AS (
+       |  SELECT doc_id,
+       |    'https://www.example' || CAST(doc_id % 7 AS VARCHAR) || '.com' ||
+       |    (CASE WHEN doc_id % 4 = 0 THEN '/Path/To/Item'
+       |          WHEN doc_id % 4 = 1 THEN '/private/data'
+       |          WHEN doc_id % 4 = 2 THEN '/private/ok/page'
+       |          ELSE '/pub/x' END) AS url
+       |  FROM documents),
+       |c AS (
+       |  SELECT doc_id, ${UrlFns.canonicalUrlDuck("url")} AS canon FROM u),
+       |p AS (
+       |  SELECT doc_id,
+       |    ${UrlFns.hostDuck("canon")} AS host,
+       |    ${UrlFns.pathDuck("canon")} AS path
+       |  FROM c),
+       |r AS (
+       |  SELECT h.host, t.prefix, t.allow
+       |  FROM (SELECT DISTINCT host FROM p) h,
+       |       (VALUES ('/private', 0), ('/private/ok', 1), ('/pub', 1)) AS t(prefix, allow)),
+       |m AS (
+       |  SELECT p.doc_id, p.host, p.path, r.prefix, r.allow,
+       |         (r.prefix IS NOT NULL AND starts_with(p.path, r.prefix)) AS hit
+       |  FROM p LEFT JOIN r ON r.host = p.host),
+       |w AS (
+       |  SELECT doc_id, host, path, hit, allow,
+       |         row_number() OVER (PARTITION BY doc_id
+       |           ORDER BY hit DESC, length(prefix) DESC, allow DESC, prefix ASC) AS rn
+       |  FROM m)
+       |SELECT doc_id, host, path,
+       |  CAST(CASE WHEN hit THEN allow ELSE 1 END AS BIGINT) AS allowed
+       |FROM w WHERE rn = 1 ORDER BY doc_id""".stripMargin) { (s, dir) =>
+    import s.implicits._
+    val urls = Tables(s, dir, "documents").select(col("doc_id"),
+      concat(lit("https://www.example"), (col("doc_id") % 7).cast("string"), lit(".com"),
+        when(col("doc_id") % 4 === 0, lit("/Path/To/Item"))
+          .when(col("doc_id") % 4 === 1, lit("/private/data"))
+          .when(col("doc_id") % 4 === 2, lit("/private/ok/page"))
+          .otherwise(lit("/pub/x"))).as("url"))
+    val hosts = urls
+      .select(UrlFns.host(UrlFns.canonicalUrl(col("url"))).as("host"))
+      .distinct()
+    val rules = hosts.crossJoin(
+      Seq(("/private", 0), ("/private/ok", 1), ("/pub", 1)).toDF("pattern", "allow"))
+    RobotsTxt.robotsGate(urls, rules).orderBy("doc_id")
+  }
+
+  // --------------------------------------------------- per-host doc cap
+
+  /** RefinedWeb-style per-domain cap: keep at most `cap` documents per
+    * canonical HOST, ranked by quality (keep DESC, n_words DESC, doc_id
+    * ASC — the x_ded17 survivor ordering), so no single domain dominates
+    * the corpus. Returns the SURVIVORS (doc_id, host, host_rank).
+    *
+    * Scale shape: a single `row_number() OVER (PARTITION BY host)` makes
+    * a mega-host (10⁸ pages of one domain at 100 TB) one task — the
+    * classic window skew — so the rank is [[PipelineOps5.cappedPerGroup]]'s
+    * salted two-level top-K over (host, doc_id mod `salts`) buckets,
+    * exact by containment — the property the x_url4 oracle (a flat
+    * window) hash-checks.
+    */
+  def hostCap(docs: DataFrame, urlCol: Column, cap: Int = 3, salts: Int = 64): DataFrame = {
+    val q = PipelineOps3.addQualityRuleSignals(docs)
+      .select(col("doc_id"), UrlFns.host(UrlFns.canonicalUrl(urlCol)).as("host"),
+        col("keep"), col("n_words"))
+    PipelineOps5.cappedPerGroup(q, group = col("host"),
+        order = Seq(col("keep").desc, col("n_words").desc, col("doc_id").asc),
+        key = col("doc_id"), n = lit(cap), salts = salts)
+      .select(col("doc_id"), col("host"), col("rnk").as("host_rank"))
+  }
+
+  /** X-URL4 — per-host document cap over the synthetic frontier
+    * ([[frontierUrl]]; its doc_id % 7 hosts give every host many docs,
+    * so the cap genuinely cuts): survivors of the two-level
+    * top-3-per-host, ranked by the quality ordering. The oracle ranks
+    * with ONE flat window — hash-matching pins the salted two-level
+    * rewrite exact.
+    */
+  private val url4 = Probe(
+    "x_url4_host_cap",
+    s"""WITH u AS (
+       |  SELECT doc_id, text,
+       |    $frontierUrlDuck AS url
+       |  FROM documents),
+       |c AS (
+       |  SELECT doc_id,
+       |    ${UrlFns.hostDuck(UrlFns.canonicalUrlDuck("url"))} AS host,
+       |    text
+       |  FROM u),
+       |tq AS (
+       |  SELECT doc_id, host, list_filter(string_split_regex(lower(text), '\\s+'), tkn -> tkn <> '') AS w FROM c),
+       |m AS (
+       |  SELECT doc_id, host,
+       |    CAST(len(w) AS BIGINT) AS n_words,
+       |    CAST(list_sum(list_transform(w, x -> length(x))) * 100 // nullif(len(w), 0) AS BIGINT) AS mean_len_c,
+       |    CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]'))) * 1000000 // nullif(len(w), 0) AS BIGINT) AS alpha_ppm,
+       |    CAST(len(list_filter(w, x -> list_contains(['the','and','of','to','a','in','is','that'], x))) AS BIGINT) AS stop_hits
+       |  FROM tq),
+       |k AS (
+       |  SELECT doc_id, host, n_words,
+       |    CAST(CASE WHEN n_words BETWEEN 10 AND 100000 AND mean_len_c BETWEEN 200 AND 1000
+       |              AND alpha_ppm >= 600000 AND stop_hits >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep
+       |  FROM m),
+       |r AS (
+       |  SELECT doc_id, host,
+       |    row_number() OVER (PARTITION BY host ORDER BY keep DESC, n_words DESC, doc_id ASC) AS host_rank
+       |  FROM k)
+       |SELECT doc_id, host, CAST(host_rank AS BIGINT) AS host_rank
+       |FROM r WHERE host_rank <= 3 ORDER BY doc_id""".stripMargin) { (s, dir) =>
+    hostCap(Tables(s, dir, "documents"), frontierUrl).orderBy("doc_id")
+  }
+
+  // ------------------------------------------------ composed crawl plan
 
   /** Per-host fetch PLAN from a discovered frontier: canonical pages
     * gated through the parsed robots rules, capped at `cap` fetches per
@@ -35,12 +415,11 @@ object Frontier {
   def frontierPlan(locs: DataFrame, robots: DataFrame, cap: Int = 8,
       agent: String = RobotsTxt.DefaultAgent, defaultDelayMs: Long = 1000L,
       salts: Int = 16, stageDir: String = null): DataFrame = {
-    val s = locs.sparkSession
     // staged writes (the x_pipe8 discipline): the robots PARSE feeds two
     // consumers (rules for the gate, delays for the schedule) and the
     // GATE feeds two (the rollup and the cap) — materializing each once
     // keeps the plan from executing the parse chain and the gate's
-    // window tree twice per run.
+    // join and aggregation twice per run.
     // A long-lived driver calling this planning API repeatedly should
     // pass a fixed `stageDir`: the stage writes are mode("overwrite"),
     // so successive plans reuse the same two paths instead of
@@ -54,30 +433,22 @@ object Frontier {
     // read the NEW frontier or fail mid-overwrite). Materialize
     // (collect/write) each plan before replanning.
     val stage = if (stageDir != null) stageDir
-      else graft.util.TempDirs.scratch("graft_frontier_plan")
-    RobotsTxt.selectedLines(robots, agent)
-      .write.mode("overwrite").parquet(s"$stage/sel")
-    val sel = s.read.parquet(s"$stage/sel")
+      else TempDirs.scratch("graft_frontier_plan")
+    val sel = TempDirs.staged(RobotsTxt.selectedLines(robots, agent), s"$stage/sel")
     val frontier = locs
-      .select(graft.clean.UrlFns.canonicalUrl(col("loc")).as("canon"))
+      .select(UrlFns.canonicalUrl(col("loc")).as("canon"))
       .distinct()
     // the gate keys rows by its `doc_id` column — the canon string IS
     // the frontier's identity here
-    RobotsTxt.robotsGateWild(
+    val gated = TempDirs.staged(
+      RobotsTxt.robotsGate(
         frontier.select(col("canon").as("doc_id"), col("canon").as("url")),
-        RobotsTxt.rulesFromLines(sel))
-      .write.mode("overwrite").parquet(s"$stage/gated")
-    val gated = s.read.parquet(s"$stage/gated")
+        RobotsTxt.rulesFromLines(sel)),
+      s"$stage/gated")
     val allowed = gated.filter(col("allowed") === 1)
       .select(col("host"), col("doc_id").as("canon"))
-    val fetch = allowed
-      .withColumn("__salt", pmod(hash(col("canon")), lit(salts)))
-      .withColumn("__lr", row_number().over(
-        Window.partitionBy(col("host"), col("__salt")).orderBy(col("canon").asc)))
-      .filter(col("__lr") <= cap)
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy(col("host")).orderBy(col("canon").asc)))
-      .filter(col("__rk") <= cap)
+    val fetch = PipelineOps5.cappedPerGroup(allowed, group = col("host"),
+      order = Seq(col("canon").asc), key = hash(col("canon")), n = lit(cap), salts = salts)
     gated.groupBy("host")
       .agg(count(lit(1)).as("n_discovered"), sum(col("allowed")).as("n_allowed"))
       .join(fetch.groupBy("host").agg(count(lit(1)).as("n_fetch")), Seq("host"), "left")
@@ -146,11 +517,11 @@ object Frontier {
        |${RobotsTxt.parseRobotsDuck()},
        |${RobotsTxt.crawlDelaysDuck},
        |c AS (
-       |  SELECT DISTINCT ${graft.clean.UrlFns.canonicalUrlDuck("loc")} AS canon FROM d),
+       |  SELECT DISTINCT ${UrlFns.canonicalUrlDuck("loc")} AS canon FROM d),
        |p AS (
        |  SELECT canon,
-       |    regexp_extract(canon, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS host,
-       |    regexp_replace(canon, '^[a-z0-9+.-]+://[^/?#]*', '', 'g') AS path
+       |    ${UrlFns.hostDuck("canon")} AS host,
+       |    ${UrlFns.pathDuck("canon")} AS path
        |  FROM c),
        |m AS (
        |  SELECT p.canon, p.host, r.pattern, r.allow,
@@ -270,11 +641,11 @@ object Frontier {
        |${RobotsTxt.parseRobotsDuck()},
        |${RobotsTxt.crawlDelaysDuck},
        |c AS (
-       |  SELECT DISTINCT ${graft.clean.UrlFns.canonicalUrlDuck("dst")} AS canon FROM pp),
+       |  SELECT DISTINCT ${UrlFns.canonicalUrlDuck("dst")} AS canon FROM pp),
        |p AS (
        |  SELECT canon,
-       |    regexp_extract(canon, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS host,
-       |    regexp_replace(canon, '^[a-z0-9+.-]+://[^/?#]*', '', 'g') AS path
+       |    ${UrlFns.hostDuck("canon")} AS host,
+       |    ${UrlFns.pathDuck("canon")} AS path
        |  FROM c),
        |m AS (
        |  SELECT p.canon, p.host, r.pattern, r.allow,
@@ -320,10 +691,9 @@ object Frontier {
        |FROM plan LEFT JOIN pr ON pr.host = plan.host
        |ORDER BY priority""".stripMargin) { (s, dir) =>
     val docs = Tables.spread(s, dir, "documents")
-    val stage = graft.util.TempDirs.scratch("graft_pipe11")
-    LinkGraph.extractLinks(LinkGraph.linkedPages(docs))
-      .write.mode("overwrite").parquet(s"$stage/links")
-    val links = s.read.parquet(s"$stage/links")
+    val stage = TempDirs.scratch("graft_pipe11")
+    val links = TempDirs.staged(
+      LinkGraph.extractLinks(LinkGraph.linkedPages(docs)), s"$stage/links")
     val rank = LinkGraph.pageRankHosts(LinkGraph.hostGraph(links), iters = 5)
     val robots = docs.select((col("doc_id") % 7).as("h")).distinct()
       .select(concat(lit("h"), col("h").cast("string"), lit(".example.com")).as("host"),
@@ -361,9 +731,9 @@ object Frontier {
       .select(col("src"),
         LinkGraph.resolveHref(col("src"), col("__loc")).as("__r"))
       .filter(col("__r").isNotNull)
-      .select(col("src"), graft.clean.UrlFns.canonicalUrl(col("__r")).as("dst"))
+      .select(col("src"), UrlFns.canonicalUrl(col("__r")).as("dst"))
       .withColumn("dst_host",
-        regexp_extract(col("dst"), "^[a-z0-9+.-]+://([^/:?#]+)", 1))
+        UrlFns.host(col("dst")))
   }
 
   /** Collapse redirect CHAINS to their terminals, bounded at `maxHops`
@@ -476,7 +846,7 @@ object Frontier {
       val p307 = s"${lit_("HTTP/1.1 307 Temporary Redirect\r\nLocation: //r")} || CAST((doc_id % 7 + 1) % 7 AS VARCHAR) || ${lit_(".example.com/s/")} || CAST(doc_id % 4 AS VARCHAR) || ${lit_("\r\n\r\nredirect")}"
       val p200 = lit_("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<html><p>Location: /fake</p></html>")
       val p404 = lit_("HTTP/1.1 404 Not Found\r\n\r\ngone")
-      val cu = graft.clean.UrlFns.canonicalUrlDuck _
+      val cu = UrlFns.canonicalUrlDuck _
       s"""WITH d AS (
          |  SELECT doc_id, $url AS url,
          |    CASE doc_id % 5
@@ -495,7 +865,7 @@ object Frontier {
          |  FROM e0 WHERE st IN (301, 302, 303, 307, 308) AND loc IS NOT NULL),
          |ed AS (
          |  SELECT src, ${cu("r")} AS dst,
-         |    regexp_extract(${cu("r")}, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS dst_host
+         |    ${UrlFns.hostDuck(cu("r"))} AS dst_host
          |  FROM e1 WHERE r IS NOT NULL),
          |fetched AS (
          |  SELECT ${cu("url")} AS canon FROM d
@@ -538,18 +908,17 @@ object Frontier {
       .otherwise(lit("HTTP/1.1 404 Not Found\r\n\r\ngone"))
     val responses = docs.select(col("doc_id"), url.as("url"), payload.as("payload"))
     val fetched = responses.select(
-        graft.clean.UrlFns.canonicalUrl(col("url")).as("canon"))
+        UrlFns.canonicalUrl(col("url")).as("canon"))
       .unionByName(docs.filter(col("doc_id") % 10 === 2)
-        .select(graft.clean.UrlFns.canonicalUrl(concat(
+        .select(UrlFns.canonicalUrl(concat(
           lit("https://r"), (col("doc_id") % 7).cast("string"),
           lit(".example.com/moved/"), (col("doc_id") % 6).cast("string"))).as("canon")))
       .distinct()
     // stage the edges ONCE (two consumers): beyond the recompute, the
     // inlined accessor→resolve→canonicalize tree made the OPTIMIZER the
     // bottleneck — ~10 s of driver-side planning with executors idle
-    val stage = graft.util.TempDirs.scratch("graft_url11")
-    redirectEdges(responses).write.mode("overwrite").parquet(s"$stage/edges")
-    val edges = s.read.parquet(s"$stage/edges")
+    val stage = TempDirs.scratch("graft_url11")
+    val edges = TempDirs.staged(redirectEdges(responses), s"$stage/edges")
     val agg = edges.groupBy("dst_host")
       .agg(count_distinct(col("src"), col("dst")).as("n_edges"))
     val nf = frontierFromRedirects(edges, fetched)
@@ -585,7 +954,7 @@ object Frontier {
     {
       val w = graft.sources.Warc
       val lit_ = graft.clean.EncodingFns.sqlLit _
-      val cu = graft.clean.UrlFns.canonicalUrlDuck _
+      val cu = UrlFns.canonicalUrlDuck _
       val p301 = s"${lit_("HTTP/1.1 301 Moved Permanently\r\nLocation: https://h")} || CAST((doc_id % 7 + 3) % 7 AS VARCHAR) || ${lit_(".example.com/t/")} || CAST(doc_id % 13 AS VARCHAR) || ${lit_("?utm_source=x&b=")} || CAST(doc_id % 3 AS VARCHAR) || ${lit_("\r\n\r\nredirect")}"
       val p302 = s"${lit_("HTTP/1.1 302 Found\r\nLocation: ../m2/")} || CAST(doc_id % 5 AS VARCHAR) || ${lit_("\r\n\r\nredirect")}"
       val p200 = lit_("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<html><p>Location: /fake</p></html>")
@@ -623,8 +992,8 @@ object Frontier {
          |  FROM re0 WHERE st IN (301, 302, 303, 307, 308) AND loc IS NOT NULL),
          |red AS MATERIALIZED (
          |  SELECT DISTINCT src, ${cu("r")} AS dst,
-         |    regexp_extract(src, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS src_host,
-         |    regexp_extract(${cu("r")}, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS dst_host
+         |    ${UrlFns.hostDuck("src")} AS src_host,
+         |    ${UrlFns.hostDuck(cu("r"))} AS dst_host
          |  FROM re1 WHERE r IS NOT NULL),
          |selfr AS MATERIALIZED (
          |  SELECT src_host AS host, CAST(COUNT(*) AS BIGINT) AS n_self,
@@ -633,8 +1002,8 @@ object Frontier {
          |${collapseCtesDuck("red", "cc")},
          |ccx AS MATERIALIZED (
          |  SELECT src, dst, hops, resolved,
-         |    regexp_extract(src, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS src_host,
-         |    regexp_extract(dst, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS dst_host
+         |    ${UrlFns.hostDuck("src")} AS src_host,
+         |    ${UrlFns.hostDuck("dst")} AS dst_host
          |  FROM cccol),
          |loopagg AS MATERIALIZED (
          |  SELECT src_host AS host, CAST(COUNT(*) AS BIGINT) AS n_loop
@@ -664,12 +1033,10 @@ object Frontier {
          |ORDER BY h.host""".stripMargin
     }) { (s, dir) =>
     val docs = Tables.spread(s, dir, "documents")
-    val hostRe = "^[a-z0-9+.-]+://([^/:?#]+)"
     // stage the extracted links once (two consumers: base graph + rank)
-    val stage = graft.util.TempDirs.scratch("graft_pipe13")
-    LinkGraph.extractLinks(LinkGraph.linkedPages(docs))
-      .write.mode("overwrite").parquet(s"$stage/links")
-    val base = LinkGraph.hostGraph(s.read.parquet(s"$stage/links"))
+    val stage = TempDirs.scratch("graft_pipe13")
+    val base = LinkGraph.hostGraph(TempDirs.staged(
+      LinkGraph.extractLinks(LinkGraph.linkedPages(docs)), s"$stage/links"))
     val url = concat(lit("https://h"), (col("doc_id") % 7).cast("string"),
       lit(".example.com/d/"), col("doc_id").cast("string"))
     val payload =
@@ -701,20 +1068,19 @@ object Frontier {
         lit("HTTP/1.1 301 Moved Permanently\r\nLocation: https://lp1.example.com/a\r\n\r\nredirect").as("payload")))
     val responses = docs.select(url.as("url"), payload.as("payload"))
       .unionByName(chainResp).unionByName(loopResp)
-    redirectEdges(responses)
-      .select(col("src"), col("dst"),
-        regexp_extract(col("src"), hostRe, 1).as("src_host"), col("dst_host"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$stage/redges")
-    val red = s.read.parquet(s"$stage/redges")
+    val red = TempDirs.staged(
+      redirectEdges(responses)
+        .select(col("src"), col("dst"), UrlFns.host(col("src")).as("src_host"), col("dst_host"))
+        .distinct(),
+      s"$stage/redges")
     val selfr = red.filter(col("src_host") === col("dst_host"))
       .groupBy(col("src_host").as("host"))
       .agg(count(lit(1)).as("n_self"), min(col("dst")).as("min_self_dst"))
     // the bounded chain walk: rank credit lands on TERMINALS; loops
     // surface as n_loop and mint nothing
     val ccx = collapseRedirects(red.select("src", "dst"))
-      .withColumn("src_host", regexp_extract(col("src"), hostRe, 1))
-      .withColumn("dst_host", regexp_extract(col("dst"), hostRe, 1))
+      .withColumn("src_host", UrlFns.host(col("src")))
+      .withColumn("dst_host", UrlFns.host(col("dst")))
     val loopagg = ccx.filter(!col("resolved"))
       .groupBy(col("src_host").as("host")).agg(count(lit(1)).as("n_loop"))
     val rh = ccx.filter(col("resolved") && col("src_host") =!= col("dst_host"))
@@ -740,5 +1106,6 @@ object Frontier {
       .orderBy("host")
   }
 
-  val all: Seq[Probe] = Seq(pipe10, pipe11, url11, pipe13)
+  val all: Seq[Probe] = Seq(url1, url2, url3, url4, url5, url13, pipe10, pipe11, url11,
+    pipe13)
 }

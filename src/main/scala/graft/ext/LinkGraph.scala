@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Probe, Tables}
+import graft.clean.UrlFns
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -175,7 +176,7 @@ object LinkGraph {
       val qi = instr(e, "?")
       val pp = when(qi > 0, substring(e, lit(1), qi - 1)).otherwise(e)
       val q = when(qi > 0, substr(e, qi)).otherwise(lit(""))
-      concat(graft.clean.UrlFns.removeDotSegmentsCol(pp), q)
+      concat(UrlFns.removeDotSegmentsCol(pp), q)
     }
     when(href.rlike("^(?i)https?://"), href)
       .when(href.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), lit(null).cast("string"))
@@ -198,7 +199,7 @@ object LinkGraph {
       s"regexp_replace(regexp_replace($pageUrl, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', '', 'g'), '(?s)[?#].*$$', '', 'g')"
     val dir =
       s"(CASE WHEN regexp_replace($basePath, '[^/]*$$', '', 'g') = '' THEN '/' ELSE regexp_replace($basePath, '[^/]*$$', '', 'g') END)"
-    val rd = graft.clean.UrlFns.removeDotSegmentsDuck _
+    val rd = UrlFns.removeDotSegmentsDuck _
     s"""(CASE
        |  WHEN regexp_matches($href, '^(?i)https?://') THEN $href
        |  WHEN regexp_matches($href, '^[A-Za-z][A-Za-z0-9+.-]*:') THEN NULL
@@ -209,10 +210,6 @@ object LinkGraph {
        |  ELSE $prefix || ${rd(s"($dir || $href)")}
        |END)""".stripMargin
   }
-
-  /** Hostname of a canonical URL. */
-  private def hostOf(c: Column): Column =
-    regexp_extract(c, "^[a-z0-9+.-]+://([^/:?#]+)", 1)
 
   /** Base element open tag — group 1 the attribute region; the FIRST
     * base tag in the document wins (the HTML spec's rule; regexp_extract
@@ -270,23 +267,23 @@ object LinkGraph {
     // SOURCE stays the page URL.
     val u = col(urlCol)
     val pageSide = pages.select(struct(
-      graft.clean.UrlFns.canonicalUrl(u).as("src"),
+      UrlFns.canonicalUrl(u).as("src"),
       effectiveBase(u, col(htmlCol)).as("b"),
       regexp_extract_all(col(htmlCol), lit(aOpenRe), lit(1)).as("anchors"))
       .as("__s"))
     pageSide
       .select(col("__s.src").as("src"),
-        hostOf(col("__s.src")).as("src_host"),
+        UrlFns.host(col("__s.src")).as("src_host"),
         explode(filter(
           transform(col("__s.anchors"), a => struct(
             resolveHref(col("__s.b"), decodeEntities(hrefOfAttrs(a))).as("r"),
             nofollowOfAttrs(a).as("nofollow"))),
           s => s.getField("r").isNotNull)).as("__x"))
       .select(col("src"),
-        graft.clean.UrlFns.canonicalUrl(col("__x.r")).as("dst"),
+        UrlFns.canonicalUrl(col("__x.r")).as("dst"),
         col("src_host"), col("__x.nofollow").as("nofollow"))
       .select(col("src"), col("dst"), col("src_host"),
-        hostOf(col("dst")).as("dst_host"), col("nofollow"))
+        UrlFns.host(col("dst")).as("dst_host"), col("nofollow"))
   }
 
   /** Per-page anchor LOSS accounting (ADVICE r15): [[attrRegion]] makes
@@ -606,7 +603,7 @@ object LinkGraph {
   private[ext] def linkBaseCtesDuck: String = linkBaseCtesDuck("", "")
 
   private[ext] def linkBaseCtesDuck(where: String, px: String): String = {
-    val cu = graft.clean.UrlFns.canonicalUrlDuck _
+    val cu = UrlFns.canonicalUrlDuck _
     val w = if (where.isEmpty) "" else s" WHERE $where"
     s"""${px}pg AS MATERIALIZED (
        |  SELECT $pageUrlDuck AS url, $pageHtmlDuck AS html FROM documents$w),
@@ -626,8 +623,8 @@ object LinkGraph {
        |  WHERE r IS NOT NULL),
        |${px}lk AS MATERIALIZED (
        |  SELECT ${cu("url")} AS src, ${cu("r")} AS dst,
-       |    regexp_extract(${cu("url")}, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS src_host,
-       |    regexp_extract(${cu("r")}, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS dst_host,
+       |    ${UrlFns.hostDuck(cu("url"))} AS src_host,
+       |    ${UrlFns.hostDuck(cu("r"))} AS dst_host,
        |    nofollow
        |  FROM ${px}rs),
        |${px}pp AS MATERIALIZED (SELECT DISTINCT src, dst, src_host, dst_host FROM ${px}lk)""".stripMargin
@@ -789,8 +786,8 @@ object LinkGraph {
           regexp_extract(w, anchorRe, 2).as("inner"))),
         s => s.getField("r").isNotNull)).as("__x"))
       .select(
-        graft.clean.UrlFns.canonicalUrl(col("__x.r")).as("dst"),
-        hostOf(graft.clean.UrlFns.canonicalUrl(col("__x.r"))).as("dst_host"),
+        UrlFns.canonicalUrl(col("__x.r")).as("dst"),
+        UrlFns.host(UrlFns.canonicalUrl(col("__x.r"))).as("dst_host"),
         regexp_replace(col("__x.inner"), "<[^>]*>", " ").as("atext"))
   }
 
@@ -825,7 +822,7 @@ object LinkGraph {
        |  WHERE r IS NOT NULL),
        |tm AS (
        |  SELECT
-       |    regexp_extract(${graft.clean.UrlFns.canonicalUrlDuck("r")},
+       |    regexp_extract(${UrlFns.canonicalUrlDuck("r")},
        |      '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS dst_host,
        |    unnest(${graft.clean.CleanFns.tokensDuck(
                  "lower(regexp_replace(itext, '<[^>]*>', ' ', 'g'))")}) AS term
@@ -881,9 +878,10 @@ object LinkGraph {
     val docs = Tables(s, dir, "documents")
     val store = graft.util.TrainOnce(s"linkstore:$dir") {
       val p = graft.util.TempDirs.scratch("graft_linkstore")
-      hostGraph(extractLinks(linkedPages(docs.filter(col("doc_id") % 5 =!= 0))))
-        .write.mode("overwrite").parquet(s"$p/edges")
-      pageRankHosts(s.read.parquet(s"$p/edges"), iters = 5)
+      val edges = graft.util.TempDirs.staged(
+        hostGraph(extractLinks(linkedPages(docs.filter(col("doc_id") % 5 =!= 0)))),
+        s"$p/edges")
+      pageRankHosts(edges, iters = 5)
         .write.mode("overwrite").parquet(s"$p/ranks")
       p
     }
@@ -990,7 +988,7 @@ object LinkGraph {
        |    FROM px)
        |  WHERE r IS NOT NULL),
        |ax AS (
-       |  SELECT ${graft.clean.UrlFns.canonicalUrlDuck("r")} AS dst,
+       |  SELECT ${UrlFns.canonicalUrlDuck("r")} AS dst,
        |    trim(regexp_replace(itext, '<[^>]*>', ' ', 'g')) AS atext
        |  FROM rx),
        |ea AS (
@@ -1046,9 +1044,8 @@ object LinkGraph {
     // consumes it from five branches (tf, dl, stats, df, queries) and
     // an unpersisted plan would re-run the HTML synthesis + anchor
     // extraction + expansion join once per branch
-    val stage = graft.util.TempDirs.scratch("graft_lnk5")
-    expandedPlan.write.mode("overwrite").parquet(s"$stage/exp")
-    val expanded = s.read.parquet(s"$stage/exp")
+    val expanded = graft.util.TempDirs.staged(expandedPlan,
+      s"${graft.util.TempDirs.scratch("graft_lnk5")}/exp")
     PipelineOps10.bm25TopK(expanded, expanded.filter(col("doc_id") < 5), k = 5)
       .orderBy("q_id", "rank")
   }
@@ -1063,13 +1060,13 @@ object LinkGraph {
     *
     * Scale shape: one host-keyed join of the doc table against the
     * HOST-sized rank table (broadcastable), then the take runs as the
-    * SALTED two-phase rank ([[PipelineOps5.cappedPerGroupDyn]], the
-    * x_cur2 discipline): phase 1 ranks within (host, doc_id%salts)
-    * shards and keeps ≤ n_take per shard, phase 2 re-ranks the
-    * ≤ salts·n_take survivors. n_take ≤ 1 + slotsPerUnit (rank mass is
-    * conserved at ≤1e9 ppb), so phase 2's per-host input is a few
-    * hundred rows no matter how many billion documents the top-ranked
-    * — by construction the most-crawled — host holds; the naive
+    * SALTED two-phase rank ([[PipelineOps5.cappedPerGroup]] with the
+    * per-row n_take, the x_cur2 discipline): phase 1 ranks within
+    * (host, doc_id%salts) shards and keeps ≤ n_take per shard, phase 2
+    * re-ranks the ≤ salts·n_take survivors. n_take ≤ 1 + slotsPerUnit
+    * (rank mass is conserved at ≤1e9 ppb), so phase 2's per-host input
+    * is a few hundred rows no matter how many billion documents the
+    * top-ranked — by construction the most-crawled — host holds; the naive
     * single-window form would funnel that host through ONE task
     * (round-14 verdict "what's wrong" #1). LinkGraphSpec pins
     * two-phase ≡ naive on a planted mega-host and pins the plan's
@@ -1091,10 +1088,10 @@ object LinkGraph {
         s"least(n_docs, 1 + (rank_ppb * $slotsPerUnit) DIV 1000000000)"))
     // the per-host budget is host-table sized — broadcast it onto the
     // doc rows so the pre-window join is shuffle-free
-    val taken = PipelineOps5.cappedPerGroupDyn(
+    val taken = PipelineOps5.cappedPerGroup(
         wr.join(broadcast(counts.select("host", "n_take")), Seq("host")),
         group = col("host"), order = Seq(col("doc_id").asc),
-        key = col("doc_id"), nCol = col("n_take"), salts = salts)
+        key = col("doc_id"), n = col("n_take"), salts = salts)
       .groupBy("host").agg(sum(col("doc_id")).as("taken_sum"))
     counts.join(taken, Seq("host"), "left")
       .select(col("host"), col("rank_ppb"),

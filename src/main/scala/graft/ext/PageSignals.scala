@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.{Probe, Tables}
+import graft.clean.UrlFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -67,8 +68,8 @@ object PageSignals {
       .groupBy(col("__u"))
       .agg(min(struct(col("__i"), col("__r"))).as("__first"))
       .select(
-        graft.clean.UrlFns.canonicalUrl(col("__u")).as("page"),
-        graft.clean.UrlFns.canonicalUrl(col("__first.__r")).as("canonical"))
+        UrlFns.canonicalUrl(col("__u")).as("page"),
+        UrlFns.canonicalUrl(col("__first.__r")).as("canonical"))
 
   /** Meta-refresh redirect EDGES: the FIRST `<meta http-equiv=refresh>`
     * element per page whose `content` carries a url part mints
@@ -108,11 +109,11 @@ object PageSignals {
         col("__f.__delay").cast("long").as("delay_s"))
       .filter(col("__r").isNotNull)
       .select(
-        graft.clean.UrlFns.canonicalUrl(col("__u")).as("src"),
-        graft.clean.UrlFns.canonicalUrl(col("__r")).as("dst"),
+        UrlFns.canonicalUrl(col("__u")).as("src"),
+        UrlFns.canonicalUrl(col("__r")).as("dst"),
         col("delay_s"))
       .withColumn("dst_host",
-        regexp_extract(col("dst"), "^[a-z0-9+.-]+://([^/:?#]+)", 1))
+        UrlFns.host(col("dst")))
   }
 
   // ------------------------------------------------------------ fixtures
@@ -180,7 +181,7 @@ object PageSignals {
     * `ctg` holds (page, canonical).
     */
   private def canonicalTargetsDuck: String = {
-    val cu = graft.clean.UrlFns.canonicalUrlDuck _
+    val cu = UrlFns.canonicalUrlDuck _
     s"""le0 AS (
        |  SELECT url, ${LinkGraph.effectiveBaseDuck("url", "html")} AS base,
        |    regexp_extract_all(html, ${LinkGraph.qq(linkRe)}, 1) AS arr
@@ -220,16 +221,16 @@ object PageSignals {
        |$canonicalTargetsDuck,
        |cl AS (
        |  SELECT p.doc_id,
-       |    COALESCE(ctg.canonical, ${graft.clean.UrlFns.canonicalUrlDuck("p.url")}) AS cluster
+       |    COALESCE(ctg.canonical, ${UrlFns.canonicalUrlDuck("p.url")}) AS cluster
        |  FROM pg p LEFT JOIN ctg
-       |    ON ctg.page = ${graft.clean.UrlFns.canonicalUrlDuck("p.url")})
+       |    ON ctg.page = ${UrlFns.canonicalUrlDuck("p.url")})
        |SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_pages,
        |  CAST(MIN(doc_id) AS BIGINT) AS survivor
        |FROM cl GROUP BY cluster ORDER BY cluster""".stripMargin) { (s, dir) =>
     val pages = canonicalPages(Tables(s, dir, "documents"))
     val ct = canonicalTargets(pages)
     pages.select(col("doc_id"),
-        graft.clean.UrlFns.canonicalUrl(col("url")).as("page"))
+        UrlFns.canonicalUrl(col("url")).as("page"))
       .join(ct, Seq("page"), "left")
       .select(col("doc_id"),
         coalesce(col("canonical"), col("page")).as("cluster"))
@@ -302,7 +303,7 @@ object PageSignals {
   private val url14 = Probe(
     "x_url14_meta_refresh",
     {
-      val cu = graft.clean.UrlFns.canonicalUrlDuck _
+      val cu = UrlFns.canonicalUrlDuck _
       val content = LinkGraph.attrOfDuck("attrs", "content")
       val rawUrl = s"regexp_extract($content, '(?is);\\s*url\\s*=\\s*(.*)$$', 1)"
       val unq = s"regexp_replace(regexp_replace(trim($rawUrl), '^[''\"]', ''), '[''\"]$$', '')"
@@ -334,7 +335,7 @@ object PageSignals {
          |      ${LinkGraph.resolveHrefDuck("base", LinkGraph.decodeEntitiesDuck("target"))} AS r
          |    FROM mf WHERE target <> '')
          |  WHERE r IS NOT NULL)
-         |SELECT regexp_extract(dst, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS dst_host,
+         |SELECT ${UrlFns.hostDuck("dst")} AS dst_host,
          |  CAST(COUNT(DISTINCT (src, dst)) AS BIGINT) AS n_edges,
          |  CAST(MIN(delay_s) AS BIGINT) AS min_delay_s
          |FROM ed GROUP BY 1 ORDER BY dst_host""".stripMargin

@@ -805,15 +805,8 @@ object PipelineOps10 {
     // reads the tokenized columnar stage; at 100 TB this is the
     // `Corpus.materialize()` boundary between pipeline phases.
     val stage = graft.util.TempDirs.scratch("graft_pipe5")
-    def materialize(d: DataFrame, name: String): DataFrame = {
-      val t0 = System.nanoTime()
-      d.write.mode("overwrite").parquet(s"$stage/$name")
-      if (sys.env.contains("SPARK_GRAFT_STAGE_LOG")) // dev: per-stage wall cost
-        System.err.println(String.format(java.util.Locale.ROOT,
-          "[stage] x_pipe5/%s: %.2f s", name,
-          Double.box((System.nanoTime() - t0) / 1e9)))
-      s.read.parquet(s"$stage/$name")
-    }
+    def materialize(d: DataFrame, name: String): DataFrame =
+      graft.util.TempDirs.staged(d, s"$stage/$name")
     // repartition the RAW docs before tokenizing: the source is a
     // single parquet file at bench SF, so without this every downstream
     // narrow pass (tokenizer regex here, explode+md5 in the bg stage)

@@ -116,10 +116,8 @@ object PipelineOps14 {
     // re-extracts the whole crawl once per consumer (measured: 8.4 s
     // composed vs ~5 s staged at sf0.1)
     val stage = graft.util.TempDirs.scratch("graft_pipe6")
-    def materialize(d: DataFrame, name: String): DataFrame = {
-      d.write.mode("overwrite").parquet(s"$stage/$name")
-      s.read.parquet(s"$stage/$name")
-    }
+    def materialize(d: DataFrame, name: String): DataFrame =
+      graft.util.TempDirs.staged(d, s"$stage/$name")
     val pages = PipelineOps12.crawlPages(Tables.spread(s, dir, "documents"))
     val extracted = materialize(graft.api.Corpus.fromHtml(pages).df
       .select(col("doc_id"), col("lang"), col("text")), "extracted")

@@ -202,23 +202,19 @@ object PipelineOps16 {
       shard: org.apache.spark.sql.DataFrame,
       runDir: String): org.apache.spark.sql.DataFrame = {
     val (m, k) = BloomIndex.loadMeta(s, s"$art/bloom_idx")
-    shard.join(
+    val a = graft.util.TempDirs.staged(shard.join(
       BloomIndex.markDuplicates(shard, BloomIndex.load(s, s"$art/bloom_idx"),
           s.read.parquet(s"$art/digests"), m, k)
         .select(col("doc_id"), col("is_dup").cast("long").as("is_exact")),
-      Seq("doc_id"))
-      .write.mode("overwrite").parquet(s"$runDir/a")
-    val a = s.read.parquet(s"$runDir/a")
+      Seq("doc_id")), s"$runDir/a")
     // survivor frames deliberately NOT spread (measured r17, same-run
     // A/B: spreads cost 0.8 s net here — the round-robin exchange of the
     // kilobyte text rows outweighs the saved map time)
     val survA = a.filter(col("is_exact") === 0)
-    survA
+    val b = graft.util.TempDirs.staged(survA
       .join(BandIndex.collidingNewIds(survA, BandIndex.load(s, s"$art/bands_idx"))
         .withColumn("is_near", lit(1L)), Seq("doc_id"), "left")
-      .withColumn("is_near", coalesce(col("is_near"), lit(0L)))
-      .write.mode("overwrite").parquet(s"$runDir/b")
-    val b = s.read.parquet(s"$runDir/b")
+      .withColumn("is_near", coalesce(col("is_near"), lit(0L))), s"$runDir/b")
     val survB = b.filter(col("is_near") === 0)
     val withC = survB.join(
         SegIndex.newSegmentCounts(survB, SegIndex.load(s, s"$art/seg_idx")),
@@ -227,7 +223,7 @@ object PipelineOps16 {
       .withColumn("n_new", coalesce(col("n_new"), lit(0L)))
       .withColumn("kept",
         (col("n_segs") === 0L || col("n_new") * 2 >= col("n_segs")).cast("long"))
-    a.select(col("doc_id"), col("text"), col("is_exact"))
+    graft.util.TempDirs.staged(a.select(col("doc_id"), col("text"), col("is_exact"))
       .join(b.select(col("doc_id"), col("is_near")), Seq("doc_id"), "left")
       .join(withC.select(col("doc_id"), col("n_segs"), col("n_new"), col("kept")),
         Seq("doc_id"), "left")
@@ -235,9 +231,7 @@ object PipelineOps16 {
         coalesce(col("is_near"), lit(0L)).as("is_near"),
         coalesce(col("n_segs"), lit(0L)).as("n_segs"),
         coalesce(col("n_new"), lit(0L)).as("n_new"),
-        coalesce(col("kept"), lit(0L)).as("kept"))
-      .write.mode("overwrite").parquet(s"$runDir/flags")
-    s.read.parquet(s"$runDir/flags")
+        coalesce(col("kept"), lit(0L)).as("kept")), s"$runDir/flags")
   }
 
   /** X-PIPE8 — the COMPOSED daily increment: one new shard through ALL

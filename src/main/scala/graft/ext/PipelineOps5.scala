@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import graft.{Probe, Tables}
 import graft.functions.SortedCountIn.sorted_count_in
 
-/** Round-5 pipeline operators: per-domain document caps and corpus-level
-  * boilerplate detection — the two curation steps a crawl pipeline runs
-  * between dedup and sampling.
+/** Round-5 pipeline operators: per-group document caps (the one salted
+  * top-N every per-domain, per-host and per-budget cap runs) and
+  * corpus-level boilerplate detection — the two curation steps a crawl
+  * pipeline runs between dedup and sampling.
   */
 object PipelineOps5 {
 
@@ -20,35 +21,18 @@ object PipelineOps5 {
     * top-Ns, so the result is identical to a single window — but the
     * phase-2 per-group input is bounded at N*salts rows regardless of
     * group size, where the naive single window funnels a mega-domain's
-    * every document through one task. Salt is derived from the row key
-    * (deterministic, no rand()).
+    * every document through one task. Salt is `pmod(key, salts)`
+    * (deterministic, no rand()). `n` is a literal (`lit(15)`: Spark then
+    * pre-limits both windows with `WindowGroupLimit`) or a PER-ROW
+    * column of `df`, constant within each group (join the per-group
+    * budget on before calling). Result keeps `df`'s columns plus `rnk`.
     */
   def cappedPerGroup(df: DataFrame, group: Column, order: Seq[Column],
-      key: Column, n: Int, salts: Int = 4): DataFrame = {
+      key: Column, n: Column, salts: Int = 4): DataFrame = {
     val w1 = Window.partitionBy(group, pmod(key, lit(salts))).orderBy(order: _*)
     val w2 = Window.partitionBy(group).orderBy(order: _*)
     df.withColumn("rn1", row_number().over(w1)).filter(col("rn1") <= n)
       .withColumn("rnk", row_number().over(w2).cast("long")).filter(col("rnk") <= n)
-      .drop("rn1")
-  }
-
-  /** [[cappedPerGroup]] with a PER-ROW take count: `nCol` must already
-    * be a column of `df`, constant within each group (join the per-group
-    * budget on before calling — it is group-table sized, so the join
-    * broadcasts). Same two-phase containment argument: a group's true
-    * top-n lie within the union of its per-(group, salt) top-n, so the
-    * result is row-identical to a single `row_number() OVER (PARTITION
-    * BY group)` window — but no window partition ever holds more than
-    * one salt shard of a group, where the naive form funnels a
-    * mega-group's every row through one task. Phase 2 re-ranks the
-    * ≤ salts·n survivors. Result keeps `df`'s columns plus `rnk`.
-    */
-  def cappedPerGroupDyn(df: DataFrame, group: Column, order: Seq[Column],
-      key: Column, nCol: Column, salts: Int = 16): DataFrame = {
-    val w1 = Window.partitionBy(group, pmod(key, lit(salts))).orderBy(order: _*)
-    val w2 = Window.partitionBy(group).orderBy(order: _*)
-    df.withColumn("rn1", row_number().over(w1)).filter(col("rn1") <= nCol)
-      .withColumn("rnk", row_number().over(w2).cast("long")).filter(col("rnk") <= nCol)
       .drop("rn1")
   }
 
@@ -74,7 +58,7 @@ object PipelineOps5 {
         Tables(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars")),
         group = col("source"),
         order = Seq(col("n_chars").desc, col("doc_id")),
-        key = col("doc_id"), n = 15)
+        key = col("doc_id"), n = lit(15))
       .select(col("doc_id"), col("source"), col("n_chars").cast("long").as("n_chars"),
         col("rnk"))
       .orderBy("doc_id")

@@ -82,12 +82,16 @@ object OsmPipeline {
     * via raise_error; default is lenient pass-through (SURVEY.md §7.4).
     */
   def process(spark: SparkSession, path: String, strict: Boolean = false,
-      cache: Boolean = false, splittable: Boolean = false): OsmTables = {
+      cache: Boolean = false, splittable: Boolean = true): OsmTables = {
     // cache = the reference's single-pass fan-out (1 scan → 5 sinks,
     // Step_2:320-332): persist the two raw scans so the five table
     // pipelines share them instead of re-parsing the XML five times.
-    // splittable = scan via XmlElementInputFormat (OsmSplittable): use for
-    // a SINGLE monolithic file, where the stock XML source is one task.
+    // splittable (the default) = scan via XmlElementInputFormat
+    // (OsmSplittable): one task per file split, and an element it cannot
+    // parse becomes ONE all-null row, which `validated` rejects. The
+    // stock XML source (splittable = false) is one task per file, and an
+    // element past its parser's limits silently ends the scan: every
+    // later element of the file is lost (OsmScaleSpec pins the default).
     val nodesRaw0 =
       if (splittable) OsmSplittable.readNodesRaw(spark, path)
       else readNodesRaw(spark, path)
@@ -125,7 +129,9 @@ object OsmPipeline {
       cols.foldLeft(df) { (d, c) =>
         d.withColumn(c,
           when(col(c).isNull,
-            raise_error(concat(lit(s"validation failed: $table.$c is null for id="), col("id"))))
+            // a null id must not null the message (concat of a null is null)
+            raise_error(concat(lit(s"validation failed: $table.$c is null for id="),
+              coalesce(col("id").cast("string"), lit("null")))))
             .otherwise(col(c)))
       }
     OsmTables(

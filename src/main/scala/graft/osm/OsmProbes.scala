@@ -42,7 +42,7 @@ object OsmProbes {
       val t = OsmPipeline.process(s, fixturePath, cache = true)
       OsmPipeline.writeParquet(t, oracleDir)
       OsmQueries.rawTags(
-          OsmPipeline.readNodesRaw(s, fixturePath), OsmPipeline.readWaysRaw(s, fixturePath))
+          OsmSplittable.readNodesRaw(s, fixturePath), OsmSplittable.readWaysRaw(s, fixturePath))
         .coalesce(1).write.mode("overwrite").parquet(s"$oracleDir/raw_tags")
       t.nodes.unpersist(); t.ways.unpersist() // process(cache=true) persisted the raw scans
       materializedBy = oracleDir

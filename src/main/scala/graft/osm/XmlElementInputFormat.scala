@@ -38,8 +38,9 @@ import org.apache.spark.sql.SparkSession
   * does NOT skip XML comments or CDATA sections — a literal `<rowTag` /
   * `</rowTag>` inside `<!-- -->` or `<![CDATA[ ]]>` would yield a phantom
   * or truncated record. Machine-generated OSM exports contain neither;
-  * for hand-edited inputs use the stock (non-splittable) XML source,
-  * whose parser handles them.
+  * for hand-edited inputs use the stock (non-splittable) XML source
+  * (`OsmPipeline.process(…, splittable = false)`), whose parser handles
+  * them.
   */
 class XmlElementInputFormat extends FileInputFormat[LongWritable, Text] {
   override def isSplitable(ctx: JobContext, file: Path): Boolean =

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{Probe, Tables}
+import graft.clean.UrlFns
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -73,10 +74,10 @@ object Sitemap {
        |  FROM documents),
        |c AS (
        |  SELECT doc_id, lastmod,
-       |    ${graft.clean.UrlFns.canonicalUrlDuck("raw_loc")} AS canon
+       |    ${UrlFns.canonicalUrlDuck("raw_loc")} AS canon
        |  FROM d),
        |h AS (
-       |  SELECT regexp_extract(canon, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS host,
+       |  SELECT ${UrlFns.hostDuck("canon")} AS host,
        |    canon, lastmod
        |  FROM c)
        |SELECT host, CAST(COUNT(*) AS BIGINT) AS n_entries,
@@ -111,9 +112,9 @@ object Sitemap {
     }
     val entries = readUrlEntries(s, out)
     entries
-      .select(graft.clean.UrlFns.canonicalUrl(col("loc")).as("canon"),
+      .select(UrlFns.canonicalUrl(col("loc")).as("canon"),
         col("lastmod"))
-      .groupBy(regexp_extract(col("canon"), "^[a-z0-9+.-]+://([^/:?#]+)", 1).as("host"))
+      .groupBy(UrlFns.host(col("canon")).as("host"))
       .agg(count(lit(1)).as("n_entries"),
         countDistinct(col("canon")).as("n_canonical"),
         min(col("lastmod")).as("lastmod_min"),
@@ -138,7 +139,6 @@ object Sitemap {
     */
   def recrawlQueue(entries: DataFrame, asOf: String, cap: Int = 8,
       salts: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val interval = when(lower(col("changefreq")).isin("always", "hourly", "daily"), 1L)
       .when(lower(col("changefreq")) === "weekly", 7L)
       .when(lower(col("changefreq")) === "monthly", 30L)
@@ -148,7 +148,7 @@ object Sitemap {
     val prioM = (coalesce(nullif(col("priority"), lit("")), lit("0.5"))
       .cast("decimal(4,2)") * 1000).cast("long")
     val scored = entries
-      .select(graft.clean.UrlFns.canonicalUrl(col("loc")).as("canon"),
+      .select(UrlFns.canonicalUrl(col("loc")).as("canon"),
         // real sitemaps carry lastmod as either a bare date or a W3C
         // datetime (2026-01-01T12:00:00Z); normalize BOTH the freshness
         // ordering and the age cast to the 10-char date prefix so the
@@ -172,7 +172,7 @@ object Sitemap {
         org.apache.spark.sql.expressions.Window.partitionBy(col("canon"))
           .orderBy(col("lastmod").desc, col("changefreq").asc, col("priority").asc)))
       .filter(col("__rn") === 1)
-      .withColumn("host", regexp_extract(col("canon"), "^[a-z0-9+.-]+://([^/:?#]+)", 1))
+      .withColumn("host", UrlFns.host(col("canon")))
       // an absent/unparseable lastmod must not silently exempt a page
       // from recrawl forever (lastmod is OPTIONAL in the protocol):
       // unknown freshness is DUE at minimum urgency — age defaults to
@@ -185,17 +185,11 @@ object Sitemap {
           col("interval_days")))
       .withColumn("score", (col("age_days") - col("interval_days")) * prioM)
       .filter(col("age_days") >= col("interval_days"))
-    val ord = Seq(col("score").desc, col("canon").asc)
-    scored
-      .withColumn("__salt", pmod(hash(col("canon")), lit(salts)))
-      .withColumn("__lr", row_number().over(
-        Window.partitionBy(col("host"), col("__salt")).orderBy(ord: _*)))
-      .filter(col("__lr") <= cap)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("host")).orderBy(ord: _*)).cast("long"))
-      .filter(col("rank") <= cap)
+    graft.ext.PipelineOps5.cappedPerGroup(scored, group = col("host"),
+        order = Seq(col("score").desc, col("canon").asc), key = hash(col("canon")),
+        n = lit(cap), salts = salts)
       .select(col("host"), col("canon"), col("age_days"), col("interval_days"),
-        col("score"), col("rank"))
+        col("score"), col("rnk").as("rank"))
   }
 
   /** X-URL9 — the recrawl scheduler composed with discovery: the
@@ -222,14 +216,14 @@ object Sitemap {
        |  FROM documents),
        |c AS (
        |  SELECT canon, lastmod, changefreq, priority FROM (
-       |    SELECT ${graft.clean.UrlFns.canonicalUrlDuck("loc")} AS canon,
+       |    SELECT ${UrlFns.canonicalUrlDuck("loc")} AS canon,
        |      substr(lastmod, 1, 10) AS lastmod, changefreq, priority,
-       |      row_number() OVER (PARTITION BY ${graft.clean.UrlFns.canonicalUrlDuck("loc")}
+       |      row_number() OVER (PARTITION BY ${UrlFns.canonicalUrlDuck("loc")}
        |        ORDER BY substr(lastmod, 1, 10) DESC, changefreq, priority) AS rn
        |    FROM d) WHERE rn = 1),
        |s0 AS (
        |  SELECT canon,
-       |    regexp_extract(canon, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS host,
+       |    ${UrlFns.hostDuck("canon")} AS host,
        |    CAST(date_diff('day', TRY_CAST(NULLIF(lastmod, '') AS DATE), DATE '2026-03-01') AS BIGINT) AS raw_age,
        |    CAST(CASE WHEN lower(changefreq) IN ('always','hourly','daily') THEN 1
        |         WHEN lower(changefreq) = 'weekly' THEN 7
@@ -328,9 +322,9 @@ object Sitemap {
        |      '?utm_source=feed&id=' || CAST(doc_id % 5 AS VARCHAR) AS raw_loc
        |  FROM documents),
        |c AS (
-       |  SELECT doc_id, ${graft.clean.UrlFns.canonicalUrlDuck("raw_loc")} AS canon
+       |  SELECT doc_id, ${UrlFns.canonicalUrlDuck("raw_loc")} AS canon
        |  FROM d)
-       |SELECT regexp_extract(canon, '^[a-z0-9+.-]+://([^/:?#]+)', 1) AS host,
+       |SELECT ${UrlFns.hostDuck("canon")} AS host,
        |  CAST(COUNT(*) AS BIGINT) AS n_entries,
        |  CAST(COUNT(DISTINCT canon) AS BIGINT) AS n_canonical
        |FROM c GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
@@ -364,8 +358,8 @@ object Sitemap {
       s"$p/index.xml"
     }
     readUrlEntriesViaIndex(s, out)
-      .select(graft.clean.UrlFns.canonicalUrl(col("loc")).as("canon"))
-      .groupBy(regexp_extract(col("canon"), "^[a-z0-9+.-]+://([^/:?#]+)", 1).as("host"))
+      .select(UrlFns.canonicalUrl(col("loc")).as("canon"))
+      .groupBy(UrlFns.host(col("canon")).as("host"))
       .agg(count(lit(1)).as("n_entries"),
         countDistinct(col("canon")).as("n_canonical"))
       .orderBy("host")

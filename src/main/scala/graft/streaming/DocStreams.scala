@@ -349,35 +349,15 @@ object DocStreams {
 
   /** Stream-capable robots gate (x_url6): mark each streamed URL
     * allowed/blocked against a STATIC parsed-rules frame
-    * ([[graft.ext.RobotsTxt.parseRobots]] output) — a stream-static
-    * join on host plus the per-URL winner resolved WITHOUT a window
-    * (windows don't stream): the max_by(struct) aggregation keyed by
-    * doc_id picks the most specific rule under the same (hit, length,
-    * allow, pattern) ordering the batch gate uses.
+    * ([[graft.ext.RobotsTxt.parseRobots]] output) — the batch gate's one
+    * body ([[graft.ext.RobotsTxt.robotsGate]]): a stream-static join on
+    * host plus the per-URL winner as a doc_id-keyed max_by aggregation
+    * (windows don't stream). Output (doc_id, urlCol, allowed).
     */
   def robotsGated(docs: DataFrame, rules: DataFrame,
-      urlCol: String = "url"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val u = docs
-      .withColumn("__canon", graft.clean.UrlFns.canonicalUrl(col(urlCol)))
-      .withColumn("__host", regexp_extract(col("__canon"), "^[a-z0-9+.-]+://([^/:?#]+)", 1))
-      .withColumn("__path", regexp_replace(col("__canon"), "^[a-z0-9+.-]+://[^/?#]*", ""))
-      .withColumn("__pathd", graft.ext.RobotsTxt.pctDecodeUnreserved(col("__path")))
-    // rule-shape routing is SHARED with the batch gate (RobotsTxt.routedRx/
-    // routedHit): wildcard-free patterns never touch RLIKE; __rx is NULL
-    // for them, so batch and streaming verdicts cannot drift
-    u.join(rules.withColumnRenamed("host", "__host"), Seq("__host"), "left")
-      .withColumn("__rx", graft.ext.RobotsTxt.routedRx(col("pattern")))
-      .withColumn("__hit", graft.ext.RobotsTxt.routedHit(
-        col("__pathd"), col("pattern"), expr("__pathd RLIKE __rx")))
-      .groupBy("doc_id")
-      .agg(expr(
-        """max_by(CASE WHEN __hit THEN allow ELSE NULL END,
-          |  struct(__hit, length(pattern), allow, pattern))""".stripMargin).as("__best"),
-        first(col(urlCol)).as(urlCol))
-      .select(col("doc_id"), col(urlCol),
-        coalesce(col("__best").cast("long"), lit(1L)).as("allowed"))
-  }
+      urlCol: String = "url"): DataFrame =
+    graft.ext.RobotsTxt.robotsVerdicts(docs.select(col("doc_id"), col(urlCol).as("url")), rules)
+      .select(col("doc_id"), col("url").as(urlCol), col("allowed"))
 
   /** Stream-capable LEARNED quality scoring — x_qc1/x_qc3's ridge model
     * at the stream door: the coefficient row comes from a model trained

@@ -1,6 +1,7 @@
 package graft.util
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
 
 /** Scratch directories for probes that materialize a parquet stage or a
   * persisted-store round trip. Every directory is registered for
@@ -26,6 +27,18 @@ object TempDirs {
     val p = Files.createTempDirectory(prefix)
     created.add(p)
     p.toString
+  }
+
+  /** Stage `df` at `path`: write it as parquet (overwrite) and return
+    * the read-back. A plan with several consumers of one expensive
+    * subtree reads the staged columns instead of re-running the subtree
+    * once per consumer (the staged-write discipline of the composed
+    * pipelines). The returned frame reads `path` lazily: rewriting the
+    * path invalidates it.
+    */
+  def staged(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.parquet(path)
   }
 
   def deleteRecursively(p: Path): Unit = deleteRecursively(p.toFile)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** frontierPlan edges the x_pipe10 hash can't see: hosts with no
   * robots file at all, a cap that never binds, and the salted
-  * two-level cap's exactness against a flat rank.
+  * two-level cap's exactness against a flat rank; the robots gate's
+  * prefix verdicts and hostCap against a flat window.
   */
 class FrontierSpec extends SparkSuite {
   import spark.implicits._
@@ -132,5 +133,49 @@ class FrontierSpec extends SparkSuite {
     // table must be unpersisted before return
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(added.size <= 1, s"leaked ${added.size} persisted RDDs")
+  }
+
+  test("robotsGate: longest prefix wins, allow wins ties, no-rule default-allows") {
+    val rules = Seq(
+      ("a.com", "/private", 0L),
+      ("a.com", "/private/ok", 1L),
+      ("a.com", "/p", 1L)).toDF("host", "pattern", "allow")
+    val urls = Seq(
+      (1L, "https://a.com/private/data"),   // /private disallow wins over /p allow (longer)
+      (2L, "https://a.com/private/ok/x"),   // /private/ok allow wins (longest)
+      (3L, "https://a.com/public"),         // only /p matches -> allow
+      (4L, "https://a.com/other"),          // no rule matches -> default allow
+      (5L, "https://b.com/private/data")).toDF("doc_id", "url") // unknown host -> allow
+    val got = graft.ext.RobotsTxt.robotsGate(urls, rules)
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(3))).toList
+    assert(got == List((1L, 0L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L)), got.mkString(", "))
+  }
+
+  test("hostCap: salted two-level == flat window on a skewed single host") {
+    import org.apache.spark.sql.expressions.Window
+    // one mega-host (200 docs), one small host (2 docs) — the salted
+    // path must pick the identical survivors a flat window would
+    val mega = (1L to 200L).map(i =>
+      (i, s"http://big.com/p$i",
+        "the quick brown fox and the dog ran to the big red barn " + ("w " * (i % 37).toInt)))
+    val small = Seq(
+      (501L, "http://tiny.org/a", "the cat and the dog sat in the sun for a while today"),
+      (502L, "http://tiny.org/b", "!!!! #### 0000"))
+    val docs = (mega ++ small).toDF("doc_id", "url", "text")
+    val got = Frontier.hostCap(docs, col("url"), cap = 3, salts = 8)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    val q = graft.ext.PipelineOps3.addQualityRuleSignals(docs)
+      .select(col("doc_id"),
+        regexp_extract(graft.clean.UrlFns.canonicalUrl(col("url")),
+          "^[a-z0-9+.-]+://([^/:?#]+)", 1).as("host"),
+        col("keep"), col("n_words"))
+    val flat = q.withColumn("host_rank", row_number().over(
+        Window.partitionBy("host")
+          .orderBy(col("keep").desc, col("n_words").desc, col("doc_id").asc)).cast("long"))
+      .filter(col("host_rank") <= 3)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(4))).sorted.toSeq
+    assert(got == flat && got.size == 5, s"got ${got.size} rows")
+    val viaDoor = graft.api.Corpus(docs).capPerHost().df.count()
+    assert(viaDoor == 5L)
   }
 }

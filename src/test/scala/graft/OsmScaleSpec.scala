@@ -133,7 +133,7 @@ class OsmScaleSpec extends SparkSuite {
 
     // the full 5-table ETL over the splittable scan == over the stock scan
     val ts = OsmPipeline.process(spark, xml, splittable = true)
-    val t0 = OsmPipeline.process(spark, xml)
+    val t0 = OsmPipeline.process(spark, xml, splittable = false)
     def rows(d: org.apache.spark.sql.DataFrame, keys: String*) =
       d.orderBy(keys.map(col): _*).collect().map(_.toSeq).toSeq
     assert(rows(ts.nodeTags, "id", "key") == rows(t0.nodeTags, "id", "key"))
@@ -234,6 +234,38 @@ class OsmScaleSpec extends SparkSuite {
       val got = rows(graft.osm.OsmSplittable.readNodesRaw(spark, xml, split))
       assert(got == stock, s"split=$split: ${got.length} rows")
     }
+  }
+
+  test("process scans splittably by default: an oversized element costs one row, not the file tail") {
+    // node 40 carries three 300 KB attributes. The stock XML source stops
+    // there without an error: ids 1–39 plus one all-null row, and nodes
+    // 41–60 are gone. The default scan keeps every later node and turns
+    // node 40 into one all-null row, which `validated` rejects.
+    val dir = Files.createTempDirectory("osm_big_attrs").toString
+    val xml = s"$dir/attrs.osm"
+    val w = Files.newBufferedWriter(Paths.get(xml), java.nio.charset.StandardCharsets.UTF_8)
+    w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n")
+    (1 to 60).foreach { i =>
+      val big = if (i == 40) Seq("x", "y", "z").map(a => s""" $a="${"u>v" * 100000}"""").mkString
+        else ""
+      w.write(s"""  <node id="$i" lat="30.$i" lon="-97.$i" version="1" timestamp="2016-01-01T00:00:00Z" changeset="1" uid="1" user="u$i"$big>
+    <tag k="name" v="n$i"/>
+  </node>\n""")
+    }
+    w.write("</osm>\n")
+    w.close()
+
+    val ids = OsmPipeline.process(spark, xml).nodes.select("id").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    assert(ids.flatten.sorted == (1L to 60L).filter(_ != 40L), s"${ids.flatten.length} ids")
+    assert(ids.count(_.isEmpty) == 1)
+    // collect, not count: a count reads no checked column, so the
+    // optimizer prunes the checks away
+    val e = intercept[Exception](
+      OsmPipeline.validated(OsmPipeline.process(spark, xml)).nodes.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("validation failed: nodes.id")), msgs.mkString("\n"))
   }
 
   test("splittable XML source: default split width follows Spark's file-split rule") {

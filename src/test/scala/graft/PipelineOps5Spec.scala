@@ -19,7 +19,7 @@ class PipelineOps5Spec extends SparkSuite {
       (4010L until 4012L).map(id => (id, "small_b", 0L))
     val df = rows.toDF("id", "grp", "score")
     val got = PipelineOps5.cappedPerGroup(df, group = col("grp"),
-        order = Seq(col("score").desc, col("id")), key = col("id"), n = 15)
+        order = Seq(col("score").desc, col("id")), key = col("id"), n = lit(15))
       .select(col("id"), col("grp"), col("rnk"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
     val w = Window.partitionBy(col("grp")).orderBy(col("score").desc, col("id"))
@@ -31,6 +31,22 @@ class PipelineOps5Spec extends SparkSuite {
     // groups smaller than the cap survive whole
     assert(got.count(_._2 == "small_b") == 2)
     assert(got.count(_._2 == "big") == 15)
+    // a per-row n (constant within each group): the same containment
+    val budget = df.withColumn("n_take",
+      when(col("grp") === "big", lit(40L)).when(col("grp") === "small_a", lit(4L))
+        .otherwise(lit(5L)))
+    val gotN = PipelineOps5.cappedPerGroup(budget, group = col("grp"),
+        order = Seq(col("score").desc, col("id")), key = col("id"), n = col("n_take"),
+        salts = 16)
+      .select(col("id"), col("grp"), col("rnk"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    val wantN = budget.withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= col("n_take"))
+      .select(col("id"), col("grp"), col("rnk"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    assert(gotN == wantN)
+    assert(gotN.count(_._2 == "big") == 40 && gotN.count(_._2 == "small_a") == 4 &&
+      gotN.count(_._2 == "small_b") == 2)
   }
 
   test("boilerplateScore separates template docs from unique docs") {

@@ -30,20 +30,52 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("no probe plans a CartesianProduct") {
+    import scala.jdk.CollectionConverters._
     import scala.util.{Failure, Success, Try}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
     val dir = "/root/testdata/sf0.001"
     // a fresh session carries no temp functions, so a probe that still
     // depends on GraftExtensions.register fails here, by name
     val fresh = spark.newSession()
-    val audited = SparkEntry.probes.map { p =>
-      Try { val df = p.run(fresh, dir); df.queryExecution.assertAnalyzed(); df } match {
-        case Failure(e) => (Some(s"${p.name}: $e"), None)
+    // the plans a probe RUNS while it builds (staged writes, train-once
+    // builds, collects inside operators) are audited with the plan it
+    // returns: the listener records every executed plan of the session
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // listener events arrive in order, after the action returns: once a
+    // sentinel action's plan is seen, every earlier plan has been too
+    def drained(): Seq[QueryExecution] = {
+      val sentinel = fresh.range(1).toDF()
+      sentinel.collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.asScala.exists(_ eq sentinel.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(seen.asScala.exists(_ eq sentinel.queryExecution), "listener events stopped")
+      val got = seen.asScala.toSeq.filterNot(_ eq sentinel.queryExecution)
+      seen.clear()
+      got
+    }
+    def cartesian(qe: QueryExecution): Boolean =
+      Try(qe.executedPlan.toString).getOrElse("").contains("CartesianProduct")
+    fresh.listenerManager.register(listener)
+    val audited = try SparkEntry.probes.map { p =>
+      val built = Try { val df = p.run(fresh, dir); df.queryExecution.assertAnalyzed(); df }
+      val ran = drained()
+      built match {
+        case Failure(e) => (Some(s"${p.name}: $e"), None, ran.size)
         case Success(df) =>
           // planning errors past analysis are the oracle's job
-          val plan = Try(df.queryExecution.executedPlan.toString).getOrElse("")
-          (None, if (plan.contains("CartesianProduct")) Some(p.name) else None)
+          (None, if (cartesian(df.queryExecution) || ran.exists(cartesian)) Some(p.name)
+            else None, ran.size)
       }
-    }
+    } finally fresh.listenerManager.unregister(listener)
+    // x_url11 stages its redirect edges on every run: the listener saw it
+    val url11 = SparkEntry.probes.map(_.name).indexOf("x_url11_redirect_frontier")
+    assert(audited(url11)._3 >= 1, "no internal plan recorded for x_url11")
     val broken = audited.flatMap(_._1)
     assert(broken.isEmpty, s"probes failing to build or analyse:\n${broken.mkString("\n")}")
     val offenders = audited.flatMap(_._2)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.RobotsTxt
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** robots.txt parsing: RFC 9309 grammar pins on planted files — group
@@ -105,15 +106,28 @@ class RobotsTxtSpec extends SparkSuite {
       yield (h, r._1, r._2)
     val prefixRules = ruleRows.toDF("host", "prefix", "allow")
     val wildRules = ruleRows.toDF("host", "pattern", "allow")
-    val a = graft.ext.PipelineOps13.robotsGate(urls, prefixRules)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(3))).toList
-    val b = RobotsTxt.robotsGateWild(urls, wildRules)
+    // the prefix gate as a flat window: longest matching prefix wins,
+    // allow wins length ties, no match allows
+    val canon = graft.clean.UrlFns.canonicalUrl(col("url"))
+    val hit = col("prefix").isNotNull && expr("startswith(path, prefix)")
+    val a = urls
+      .select(col("doc_id"),
+        regexp_extract(canon, "^[a-z0-9+.-]+://([^/:?#]+)", 1).as("host"),
+        regexp_replace(canon, "^[a-z0-9+.-]+://[^/?#]*", "").as("path"))
+      .join(prefixRules, Seq("host"), "left")
+      .withColumn("hit", hit)
+      .withColumn("rn", row_number().over(Window.partitionBy("doc_id").orderBy(
+        col("hit").desc, length(col("prefix")).desc, col("allow").desc, col("prefix").asc)))
+      .filter(col("rn") === 1)
+      .select(col("doc_id"), when(col("hit"), col("allow").cast("long")).otherwise(lit(1L)))
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toList
+    val b = RobotsTxt.robotsGate(urls, wildRules)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(3))).toList
     assert(a == b && a.nonEmpty, s"${a.take(5)} vs ${b.take(5)}")
   }
 
   test("routing pin: wildcard-free rules never touch RLIKE (NULL __rx)") {
-    // robotsGateWild computes __rx = NULL for wildcard-free patterns and
+    // robotsGate computes __rx = NULL for wildcard-free patterns and
     // routes them to startsWith/equality; if a routing slip sent them to
     // the RLIKE branch, RLIKE(path, NULL) would yield NO hit and these
     // disallows would default-allow — so the 0s below prove the
@@ -126,7 +140,7 @@ class RobotsTxtSpec extends SparkSuite {
       ("h.com", "/exact$", 0),  // wildcard-free anchored
       ("h.com", "/*/data$", 0)  // the only rule allowed to regex
     ).toDF("host", "pattern", "allow")
-    val got = RobotsTxt.robotsGateWild(urls, rules).orderBy("doc_id")
+    val got = RobotsTxt.robotsGate(urls, rules).orderBy("doc_id")
       .collect().map(_.getLong(3)).toList
     assert(got == List(0L, 0L, 0L, 1L), got.mkString(", "))
   }
@@ -135,11 +149,11 @@ class RobotsTxtSpec extends SparkSuite {
     val urls = Seq((1L, "https://h.com/ab"), (2L, "https://h.com/abc"),
       (3L, "https://h.com/a$b")).toDF("doc_id", "url")
     val anchored = Seq(("h.com", "/ab$", 0)).toDF("host", "pattern", "allow")
-    val gotA = RobotsTxt.robotsGateWild(urls, anchored).orderBy("doc_id")
+    val gotA = RobotsTxt.robotsGate(urls, anchored).orderBy("doc_id")
       .collect().map(_.getLong(3)).toList
     assert(gotA == List(0L, 1L, 1L), gotA.mkString(", ")) // only exact /ab blocked
     val literal = Seq(("h.com", "/a$b", 0)).toDF("host", "pattern", "allow")
-    val gotL = RobotsTxt.robotsGateWild(urls, literal).orderBy("doc_id")
+    val gotL = RobotsTxt.robotsGate(urls, literal).orderBy("doc_id")
       .collect().map(_.getLong(3)).toList
     assert(gotL == List(1L, 1L, 0L), gotL.mkString(", ")) // only literal /a$b blocked
   }

@@ -341,7 +341,7 @@ class StreamingSpec extends SparkSuite {
       val got = spark.table("rg_out")
         .collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
       val want = graft.ext.RobotsTxt
-        .robotsGateWild(urls(Tables(spark, dir, "documents")), rules)
+        .robotsGate(urls(Tables(spark, dir, "documents")), rules)
         .collect().map(r => (r.getLong(0), r.getLong(3))).sorted.toSeq
       val oracle = graft.ext.RobotsTxt.all.find(_.name == "x_url6_robots_parse").get
         .run(spark, dir).select("doc_id", "allowed")

@@ -22,6 +22,28 @@ class UrlFnsSpec extends SparkSuite {
     assert(canon("http://a.com:8080/x") == "http://a.com:8080/x")
   }
 
+  test("host/path split of canonical URLs: port, query, fragment, empty path") {
+    def split(u: String): (String, String) = {
+      val c = UrlFns.canonicalUrl(col("u"))
+      val r = Seq(u).toDF("u").select(UrlFns.host(c), UrlFns.path(c)).collect()(0)
+      (r.getString(0), r.getString(1))
+    }
+    // a non-default port stays in the canonical authority, never in the host
+    assert(split("HTTP://Site.COM:8080/a/B?x=1#f") == ("site.com", "/a/B?x=1"))
+    assert(split("https://a.com:443/p") == ("a.com", "/p"))
+    // query without a path; fragment-only remainder; empty path
+    assert(split("https://a.com?q=1") == ("a.com", "?q=1"))
+    assert(split("https://a.com/#top") == ("a.com", "/"))
+    assert(split("https://a.com") == ("a.com", ""))
+    // no scheme: no host, the whole string is the remainder
+    assert(split("a.com/x") == ("", "a.com/x"))
+    // the DuckDB fragments the oracles embed, byte for byte
+    assert(UrlFns.hostDuck("canon") ==
+      "regexp_extract(canon, '^[a-z0-9+.-]+://([^/:?#]+)', 1)")
+    assert(UrlFns.pathDuck("canon") ==
+      "regexp_replace(canon, '^[a-z0-9+.-]+://[^/?#]*', '', 'g')")
+  }
+
   test("fragment dropped; queryless and fragmentless URLs pass through") {
     assert(canon("http://a.com/x#frag#more") == "http://a.com/x")
     assert(canon("http://a.com/x") == "http://a.com/x")
