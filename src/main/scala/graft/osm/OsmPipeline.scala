@@ -1,7 +1,9 @@
 package graft.osm
 
 import graft.clean.CleanFns
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,10 +12,11 @@ import org.apache.spark.sql.types._
   * :297-332 process_map; column order Step_2:56-60; types schema.py:5-65).
   *
   * Architecture: instead of the reference's one-element-at-a-time
-  * imperative loop, this is two declarative scans (rowTag=node / rowTag=way)
-  * feeding five independent narrow pipelines — zero shuffles for the whole
-  * ETL, so at 100 TB it parallelizes embarrassingly across the input splits
-  * and cleaning stays inside whole-stage codegen.
+  * imperative loop, this is one declarative scan that yields the nodes
+  * and the ways together (one element frame, OsmSplittable) feeding five
+  * independent narrow pipelines, written as five concurrent jobs — zero
+  * shuffles for the whole ETL, so at 100 TB it parallelizes embarrassingly
+  * across the input splits and cleaning stays inside whole-stage codegen.
   */
 object OsmPipeline {
 
@@ -83,24 +86,35 @@ object OsmPipeline {
     */
   def process(spark: SparkSession, path: String, strict: Boolean = false,
       cache: Boolean = false, splittable: Boolean = true): OsmTables = {
+    // splittable (the default) = one scan via XmlElementInputFormat
+    // (OsmSplittable) yields the nodes and the ways together, like the
+    // reference's single iterparse (Step_2:191-199): one task per file
+    // split, and an element it cannot parse becomes ONE all-null row,
+    // which `validated` rejects. The stock XML source (splittable = false)
+    // is two scans, one task per file each, and an element past its
+    // parser's limits silently ends the scan: every later element of the
+    // file is lost (OsmScaleSpec pins the default).
     // cache = the reference's single-pass fan-out (1 scan → 5 sinks,
-    // Step_2:320-332): persist the two raw scans so the five table
-    // pipelines share them instead of re-parsing the XML five times.
-    // splittable (the default) = scan via XmlElementInputFormat
-    // (OsmSplittable): one task per file split, and an element it cannot
-    // parse becomes ONE all-null row, which `validated` rejects. The
-    // stock XML source (splittable = false) is one task per file, and an
-    // element past its parser's limits silently ends the scan: every
-    // later element of the file is lost (OsmScaleSpec pins the default).
-    val nodesRaw0 =
-      if (splittable) OsmSplittable.readNodesRaw(spark, path)
-      else readNodesRaw(spark, path)
-    val waysRaw0 =
-      if (splittable) OsmSplittable.readWaysRaw(spark, path)
-      else readWaysRaw(spark, path)
-    val nodesRaw = if (cache) nodesRaw0.persist() else nodesRaw0
-    val waysRaw = if (cache) waysRaw0.persist() else waysRaw0
+    // Step_2:320-332): persist the scan (the one element frame, or the
+    // stock source's two) so the five table pipelines share it instead
+    // of re-parsing the XML five times.
+    if (splittable) {
+      val elements0 = OsmSplittable.readElements(spark, path)
+      val elements = if (cache) elements0.persist() else elements0
+      tables(OsmSplittable.nodes(elements), OsmSplittable.ways(elements), strict)
+    } else {
+      val nodesRaw = readNodesRaw(spark, path)
+      val waysRaw = readWaysRaw(spark, path)
+      if (cache) tables(nodesRaw.persist(), waysRaw.persist(), strict)
+      else tables(nodesRaw, waysRaw, strict)
+    }
+  }
 
+  /** The five table pipelines over the raw node and way scans (columns as
+    * `nodeXmlSchema` / `wayXmlSchema`); each table is one projection (or
+    * explode) of its raw scan.
+    */
+  def tables(nodesRaw: DataFrame, waysRaw: DataFrame, strict: Boolean = false): OsmTables = {
     val nodes = nodesRaw.select(
       col("_id").as("id"), col("_lat").as("lat"), col("_lon").as("lon"),
       col("_user").as("user"), col("_uid").as("uid"), col("_version").as("version"),
@@ -122,18 +136,27 @@ object OsmPipeline {
 
   /** V1 — the validation stage as a flag, like the reference's `validate`:
     * assert required fields non-null; any violation fails the job with a
-    * descriptive error (cerberus raise semantics, Step_2:232-239).
+    * descriptive error (cerberus raise semantics, Step_2:232-239). Every
+    * consumer of a validated table runs the checks — a count as much as
+    * a full write.
     */
   def validated(t: OsmTables): OsmTables = {
-    def check(df: DataFrame, table: String, cols: Seq[String]): DataFrame =
-      cols.foldLeft(df) { (d, c) =>
-        d.withColumn(c,
-          when(col(c).isNull,
-            // a null id must not null the message (concat of a null is null)
-            raise_error(concat(lit(s"validation failed: $table.$c is null for id="),
-              coalesce(col("id").cast("string"), lit("null")))))
-            .otherwise(col(c)))
+    // One predicate per row, true or raising on the first null required
+    // column, evaluated by a one-row generator, not by `filter` or
+    // `withColumn`: a consumer that reads no checked column prunes a
+    // projection, and the optimizer pushes a filter below the projections
+    // that compute the checked columns, so they run twice (for the tag
+    // tables, the cleaning regexes). It does neither to a generator.
+    def check(df: DataFrame, table: String, cols: Seq[String]): DataFrame = {
+      val valid = cols.foldRight(lit(true)) { (c, rest) =>
+        when(col(c).isNull,
+          // a null id must not null the message (concat of a null is null)
+          raise_error(concat(lit(s"validation failed: $table.$c is null for id="),
+            coalesce(col("id").cast("string"), lit("null")))))
+          .otherwise(rest)
       }
+      df.withColumn("_valid", explode(array(valid))).drop("_valid")
+    }
     OsmTables(
       check(t.nodes, "nodes", Seq("id", "lat", "lon", "user", "uid", "version", "changeset", "timestamp")),
       check(t.nodeTags, "nodes_tags", Seq("id", "key", "value", "type")),
@@ -146,16 +169,8 @@ object OsmPipeline {
     * escape='"' pins RFC-4180 quote-doubling (like the reference's Python
     * csv writer) so the reader options in readCsv are an exact match.
     */
-  def writeCsv(t: OsmTables, dir: String): Unit = {
-    def wr(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").option("header", true)
-        .option("escape", "\"").csv(s"$dir/$name")
-    wr(t.nodes, "nodes")
-    wr(t.nodeTags, "nodes_tags")
-    wr(t.ways, "ways")
-    wr(t.wayNodes, "ways_nodes")
-    wr(t.wayTags, "ways_tags")
-  }
+  def writeCsv(t: OsmTables, dir: String): Unit =
+    writeAll(t, dir)(_.option("header", true).option("escape", "\"").csv(_))
 
   /** S5 — CSV read-back with pinned schemas (the query-side scan of the
     * reference, DAND.html:12026-12028): schema-on-read, no inference pass.
@@ -177,12 +192,33 @@ object OsmPipeline {
   }
 
   /** Parquet is the durable store at scale (columnar, splittable, stats). */
-  def writeParquet(t: OsmTables, dir: String): Unit = {
-    t.nodes.write.mode("overwrite").parquet(s"$dir/nodes")
-    t.nodeTags.write.mode("overwrite").parquet(s"$dir/nodes_tags")
-    t.ways.write.mode("overwrite").parquet(s"$dir/ways")
-    t.wayNodes.write.mode("overwrite").parquet(s"$dir/ways_nodes")
-    t.wayTags.write.mode("overwrite").parquet(s"$dir/ways_tags")
+  def writeParquet(t: OsmTables, dir: String): Unit =
+    writeAll(t, dir)(_.parquet(_))
+
+  /** The five table writes (`dir/<table name>`, mode overwrite) as
+    * concurrent jobs on the shared session, from a fixed pool of one
+    * thread per table: while one table's job has idle cores (its rows sit
+    * in a few of the scan's partitions), another table's tasks run on
+    * them; a cached scan is still built once (Spark's block lock makes a
+    * second reader of a partition wait for the first). Waits for all five
+    * writes, then rethrows the first failure.
+    */
+  private def writeAll(t: OsmTables, dir: String)(
+      write: (DataFrameWriter[Row], String) => Unit): Unit = {
+    val sinks = Seq("nodes" -> t.nodes, "nodes_tags" -> t.nodeTags, "ways" -> t.ways,
+      "ways_nodes" -> t.wayNodes, "ways_tags" -> t.wayTags)
+    val pool = Executors.newFixedThreadPool(sinks.length)
+    try {
+      val writes = sinks.map { case (name, df) =>
+        pool.submit(new Callable[Unit] {
+          def call(): Unit = write(df.write.mode("overwrite"), s"$dir/$name")
+        })
+      }
+      val failures = writes.flatMap { w =>
+        try { w.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
   }
 
   /** S6 — register under the notebook's table names (DAND.html:12095-12555

@@ -39,14 +39,24 @@ object OsmProbes {
     */
   private def materialize(s: SparkSession): Unit = synchronized {
     if (materializedBy != oracleDir) {
-      val t = OsmPipeline.process(s, fixturePath, cache = true)
-      OsmPipeline.writeParquet(t, oracleDir)
-      OsmQueries.rawTags(
-          OsmSplittable.readNodesRaw(s, fixturePath), OsmSplittable.readWaysRaw(s, fixturePath))
-        .coalesce(1).write.mode("overwrite").parquet(s"$oracleDir/raw_tags")
-      t.nodes.unpersist(); t.ways.unpersist() // process(cache=true) persisted the raw scans
+      writeTables(s, oracleDir)
       materializedBy = oracleDir
     }
+  }
+
+  /** The ETL behind [[materialize]], into `dir`: the fixture is scanned
+    * once into one cached element frame, which feeds the five tables and
+    * raw_tags and is released afterwards.
+    */
+  private[graft] def writeTables(s: SparkSession, dir: String): Unit = {
+    val elements = OsmSplittable.readElements(s, fixturePath).persist()
+    try {
+      val nodesRaw = OsmSplittable.nodes(elements)
+      val waysRaw = OsmSplittable.ways(elements)
+      OsmPipeline.writeParquet(OsmPipeline.tables(nodesRaw, waysRaw), dir)
+      OsmQueries.rawTags(nodesRaw, waysRaw)
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/raw_tags")
+    } finally elements.unpersist()
   }
 
   /** Read-back of the materialized tables: the Spark side of every probe

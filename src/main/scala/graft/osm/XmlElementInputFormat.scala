@@ -11,7 +11,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 /** Splittable XML-element input format: one record per `<rowTag ...>`
-  * element, from a SINGLE (possibly huge) uncompressed XML file.
+  * element of any of the selected row tags, from a SINGLE (possibly huge)
+  * uncompressed XML file, in file order, in one pass: selecting `node`
+  * and `way` reads an OSM file once for both element types.
   *
   * The split contract (the same one every line-based Hadoop reader uses):
   * a record BELONGS to the split in which its start tag begins; a reader
@@ -30,10 +32,16 @@ import org.apache.spark.sql.SparkSession
   * window only grows (doubling) while one element is longer than it, and
   * memory stays O(one element + window).
   *
+  * At each `<` the reader takes the first selected tag whose name matches
+  * and is followed by a boundary byte (so `<nodeset` is not a `node`, and
+  * of the tags `way` and `wayx`, `<wayx ` is a `wayx`), then scans for
+  * that tag's end tag.
+  *
   * XML assumptions (hold for any conformant writer, incl. OSM exports):
   * `<` is escaped inside attribute values, so raw `<rowTag` / `</rowTag>`
   * byte sequences only occur as real markup; elements of the same name do
-  * not nest (true for OSM node/way/relation). Attribute values MAY contain
+  * not nest, and the selected tags do not nest inside one another (true
+  * for OSM node/way/relation). Attribute values MAY contain
   * unescaped `>`, so root-tag scanning tracks quote state. The scanner
   * does NOT skip XML comments or CDATA sections — a literal `<rowTag` /
   * `</rowTag>` inside `<!-- -->` or `<![CDATA[ ]]>` would yield a phantom
@@ -51,21 +59,23 @@ class XmlElementInputFormat extends FileInputFormat[LongWritable, Text] {
 }
 
 object XmlElementInputFormat {
-  /** Configuration key naming the element to extract (e.g. "node"). */
+  /** Configuration key naming the elements to extract, comma-separated
+    * (e.g. "node" or "node,way").
+    */
   val ROW_TAG_KEY = "graft.xml.rowtag"
 
-  /** Every `rowTag` element under `path`, keyed by its start tag's byte
-    * offset, split by [[graft.Tables.hadoopFile]]'s rule.
+  /** Every element of the `rowTags` under `path`, keyed by its start tag's
+    * byte offset, split by [[graft.Tables.hadoopFile]]'s rule.
     */
-  def elements(spark: SparkSession, path: String, rowTag: String,
+  def elements(spark: SparkSession, path: String, rowTags: Seq[String],
       maxSplitBytes: Option[Long]): RDD[(LongWritable, Text)] =
     graft.Tables.hadoopFile(spark, path, classOf[XmlElementInputFormat],
-      maxSplitBytes, ROW_TAG_KEY -> rowTag)
+      maxSplitBytes, ROW_TAG_KEY -> rowTags.mkString(","))
 }
 
 class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
-  private var startTag: Array[Byte] = _
-  private var endTag: Array[Byte] = _
+  private var startTags: Array[Array[Byte]] = _
+  private var endTags: Array[Array[Byte]] = _
   private var start = 0L
   private var end = 0L
   private var fsIn: org.apache.hadoop.fs.FSDataInputStream = _
@@ -83,10 +93,10 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
 
   override def initialize(genericSplit: InputSplit, ctx: TaskAttemptContext): Unit = {
     val split = genericSplit.asInstanceOf[FileSplit]
-    val rowTag = ctx.getConfiguration.get(XmlElementInputFormat.ROW_TAG_KEY)
-    require(rowTag != null && rowTag.nonEmpty, s"${XmlElementInputFormat.ROW_TAG_KEY} not set")
-    startTag = ("<" + rowTag).getBytes(StandardCharsets.UTF_8)
-    endTag = ("</" + rowTag + ">").getBytes(StandardCharsets.UTF_8)
+    val rowTags = ctx.getConfiguration.getTrimmedStrings(XmlElementInputFormat.ROW_TAG_KEY)
+    require(rowTags.nonEmpty, s"${XmlElementInputFormat.ROW_TAG_KEY} not set")
+    startTags = rowTags.map(t => ("<" + t).getBytes(StandardCharsets.UTF_8))
+    endTags = rowTags.map(t => ("</" + t + ">").getBytes(StandardCharsets.UTF_8))
     start = split.getStart
     end = start + split.getLength
     // the reader scans RAW bytes: on compressed input the tag scan would
@@ -106,7 +116,9 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
 
   /** Make `n` unread bytes available at `p`; false only at EOF. A full
     * window first drops the bytes before `mark` (or `p`), and grows only
-    * when nothing can be dropped.
+    * when nothing can be dropped. A read stops at the split end, and past
+    * it reads 64 KiB at a time: there only the last element's tail is
+    * needed, not a window of the next split's bytes.
     */
   private def fill(n: Int): Boolean = {
     while (lim - p < n && !eof) {
@@ -118,25 +130,47 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
           if (mark >= 0) mark = 0
         } else buf = java.util.Arrays.copyOf(buf, buf.length * 2)
       }
-      val r = fsIn.read(buf, lim, buf.length - lim)
+      val len = math.min(buf.length - lim, math.max(end - (bufStart + lim), 1L << 16)).toInt
+      val r = fsIn.read(buf, lim, len)
       if (r < 0) eof = true else lim += r
     }
     lim - p >= n
   }
 
-  /** Move `p` onto the next occurrence of `tag` (whose only `<` is its
-    * first byte, so every match starts at a `<`). Returns false at EOF,
-    * or once the scan reaches file offset `stopAt` with no match starting
-    * before it. In start-tag search (`stopAt` = split end) a match is
-    * accepted only if its FIRST byte lies before the split end: a start
-    * tag beginning at/after `end`, even one reached through a partial
-    * match crossing the boundary (e.g. "<nod<node"), is the next split's
+  /** Move `p` onto the next start tag of a selected element and return
+    * its index in `startTags`: at each `<`, the first tag whose bytes and
+    * boundary byte match. Returns -1 at EOF, or once the scan reaches the
+    * split end with no start tag beginning before it: a start tag
+    * beginning at/after `end`, even one reached through a partial match
+    * crossing the boundary (e.g. "<nod<node"), is the next split's
     * element — emitting it here would duplicate it.
     */
-  private def seek(tag: Array[Byte], stopAt: Long): Boolean = {
+  private def seekStart(): Int = {
     while (true) {
       while (p < lim && buf(p) != '<') p += 1
-      if (bufStart + p >= stopAt) return false
+      if (bufStart + p >= end) return -1
+      if (p == lim) { if (!fill(1)) return -1 }
+      else {
+        var i = 0
+        while (i < startTags.length) {
+          val tag = startTags(i)
+          if (fill(tag.length + 1) &&
+              java.util.Arrays.equals(buf, p, p + tag.length, tag, 0, tag.length) &&
+              boundaryOk(buf(p + tag.length))) return i
+          i += 1
+        }
+        p += 1
+      }
+    }
+    -1
+  }
+
+  /** Move `p` onto the next occurrence of `tag` (an end tag, whose only
+    * `<` is its first byte, so every match starts at a `<`); false at EOF.
+    */
+  private def seekEnd(tag: Array[Byte]): Boolean = {
+    while (true) {
+      while (p < lim && buf(p) != '<') p += 1
       if (p == lim) { if (!fill(1)) return false }
       else if (!fill(tag.length)) return false
       else if (java.util.Arrays.equals(buf, p, p + tag.length, tag, 0, tag.length)) return true
@@ -157,44 +191,35 @@ class XmlElementRecordReader extends RecordReader[LongWritable, Text] {
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '>' || b == '/'
 
   override def nextKeyValue(): Boolean = {
-    while (true) {
-      mark = -1
-      if (!seek(startTag, end)) return false
-      mark = p
-      p += startTag.length
-      val b0 = next()
-      if (b0 == -1) return false
-      if (boundaryOk(b0)) {
-        // phase 1: the root tag itself, quote-aware ('>' is legal inside
-        // attribute values). Ends at '>' — "/>" completes the element.
-        var rootClosed = b0 == '>'
-        var selfClosed = false
-        var prev = b0
-        var inQuote = 0 // 0 = none, else the active quote char
-        while (!rootClosed && !selfClosed) {
-          val b = next()
-          if (b == -1) return false // malformed tail: drop it
-          if (inQuote != 0) { if (b == inQuote) inQuote = 0 }
-          else if (b == '"' || b == '\'') inQuote = b
-          else if (b == '>') { if (prev == '/') selfClosed = true else rootClosed = true }
-          prev = b
-        }
-        // phase 2 (open element): scan through the matching end tag.
-        // Same-name elements do not nest and '<' is escaped in values, so a
-        // raw end-tag byte match is the element end.
-        if (selfClosed || seek(endTag, Long.MaxValue)) {
-          if (!selfClosed) p += endTag.length
-          key.set(bufStart + mark)
-          value.set(buf, mark, p - mark)
-          return true
-        }
-        return false // EOF inside an element: malformed tail, drop it
-      }
-      // not a real start tag (e.g. "<nodeset"): keep scanning, unless we
-      // are already past the split end
-      if (bufStart + p >= end) return false
+    mark = -1
+    val i = seekStart()
+    if (i < 0) return false
+    mark = p
+    p += startTags(i).length
+    // phase 1: the root tag itself, quote-aware ('>' is legal inside
+    // attribute values). Ends at '>' — "/>" completes the element.
+    val b0 = next() // the boundary byte seekStart checked
+    var rootClosed = b0 == '>'
+    var selfClosed = false
+    var prev = b0
+    var inQuote = 0 // 0 = none, else the active quote char
+    while (!rootClosed && !selfClosed) {
+      val b = next()
+      if (b == -1) return false // malformed tail: drop it
+      if (inQuote != 0) { if (b == inQuote) inQuote = 0 }
+      else if (b == '"' || b == '\'') inQuote = b
+      else if (b == '>') { if (prev == '/') selfClosed = true else rootClosed = true }
+      prev = b
     }
-    false
+    // phase 2 (open element): scan through the matching end tag. Same-name
+    // elements do not nest, selected tags do not nest in one another, and
+    // '<' is escaped in values, so a raw end-tag byte match is the end.
+    if (selfClosed || seekEnd(endTags(i))) {
+      if (!selfClosed) p += endTags(i).length
+      key.set(bufStart + mark)
+      value.set(buf, mark, p - mark)
+      true
+    } else false // EOF inside an element: malformed tail, drop it
   }
 
   override def getCurrentKey: LongWritable = key

@@ -39,7 +39,7 @@ object Sitemap {
     */
   def readUrlEntries(spark: SparkSession, path: String,
       maxSplitBytes: Option[Long] = None): DataFrame = {
-    val rows = graft.osm.XmlElementInputFormat.elements(spark, path, "url", maxSplitBytes)
+    val rows = graft.osm.XmlElementInputFormat.elements(spark, path, Seq("url"), maxSplitBytes)
       .map { case (_, t) =>
         Row(new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8))
       }
@@ -277,7 +277,7 @@ object Sitemap {
     * `sitemap`: (loc, lastmod).
     */
   def readIndexEntries(spark: SparkSession, path: String): DataFrame = {
-    val rows = graft.osm.XmlElementInputFormat.elements(spark, path, "sitemap", None)
+    val rows = graft.osm.XmlElementInputFormat.elements(spark, path, Seq("sitemap"), None)
       .map { case (_, t) =>
         Row(new String(t.copyBytes(), java.nio.charset.StandardCharsets.UTF_8))
       }

@@ -1,6 +1,7 @@
 package graft
 
-import graft.osm.{OsmPipeline, XmlElementInputFormat}
+import graft.osm.{OsmPipeline, OsmProbes, OsmSplittable, XmlElementInputFormat}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
@@ -236,11 +237,10 @@ class OsmScaleSpec extends SparkSuite {
     }
   }
 
-  test("process scans splittably by default: an oversized element costs one row, not the file tail") {
-    // node 40 carries three 300 KB attributes. The stock XML source stops
-    // there without an error: ids 1–39 plus one all-null row, and nodes
-    // 41–60 are gone. The default scan keeps every later node and turns
-    // node 40 into one all-null row, which `validated` rejects.
+  /** Nodes 1–60, where node 40 carries three 300 KB attributes: past the
+    * stock XML parser's limits, and unparseable for from_xml.
+    */
+  private def oversizedElementFile(): String = {
     val dir = Files.createTempDirectory("osm_big_attrs").toString
     val xml = s"$dir/attrs.osm"
     val w = Files.newBufferedWriter(Paths.get(xml), java.nio.charset.StandardCharsets.UTF_8)
@@ -254,18 +254,122 @@ class OsmScaleSpec extends SparkSuite {
     }
     w.write("</osm>\n")
     w.close()
+    xml
+  }
+
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+
+  test("process scans splittably by default: an oversized element costs one row, not the file tail") {
+    // node 40 carries three 300 KB attributes. The stock XML source stops
+    // there without an error: ids 1–39 plus one all-null row, and nodes
+    // 41–60 are gone. The default scan keeps every later node and turns
+    // node 40 into one all-null row, which `validated` rejects.
+    val xml = oversizedElementFile()
 
     val ids = OsmPipeline.process(spark, xml).nodes.select("id").collect()
       .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
     assert(ids.flatten.sorted == (1L to 60L).filter(_ != 40L), s"${ids.flatten.length} ids")
     assert(ids.count(_.isEmpty) == 1)
-    // collect, not count: a count reads no checked column, so the
-    // optimizer prunes the checks away
+    // collect reads every column (a count is checked as well: next case)
     val e = intercept[Exception](
       OsmPipeline.validated(OsmPipeline.process(spark, xml)).nodes.collect())
-    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .map(t => String.valueOf(t.getMessage)).toSeq
+    val msgs = messages(e)
     assert(msgs.exists(_.contains("validation failed: nodes.id")), msgs.mkString("\n"))
+  }
+
+  test("validated checks every row whatever the consumer reads: a count raises too") {
+    // a count reads no column of the table; the checks must still run
+    val xml = oversizedElementFile()
+    val e = intercept[Exception](
+      OsmPipeline.validated(OsmPipeline.process(spark, xml)).nodes.count())
+    val msgs = messages(e)
+    assert(msgs.exists(_.contains("validation failed: nodes.id is null for id=null")),
+      msgs.mkString("\n"))
+    // a validated table without nulls counts normally
+    val ok = OsmPipeline.validated(OsmPipeline.process(spark, OsmProbes.fixturePath))
+    assert(ok.nodes.count() == 2 && ok.wayNodes.count() == 2)
+  }
+
+  test("two-tag scan: every node and every way exactly once, as the per-tag scans") {
+    val dir = Files.createTempDirectory("osm_two_tag").toString
+    val xml = s"$dir/two.osm"
+    generate(xml, 300, 100)
+    // an ASCII file: the char index of the first way is its byte offset
+    val firstWay = new String(Files.readAllBytes(Paths.get(xml)), UTF_8).indexOf("<way ").toLong
+    assert(firstWay > 0)
+    // cuts inside the last node's end tag, between it and the first way,
+    // on the way's '<', and inside the way's start tag; then cuts elsewhere
+    val cuts = Seq(firstWay - 6, firstWay - 2, firstWay, firstWay + 1, firstWay + 3,
+      97L, 1000L, 4096L, Long.MaxValue)
+    for (splitBytes <- cuts) {
+      val both = readerElements(xml, "node,way", splitBytes)
+      val perTag = (readerElements(xml, "node", splitBytes) ++
+        readerElements(xml, "way", splitBytes)).sortBy(_._1)
+      assert(both.length == 400, s"splitBytes=$splitBytes: ${both.length} elements")
+      assert(both == perTag, s"splitBytes=$splitBytes")
+    }
+    // through Spark: the element frame's nodes and ways are the stock scans
+    def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("_id").collect().map(_.toSeq).toSeq
+    val stockNodes = rows(OsmPipeline.readNodesRaw(spark, xml))
+    val stockWays = rows(OsmPipeline.readWaysRaw(spark, xml))
+    assert(stockNodes.length == 300 && stockWays.length == 100)
+    for (split <- Seq(Some(firstWay - 2), Some(firstWay + 1), Some(4096L), None)) {
+      val elements = OsmSplittable.readElements(spark, xml, split)
+      assert(rows(OsmSplittable.nodes(elements)) == stockNodes, s"split=$split")
+      assert(rows(OsmSplittable.ways(elements)) == stockWays, s"split=$split")
+    }
+  }
+
+  test("two-tag scan: a selected tag that prefixes another name is matched by its boundary byte") {
+    val dir = Files.createTempDirectory("osm_tag_prefix").toString
+    val xml = s"$dir/prefix.osm"
+    val w = Files.newBufferedWriter(Paths.get(xml), UTF_8)
+    w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n")
+    (1 to 20).foreach { i =>
+      w.write(s"""  <way id="$i" user="u"><nd ref="$i"/></way>\n""")
+      if (i % 2 == 0) w.write(s"""  <wayx id="-$i"/>\n""")
+      else w.write(s"""  <wayx id="-$i"><nd ref="$i"/></wayx>\n""")
+    }
+    w.write("</osm>\n")
+    w.close()
+    def ids(es: Seq[(Long, String)], tag: String) = es.collect {
+      case (_, e) if e.startsWith(s"<$tag ") => "id=\"(-?\\d+)\"".r.findFirstMatchIn(e).get.group(1).toLong
+    }
+    for (splitBytes <- (1L to 120L) :+ Long.MaxValue) {
+      // only `way` selected: no `wayx` element is taken for a way
+      val ways = readerElements(xml, "way", splitBytes)
+      assert(ways.forall(_._2.startsWith("<way ")), s"splitBytes=$splitBytes")
+      assert(ids(ways, "way") == (1L to 20L), s"splitBytes=$splitBytes")
+      // both selected, in either order: each element under its own tag
+      for (tags <- Seq("way,wayx", "wayx,way")) {
+        val both = readerElements(xml, tags, splitBytes)
+        assert(both.length == 40, s"$tags splitBytes=$splitBytes: ${both.length}")
+        assert(ids(both, "way") == (1L to 20L), s"$tags splitBytes=$splitBytes")
+        assert(ids(both, "wayx") == (1L to 20L).map(-_), s"$tags splitBytes=$splitBytes")
+      }
+    }
+  }
+
+  test("the ETL reads its input once: one scan feeds both element types and the five sinks") {
+    val dir = Files.createTempDirectory("osm_read_once").toString
+    val xml = s"$dir/once.osm"
+    generate(xml, 20000, 4000)
+    val bytes = Files.size(Paths.get(xml))
+    // the local file system's bytes read, over every thread. (A task's
+    // inputMetrics.bytesRead would also count each sink's reads of the
+    // cached scan, not just the file's bytes.)
+    def fileBytesRead(): Long = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics
+      .get("file").getLong("bytesRead")
+    val read0 = fileBytesRead()
+    try OsmPipeline.writeParquet(
+      OsmPipeline.validated(OsmPipeline.process(spark, xml, cache = true)), s"$dir/tables")
+    finally spark.catalog.clearCache()
+    val read = fileBytesRead() - read0
+    info(s"read $read bytes of a $bytes-byte file")
+    assert(read <= bytes * 1.1, s"read $read bytes of a $bytes-byte file")
+    assert(spark.read.parquet(s"$dir/tables/ways_nodes").count() == 8000)
   }
 
   test("splittable XML source: default split width follows Spark's file-split rule") {

@@ -151,6 +151,20 @@ class OsmSpec extends SparkSuite {
     }
   }
 
+  test("OSM probes release the scan they cache") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    // the first osm_* probe built in this JVM materializes the tables
+    OsmProbes.all.head.run(spark, "").collect()
+    assert(sc.getPersistentRDDs.size == before)
+    // the same ETL again, whichever suite built the first probe
+    val dir = java.nio.file.Files.createTempDirectory("osm_probe_tables").toString
+    OsmProbes.writeTables(spark, dir)
+    assert(sc.getPersistentRDDs.size == before)
+    // raw_tags: the fixture's 12 node tags and 2 way tags (not the relation's)
+    assert(spark.read.parquet(s"$dir/raw_tags").count() == 14)
+  }
+
   test("XML sink round-trip: write nodes as XML, read them back") {
     val dir = java.nio.file.Files.createTempDirectory("osm_xml_out").toString
     t.nodes.select(
