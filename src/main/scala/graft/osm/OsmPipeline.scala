@@ -23,7 +23,20 @@ object OsmPipeline {
   /** The 5 output tables (FIXTURES.md §2; column order is load-bearing). */
   final case class OsmTables(
       nodes: DataFrame, nodeTags: DataFrame,
-      ways: DataFrame, wayNodes: DataFrame, wayTags: DataFrame)
+      ways: DataFrame, wayNodes: DataFrame, wayTags: DataFrame) {
+    // what `process(…, cache = true)` persisted for these tables (not one
+    // of the five fields: equality and copies ignore it)
+    private var persisted: Seq[DataFrame] = Nil
+
+    private[osm] def releasing(frames: DataFrame*): OsmTables = { persisted = frames; this }
+
+    /** Releases exactly what `process(…, cache = true)` persisted for
+      * these tables, and nothing else of the session (unlike
+      * `spark.catalog.clearCache()`); a no-op for any other OsmTables,
+      * `validated(t)` included: release the `t` that `process` returned.
+      */
+    def unpersist(): Unit = { persisted.foreach(_.unpersist()); persisted = Nil }
+  }
 
   private val tagArr = ArrayType(StructType(Seq(
     StructField("_k", StringType), StructField("_v", StringType))))
@@ -98,16 +111,20 @@ object OsmPipeline {
     // Step_2:320-332): persist the scan (the one element frame, or the
     // stock source's two) so the five table pipelines share it instead
     // of re-parsing the XML five times.
-    if (splittable) {
-      val elements0 = OsmSplittable.readElements(spark, path)
-      val elements = if (cache) elements0.persist() else elements0
-      tables(OsmSplittable.nodes(elements), OsmSplittable.ways(elements), strict)
-    } else {
-      val nodesRaw = readNodesRaw(spark, path)
-      val waysRaw = readWaysRaw(spark, path)
-      if (cache) tables(nodesRaw.persist(), waysRaw.persist(), strict)
-      else tables(nodesRaw, waysRaw, strict)
-    }
+    // OsmTables.unpersist releases exactly what is persisted here.
+    val (nodesRaw, waysRaw, scans) =
+      if (splittable) {
+        val elements = OsmSplittable.readElements(spark, path)
+        (OsmSplittable.nodes(elements), OsmSplittable.ways(elements), Seq(elements))
+      } else {
+        val nodes = readNodesRaw(spark, path)
+        val ways = readWaysRaw(spark, path)
+        (nodes, ways, Seq(nodes, ways))
+      }
+    if (cache) {
+      scans.foreach(_.persist())
+      tables(nodesRaw, waysRaw, strict).releasing(scans: _*)
+    } else tables(nodesRaw, waysRaw, strict)
   }
 
   /** The five table pipelines over the raw node and way scans (columns as

@@ -37,6 +37,16 @@ import org.apache.spark.sql.SparkSession
   * of the tags `way` and `wayx`, `<wayx ` is a `wayx`), then scans for
   * that tag's end tag.
   *
+  * A record is the element's raw bytes, not decoded text. The OSM scan
+  * (`OsmSplittable`) parses them where they are: `OsmElementKernel` reads
+  * the canonical OSM element grammar (attributes, self-closed `tag`/`nd`
+  * children, the five named entities, plain decimal numbers) straight
+  * from the record's `Text` into rows, copying what it keeps, since the
+  * reader reuses that buffer. Every other element (a comment, a
+  * character reference, a value from_xml would trim or normalise,
+  * invalid UTF-8, …) is decoded and parsed by from_xml, which stays the
+  * authority on what such an element means.
+  *
   * XML assumptions (hold for any conformant writer, incl. OSM exports):
   * `<` is escaped inside attribute values, so raw `<rowTag` / `</rowTag>`
   * byte sequences only occur as real markup; elements of the same name do

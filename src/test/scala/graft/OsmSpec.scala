@@ -165,6 +165,30 @@ class OsmSpec extends SparkSuite {
     assert(spark.read.parquet(s"$dir/raw_tags").count() == 14)
   }
 
+  test("process(cache = true): unpersist releases exactly what process persisted") {
+    val sc = spark.sparkContext
+    // a table the caller cached itself: the release must leave it (clearCache would not)
+    val own = spark.range(10).toDF("x").persist()
+    own.count()
+    try {
+      val before = sc.getPersistentRDDs.size
+      for (splittable <- Seq(true, false)) {
+        val cached = OsmPipeline.process(spark, OsmProbes.fixturePath, cache = true,
+          splittable = splittable)
+        assert(cached.nodes.count() == 2 && cached.wayNodes.count() == 2) // materializes it
+        assert(sc.getPersistentRDDs.size > before, s"splittable=$splittable: nothing persisted")
+        OsmPipeline.validated(cached).unpersist() // not what process returned: a no-op
+        assert(sc.getPersistentRDDs.size > before)
+        // the five fields and their equality are those of any OsmTables
+        assert(cached == OsmPipeline.OsmTables(cached.nodes, cached.nodeTags, cached.ways,
+          cached.wayNodes, cached.wayTags))
+        cached.unpersist()
+        assert(sc.getPersistentRDDs.size == before, s"splittable=$splittable")
+        assert(own.storageLevel.useMemory)
+      }
+    } finally own.unpersist()
+  }
+
   test("XML sink round-trip: write nodes as XML, read them back") {
     val dir = java.nio.file.Files.createTempDirectory("osm_xml_out").toString
     t.nodes.select(
