@@ -22,10 +22,9 @@ object BpeTrain {
     val maxWords = 100000
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     try {
-      val freqs = Tables(spark, dir, "documents")
-        .select(explode(graft.clean.CleanFns.tokens(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("c"))
-        .orderBy(desc("c"), asc("w")).limit(maxWords)
+      val freqs = ext.LanguageModels.unigrams(
+          ext.LanguageModels.docTokens(Tables(spark, dir, "documents")))
+        .orderBy(desc("c1"), asc("w")).limit(maxWords)
         .collect()
         .map(r => (new String(r.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8),
           java.nio.charset.StandardCharsets.ISO_8859_1), r.getLong(1)))

@@ -22,6 +22,7 @@ object Registry {
     ext.PipelineOps7.all ++
     ext.PipelineOps8.all ++
     ext.PipelineOps9.all ++
+    ext.LanguageModels.all ++
     ext.PipelineOps10.all ++
     ext.PipelineOps11.all ++
     ext.PipelineOps12.all ++
@@ -34,8 +35,6 @@ object Registry {
     ext.LinkGraph.all ++
     ext.PageSignals.all ++
     ext.UnigramTok.all ++
-    ext.LmStore.all ++
-    ext.KnLm.all ++
     ext.SegIndex.all ++
     ext.BloomIndex.all ++
     ext.QualityModel.all ++

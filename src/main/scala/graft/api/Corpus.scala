@@ -713,7 +713,7 @@ final case class Corpus(df: DataFrame) {
     * tokens carry NULL.
     */
   def withLmScore(): Corpus = chain { d =>
-    d.join(graft.ext.PipelineOps10.lmScore(d, d)
+    d.join(graft.ext.LanguageModels.lmScore(d, d)
         .select(col("doc_id"), col("nll_avg")), Seq("doc_id"), "left")
   }
 
@@ -724,7 +724,7 @@ final case class Corpus(df: DataFrame) {
     * `DocStreams.lmScored` runs at the stream door).
     */
   def withLmScore(reference: DataFrame): Corpus = chain { d =>
-    d.join(graft.ext.PipelineOps10.lmScoreNative(d, graft.ext.PipelineOps10.lmIndex(reference))
+    d.join(graft.ext.LanguageModels.lmScoreNative(d, graft.ext.LanguageModels.lmIndex(reference))
         .select(col("doc_id"), col("nll_avg")), Seq("doc_id"), "left")
   }
 
@@ -734,7 +734,7 @@ final case class Corpus(df: DataFrame) {
     * Self-scored, join regime; docs with < 3 tokens carry NULL.
     */
   def withKnScore(): Corpus = chain { d =>
-    d.join(graft.ext.KnLm.knScore(d, d)
+    d.join(graft.ext.LanguageModels.knScore(d, d)
         .select(col("doc_id"), col("kn_avg")), Seq("doc_id"), "left")
   }
 
@@ -743,14 +743,14 @@ final case class Corpus(df: DataFrame) {
     * the stream door. Broadcast-regime gate as for [[withLmScore]].
     */
   def withKnScore(reference: DataFrame): Corpus = chain { d =>
-    d.join(graft.ext.KnLm.knScoreNative(d, graft.ext.KnLm.knIndex(reference))
+    d.join(graft.ext.LanguageModels.knScoreNative(d, graft.ext.LanguageModels.knIndex(reference))
         .select(col("doc_id"), col("kn_avg")), Seq("doc_id"), "left")
   }
 
   /** Trigram KN NLL against a PERSISTED store (x_txt22d). */
   def withKnScoreFromStore(indexDir: String): Corpus = chain { d =>
-    val idx = graft.ext.KnLm.loadKnIndex(d.sparkSession, indexDir)
-    d.join(graft.ext.KnLm.knScoreNative(d, idx)
+    val idx = graft.ext.LanguageModels.loadKnIndex(d.sparkSession, indexDir)
+    d.join(graft.ext.LanguageModels.knScoreNative(d, idx)
         .select(col("doc_id"), col("kn_avg")), Seq("doc_id"), "left")
   }
 

@@ -101,7 +101,7 @@ object BloomIndex {
     * OR together exactly (bloom(A) | bloom(B) = bloom(A ∪ B), bit for
     * bit), so the shipped artifact stays current without ever rescanning
     * the released corpus: the daily increment costs one pass over the
-    * shard plus a bit_or over ≤ m/32 words (the [[KnLm.mergeKnTypes]] /
+    * shard plus a bit_or over ≤ m/32 words (the [[LanguageModels.mergeKnTypes]] /
     * BandIndex daily-increment shape at the filter tier). The geometry
     * comes from the BASE artifact's meta — it is a property of the
     * filter, not a per-call choice — and is carried to `outPath`.

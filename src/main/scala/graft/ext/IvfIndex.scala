@@ -82,7 +82,7 @@ object IvfIndex {
 
   /** Assign a NEW shard's vectors against the STORED centroids and
     * append them to the on-disk assignments — the incremental regime at
-    * the ANN tier (the BandIndex/SegIndex/BloomIndex/KnLm daily-increment
+    * the ANN tier (the BandIndex/SegIndex/BloomIndex/KN-LM daily-increment
     * shape): the released corpus's vectors are never re-read, the coarse
     * quantizer is not retrained (IVF's standard production posture — the
     * quantizer drifts only on scheduled retrains), and the appended cell

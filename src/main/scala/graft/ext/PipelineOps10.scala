@@ -5,302 +5,19 @@ import graft.clean.CleanFns
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import LanguageModels.{adaptiveLmKeepBg, bigramDigestsTok, bigramPairsTok, bigramsDuck,
+  docTokens, lmSelfScoreDuck, unigrams}
 
-/** Statistical language-model scoring and the LM quality gate, BM25
-  * retrieval and hard negatives, DSIR-style importance weighting, PMI
+/** BM25 retrieval and hard negatives, DSIR-style importance weighting, PMI
   * collocations, event-rate anomalies, corpus gram overlap, embedding
   * centroid drift and the composed LM + DSIR pipeline (x_pipe5) — the
   * model-based selection and monitoring layer of a training-data
   * pipeline: these score documents against LEARNED corpus statistics,
-  * all still exact, deterministic, and oracle-checkable.
+  * all still exact, deterministic, and oracle-checkable. The tokenizer,
+  * the bigram stream, the unigram table and the LM gate they share live
+  * in [[LanguageModels]].
   */
 object PipelineOps10 {
-
-  // ------------------------------------------------------- shared helpers
-
-  /** (doc_id, ws): the shared whitespace tokenization (one tokenizer
-    * everywhere — the round-5 lesson). `private[ext]` so the KN trigram
-    * module ([[KnLm]]) shares the single definition.
-    */
-  private[ext] def docTokens(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), CleanFns.tokens(col("text")).as("ws"))
-
-  /** (doc_id, w1, w2, b): every adjacent token pair. `b` is the joined
-    * bigram string; hot-path joins digest it to 16 hex (fixed-width
-    * shuffle payload, the x_ded10 lesson) — see [[lmScore]].
-    */
-  private def bigramPairs(docs: DataFrame): DataFrame =
-    bigramPairsTok(docTokens(docs))
-
-  /** [[bigramPairs]] over an ALREADY-tokenized (doc_id, ws) frame — the
-    * entry point composed pipelines use so one materialized tokenization
-    * feeds every stage (see x_pipe5).
-    */
-  private[ext] def bigramPairsTok(tok: DataFrame): DataFrame = tok
-    .select(col("doc_id"), col("ws"))
-    .filter(size(col("ws")) >= 2)
-    .select(col("doc_id"), explode(expr(
-      "transform(sequence(1, size(ws) - 1), i -> named_struct(" +
-        "'w1', element_at(ws, i), 'w2', element_at(ws, i + 1), " +
-        "'b', concat_ws(' ', element_at(ws, i), element_at(ws, i + 1))))")).as("p"))
-    .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"), col("p.b").as("b"))
-
-  /** (doc_id, w1, hb): the DIGESTED bigram stream — the stage a composed
-    * pipeline materializes ONCE so every downstream consumer reads
-    * columnar digests instead of re-running explode+md5 over the corpus
-    * (x_pipe5 has three such consumers: the LM gate and both DSIR
-    * scans). The DSIR bucket is a prefix function of hb
-    * (conv(substr(hb,1,3))), so the digest column serves both signals.
-    */
-  private[ext] def bigramDigestsTok(tok: DataFrame): DataFrame =
-    bigramPairsTok(tok).select(col("doc_id"), col("w1"),
-      substring(md5(col("b")), 1, 16).as("hb"))
-
-  /** DuckDB CTE fragment producing the same (doc_id, w1, w2, b) stream
-    * from a CTE `t(doc_id, ws)`.
-    */
-  private[ext] def bigramsDuck(src: String): String =
-    s"""SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2, ws[i] || ' ' || ws[i+1] AS b
-       |  FROM (SELECT doc_id, ws FROM $src WHERE len(ws) >= 2),
-       |       UNNEST(generate_series(1, len(ws) - 1)) AS g(i)""".stripMargin
-
-  // ------------------------------------------- bigram language-model score
-
-  /** Per-document negative log-likelihood under an add-one-smoothed bigram
-    * LM estimated from `train` — the CCNet-style statistical quality
-    * signal: fluent prose scores low, gibberish / shuffled / boilerplate
-    * text scores high, and (unlike the x_txt11 rule family) the judgment
-    * adapts to whatever the reference corpus actually looks like.
-    *
-    * p(w2 | w1) = (c(w1 w2) + 1) / (c(w1) + V); score = -Σ ln p / n_bigrams.
-    * Unseen bigrams and unseen contexts degrade smoothly to the 1/(c+V)
-    * floor, so the same operator scores NEW shards against a RELEASED
-    * corpus LM (x_txt18b) — the incremental regime.
-    *
-    * Shape: the bigram count join is keyed on a 16-hex md5 digest of the
-    * pair (fixed-width shuffle payload at any token length); the unigram
-    * table and the vocabulary size are vocabulary-bounded → broadcast.
-    * Double discipline (SURVEY §8.4): every ln argument is a ratio of
-    * exact integers, per-doc sums are rounded to 6 before surfacing.
-    */
-  def lmScore(train: DataFrame, score: DataFrame): DataFrame = {
-    val (uni, bgc) = lmTables(train)
-    lmScoreWith(score, uni, bgc)
-  }
-
-  /** The LM count tables as DataFrames: (unigrams (w, c1), bigram digests
-    * (hb, c2)) — the artifact [[LmStore]] persists; V is derived from the
-    * unigram table at use time.
-    */
-  def lmTables(train: DataFrame): (DataFrame, DataFrame) =
-    lmTablesTok(docTokens(train))
-
-  /** [[lmTables]] from a pre-tokenized (doc_id, ws) frame. */
-  def lmTablesTok(tok: DataFrame): (DataFrame, DataFrame) = {
-    val uni = tok
-      .select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-    val bgc = bigramPairsTok(tok)
-      .select(substring(md5(col("b")), 1, 16).as("hb"))
-      .groupBy("hb").agg(count(lit(1)).as("c2"))
-    (uni, bgc)
-  }
-
-  /** Score `score` against prebuilt count tables — the JOIN regime (the
-    * beyond-broadcast scale path: the bigram join shuffles fixed-width
-    * digests; at broadcast scale, [[lmScoreNative]] is the narrow twin).
-    */
-  def lmScoreWith(score: DataFrame, uni: DataFrame, bgc: DataFrame): DataFrame =
-    lmScoreWithTok(docTokens(score), uni, bgc)
-
-  /** [[lmScoreWith]] from a pre-tokenized (doc_id, ws) score frame. */
-  def lmScoreWithTok(tokScore: DataFrame, uni: DataFrame, bgc: DataFrame): DataFrame = {
-    val vocab = uni.agg(count(lit(1)).as("v"))
-    bigramPairsTok(tokScore)
-      .select(col("doc_id"), col("w1"), substring(md5(col("b")), 1, 16).as("hb"))
-      .join(bgc, Seq("hb"), "left")
-      .join(broadcast(uni.withColumnRenamed("w", "w1")), Seq("w1"), "left")
-      .join(broadcast(vocab))
-      .select(col("doc_id"),
-        log((coalesce(col("c2"), lit(0L)) + 1) / (coalesce(col("c1"), lit(0L)) + col("v")))
-          .as("lnp"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_bigrams"),
-        round(-sum(col("lnp")) / count(lit(1)), 6).as("nll_avg"))
-  }
-
-  /** Self-scored LM (train = score) without a separate count-table build:
-    * when the corpus scores itself, the train-side bigram count c2 is just
-    * the occurrence count of the digest IN THE SAME STREAM — one window
-    * over hb replaces the bgc aggregation + digest join (one fewer full
-    * bigram-stream scan; the hb exchange is the same one the join paid,
-    * skew included). Identical algebra to [[lmScoreWithTok]] on itself
-    * (every scored bigram is in train, so COALESCE never fires) — pinned
-    * by the x_txt20 oracle, which is written in the generic join form.
-    */
-  def lmSelfScoreTok(tok: DataFrame): DataFrame =
-    lmSelfScoreTokWith(tok, tok
-      .select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1")))
-
-  /** [[lmSelfScoreTok]] against a PREBUILT unigram table — the composed-
-    * pipeline entry point (x_pipe5): the unigram subtree feeds two
-    * broadcast exchanges here (counts + vocab size), so an unmaterialized
-    * `uni` is executed twice per invocation; a pipeline that has already
-    * materialized the tokenized stage materializes `uni` beside it and
-    * both exchanges become one columnar scan each.
-    */
-  def lmSelfScoreTokWith(tok: DataFrame, uni: DataFrame): DataFrame =
-    lmSelfScoreBg(bigramDigestsTok(tok), uni)
-
-  /** [[lmSelfScoreTokWith]] from a pre-digested (doc_id, w1, hb) stream
-    * (see [[bigramDigestsTok]]) — same algebra, zero md5 work.
-    */
-  private[ext] def lmSelfScoreBg(bg: DataFrame, uni: DataFrame): DataFrame = {
-    // vocabulary size rides ON the unigram broadcast (a whole-frame
-    // window over the vocab-bounded table) instead of a second 1-row
-    // broadcast exchange; self-scoring guarantees every w1 is in uni, so
-    // the left join always delivers v. A caller-supplied uni that does
-    // NOT cover every w1 would leave lnp NULL — sum() drops it while
-    // count() keeps the row, silently diluting nll_avg — so the
-    // coverage invariant is enforced loudly (narrow, zero-exchange)
-    // instead of assumed: an uncovered word raises, pointing at
-    // lmScoreWithTok (whose scalar vocab broadcast smooths unseen words).
-    val uniV = uni.withColumn("v", count(lit(1)).over(Window.partitionBy()))
-    val vChecked = when(col("v").isNotNull, col("v")).otherwise(raise_error(concat(
-      lit("lmSelfScoreBg: unigram table does not cover word '"), col("w1"),
-      lit("' — self-score requires full coverage; score against a partial LM via lmScoreWithTok"))))
-    bg
-      // broadcast-join the unigram side FIRST and reduce it to the long
-      // denominator, so the hb window's shuffle carries (doc_id, hb, den)
-      // — fixed-width payloads only, never the raw w1 token strings
-      .join(broadcast(uniV.withColumnRenamed("w", "w1")), Seq("w1"), "left")
-      .select(col("doc_id"), col("hb"),
-        (coalesce(col("c1"), lit(0L)) + vChecked).as("den"))
-      .withColumn("c2", count(lit(1)).over(Window.partitionBy(col("hb"))))
-      .select(col("doc_id"),
-        log((col("c2") + 1) / col("den")).as("lnp"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_bigrams"),
-        round(-sum(col("lnp")) / count(lit(1)), 6).as("nll_avg"))
-  }
-
-  /** The self-scored oracle, shared with [[LmStore]]'s round-trip probe. */
-  def lmSelfOracleSql: String = lmOracle("", "")
-
-  private def lmOracle(trainWhere: String, scoreWhere: String): String =
-    s"""WITH t AS (
-       |  SELECT doc_id, ${CleanFns.tokensDuck("text")} AS ws FROM documents),
-       |u AS (
-       |  SELECT w, COUNT(*) AS c1 FROM (SELECT UNNEST(ws) AS w FROM t $trainWhere) GROUP BY w),
-       |v AS (SELECT COUNT(*) AS v FROM u),
-       |bgt AS (${bigramsDuck(s"(SELECT * FROM t $trainWhere)")}),
-       |bc AS (SELECT substr(md5(b), 1, 16) AS hb, COUNT(*) AS c2 FROM bgt GROUP BY hb),
-       |bgs AS (${bigramsDuck(s"(SELECT * FROM t $scoreWhere)")})
-       |SELECT bgs.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       |  round(-SUM(ln((COALESCE(bc.c2, 0) + 1) / (COALESCE(u.c1, 0) + v.v))) / COUNT(*), 6) AS nll_avg
-       |FROM bgs
-       |LEFT JOIN bc ON bc.hb = substr(md5(bgs.b), 1, 16)
-       |LEFT JOIN u ON u.w = bgs.w1, v
-       |GROUP BY bgs.doc_id ORDER BY doc_id""".stripMargin
-
-  /** X-TXT18 — corpus self-scored LM: every document's NLL under the LM of
-    * the corpus it belongs to. The outlier detector: documents far from
-    * the corpus's own statistics (machine gibberish, wrong-language
-    * slips, encoding damage) surface at the top.
-    */
-  private val txt18 = Probe(
-    "x_txt18_lm_score",
-    lmOracle("", "")) { (s, dir) =>
-    val docs = Tables(s, dir, "documents")
-    lmScore(docs, docs).orderBy("doc_id")
-  }
-
-  /** X-TXT18B — held-out LM scoring: the LM is estimated on 90% of the
-    * corpus and scores the held-out 10% it has never seen, exercising the
-    * add-one fallback for unseen bigrams AND unseen contexts — the
-    * incremental regime (new crawl scored against the released-corpus LM;
-    * the count tables persist like BandIndex and the scan side is one
-    * narrow pass + broadcast joins).
-    */
-  private val txt18b = Probe(
-    "x_txt18b_lm_heldout",
-    lmOracle("WHERE doc_id % 10 <> 0", "WHERE doc_id % 10 = 0")) { (s, dir) =>
-    val docs = Tables(s, dir, "documents")
-    lmScore(docs.filter(col("doc_id") % 10 =!= 0), docs.filter(col("doc_id") % 10 === 0))
-      .orderBy("doc_id")
-  }
-
-  /** The broadcastable LM count tables from `train`, collected in
-    * Spark's own string sort order (binary / UTF8String order — exactly
-    * what [[graft.functions.LmNll]]'s binary search requires). Two
-    * aggregation passes, each vocabulary-bounded. The train-once /
-    * score-many artifact of the incremental LM regime.
-    */
-  /** Hard ceiling on collected LM table entries (unigrams + bigram
-    * digests). The native/broadcast regime is only correct while the
-    * tables genuinely fit in the plan; a web-scale corpus has billions of
-    * bigram TYPES, and silently collecting them is a driver OOM that
-    * surfaces as a dead executor hours in. Fail loudly at build time with
-    * the route that does scale (the x_txt18/x_txt18d join regime) —
-    * the same loud-gate discipline as the round-5 candidate caps.
-    */
-  val lmIndexMaxEntries: Long = 2000000L
-
-  def lmIndex(train: DataFrame,
-      maxEntries: Long = lmIndexMaxEntries): graft.functions.LmIndex = {
-    val uniDf = docTokens(train)
-      .select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-    val bgDf = bigramPairs(train)
-      .select(substring(md5(col("b")), 1, 16).as("hb"))
-      .groupBy("hb").agg(count(lit(1)).as("c2"))
-    // BOUNDED collects: sort+limit plans as TakeOrdered, so the driver
-    // never materializes more than maxEntries + 1 rows even when the gate
-    // trips — no pre-count jobs, no unbounded pull
-    val uni = uniDf.orderBy("w").limit(maxEntries.toInt + 1).collect()
-    val bg = bgDf.orderBy("hb").limit(maxEntries.toInt + 1).collect()
-    require(uni.length + bg.length <= maxEntries,
-      s"LM count tables exceed $maxEntries entries: too large for " +
-        "the broadcast/native regime — score with the join form instead " +
-        "(PipelineOps10.lmScore / lmScoreWith over LmStore tables)")
-    graft.functions.LmIndex(
-      bg.map(_.getString(0)).toSeq, bg.map(_.getLong(1)).toSeq,
-      uni.map(_.getString(0)).toSeq, uni.map(_.getLong(1)).toSeq,
-      uni.length.toLong)
-  }
-
-  /** Per-row LM scoring against a prebuilt index — the NARROW, stateless,
-    * stream-capable form of [[lmScore]] (identical output, zero
-    * exchanges; the novelty-scoring pattern applied to LM scoring).
-    */
-  def lmScoreNative(score: DataFrame, idx: graft.functions.LmIndex): DataFrame = {
-    score
-      .withColumn("__lm", graft.functions.LmNll.lm_nll(col("text"), idx))
-      .filter(col("__lm").isNotNull)
-      .select(col("doc_id"), col("__lm.n_bigrams").as("n_bigrams"),
-        col("__lm.nll_avg").as("nll_avg"))
-  }
-
-  /** X-TXT18C — the native per-row LM scorer against the same
-    * first-principles relational oracle as x_txt18: the one-pass JVM
-    * tokenize/digest/binary-search/sum is hash-pinned to the declarative
-    * explode-join-aggregate algebra (and LmNllSpec pins interpreted ≡
-    * codegen ≡ declarative on top).
-    *
-    * The index is a train-once artifact ([[graft.util.TrainOnce]]) —
-    * built once per corpus dir per JVM, exactly how production builds it
-    * once per released corpus (like BandIndex) and amortizes it over
-    * every shard/stream scored; benched steady-state times the narrow
-    * zero-exchange scoring projection alone.
-    */
-  private val txt18c = Probe(
-    "x_txt18c_lm_native",
-    lmOracle("", "")) { (s, dir) =>
-    val docs = Tables(s, dir, "documents")
-    val idx = graft.util.TrainOnce(s"lm_index:$dir")(lmIndex(docs))
-    lmScoreNative(docs, idx).orderBy("doc_id")
-  }
 
   // --------------------------------------------------------- BM25 retrieval
 
@@ -524,12 +241,11 @@ object PipelineOps10 {
     * times — shared by the probe and the spec's planted-pair pin.
     */
   def pmiCollocations(docs: DataFrame, minCount: Int, topK: Int): DataFrame = {
-    val bg = bigramPairs(docs)
+    val bg = bigramPairsTok(docTokens(docs))
     val nb = bg.agg(count(lit(1)).as("n"))
     val bc = bg.groupBy("w1", "w2", "b").agg(count(lit(1)).as("c2"))
       .filter(col("c2") >= minCount)
-    val u = docTokens(docs).select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
+    val u = unigrams(docTokens(docs))
     bc
       .join(broadcast(u.select(col("w").as("w1"), col("c1").as("ca"))), "w1")
       .join(broadcast(u.select(col("w").as("w2"), col("c1").as("cb"))), "w2")
@@ -654,81 +370,6 @@ object PipelineOps10 {
       .orderBy("event_type", "hour_us")
   }
 
-  // ------------------------------------------- adaptive LM quality gate
-
-  /** Per-language adaptive LM gate: keep documents whose self-scored NLL
-    * sits at or below the language's 75th percentile — the x_txt12
-    * adaptive-threshold discipline applied to the statistical LM signal
-    * (absolute NLL thresholds don't transfer across languages; quantiles
-    * do). Thresholds are languages-sized → broadcast.
-    */
-  def adaptiveLmKeep(docs: DataFrame): DataFrame =
-    adaptiveLmKeepTok(docs.select(col("doc_id"), col("lang"),
-      CleanFns.tokens(col("text")).as("ws")))
-
-  /** [[adaptiveLmKeep]] from a pre-tokenized (doc_id, lang, ws) frame. */
-  def adaptiveLmKeepTok(tok: DataFrame): DataFrame =
-    adaptiveLmKeepTokWith(tok, tok
-      .select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1")))
-
-  /** [[adaptiveLmKeepTok]] against a prebuilt unigram table (see
-    * [[lmSelfScoreTokWith]]).
-    */
-  def adaptiveLmKeepTokWith(tok: DataFrame, uni: DataFrame): DataFrame =
-    adaptiveLmKeepBg(bigramDigestsTok(tok),
-      tok.select(col("doc_id"), col("lang")), uni)
-
-  /** [[adaptiveLmKeepTokWith]] from a pre-digested bigram stream plus a
-    * (doc_id, lang) frame — the x_pipe5 entry point.
-    */
-  private[ext] def adaptiveLmKeepBg(bg: DataFrame, langs: DataFrame,
-      uni: DataFrame): DataFrame = {
-    // threshold via a lang-partitioned window (whole-partition frame), not
-    // groupBy + join-back: the join form instantiates the LM-score subtree
-    // twice and at sf0.1 pays the full count-table build both times
-    // (measured at sf0.1: x_pipe5 6.1 s -> 4.3 s with the single-pass window)
-    lmSelfScoreBg(bg, uni)
-      .join(langs, "doc_id")
-      .withColumn("p75", round(
-        expr("percentile(nll_avg, 0.75)")
-          .over(Window.partitionBy(col("lang"))), 6))
-      .filter(col("nll_avg") <= col("p75"))
-      .select(col("doc_id"), col("lang"), col("nll_avg"), col("p75"))
-  }
-
-  /** X-TXT20 — the adaptive LM gate over the documents table, oracle =
-    * the full LM algebra + percentile_cont thresholds + the gate.
-    */
-  private val txt20 = Probe(
-    "x_txt20_adaptive_lm",
-    s"""WITH t AS (
-       |  SELECT doc_id, ${CleanFns.tokensDuck("text")} AS ws FROM documents),
-       |u AS (
-       |  SELECT w, COUNT(*) AS c1 FROM (SELECT UNNEST(ws) AS w FROM t) GROUP BY w),
-       |v AS (SELECT COUNT(*) AS v FROM u),
-       |bg AS (${bigramsDuck("t")}),
-       |bc AS (SELECT substr(md5(b), 1, 16) AS hb, COUNT(*) AS c2 FROM bg GROUP BY hb),
-       |sc AS (
-       |  SELECT bg.doc_id,
-       |    round(-SUM(ln((bc.c2 + 1) / (u.c1 + v.v))) / COUNT(*), 6) AS nll_avg
-       |  FROM bg
-       |  JOIN bc ON bc.hb = substr(md5(bg.b), 1, 16)
-       |  JOIN u ON u.w = bg.w1, v
-       |  GROUP BY bg.doc_id),
-       |lg AS (
-       |  SELECT sc.doc_id, d.lang, sc.nll_avg
-       |  FROM sc JOIN documents d ON d.doc_id = sc.doc_id),
-       |th AS (
-       |  SELECT lang, round(percentile_cont(0.75) WITHIN GROUP (ORDER BY nll_avg), 6) AS p75
-       |  FROM lg GROUP BY lang)
-       |SELECT lg.doc_id, lg.lang, lg.nll_avg, th.p75
-       |FROM lg JOIN th ON th.lang = lg.lang
-       |WHERE lg.nll_avg <= th.p75
-       |ORDER BY lg.doc_id""".stripMargin) { (s, dir) =>
-    adaptiveLmKeep(Tables(s, dir, "documents")).orderBy("doc_id")
-  }
-
   // --------------------------------------------------- composed pipeline
 
   /** X-PIPE5 — the fourth wave COMPOSED end to end: adaptive LM gate →
@@ -744,20 +385,7 @@ object PipelineOps10 {
     */
   private val pipe5 = Probe(
     "x_pipe5_lm_dsir_rollup",
-    s"""WITH t AS (
-       |  SELECT doc_id, ${CleanFns.tokensDuck("text")} AS ws FROM documents),
-       |u AS (
-       |  SELECT w, COUNT(*) AS c1 FROM (SELECT UNNEST(ws) AS w FROM t) GROUP BY w),
-       |v AS (SELECT COUNT(*) AS v FROM u),
-       |bg AS (${bigramsDuck("t")}),
-       |bc AS (SELECT substr(md5(b), 1, 16) AS hb, COUNT(*) AS c2 FROM bg GROUP BY hb),
-       |sc AS (
-       |  SELECT bg.doc_id,
-       |    round(-SUM(ln((bc.c2 + 1) / (u.c1 + v.v))) / COUNT(*), 6) AS nll_avg
-       |  FROM bg
-       |  JOIN bc ON bc.hb = substr(md5(bg.b), 1, 16)
-       |  JOIN u ON u.w = bg.w1, v
-       |  GROUP BY bg.doc_id),
+    s"""WITH $lmSelfScoreDuck,
        |lg AS (
        |  SELECT sc.doc_id, d.lang, sc.nll_avg
        |  FROM sc JOIN documents d ON d.doc_id = sc.doc_id),
@@ -822,10 +450,9 @@ object PipelineOps10 {
         .select(col("doc_id"), col("lang"), CleanFns.tokens(col("text")).as("ws")),
       "tok")
     // the unigram table has ONE consumer (vocab size rides on its
-    // broadcast inside lmSelfScoreBg), so it stays an unmaterialized
+    // broadcast inside the LM gate), so it stays an unmaterialized
     // aggregation over the tok stage
-    val uni = tok.select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
+    val uni = unigrams(tok)
     // the DIGESTED bigram stream is scanned by THREE consumers (the LM
     // gate, the DSIR raw distribution, the DSIR scoring pass) —
     // materialized once, each consumer reads columnar digests instead of
@@ -1035,6 +662,5 @@ object PipelineOps10 {
   }
 
   val all: Seq[Probe] = Seq(
-    txt18, txt18b, txt18c, ret1, ret2, cur4, txt19, txt20,
-    evt7, evt7b, pipe5, rep3, rep4)
+    ret1, ret2, cur4, txt19, evt7, evt7b, pipe5, rep3, rep4)
 }

@@ -207,20 +207,7 @@ object PipelineOps13 {
     */
   private val cur5 = Probe(
     "x_cur5_ccnet_buckets",
-    s"""WITH t AS (
-       |  SELECT doc_id, ${CleanFns.tokensDuck("text")} AS ws FROM documents),
-       |u AS (
-       |  SELECT w, COUNT(*) AS c1 FROM (SELECT UNNEST(ws) AS w FROM t) GROUP BY w),
-       |v AS (SELECT COUNT(*) AS v FROM u),
-       |bg AS (${PipelineOps10.bigramsDuck("t")}),
-       |bc AS (SELECT substr(md5(b), 1, 16) AS hb, COUNT(*) AS c2 FROM bg GROUP BY hb),
-       |sc AS (
-       |  SELECT bg.doc_id,
-       |    round(-SUM(ln((bc.c2 + 1) / (u.c1 + v.v))) / COUNT(*), 6) AS nll_avg
-       |  FROM bg
-       |  JOIN bc ON bc.hb = substr(md5(bg.b), 1, 16)
-       |  JOIN u ON u.w = bg.w1, v
-       |  GROUP BY bg.doc_id),
+    s"""WITH ${LanguageModels.lmSelfScoreDuck},
        |lg AS (
        |  SELECT sc.doc_id, d.lang, sc.nll_avg
        |  FROM sc JOIN documents d ON d.doc_id = sc.doc_id),
@@ -243,8 +230,7 @@ object PipelineOps13 {
     * window over the scored frame (docs-per-lang rows, never wider).
     */
   def ppxBuckets(docs: DataFrame): DataFrame = {
-    val tok = PipelineOps10.docTokens(docs)
-    PipelineOps10.lmSelfScoreTok(tok)
+    LanguageModels.lmSelfScoreTok(LanguageModels.docTokens(docs))
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
       .withColumn("p33", round(
         expr("percentile(nll_avg, 0.33)").over(Window.partitionBy(col("lang"))), 6))
@@ -266,20 +252,7 @@ object PipelineOps13 {
     */
   private val cur6 = Probe(
     "x_cur6_curriculum_schedule",
-    s"""WITH t AS (
-       |  SELECT doc_id, ${CleanFns.tokensDuck("text")} AS ws FROM documents),
-       |u AS (
-       |  SELECT w, COUNT(*) AS c1 FROM (SELECT UNNEST(ws) AS w FROM t) GROUP BY w),
-       |v AS (SELECT COUNT(*) AS v FROM u),
-       |bg AS (${PipelineOps10.bigramsDuck("t")}),
-       |bc AS (SELECT substr(md5(b), 1, 16) AS hb, COUNT(*) AS c2 FROM bg GROUP BY hb),
-       |sc AS (
-       |  SELECT bg.doc_id,
-       |    round(-SUM(ln((bc.c2 + 1) / (u.c1 + v.v))) / COUNT(*), 6) AS nll_avg
-       |  FROM bg
-       |  JOIN bc ON bc.hb = substr(md5(bg.b), 1, 16)
-       |  JOIN u ON u.w = bg.w1, v
-       |  GROUP BY bg.doc_id),
+    s"""WITH ${LanguageModels.lmSelfScoreDuck},
        |lg AS (
        |  SELECT sc.doc_id, d.lang, sc.nll_avg, len(t.ws) AS n_tok
        |  FROM sc JOIN documents d ON d.doc_id = sc.doc_id

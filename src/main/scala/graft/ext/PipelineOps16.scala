@@ -327,7 +327,7 @@ object PipelineOps16 {
        |  UNION ALL
        |  SELECT doc_id, text FROM fc WHERE kept = 1),
        |knt AS (SELECT doc_id, ${graft.clean.CleanFns.tokensDuck("text")} AS ws FROM kna),
-       |tr AS (${KnLm.trigramsDuck("(SELECT * FROM knt)")}),
+       |tr AS (${LanguageModels.trigramsDuck("(SELECT * FROM knt)")}),
        |t3f AS (
        |  SELECT h3, COUNT(*) AS c3, MIN(hab) AS hab, MIN(hbc) AS hbc,
        |         MIN(hb) AS hb, MIN(c) AS c
@@ -345,7 +345,7 @@ object PipelineOps16 {
        |md AS (
        |  SELECT hb, COUNT(*) AS mid, COUNT(DISTINCT c) AS n2f
        |  FROM t3f GROUP BY hb),
-       |bg AS (${PipelineOps10.bigramsDuck("knt")}),
+       |bg AS (${LanguageModels.bigramsDuck("knt")}),
        |b2t AS (
        |  SELECT substr(md5(b), 1, 16) AS h2, MIN(w2) AS c
        |  FROM bg GROUP BY 1),
@@ -354,7 +354,7 @@ object PipelineOps16 {
        |  SELECT (SELECT COUNT(*) FROM b2t) AS bt,
        |         (SELECT COUNT(DISTINCT w)
        |          FROM (SELECT UNNEST(ws) AS w FROM knt)) AS v),
-       |trs AS (${KnLm.trigramsDuck(
+       |trs AS (${LanguageModels.trigramsDuck(
             "(SELECT doc_id, ws FROM knt WHERE doc_id IN (SELECT doc_id FROM fc WHERE kept = 1))")}),
        |j1 AS (
        |  SELECT trs.doc_id,
@@ -444,23 +444,23 @@ object PipelineOps16 {
         .write.mode("overwrite").parquet(s"$p/digests")
       BandIndex.build(released, s"$p/bands_idx")
       SegIndex.build(released, s"$p/seg_idx")
-      KnLm.buildKnTypes(released, s"$p/kn_base")
+      LanguageModels.buildKnTypes(released, s"$p/kn_base")
       IvfIndex.save(IvfIndex.train(emb.filter(col("vec_id") % 4 =!= 0)), s"$p/ivf")
       // once-per-shard side effects: merge the ACCEPTED docs into the KN
       // store; append their embeddings into the IVF layout
       val kept = pipe8Flags(s, p, shard, s"$p/build_run")
         .filter(col("kept") === 1L)
         .select(col("doc_id"), col("text"))
-      KnLm.mergeKnTypes(s, s"$p/kn_base", kept, s"$p/kn_merged")
+      LanguageModels.mergeKnTypes(s, s"$p/kn_base", kept, s"$p/kn_merged")
       IvfIndex.append(s, s"$p/ivf",
         emb.join(kept.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))
       p
     }
     val flags = pipe8Flags(s, art, shard,
       graft.util.TempDirs.scratch("graft_pipe8_run"))
-    val kn = KnLm.knScoreWithTok(
-      PipelineOps10.docTokens(flags.filter(col("kept") === 1L)),
-      KnLm.loadKnTypes(s, s"$art/kn_merged"))
+    val kn = LanguageModels.knScoreWithTok(
+      LanguageModels.docTokens(flags.filter(col("kept") === 1L)),
+      LanguageModels.loadKnTypes(s, s"$art/kn_merged"))
     val cells = s.read.parquet(s"$art/ivf/assignments")
       .filter(col("vec_id") % 4 === 0)
       .select(col("vec_id").as("doc_id"), col("cell").cast("long").as("ivf_cell"))

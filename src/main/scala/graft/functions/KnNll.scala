@@ -14,8 +14,9 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
   * TRIGRAM interpolated Kneser-Ney LM (Kneser & Ney 1995; Chen & Goodman
   * 1999 — the published CCNet-grade signal) whose count tables ride along
   * as broadcast literals. Returns `struct(n_trigrams BIGINT, kn_avg
-  * DOUBLE)` (6-dp, matching the declarative `KnLm.knScoreWith` exactly),
-  * or NULL for rows with fewer than three tokens.
+  * DOUBLE)` (6-dp, matching the declarative
+  * `LanguageModels.knScoreWithTok` exactly), or NULL for rows with fewer
+  * than three tokens.
   *
   * The model (D = 0.75, exactly representable in binary, so Spark and
   * DuckDB agree bit-for-bit on every discount):
@@ -30,16 +31,16 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
   * where cont3/mid/n2f/cont2/B are CONTINUATION (type) counts — the KN
   * insight that a word's probability after an unseen context should track
   * how many distinct contexts it follows, not how often it occurs.
-  * All counts are exact integers (see `KnLm.knTablesTok`), so the score
+  * All counts are exact integers (see `LanguageModels.knTables`), so the score
   * is a deterministic function of the corpus and hash-matches the
   * relational oracle.
   *
   * Same narrow/stateless contract as [[LmNll]]: one tight JVM pass per
   * row — tokenize, digest, binary-search four digest tables and one
   * token table, sum — the stream-door regime for a released-corpus KN
-  * model (the batch join form is `KnLm.knScoreWith`). Broadcast-regime
-  * caveat as for lm_nll: the tables must fit in the plan (loud gate in
-  * `KnLm.knIndex`).
+  * model (the batch join form is `LanguageModels.knScoreWithTok`).
+  * Broadcast-regime caveat as for lm_nll: the tables must fit in the plan
+  * (loud gate in `LanguageModels.knIndex`).
   */
 case class KnNll(
     child: Expression,
@@ -86,7 +87,7 @@ case class KnNll(
 
   /** Shared by the interpreted and codegen paths — they cannot diverge.
     * Every arithmetic step mirrors the declarative column expressions in
-    * `KnLm.knScoreWith` operation for operation (same IEEE754 sequence).
+    * `LanguageModels.knScoreWithTok` operation for operation (same IEEE754 sequence).
     * The lookup layer is allocation-light: each word is UTF-8-encoded
     * once; the middle-word digest and unigram index are cached per
     * POSITION (a word serves up to 3 trigrams); adjacent-pair digests
@@ -266,7 +267,7 @@ object KnNll {
 }
 
 /** The broadcastable KN count tables, every array sorted by its key
-  * (Spark binary string order — built by `KnLm.knIndex`): trigram digests
+  * (Spark binary string order — built by `LanguageModels.knIndex`): trigram digests
   * -> occurrence counts; (a,b) context digests -> (ctx2 = total
   * continuations, n3f = distinct continuations); (b,c) digests -> cont3
   * continuation counts; middle-token digests -> (mid, n2f); raw tokens ->

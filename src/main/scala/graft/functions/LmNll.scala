@@ -16,7 +16,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
   * sorted 16-hex bigram digests with aligned counts, sorted unigrams
   * with aligned counts, and the vocabulary size. Returns
   * `struct(n_bigrams BIGINT, nll_avg DOUBLE)` (6-dp, matching the
-  * declarative `PipelineOps10.lmScore` exactly), or NULL for rows with
+  * declarative `LanguageModels.lmScore` exactly), or NULL for rows with
   * fewer than two tokens — the same absence a left-joined score has.
   *
   * Why native: the declarative form is a per-doc AGGREGATION (explode
@@ -104,7 +104,7 @@ object LmNll {
   private val hexChars = "0123456789abcdef".toCharArray
 
   /** First 16 hex chars (8 bytes) of the digest — the fixed-width bigram
-    * key `PipelineOps10.lmScore` shuffles on.
+    * key `LanguageModels.lmScore` shuffles on.
     */
   private def toHex16(d: Array[Byte]): String = {
     val out = new Array[Char](16)
@@ -162,7 +162,7 @@ object LmNll {
 
 /** The broadcastable LM count tables: sorted bigram digests + counts,
   * sorted unigrams + counts, vocabulary size. Built ONCE per released
-  * corpus (one aggregation pass each — `PipelineOps10.lmIndex`), then
+  * corpus (one bounded collect — `LanguageModels.lmIndex`), then
   * baked into [[LmNll]] as reference objects.
   */
 final case class LmIndex(

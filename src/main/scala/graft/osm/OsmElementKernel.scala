@@ -31,14 +31,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Anything else returns null and goes to from_xml, which stays the one
   * authority on what an unusual element means: a numeric character
   * reference or an unknown entity; an empty value, a surrounding space
-  * (from_xml trims) or the literal `null` (its null value); a TAB, CR or
-  * LF in a value (attribute normalisation); invalid UTF-8, U+FFFE/U+FFFF;
-  * a non-canonical number (`+5`, `1e5`, `.5`, 19 digits); a duplicate
-  * attribute; a comment, CDATA, PI, text or unknown child; a child that
-  * is not self-closed; more than `MaxAttributes` attributes on one tag
-  * or more than `MaxBytes` bytes in one element (the parser's own size
-  * limits decide those). OsmElementKernelSpec pins each case against
-  * from_xml.
+  * (from_xml trims) or the literal `null` (from_xml keeps it as the
+  * 4-character string, not a null; OsmSpec reads one back through
+  * `writeParquet`); a TAB, CR or LF in a value (attribute normalisation);
+  * invalid UTF-8, U+FFFE/U+FFFF; a non-canonical number (`+5`, `1e5`,
+  * `.5`, 19 digits); a duplicate attribute; a comment, CDATA, PI, text or
+  * unknown child; a child that is not self-closed; more than
+  * `MaxAttributes` attributes on one tag or more than `MaxBytes` bytes in
+  * one element (the parser's own size limits decide those).
+  * OsmElementKernelSpec pins each case against from_xml.
   */
 private[osm] object OsmElementKernel {
 

@@ -185,7 +185,7 @@ object DocStreams {
   /** Stream-capable LM quality scoring — x_txt18's semantics in the
     * incremental-crawl regime: each streamed document's NLL under the
     * RELEASED corpus' bigram LM (count tables built batch-side ONCE with
-    * `ext.PipelineOps10.lmIndex`, baked into the native `lm_nll`
+    * `ext.LanguageModels.lmIndex`, baked into the native `lm_nll`
     * expression). A stateless narrow transform — one JVM pass per row,
     * zero state, zero shuffle — so statistical quality gating happens at
     * the stream door exactly as in batch (StreamingSpec pins stream ≡
@@ -194,14 +194,14 @@ object DocStreams {
     * x_txt18 join.
     */
   def lmScored(docs: DataFrame, idx: graft.functions.LmIndex): DataFrame =
-    graft.ext.PipelineOps10.lmScoreNative(docs, idx)
+    graft.ext.LanguageModels.lmScoreNative(docs, idx)
 
   /** Stream-capable KN scoring — [[lmScored]] one order up: the trigram
     * interpolated Kneser-Ney model (x_txt22c) at the stream door. Same
-    * broadcast-regime caveat (tables gated in `KnLm.knIndex`).
+    * broadcast-regime caveat (tables gated in `LanguageModels.knIndex`).
     */
   def knScored(docs: DataFrame, idx: graft.functions.KnIndex): DataFrame =
-    graft.ext.KnLm.knScoreNative(docs, idx)
+    graft.ext.LanguageModels.knScoreNative(docs, idx)
 
   /** Stream-capable minimal-piece token accounting — x_tok3's semantics
     * at the stream door: the piece vocabulary is induced batch-side ONCE

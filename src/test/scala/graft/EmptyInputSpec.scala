@@ -108,7 +108,7 @@ class EmptyInputSpec extends SparkSuite {
 
   test("LM, BM25, DSIR, PMI, HLL on empty inputs") {
     import graft.ext.PipelineOps10
-    assert(PipelineOps10.lmScore(emptyDocs, emptyDocs).count() == 0)
+    assert(graft.ext.LanguageModels.lmScore(emptyDocs, emptyDocs).count() == 0)
     assert(PipelineOps10.bm25TopK(emptyDocs, emptyDocs, 5).count() == 0)
     assert(PipelineOps10.dsirWeights(emptyDocs, emptyDocs).count() == 0)
     assert(PipelineOps10.pmiCollocations(emptyDocs, 5, 20).count() == 0)
@@ -127,7 +127,7 @@ class EmptyInputSpec extends SparkSuite {
     assert(Sampling.mixturePlan(emptyDocs, targets).count() == 0)
     assert(Corpus.fromHtml(emptyDocs.withColumnRenamed("text", "html")).df.count() == 0)
     // KN tables from an empty corpus: empty index, loud nothing
-    val idx = graft.ext.KnLm.knIndex(emptyDocs)
+    val idx = graft.ext.LanguageModels.knIndex(emptyDocs)
     assert(idx.v == 0L && idx.h3s.isEmpty && idx.bt == 0L)
     // join advice with an EMPTY side degrades to broadcast, never NPEs
     val adv = Sketches.adviseJoin(
@@ -137,11 +137,11 @@ class EmptyInputSpec extends SparkSuite {
   }
 
   test("LM store round-trips an empty corpus (empty tables, not a crash)") {
-    import graft.ext.LmStore
+    import graft.ext.LanguageModels
     val tmp = java.nio.file.Files.createTempDirectory("graft_lm_empty").toString
     try {
-      LmStore.buildLm(emptyDocs, tmp)
-      val idx = LmStore.loadLmIndex(spark, tmp)
+      LanguageModels.buildLm(emptyDocs, tmp)
+      val idx = LanguageModels.loadLmIndex(spark, tmp)
       assert(idx.v == 0L && idx.ws.isEmpty && idx.hbs.isEmpty)
     } finally {
       def rmr(f: java.io.File): Unit = {
@@ -153,15 +153,15 @@ class EmptyInputSpec extends SparkSuite {
   }
 
   test("LM index from an empty corpus scores everything at the 1/(0+0) guard") {
-    import graft.ext.PipelineOps10
+    import graft.ext.LanguageModels
     // v = 0 and all counts 0: ln((0+1)/(0+0)) would be ln(inf); the index
     // builder is the right gate — an empty train corpus is a recipe error.
-    val idx = PipelineOps10.lmIndex(emptyDocs)
+    val idx = LanguageModels.lmIndex(emptyDocs)
     assert(idx.v == 0L && idx.ws.isEmpty && idx.hbs.isEmpty)
     // scoring anything against it yields a non-finite NLL (p = 1/0), never
     // a crash; same pass-through the declarative round() gives ±Inf
     import spark.implicits._
-    val out = PipelineOps10.lmScoreNative(
+    val out = LanguageModels.lmScoreNative(
       Seq((1L, "two words")).toDF("doc_id", "text"), idx).collect()
     assert(out.length == 1 && out(0).getDouble(2).isNegInfinity)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.ext.KnLm
+import graft.ext.LanguageModels
 import graft.functions.KnNll
 
 /** Trigram interpolated Kneser-Ney: native ≡ declarative on the real
@@ -20,26 +20,27 @@ class KnLmSpec extends SparkSuite {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
 
   test("native scorer == declarative knScore on the real corpus") {
-    val idx = KnLm.knIndex(docs)
-    assert(rows(KnLm.knScoreNative(docs, idx)) == rows(KnLm.knScore(docs, docs)))
+    val idx = LanguageModels.knIndex(docs)
+    assert(rows(LanguageModels.knScoreNative(docs, idx)) ==
+      rows(LanguageModels.knScore(docs, docs)))
   }
 
   test("held-out regime: native == declarative through all three backoffs") {
     val train = docs.filter(col("doc_id") % 10 =!= 0)
     val heldOut = docs.filter(col("doc_id") % 10 === 0)
-    assert(rows(KnLm.knScoreNative(heldOut, KnLm.knIndex(train))) ==
-      rows(KnLm.knScore(train, heldOut)))
+    assert(rows(LanguageModels.knScoreNative(heldOut, LanguageModels.knIndex(train))) ==
+      rows(LanguageModels.knScore(train, heldOut)))
   }
 
   test("interpreted eval == codegen-backed DataFrame result") {
     val train = Seq((1L, "alpha beta gamma delta"), (2L, "beta gamma epsilon zeta"))
       .toDF("doc_id", "text")
-    val idx = KnLm.knIndex(train)
+    val idx = LanguageModels.knIndex(train)
     val texts = Seq("alpha beta gamma delta", "unseen words entirely here",
       "beta gamma epsilon", "two tokens", "one", "")
     val viaDf = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    val native = KnLm.knScoreNative(viaDf, idx)
+    val native = LanguageModels.knScoreNative(viaDf, idx)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     val e = KnNll(
       org.apache.spark.sql.catalyst.expressions.Literal.create("x",
@@ -69,15 +70,16 @@ class KnLmSpec extends SparkSuite {
     val one = Seq((1L, "x y z")).toDF("doc_id", "text")
     val expected = BigDecimal(-math.log(0.6625))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    assert(rows(KnLm.knScore(one, one)) == Seq((1L, 1L, expected)))
-    assert(rows(KnLm.knScoreNative(one, KnLm.knIndex(one))) == Seq((1L, 1L, expected)))
+    assert(rows(LanguageModels.knScore(one, one)) == Seq((1L, 1L, expected)))
+    assert(rows(LanguageModels.knScoreNative(one, LanguageModels.knIndex(one))) ==
+      Seq((1L, 1L, expected)))
   }
 
   test("fully-unseen text hits the continuation-unigram floor ln(B + V)") {
     // every trigram backs off to p1 with cont2 = 0: p = 1/(B+V)
     val train = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text") // B=3, V=4
-    val out = KnLm.knScoreNative(
-      Seq((9L, "nu xi omicron pi")).toDF("doc_id", "text"), KnLm.knIndex(train)).collect()
+    val out = LanguageModels.knScoreNative(
+      Seq((9L, "nu xi omicron pi")).toDF("doc_id", "text"), LanguageModels.knIndex(train)).collect()
     assert(out.length == 1 && out(0).getLong(1) == 2L)
     assert(math.abs(out(0).getDouble(2) - math.log(7.0)) < 1e-6)
   }
@@ -85,14 +87,14 @@ class KnLmSpec extends SparkSuite {
   test("persisted KN store round-trips to the identical native index") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_kn_rt").toString
     try {
-      KnLm.buildKn(docs, tmp)
-      val loaded = KnLm.loadKnIndex(spark, tmp)
-      val direct = KnLm.knIndex(docs)
+      LanguageModels.buildKn(docs, tmp)
+      val loaded = LanguageModels.loadKnIndex(spark, tmp)
+      val direct = LanguageModels.knIndex(docs)
       assert(loaded == direct)
-      val stored = KnLm.knScoreWithTok(
+      val stored = LanguageModels.knScoreWithTok(
         docs.select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws")),
-        KnLm.loadKnTables(spark, tmp))
-      assert(rows(stored) == rows(KnLm.knScore(docs, docs)))
+        LanguageModels.loadKnTables(spark, tmp))
+      assert(rows(stored) == rows(LanguageModels.knScore(docs, docs)))
     } finally graft.util.TempDirs.deleteRecursively(new java.io.File(tmp))
   }
 
@@ -104,7 +106,7 @@ class KnLmSpec extends SparkSuite {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     // reference regime: native scorer == declarative join
     val got = scores(graft.api.Corpus(shard).withKnScore(ref).df)
-    val want = KnLm.knScore(ref, shard).collect()
+    val want = LanguageModels.knScore(ref, shard).collect()
       .map(r => r.getLong(0) -> Some(r.getDouble(2))).toMap
     assert(got.size == shard.count())
     want.foreach { case (id, v) => assert(got(id) == v) }
@@ -114,7 +116,7 @@ class KnLmSpec extends SparkSuite {
     // store regime == reference regime on the same model corpus
     val tmp = java.nio.file.Files.createTempDirectory("graft_kn_api").toString
     try {
-      KnLm.buildKn(ref, tmp)
+      LanguageModels.buildKn(ref, tmp)
       assert(scores(graft.api.Corpus(shard).withKnScoreFromStore(tmp).df) == got)
     } finally graft.util.TempDirs.deleteRecursively(new java.io.File(tmp))
   }
@@ -132,10 +134,10 @@ class KnLmSpec extends SparkSuite {
       (4L, "a new shard with new words")).toDF("doc_id", "text")
     val full = base.unionAll(shard)
     val p = graft.util.TempDirs.scratch("kn_inc_spec")
-    KnLm.buildKnTypes(base, s"$p/base")
-    KnLm.mergeKnTypes(s, s"$p/base", shard, s"$p/merged")
-    val inc = KnLm.loadKnTypes(s, s"$p/merged")
-    val retrain = KnLm.knTables(full)
+    LanguageModels.buildKnTypes(base, s"$p/base")
+    LanguageModels.mergeKnTypes(s, s"$p/base", shard, s"$p/merged")
+    val inc = LanguageModels.loadKnTypes(s, s"$p/merged")
+    val retrain = LanguageModels.knTables(full)
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toSeq).toSet
     assert(rows(inc.t3) == rows(retrain.t3))
@@ -145,19 +147,40 @@ class KnLmSpec extends SparkSuite {
     assert(rows(inc.u2) == rows(retrain.u2))
     assert(rows(inc.sc) == rows(retrain.sc))
     // and the scored output is identical too
-    val a = KnLm.knScoreWithTok(
+    val a = LanguageModels.knScoreWithTok(
       full.select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws")),
       inc).orderBy("doc_id").collect().toSeq
-    val b = KnLm.knScore(full, full).orderBy("doc_id").collect().toSeq
+    val b = LanguageModels.knScore(full, full).orderBy("doc_id").collect().toSeq
     assert(a == b && a.nonEmpty)
   }
 
   test("index build refuses tables beyond the broadcast-regime ceiling, loudly") {
-    val e = intercept[IllegalArgumentException] {
-      KnLm.knIndex(docs, maxEntries = 10L)
-    }
-    assert(e.getMessage.contains("join form"),
-      s"gate must name the scale route: ${e.getMessage}")
-    assert(KnLm.knIndex(docs).v > 0) // real corpus is under the default gate
+    val tmp = java.nio.file.Files.createTempDirectory("graft_kn_gate").toString
+    try {
+      LanguageModels.buildKn(docs, tmp)
+      // the build path and the store-load path share one gate
+      for ((path, build) <- Seq[(String, Long => Any)](
+          "build" -> (m => LanguageModels.knIndex(docs, maxEntries = m)),
+          "store load" -> (m => LanguageModels.loadKnIndex(spark, tmp, maxEntries = m)))) {
+        val e = intercept[IllegalArgumentException](build(10L))
+        assert(e.getMessage.contains("join form"),
+          s"$path gate must name the scale route: ${e.getMessage}")
+      }
+      assert(LanguageModels.knIndex(docs).v > 0) // real corpus is under the default gate
+      assert(LanguageModels.loadKnIndex(spark, tmp).v > 0)
+    } finally graft.util.TempDirs.deleteRecursively(new java.io.File(tmp))
+  }
+
+  test("index build and store load submit no more Spark jobs than the count-then-collect") {
+    // measured before the shared collect (sf0.001, local[4]): knIndex 26
+    // jobs (persist, count, collect), loadKnIndex 9 (count, collect)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_kn_jobs").toString
+    try {
+      LanguageModels.buildKn(docs, tmp)
+      val (_, build) = JobCounter(spark)(LanguageModels.knIndex(docs))
+      val (_, load) = JobCounter(spark)(LanguageModels.loadKnIndex(spark, tmp))
+      assert(build <= 26, s"knIndex submitted $build jobs")
+      assert(load <= 9, s"loadKnIndex submitted $load jobs")
+    } finally graft.util.TempDirs.deleteRecursively(new java.io.File(tmp))
   }
 }

@@ -45,8 +45,8 @@ class NativeFunctionsSpec extends SparkSuite {
 
   /** SQL name -> (SQL text, Column API) over [[fixture]]'s columns. */
   private def cases(s: SparkSession): Seq[(String, (String, Column))] = {
-    val lm = ext.PipelineOps10.lmIndex(train(s))
-    val kn = ext.KnLm.knIndex(train(s))
+    val lm = ext.LanguageModels.lmIndex(train(s))
+    val kn = ext.LanguageModels.knIndex(train(s))
     val knArgs = Seq(kn.h3s, kn.c3s, kn.habs, kn.ctx2s, kn.n3fs, kn.hbcs, kn.cont3s,
       kn.hbs, kn.mids, kn.n2fs, kn.cs, kn.cont2s).map(sqlArray).mkString(", ")
     Seq(

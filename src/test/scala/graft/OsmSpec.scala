@@ -121,6 +121,23 @@ class OsmSpec extends SparkSuite {
   test("validated tables pass the V1 non-null gate") {
     val v = OsmPipeline.validated(t)
     assert(v.nodes.count() == 2 && v.nodeTags.count() == 11)
+    // a tag value spelled `null` is the 4-character string, not a null:
+    // it passes the gate and reads back unchanged through the parquet sink
+    val dir = java.nio.file.Files.createTempDirectory("osm_null_value")
+    try {
+      val xml = dir.resolve("null.osm")
+      java.nio.file.Files.write(xml, ("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
+        "<osm version=\"0.6\">\n" +
+        "  <node id=\"1\" lat=\"30.1\" lon=\"-97.1\" version=\"1\" timestamp=\"2016-01-01T00:00:00Z\"" +
+        " changeset=\"1\" uid=\"1\" user=\"u\">\n" +
+        "    <tag k=\"name\" v=\"null\"/>\n" +
+        "  </node>\n</osm>\n").getBytes("UTF-8"))
+      OsmPipeline.writeParquet(
+        OsmPipeline.validated(OsmPipeline.process(spark, xml.toString)), s"$dir/out")
+      val back = spark.read.parquet(s"$dir/out/nodes_tags").collect()
+      assert(back.length == 1 && !back(0).isNullAt(2))
+      assert(back(0).getString(2) == "null" && back(0).getString(2).length == 4)
+    } finally graft.util.TempDirs.deleteRecursively(dir)
   }
 
   test("CSV round-trip preserves rows, column order, and typed values") {

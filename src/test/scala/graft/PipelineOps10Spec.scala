@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{PipelineOps10, Sketches}
+import graft.ext.{LanguageModels, PipelineOps10, Sketches}
 
 /** Fourth-wave round-7 operators: LM scoring, BM25, DSIR, PMI, HLL, and
   * rate anomalies — planted-fixture behavior pins on top of the probes'
@@ -19,7 +19,7 @@ class PipelineOps10Spec extends SparkSuite {
     val fluent = (1L to 20L).map(i => (i, "the cat sat on the mat and the dog ran"))
     val odd = Seq((99L, "zqx vvk jjq wom pfft glarb zzyx qqen mmo xaa"))
     val corpus = (fluent ++ odd).toDF("doc_id", "text")
-    val out = PipelineOps10.lmScore(corpus, corpus)
+    val out = LanguageModels.lmScore(corpus, corpus)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(out(99L) > out(1L) * 2,
       s"gibberish ${out(99L)} should far exceed fluent ${out(1L)}")
@@ -28,16 +28,16 @@ class PipelineOps10Spec extends SparkSuite {
   test("lmScore held-out: unseen bigrams fall back to the smoothing floor, not an error") {
     val train = (1L to 10L).map(i => (i, "alpha beta gamma delta")).toDF("doc_id", "text")
     val unseen = Seq((50L, "nu xi omicron pi")).toDF("doc_id", "text")
-    val row = PipelineOps10.lmScore(train, unseen).collect()
+    val row = LanguageModels.lmScore(train, unseen).collect()
     assert(row.length == 1 && row(0).getLong(1) == 3L)
     // every bigram unseen, every context unseen: p = 1/V exactly, V = 4
     assert(math.abs(row(0).getDouble(2) - math.log(4.0)) < 1e-6)
   }
 
   test("lmScore is invariant to input partitioning") {
-    val a = PipelineOps10.lmScore(docs, docs).orderBy("doc_id").collect().toSeq
+    val a = LanguageModels.lmScore(docs, docs).orderBy("doc_id").collect().toSeq
     val d8 = docs.repartition(8)
-    val b = PipelineOps10.lmScore(d8, d8).orderBy("doc_id").collect().toSeq
+    val b = LanguageModels.lmScore(d8, d8).orderBy("doc_id").collect().toSeq
     assert(a == b)
   }
 
@@ -51,16 +51,16 @@ class PipelineOps10Spec extends SparkSuite {
     val tok = docs.select(col("doc_id"), graft.clean.CleanFns.tokens(col("text")).as("ws"))
     val partialUni = Seq(("alpha", 1L)).toDF("w", "c1") // missing beta
     val e = intercept[Exception] {
-      PipelineOps10.lmSelfScoreTokWith(tok, partialUni).collect()
+      LanguageModels.lmSelfScoreTokWith(tok, partialUni).collect()
     }
     def msgs(x: Throwable): Seq[String] =
       if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
     assert(msgs(e).exists(_.contains("does not cover")), e.getMessage)
     // and a covering table still works: identical to the one-arg form
-    val full = PipelineOps10.lmSelfScoreTok(tok).collect().toSeq
+    val full = LanguageModels.lmSelfScoreTok(tok).collect().toSeq
     val cover = tok.select(explode(col("ws")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
-    val withUni = PipelineOps10.lmSelfScoreTokWith(tok, cover).collect().toSeq
+    val withUni = LanguageModels.lmSelfScoreTokWith(tok, cover).collect().toSeq
     assert(full == withUni && full.nonEmpty)
   }
 
@@ -134,7 +134,7 @@ class PipelineOps10Spec extends SparkSuite {
     val got = graft.api.Corpus(shard).withLmScore(ref).df
       .select("doc_id", "nll_avg").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    val want = PipelineOps10.lmScore(ref, shard).collect()
+    val want = LanguageModels.lmScore(ref, shard).collect()
       .map(r => r.getLong(0) -> Some(r.getDouble(2))).toMap
     assert(shard.count() == got.size)
     want.foreach { case (id, v) => assert(got(id) == v) }

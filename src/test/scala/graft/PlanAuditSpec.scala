@@ -467,10 +467,10 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("native LM scoring is a pure narrow projection — zero exchanges") {
-    import graft.ext.PipelineOps10
+    import graft.ext.LanguageModels
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-    val idx = PipelineOps10.lmIndex(docs.limit(50))
-    val df = PipelineOps10.lmScoreNative(docs, idx)
+    val idx = LanguageModels.lmIndex(docs.limit(50))
+    val df = LanguageModels.lmScoreNative(docs, idx)
     df.write.format("noop").mode("overwrite").save()
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"scoring stage went wide:\n$plan")

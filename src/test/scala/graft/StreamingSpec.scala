@@ -812,10 +812,10 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming LM scoring == batch against the same released-corpus index") {
     import graft.streaming.DocStreams
-    import graft.ext.PipelineOps10
+    import graft.ext.LanguageModels
     val batchDocs = Tables(spark, dir, "documents")
     // LM from the even docs; stream the odd docs (unseen bigrams included)
-    val idx = PipelineOps10.lmIndex(batchDocs.filter(col("doc_id") % 2 === 0))
+    val idx = LanguageModels.lmIndex(batchDocs.filter(col("doc_id") % 2 === 0))
     val tmp = java.nio.file.Files.createTempDirectory("graft_lm_stream").toString
     try {
       batchDocs.filter(col("doc_id") % 2 === 1)
@@ -830,10 +830,10 @@ class StreamingSpec extends SparkSuite {
         def norm(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
         val got = norm(spark.table("lm_out"))
-        val want = norm(PipelineOps10.lmScoreNative(spark.read.parquet(s"$tmp/in"), idx))
+        val want = norm(LanguageModels.lmScoreNative(spark.read.parquet(s"$tmp/in"), idx))
         assert(got.nonEmpty && got == want)
         // and the stream result matches the DECLARATIVE batch join too
-        val decl = norm(PipelineOps10.lmScore(
+        val decl = norm(LanguageModels.lmScore(
           batchDocs.filter(col("doc_id") % 2 === 0), spark.read.parquet(s"$tmp/in")))
         assert(got == decl)
       } finally q.stop()
@@ -848,11 +848,11 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming KN scoring == batch against the same released-corpus index") {
     import graft.streaming.DocStreams
-    import graft.ext.KnLm
+    import graft.ext.LanguageModels
     val batchDocs = Tables(spark, dir, "documents")
     // KN model from the even docs; stream the odd docs (all three
     // backoff branches exercised by unseen trigrams/contexts/words)
-    val idx = KnLm.knIndex(batchDocs.filter(col("doc_id") % 2 === 0))
+    val idx = LanguageModels.knIndex(batchDocs.filter(col("doc_id") % 2 === 0))
     val tmp = java.nio.file.Files.createTempDirectory("graft_kn_stream").toString
     try {
       batchDocs.filter(col("doc_id") % 2 === 1)
@@ -867,10 +867,10 @@ class StreamingSpec extends SparkSuite {
         def norm(df: org.apache.spark.sql.DataFrame) =
           df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
         val got = norm(spark.table("kn_out"))
-        val want = norm(KnLm.knScoreNative(spark.read.parquet(s"$tmp/in"), idx))
+        val want = norm(LanguageModels.knScoreNative(spark.read.parquet(s"$tmp/in"), idx))
         assert(got.nonEmpty && got == want)
         // and the stream result matches the DECLARATIVE batch join too
-        val decl = norm(KnLm.knScore(
+        val decl = norm(LanguageModels.knScore(
           batchDocs.filter(col("doc_id") % 2 === 0), spark.read.parquet(s"$tmp/in")))
         assert(got == decl)
       } finally q.stop()
