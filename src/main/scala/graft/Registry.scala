@@ -38,9 +38,7 @@ object Registry {
     ext.SegIndex.all ++
     ext.BloomIndex.all ++
     ext.QualityModel.all ++
-    ext.IvfIndex.all ++
-    ext.Similarity.all ++
-    ext.Similarity2.all ++
+    ext.VectorSearch.all ++
     ext.EmbedDedup.all ++
     ext.TextAnalysis.all ++
     ext.LangId.all ++

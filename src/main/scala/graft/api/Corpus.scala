@@ -1,11 +1,10 @@
 package graft.api
 
-import graft.ext.{Decontamination, Sampling, Similarity, TokenLayout}
+import graft.ext.{Decontamination, Sampling, TokenLayout, VectorSearch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.BpeCount.bpe_count
-import graft.functions.DotProduct.dot_d
 import graft.functions.RollingHash.rolling_hash
 
 /** Fluent corpus-pipeline API: composes the engine's text/dedup/similarity
@@ -875,13 +874,10 @@ object Corpus {
     Corpus(graft.Tables(spark, dir, "documents"))
 
   /** Embedding-side entry: quantized vectors + norms, ready for
-    * similarity operators (shares Similarity.intVec).
+    * similarity operators (VectorSearch.quantized).
     */
-  def vectors(spark: SparkSession, dir: String): DataFrame = {
-    graft.Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("label"), expr(Similarity.intVec).as("v"))
-      .withColumn("n2", dot_d(col("v"), col("v")))
-  }
+  def vectors(spark: SparkSession, dir: String): DataFrame =
+    VectorSearch.quantized(graft.Tables(spark, dir, "embeddings"), "label")
 
   /** Embedding near-duplicate pairs (x_ded13): banded sign-LSH candidates
     * verified by exact integer-quantized cosine at `tau` — the scale path

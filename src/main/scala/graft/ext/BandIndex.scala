@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * The daily-crawl regime re-dedupes each NEW shard against an
   * already-released corpus. Recomputing the released corpus's band
   * signatures on every run re-reads and re-hashes the full old corpus —
-  * at 100 TB that dwarfs the new shard's own cost. Like `IvfIndex`, the
+  * at 100 TB that dwarfs the new shard's own cost. Like the IVF index, the
   * fix is to make the on-disk layout the index: bands are computed ONCE
   * (with the native zero-exchange `minhash_bands` expression), written as
   * parquet partitioned by a signature prefix, and every subsequent

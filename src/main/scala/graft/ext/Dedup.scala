@@ -3,7 +3,6 @@ package graft.ext
 import graft.{Probe, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.functions.DotProduct.dot_d
 import graft.functions.NfkcCasefold.nfkc_casefold
 
 /** Deduplication operators for a large-scale training-data pipeline.
@@ -702,10 +701,7 @@ object Dedup {
       |WHERE list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2])) /
       |      sqrt(a.n2 * b.n2) >= 0.35
       |ORDER BY a_id, b_id""".stripMargin) { (s, dir) =>
-    val n = Tables(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        expr(Similarity.intVec).as("v"))
-      .withColumn("n2", dot_d(col("v"), col("v")))
+    val n = VectorSearch.quantized(Tables(s, dir, "embeddings"), "label")
       // persisted: unlike the banded chains, the two all-pairs join sides
       // are NOT identical subtrees once the a/b blocks diverge, so
       // ReusedExchange cannot serve them (measured 2x lazily, round 7)
@@ -715,7 +711,7 @@ object Dedup {
     val b = n.select(col("vec_id").as("b_id"), col("label").as("label_b"),
       col("v").as("bv"), col("n2").as("bn2"))
     a.join(b, a("label") === b("label_b") && a("a_id") < b("b_id"))
-      .withColumn("cos", dot_d(col("av"), col("bv")) / sqrt(col("an2") * col("bn2")))
+      .withColumn("cos", VectorSearch.cosine("av", "an2", "bv", "bn2"))
       .filter(col("cos") >= 0.35)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
       .orderBy("a_id", "b_id")
@@ -729,8 +725,8 @@ object Dedup {
     * old×old.
     *
     * Scale shape: at 100 TB the old side's bands are a persisted index
-    * (written once, partitioned by band signature — exactly like
-    * `IvfIndex`), so each incremental run shuffles ONLY the new shard's
+    * (written once, partitioned by band signature — exactly like the
+    * IVF index), so each incremental run shuffles ONLY the new shard's
     * bands and joins against the co-located index partitions; the old
     * corpus text is never re-read, let alone re-shuffled. Here both sides
     * derive from one generator call to keep the probe self-contained; the

@@ -48,7 +48,7 @@ final case class EmbedLsh(dims: Int = 64, planes: Int = 16,
   *     vector path. Transitive connected components still merge a storm
   *     into one cluster through chained pairs.
   *  4. Exact verification: cosine over the shared floor(x*1e6) integer
-  *     quantization (Similarity.intVec), pairs kept at >= tau.
+  *     quantization (VectorSearch.quantized), pairs kept at >= tau.
   *
   * Recall is the standard banded-LSH curve (P[candidate] =
   * 1-(1-p^bandBits)^bands with p = 1 - theta/pi); raise bands or lower band
@@ -112,9 +112,7 @@ object EmbedDedup {
     * as an int array — one narrow projection, zero exchanges.
     */
   def signatures(embeddings: DataFrame, cfg: EmbedLsh = default): DataFrame = {
-    embeddings
-      .withColumn("v", expr(Similarity.intVec))
-      .withColumn("n2", dot_d(col("v"), col("v")))
+    VectorSearch.quantized(embeddings)
       .withColumn("bits", array((1 to cfg.planes).map(bb =>
         when(planeDot(cfg, bb) > 0, 1).otherwise(0)): _*))
   }
@@ -132,9 +130,7 @@ object EmbedDedup {
           lit(1L << (j - 1))).otherwise(lit(0L))
       }.reduce(_ + _)
     }
-    embeddings
-      .withColumn("v", expr(Similarity.intVec))
-      .withColumn("n2", dot_d(col("v"), col("v")))
+    VectorSearch.quantized(embeddings)
       .select(col("vec_id"), col("v"), col("n2"), array(bandCols: _*).as("bands"))
   }
 
@@ -198,7 +194,7 @@ object EmbedDedup {
       // division — ANSI mode throws on /0 where the oracle's NaN comparison
       // would merely evaluate false
       .filter(col("an2") > 0 && col("bn2") > 0)
-      .withColumn("cos", dot_d(col("av"), col("bv")) / sqrt(col("an2") * col("bn2")))
+      .withColumn("cos", VectorSearch.cosine("av", "an2", "bv", "bn2"))
       .filter(col("cos") >= tau)
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos"))
   }

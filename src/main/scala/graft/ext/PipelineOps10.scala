@@ -642,8 +642,7 @@ object PipelineOps10 {
       |  CAST(MAX(na) AS BIGINT) AS n_a, CAST(MAX(nb) AS BIGINT) AS n_b,
       |  round(sqrt(SUM((ma - mb) * (ma - mb))), 4) AS drift_l2
       |FROM m GROUP BY label ORDER BY label""".stripMargin) { (s, dir) =>
-    val iv = Tables(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"), expr(Similarity.intVec).as("v"))
+    val iv = VectorSearch.quantized(Tables(s, dir, "embeddings"), "label")
     val d = iv.select(col("label"), (col("vec_id") % 2).as("side"),
       posexplode(col("v")).as(Seq("i0", "x")))
     val c = d.groupBy(col("label"), col("side"), col("i0"))

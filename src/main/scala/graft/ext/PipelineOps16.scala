@@ -391,30 +391,16 @@ object PipelineOps16 {
        |cent0 AS (
        |  SELECT vec_id AS c_id, v AS cv FROM iv WHERE vec_id % 4 <> 0
        |  ORDER BY vec_id LIMIT 8),
-       |ad0 AS (
-       |  SELECT iv.vec_id, cent0.c_id,
-       |         list_sum(list_transform(list_zip(iv.v, cent0.cv), z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
-       |  FROM iv, cent0 WHERE iv.vec_id % 4 <> 0),
-       |assign0 AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn FROM ad0)
-       |  WHERE rn = 1),
-       |dims AS (
-       |  SELECT a.cell, t.i, CAST(CAST(SUM(iv.v[t.i]) AS BIGINT) // COUNT(*) AS DOUBLE) AS m
-       |  FROM assign0 a JOIN iv ON iv.vec_id = a.vec_id,
-       |       UNNEST(generate_series(1, 64)) AS t(i)
-       |  GROUP BY a.cell, t.i),
-       |cent1 AS (SELECT cell AS c_id, list(m ORDER BY i) AS cv FROM dims GROUP BY cell),
+       |${VectorSearch.adDuck("ad0", "cent0", " WHERE iv.vec_id % 4 <> 0")},
+       |${VectorSearch.assignDuck("assign0", "ad0")},
+       |${VectorSearch.lloydDuck},
        |adk AS (
        |  SELECT iv.vec_id, cent1.c_id,
        |         list_sum(list_transform(list_zip(iv.v, cent1.cv), z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
        |  FROM iv
        |  JOIN (SELECT doc_id FROM fc WHERE kept = 1 AND doc_id < 10000) kf
        |    ON kf.doc_id = iv.vec_id, cent1),
-       |cellk AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn FROM adk)
-       |  WHERE rn = 1)
+       |${VectorSearch.assignDuck("cellk", "adk")}
        |SELECT fc.doc_id,
        |  CAST(fc.is_exact AS BIGINT) AS is_exact,
        |  CAST(fc.is_near AS BIGINT) AS is_near,
@@ -445,14 +431,14 @@ object PipelineOps16 {
       BandIndex.build(released, s"$p/bands_idx")
       SegIndex.build(released, s"$p/seg_idx")
       LanguageModels.buildKnTypes(released, s"$p/kn_base")
-      IvfIndex.save(IvfIndex.train(emb.filter(col("vec_id") % 4 =!= 0)), s"$p/ivf")
+      VectorSearch.save(VectorSearch.train(emb.filter(col("vec_id") % 4 =!= 0)), s"$p/ivf")
       // once-per-shard side effects: merge the ACCEPTED docs into the KN
       // store; append their embeddings into the IVF layout
       val kept = pipe8Flags(s, p, shard, s"$p/build_run")
         .filter(col("kept") === 1L)
         .select(col("doc_id"), col("text"))
       LanguageModels.mergeKnTypes(s, s"$p/kn_base", kept, s"$p/kn_merged")
-      IvfIndex.append(s, s"$p/ivf",
+      VectorSearch.append(s, s"$p/ivf",
         emb.join(kept.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi"))
       p
     }

@@ -5,15 +5,13 @@ import graft.clean.CleanFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.DotProduct.{dot_d, sq_dist}
 
-/** Segment-level dedup with document reconstruction (corpus-wide and
-  * within one document) and cluster-scoped semantic dedup (SemDeDup
-  * shape).
+/** Segment-level dedup with document reconstruction, corpus-wide
+  * (x_ded18) and within one document (x_ded22).
   *
   * Scale design notes per operator are on each probe; the shared theme is
-  * that every candidate-generation stage is bounded (segment digests,
-  * IVF cells) — nothing here pairs the corpus with itself globally.
+  * that candidate generation is bounded by segment digests — nothing here
+  * pairs the corpus with itself globally.
   */
 object PipelineOps8 {
 
@@ -133,155 +131,6 @@ object PipelineOps8 {
       .select(col("doc_id"), col("n_segs"), col("n_kept"), col("text_kept"))
   }
 
-  private val semTau = 0.35
-  private[graft] val semCap = 16 // per-vector candidate cap (cell heads)
-
-  /** X-DED19 — SemDeDup-shaped semantic dedup: embeddings are assigned to
-    * IVF cells (x_sim3's deterministic coarse quantizer — centroids = the
-    * first 8 vectors, exact-integer L2), and WITHIN each cell any vector
-    * whose cosine to a lower-id CANDIDATE cell-mate reaches tau is
-    * dropped. Candidates are the cell's `semCap` lowest-id members (its
-    * "heads") — the x_ded13b candidate-cap discipline applied to the
-    * clustering-scoped sibling: an uncapped within-cell self-join is
-    * quadratic in cell size when one mega-cell forms (template storm,
-    * 8 fixed centroids = a skewable key). Ranking candidates by id keeps
-    * the capped semantics DETERMINISTIC and oracle-expressible, and makes
-    * the storm case exact: identical vectors share a cell whose minimum
-    * id is always a head, so every clone still finds its witness.
-    *
-    * This is the cluster-scoped regime of semantic dedup (SemDeDup,
-    * Abbas et al. 2023, public): the LSH chain (x_ded13+) bounds candidates
-    * by hash-bucket collisions; this one bounds them by cluster membership
-    * AND the head cap, which a pipeline that ALREADY clusters for
-    * curriculum/mixing gets for free. Per-cell cost is |cell| x semCap
-    * (never |cell|^2); the head table is centroids x semCap rows — a
-    * broadcast, so the corpus is shuffled once (by cell, for head
-    * election) and the verify pass is a broadcast join. Cell assignment
-    * itself is a narrow map against broadcast centroids.
-    *
-    * Output: every vector with its cell, the (capped — like x_ded13b's
-    * collision counts) count of lower-id in-cell near-neighbor candidates,
-    * and the keep verdict.
-    */
-  private val ded19 = Probe(
-    "x_ded19_semdedup",
-    s"""WITH iv AS (
-       |  SELECT vec_id, list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000000)) AS v
-       |  FROM embeddings),
-       |cent AS (SELECT vec_id AS c_id, v AS cv FROM iv WHERE vec_id < 8),
-       |ad AS (
-       |  SELECT iv.vec_id, cent.c_id,
-       |         list_sum(list_transform(list_zip(iv.v, cent.cv), z -> (z[1]-z[2])*(z[1]-z[2]))) AS d2
-       |  FROM iv, cent),
-       |assign AS (
-       |  SELECT vec_id, c_id AS cell FROM (
-       |    SELECT vec_id, c_id, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c_id) AS rn FROM ad)
-       |  WHERE rn = 1),
-       |n AS (SELECT a.vec_id, a.cell, iv.v,
-       |             list_sum(list_transform(iv.v, x -> x * x)) AS n2
-       |      FROM assign a JOIN iv ON iv.vec_id = a.vec_id),
-       |heads AS (
-       |  SELECT vec_id AS y_id, cell, v AS yv, n2 AS yn2 FROM (
-       |    SELECT vec_id, cell, v, n2,
-       |           row_number() OVER (PARTITION BY cell ORDER BY vec_id) AS hrn
-       |    FROM n)
-       |  WHERE hrn <= $semCap),
-       |close AS (
-       |  SELECT x.vec_id, CAST(COUNT(*) AS BIGINT) AS n_close
-       |  FROM n x JOIN heads y ON x.cell = y.cell AND y.y_id < x.vec_id
-       |  WHERE y.yn2 > 0 AND x.n2 > 0
-       |    AND list_sum(list_transform(list_zip(x.v, y.yv), z -> z[1] * z[2])) /
-       |        sqrt(x.n2 * y.yn2) >= $semTau
-       |  GROUP BY x.vec_id)
-       |SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell,
-       |       COALESCE(c.n_close, 0) AS n_close,
-       |       CAST(CASE WHEN c.n_close IS NULL THEN 1 ELSE 0 END AS INT) AS keep
-       |FROM assign a LEFT JOIN close c ON c.vec_id = a.vec_id
-       |ORDER BY a.vec_id""".stripMargin) { (s, dir) =>
-    semDedup(Tables(s, dir, "embeddings"), semTau).orderBy("vec_id")
-  }
-
-  /** The reusable operator behind x_ded19: (vec_id, cell, n_close, keep)
-    * for every embedding, `keep = 1` iff no lower-id CANDIDATE in the
-    * same IVF cell has cosine >= tau. `n_close` counts close candidates.
-    *
-    * `cap` picks the verdict's recall/scale point:
-    *   - cap > 0 (default 16): candidates are the cell's `cap` lowest-id
-    *     HEADS — per-vector work <= cap at any cell skew (the broadcast
-    *     head table), but a near-dup pair entirely among NON-head members
-    *     of a giant cell is missed (the LSH chain x_ded13+ is the recall
-    *     path for those).
-    *   - cap <= 0: UNCAPPED exact-within-cell semantics — every lower-id
-    *     cell-mate is a candidate via a cell-keyed self-join. Cost is
-    *     |cell|² on the largest cell: correct at broadcast/moderate
-    *     scale, the known quadratic at web scale (round-7 verdict).
-    */
-  def semDedup(embeddings: DataFrame, tau: Double, cap: Int = semCap): DataFrame = {
-    val assign = semAssign(embeddings)
-    val close = semCandidates(assign, cap)
-      .filter(col("xn2") > 0 && col("yn2") > 0)
-      .filter(dot_d(col("xv"), col("yv")) / sqrt(col("xn2") * col("yn2")) >= tau)
-      .groupBy("vec_id").agg(count(lit(1)).as("n_close"))
-    assign.select(col("vec_id"), col("cell").cast("long").as("cell"))
-      .join(close, Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        coalesce(col("n_close"), lit(0L)).as("n_close"),
-        when(col("n_close").isNull, 1).otherwise(0).cast("int").as("keep"))
-  }
-
-  /** (vec_id, cell, v, n2) with each vector's nearest of the 8 fixed
-    * centroids — narrow map over broadcast centroids.
-    */
-  private def semAssign(embeddings: DataFrame): DataFrame = {
-    val iv = embeddings.select(col("vec_id"), expr(Similarity.intVec).as("v"))
-    val cent = iv.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"))
-    val wA = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c_id"))
-    iv.crossJoin(broadcast(cent))
-      .withColumn("d2", sq_dist(col("v"), col("cv")))
-      .withColumn("rn", row_number().over(wA)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("c_id").as("cell"), col("v"),
-        dot_d(col("v"), col("v")).as("n2"))
-  }
-
-  /** The bounded candidate pairs (vec_id, y_id, cell, xv/yv, xn2/yn2):
-    * each vector against the lower-id members of its cell's head set.
-    * Heads (the `cap` lowest ids per cell) are elected with a TWO-LEVEL
-    * sharded top-K — per-(cell, shard) row_number then per-cell over the
-    * <= 64*cap survivors (the x_mix3b discipline) — so a mega-cell never
-    * funnels its full population through one window task. The head table
-    * is centroids x cap rows -> broadcast: the verify pass shuffles
-    * nothing, and per-vector work is <= cap regardless of cell skew.
-    * Exposed for PipelineOps8Spec's storm fixture (candidates <= cap * n).
-    */
-  private[graft] def semCandidates(assign: DataFrame, cap: Int): DataFrame = {
-    val x = assign
-      .select(col("vec_id"), col("cell"), col("v").as("xv"), col("n2").as("xn2"))
-    if (cap <= 0) {
-      // uncapped exact-within-cell pairs: cell-keyed self-join (shuffle,
-      // |cell|^2 on the largest cell) — the recall-exact route
-      val y = assign.select(col("vec_id").as("y_id"), col("cell"),
-        col("v").as("yv"), col("n2").as("yn2"))
-      x.join(y, Seq("cell")).filter(col("y_id") < col("vec_id"))
-    } else {
-      val shards = 64
-      val wS = Window.partitionBy(col("cell"), col("shard")).orderBy(col("vec_id"))
-      val wC = Window.partitionBy(col("cell")).orderBy(col("vec_id"))
-      val heads = assign
-        .withColumn("shard", pmod(col("vec_id"), lit(shards)))
-        .withColumn("srn", row_number().over(wS)).filter(col("srn") <= cap)
-        .withColumn("hrn", row_number().over(wC)).filter(col("hrn") <= cap)
-        .select(col("vec_id").as("y_id"), col("cell"), col("v").as("yv"),
-          col("n2").as("yn2"))
-      x.join(broadcast(heads), Seq("cell"))
-        .filter(col("y_id") < col("vec_id"))
-    }
-  }
-
-  /** Candidate pairs for a raw embeddings frame — spec entry point. */
-  private[graft] def semDedupCandidates(embeddings: DataFrame, cap: Int = semCap): DataFrame =
-    semCandidates(semAssign(embeddings), cap)
-
   /** The NARROW intra-document form of segment dedup: drop segments
     * repeated WITHIN the same document (keep each first occurrence),
     * entirely inside one row — an indexed-lambda filter over the segment
@@ -322,5 +171,5 @@ object PipelineOps8 {
     intraDocSegmentDedup(Tables(s, dir, "documents")).orderBy("doc_id")
   }
 
-  val all: Seq[Probe] = Seq(ded18, ded19, ded22)
+  val all: Seq[Probe] = Seq(ded18, ded22)
 }

@@ -2,14 +2,13 @@ package graft.ext
 
 import graft.{Probe, Tables}
 import graft.clean.CleanFns
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.DotProduct.dot_d
 
-/** Duplicated-span extraction (x_ded20), Johnson-Lindenstrauss random
-  * projection (x_sim6), the release data card (x_rep2) and the composed
-  * segment-dedup → decontamination → quality pipeline (x_pipe4).
+/** Duplicated-span extraction (x_ded20), the release data card (x_rep2)
+  * and the composed segment-dedup → decontamination → quality pipeline
+  * (x_pipe4).
   */
 object PipelineOps9 {
 
@@ -74,85 +73,6 @@ object PipelineOps9 {
       .agg(max(col("run")).as("max_run_grams"),
         (max(col("run")) + (n - 1)).as("span_words"),
         sum(col("run")).as("n_dup_positions"))
-  }
-
-  // ------------------------------------------------- JL random projection
-
-  private val jlDims = 64
-  private val jlPlanes = 16
-
-  /** X-SIM6 — Johnson-Lindenstrauss random projection: 64-dim quantized
-    * vectors compressed to 16 signed-projection coordinates (the
-    * EmbedDedup md5 hyperplane matrix — shared sign rule, so the
-    * "random" directions are deterministic and engine-portable), with the
-    * ORIGINAL cosine surfaced next to the PROJECTED cosine for every
-    * (query, candidate) pair so the distance distortion is visible and
-    * checked.
-    *
-    * This is the ANN prefilter regime between x_sim5 (int8: same dims,
-    * narrower values) and x_ded13 (1-bit signs): 4x fewer dims with real
-    * magnitudes. The projection is a narrow per-row fold against literal
-    * sign rows — zero exchanges, stream-compatible.
-    *
-    * Numeric portability: each coordinate is an exact-integer dot over
-    * floor-quantized values divided by 64 (a power of two — exact in
-    * doubles), so products and partial sums in BOTH the projected and
-    * original cosine stay exactly representable; the final divide/sqrt is
-    * one IEEE op on identical inputs.
-    */
-  private val sim6 = Probe(
-    "x_sim6_jl_projection",
-    s"""WITH iv AS (
-       |  SELECT vec_id, list_transform(embedding, x -> floor(CAST(x AS DOUBLE) * 1000000)) AS v
-       |  FROM embeddings WHERE vec_id < 50),
-       |d AS (
-       |  SELECT vec_id, bb,
-       |    SUM(CASE WHEN substr(md5(bb || '_' || i), 1 + ((i * 7 + bb * 13) % 32), 1)
-       |             IN ('8','9','a','b','c','d','e','f') THEN v[i] ELSE -v[i] END) / 64.0 AS c
-       |  FROM iv, UNNEST(generate_series(1, $jlPlanes)) AS t1(bb),
-       |       UNNEST(generate_series(1, $jlDims)) AS t2(i)
-       |  GROUP BY vec_id, bb),
-       |pr AS (SELECT vec_id, list(c ORDER BY bb) AS p FROM d GROUP BY vec_id),
-       |n AS (
-       |  SELECT iv.vec_id, iv.v, pr.p,
-       |         list_sum(list_transform(iv.v, x -> x * x)) AS n2,
-       |         list_sum(list_transform(pr.p, x -> x * x)) AS n2p
-       |  FROM iv JOIN pr ON pr.vec_id = iv.vec_id)
-       |SELECT a.vec_id AS q_id, b.vec_id AS c_id,
-       |       round(list_sum(list_transform(list_zip(a.v, b.v), z -> z[1] * z[2])) /
-       |             sqrt(a.n2 * b.n2), 6) AS cos_orig,
-       |       round(list_sum(list_transform(list_zip(a.p, b.p), z -> z[1] * z[2])) /
-       |             sqrt(a.n2p * b.n2p), 6) AS cos_proj
-       |FROM n a JOIN n b ON a.vec_id < 5 AND b.vec_id > a.vec_id
-       |ORDER BY q_id, c_id""".stripMargin) { (s, dir) =>
-    val cfg = EmbedLsh(dims = jlDims, planes = jlPlanes)
-    val iv = Tables(s, dir, "embeddings")
-      .filter(col("vec_id") < 50)
-      .select(col("vec_id"), expr(Similarity.intVec).as("v"))
-      .withColumn("p", jlProject(cfg))
-      .withColumn("n2", dot_d(col("v"), col("v")))
-      .withColumn("n2p", dot_d(col("p"), col("p")))
-    val a = iv.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("v").as("av"), col("p").as("ap"),
-        col("n2").as("an2"), col("n2p").as("an2p"))
-    val b = iv.select(col("vec_id").as("c_id"), col("v").as("bv"), col("p").as("bp"),
-      col("n2").as("bn2"), col("n2p").as("bn2p"))
-    broadcast(a).join(b, col("c_id") > col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        round(dot_d(col("av"), col("bv")) / sqrt(col("an2") * col("bn2")), 6).as("cos_orig"),
-        round(dot_d(col("ap"), col("bp")) / sqrt(col("an2p") * col("bn2p")), 6).as("cos_proj"))
-      .orderBy("q_id", "c_id")
-  }
-
-  /** The 16-coordinate JL projection of quantized vector column `v` as a
-    * narrow per-row expression (literal sign rows, shared with EmbedDedup's
-    * hyperplane matrix). Coordinates are divided by 64 = 2^6 (exact in
-    * doubles) to keep downstream norms inside the 2^53 exact-integer range.
-    */
-  def jlProject(cfg: EmbedLsh): Column = {
-    // DECIMAL(3,1) 64.0, the type the SQL literal 64.0 parses to
-    array((1 to cfg.planes).map(bb =>
-      dot_d(col("v"), EmbedDedup.planeLit(cfg, bb)) / lit(new java.math.BigDecimal("64.0"))): _*)
   }
 
   // -------------------------------------------------------------- datacard
@@ -286,5 +206,5 @@ object PipelineOps9 {
       .orderBy("doc_id")
   }
 
-  val all: Seq[Probe] = Seq(ded20, sim6, rep2, pipe4)
+  val all: Seq[Probe] = Seq(ded20, rep2, pipe4)
 }

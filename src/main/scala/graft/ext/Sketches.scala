@@ -145,7 +145,7 @@ object Sketches {
   }
 
   // ------------------------------------------------ persisted sketch store
-  // The train-once / query-many regime, the [[BandIndex]] / [[IvfIndex]]
+  // The train-once / query-many regime, the [[BandIndex]] / IVF index
   // pattern applied to count-min cells: a corpus is scanned ONCE into at
   // most 768 cells; later frequency questions read the store, not the
   // text. Cells merge by addition, so shards build independently and

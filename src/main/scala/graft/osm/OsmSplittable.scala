@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Splittable scan of a SINGLE monolithic .osm file — the in-place
-  * alternative to pre-sharding (OsmShard).
+/** Splittable scan of a SINGLE monolithic .osm file.
   *
   * Spark's XML source does not split one file (observed in OsmScaleSpec):
   * a 100 GB .osm is one task. XmlElementInputFormat fixes that at the
@@ -57,10 +56,25 @@ object OsmSplittable {
     def parsed(kind: String, schema: StructType) =
       when(col("raw").isNull, col(kind))
         .when(col("kind") === kind, from_xml(col("raw"), schema))
-    GraftPlanBridge.ofInternalRows(spark, elements.map(scanRow), scanSchema)
+    val frame = GraftPlanBridge.ofInternalRows(spark, elements.map(scanRow), scanSchema)
       .select(col("kind"),
         parsed("node", OsmPipeline.nodeXmlSchema).as("node"),
-        parsed("way", OsmPipeline.wayXmlSchema).as("way"))
+        parsed("way", OsmPipeline.wayXmlSchema).as("way"), col("raw"))
+    // from_xml ends a way's nd array at the first ref it cannot parse
+    // (`ref=""`, `ref="x"`) and drops the nds after it without an error;
+    // the reference's `coerce: int` raises there. A way from_xml parsed
+    // with fewer nds than its `<nd>` children is unparseable: all-null,
+    // which `validated` rejects. Only from_xml's rows are checked.
+    val nds = col("way.nd")
+    val ndTags = regexp_count(
+      regexp_replace(col("raw"), lit("<!--[\\s\\S]*?-->|<!\\[CDATA\\[[\\s\\S]*?]]>"), lit("")),
+      lit("<nd[\\s/>]"))
+    val unparsed = struct(OsmPipeline.wayXmlSchema.fields.toSeq.map(f =>
+      lit(null).cast(f.dataType).as(f.name)): _*)
+    frame.select(col("kind"), col("node"),
+      when(col("raw").isNull || col("kind") =!= "way" ||
+        when(nds.isNull, 0).otherwise(size(nds)) >= ndTags, col("way"))
+        .otherwise(unparsed).as("way"))
   }
 
   private val scanSchema = StructType(Seq(
@@ -98,13 +112,4 @@ object OsmSplittable {
 
   def ways(elements: DataFrame): DataFrame =
     elements.filter(col("kind") === "way").select("way.*")
-
-  /** Drop-in splittable variants of the stock scans. */
-  def readNodesRaw(spark: SparkSession, path: String,
-      maxSplitBytes: Option[Long] = None): DataFrame =
-    nodes(readElements(spark, path, maxSplitBytes))
-
-  def readWaysRaw(spark: SparkSession, path: String,
-      maxSplitBytes: Option[Long] = None): DataFrame =
-    ways(readElements(spark, path, maxSplitBytes))
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{EmbedDedup, Similarity}
+import graft.ext.{EmbedDedup, VectorSearch}
 
 /** Banded sign-LSH embedding dedup: precision is absolute (every returned
   * pair is exact-cosine verified), recall is the declared LSH subset of the
@@ -39,8 +39,7 @@ class EmbedDedupSpec extends SparkSuite {
   test("pairs are a subset of the brute-force pair set; recall is substantial") {
     graft.GraftExtensions.register(spark)
     val tau = 0.35
-    val n = emb.select(col("vec_id"), expr(Similarity.intVec).as("v"))
-      .withColumn("n2", expr("dot_d(v, v)"))
+    val n = VectorSearch.quantized(emb)
     val a = n.select(col("vec_id").as("a_id"), col("v").as("av"), col("n2").as("an2"))
     val b = n.select(col("vec_id").as("b_id"), col("v").as("bv"), col("n2").as("bn2"))
     val brute = a.join(b, col("a_id") < col("b_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.api.Corpus
-import graft.ext.{Dedup, EmbedDedup, PipelineOps7, Sampling, Sketches, TokenLayout}
+import graft.ext.{Dedup, EmbedDedup, PipelineOps7, Sampling, Sketches, TokenLayout, VectorSearch}
 
 /** Empty-input robustness: at 100 TB an operator routinely receives an
   * EMPTY frame (a filter that matched nothing, an empty partition of a
@@ -80,7 +80,7 @@ class EmptyInputSpec extends SparkSuite {
   test("segment dedup, semdedup, fuzzy decontamination on empty inputs") {
     assert(graft.ext.PipelineOps8.segmentDedup(emptyDocs).count() == 0)
     assert(Corpus(emptyDocs).dedupSegments().df.count() == 0)
-    assert(graft.ext.PipelineOps8.semDedup(emptyEmb, tau = 0.35).count() == 0)
+    assert(VectorSearch.semDedup(emptyEmb, tau = 0.35).count() == 0)
     val docs = Tables(spark, "/root/testdata/sf0.001", "documents").limit(10)
     // empty eval set: nothing is contaminated, corpus passes through
     assert(Corpus(docs).decontaminateFuzzy(emptyDocs).df.count() == 10)
@@ -89,14 +89,29 @@ class EmptyInputSpec extends SparkSuite {
   }
 
   test("sketches, spans, PQ on empty inputs") {
-    import graft.ext.{PipelineOps9, Similarity2}
+    import graft.ext.PipelineOps9
     assert(Sketches.countMinCells(emptyDocs).count() == 0)
     assert(Sketches.kmvDistinctBigrams(emptyDocs).count() == 0)
     assert(Sketches.histogramQuantiles(
       emptyDocs.withColumn("n_chars", col("n_chars"))).count() == 0)
     assert(PipelineOps9.dupSpans(emptyDocs).count() == 0)
-    assert(Similarity2.pqTopK(emptyEmb).count() == 0)
-    assert(Similarity2.ivfPqTopK(emptyEmb).count() == 0)
+    assert(VectorSearch.pqTopK(emptyEmb).count() == 0)
+    assert(VectorSearch.ivfPqTopK(emptyEmb).count() == 0)
+  }
+
+  test("IVF index: train, query and append on empty embeddings") {
+    val h = VectorSearch.train(emptyEmb)
+    assert(h.centroids.count() == 0 && h.assignments.count() == 0)
+    assert(VectorSearch.query(h, emptyEmb, k = 5).count() == 0)
+    // an empty shard appended to a real index leaves its assignments as they were
+    val emb = Tables(spark, "/root/testdata/sf0.001", "embeddings")
+    val out = graft.util.TempDirs.scratch("ivf_empty_append")
+    VectorSearch.save(VectorSearch.train(emb), out)
+    def rows() = VectorSearch.load(spark, out).assignments
+      .orderBy("vec_id").collect().map(_.toSeq).toSeq
+    val before = rows()
+    VectorSearch.append(spark, out, emptyEmb)
+    assert(before.nonEmpty && rows() == before)
   }
 
   test("exact gram set + sorted_count_in novelty against an empty release") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.IvfIndex
+import graft.ext.VectorSearch
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index: train/query must reproduce the oracle-checked
@@ -13,8 +13,8 @@ class IvfIndexSpec extends SparkSuite {
 
   test("query(trained index) == x_sim4_ivf_trained (oracle-checked) rows") {
     val emb = Tables(spark, dir, "embeddings")
-    val h = IvfIndex.train(emb)
-    val got = IvfIndex.query(h, emb.filter(col("vec_id") < 5), k = 5)
+    val h = VectorSearch.train(emb)
+    val got = VectorSearch.query(h, emb.filter(col("vec_id") < 5), k = 5)
       .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
     val want = Registry.all.find(_.name == "x_sim4_ivf_trained").get
       .run(spark, dir).collect().map(_.toSeq).toSeq
@@ -26,16 +26,16 @@ class IvfIndexSpec extends SparkSuite {
     val base = emb.filter(col("vec_id") % 2 === 0)
     val shard = emb.filter(col("vec_id") % 2 =!= 0)
     val out = graft.util.TempDirs.scratch("ivf_inc_spec")
-    IvfIndex.save(IvfIndex.train(base), out)
-    IvfIndex.append(spark, out, shard)
-    val appended = IvfIndex.load(spark, out)
+    VectorSearch.save(VectorSearch.train(base), out)
+    VectorSearch.append(spark, out, shard)
+    val appended = VectorSearch.load(spark, out)
     // every vector present exactly once after the append
     val ids = appended.assignments
       .select("vec_id").collect().map(_.getLong(0))
     assert(ids.length == ids.distinct.length)
     assert(ids.toSet == emb.select("vec_id").collect().map(_.getLong(0)).toSet)
     // and query through the appended index matches the oracle-checked probe
-    val got = IvfIndex.query(appended, emb.filter(col("vec_id") < 5), k = 5)
+    val got = VectorSearch.query(appended, emb.filter(col("vec_id") < 5), k = 5)
       .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
     val want = Registry.all.find(_.name == "x_sim9_ivf_incremental").get
       .run(spark, dir).collect().map(_.toSeq).toSeq
@@ -44,14 +44,14 @@ class IvfIndexSpec extends SparkSuite {
 
   test("save/load round trip is lossless and cell-pruned at the scan") {
     val emb = Tables(spark, dir, "embeddings")
-    val h = IvfIndex.train(emb)
+    val h = VectorSearch.train(emb)
     val out = java.nio.file.Files.createTempDirectory("ivf_idx").toString
-    IvfIndex.save(h, out)
-    val loaded = IvfIndex.load(spark, out)
+    VectorSearch.save(h, out)
+    val loaded = VectorSearch.load(spark, out)
 
-    val direct = IvfIndex.query(h, emb.filter(col("vec_id") < 5), k = 5)
+    val direct = VectorSearch.query(h, emb.filter(col("vec_id") < 5), k = 5)
       .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
-    val viaDisk = IvfIndex.query(loaded, emb.filter(col("vec_id") < 5), k = 5)
+    val viaDisk = VectorSearch.query(loaded, emb.filter(col("vec_id") < 5), k = 5)
       .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
     assert(viaDisk == direct)
 

@@ -46,13 +46,13 @@ class OsmScaleSpec extends SparkSuite {
     w.close()
   }
 
-  test("OsmShard preserves non-ASCII UTF-8 bytes (charset-independent)") {
+  test("process preserves non-ASCII UTF-8 bytes end to end (charset-independent)") {
     // Real OSM is full of multi-byte names; with the platform default
     // charset (US-ASCII when LANG is unset) these were mangled to '?'.
     val dir = Files.createTempDirectory("osm_utf8").toString
     val xml = s"$dir/utf8.osm"
     val names = Seq("Café Señorial", "Große Straße", "北京烤鸭", "Łódź–Żoliborz")
-    val w = Files.newBufferedWriter(Paths.get(xml), java.nio.charset.StandardCharsets.UTF_8)
+    val w = Files.newBufferedWriter(Paths.get(xml), UTF_8)
     w.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n")
     names.zipWithIndex.foreach { case (n, i) =>
       w.write(s"""  <node id="${i + 1}" lat="30.1" lon="-97.1" version="1" timestamp="2016-01-01T00:00:00Z" changeset="1" uid="1" user="u">
@@ -63,16 +63,14 @@ class OsmScaleSpec extends SparkSuite {
     w.write("</osm>\n")
     w.close()
 
-    val cut = s"$dir/cut"
-    val shards = graft.osm.OsmShard.shard(xml, cut, 1L) // 1 byte/shard: one node per shard
-    assert(shards.length == names.length)
-    // byte-level: every multi-byte name survives the shard pass verbatim
-    val shardText = shards.map(p =>
-      new String(Files.readAllBytes(Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8))
-      .mkString("\n")
-    names.foreach(n => assert(shardText.contains(n), s"mangled: $n"))
-    // end-to-end: the Spark scan over shards yields the exact values
-    val t = OsmPipeline.process(spark, s"$cut/*.osm")
+    // splits far smaller than one element: boundaries fall inside the
+    // multi-byte names, and each element is still read whole
+    for (split <- Seq(Some(7L), None)) {
+      val got = OsmSplittable.nodes(OsmSplittable.readElements(spark, xml, split))
+        .select(col("tag").getItem(0).getField("_v")).collect().map(_.getString(0)).toSet
+      assert(got == names.toSet, s"split=$split")
+    }
+    val t = OsmPipeline.process(spark, xml)
     val got = t.nodeTags.filter(t.nodeTags("key") === "name")
       .select("value").collect().map(_.getString(0)).toSet
     assert(got == names.toSet)
@@ -112,7 +110,7 @@ class OsmScaleSpec extends SparkSuite {
 
     // force many small splits on the ONE file
     val split = Some(1024L * 1024)
-    val nodes = graft.osm.OsmSplittable.readNodesRaw(spark, xml, split)
+    val nodes = OsmSplittable.nodes(OsmSplittable.readElements(spark, xml, split))
     assert(nodes.rdd.getNumPartitions >= 8,
       s"single file did not split: ${nodes.rdd.getNumPartitions} partitions")
     assert(nodes.count() == nNodes)
@@ -126,7 +124,7 @@ class OsmScaleSpec extends SparkSuite {
     // ways: start tags sparse and clustered at the file tail — exactly the
     // case where naive delimiter records blow up; here each split just
     // finds no start tag and returns empty, and counts still agree
-    val ways = graft.osm.OsmSplittable.readWaysRaw(spark, xml, split)
+    val ways = OsmSplittable.ways(OsmSplittable.readElements(spark, xml, split))
     assert(ways.count() == nWays)
     assert(ways.select("_id").orderBy("_id").collect().map(_.getLong(0)).toSeq ==
       OsmPipeline.readWaysRaw(spark, xml).select("_id").orderBy("_id")
@@ -189,8 +187,7 @@ class OsmScaleSpec extends SparkSuite {
     w.close()
 
     for (splitBytes <- Seq(64L, 97L, 256L, 1000L)) {
-      val got = graft.osm.OsmSplittable
-        .readNodesRaw(spark, xml, Some(splitBytes))
+      val got = OsmSplittable.nodes(OsmSplittable.readElements(spark, xml, Some(splitBytes)))
         .select("_id").collect().map(_.getLong(0)).sorted.toSeq
       assert(got == (1L to 200L), s"splitBytes=$splitBytes: got ${got.length} ids")
     }
@@ -232,7 +229,7 @@ class OsmScaleSpec extends SparkSuite {
     val stock = rows(OsmPipeline.readNodesRaw(spark, xml))
     assert(stock.length == 60)
     for (split <- Seq(Some(64L * 1024), Some(1L << 20), Some(3L << 20), None)) {
-      val got = rows(graft.osm.OsmSplittable.readNodesRaw(spark, xml, split))
+      val got = rows(OsmSplittable.nodes(OsmSplittable.readElements(spark, xml, split)))
       assert(got == stock, s"split=$split: ${got.length} rows")
     }
   }
@@ -382,7 +379,7 @@ class OsmScaleSpec extends SparkSuite {
     val bytes = Files.size(Paths.get(xml))
     assert(bytes > 10L * 1000 * 1000 && bytes < 16L * 1000 * 1000, s"$bytes bytes")
 
-    val nodes = graft.osm.OsmSplittable.readNodesRaw(spark, xml)
+    val nodes = OsmSplittable.nodes(OsmSplittable.readElements(spark, xml))
     val n = nodes.rdd.getNumPartitions
     val text = spark.read.text(xml).rdd.getNumPartitions
     assert(n > 1, s"single file did not split: $n partitions")
@@ -424,8 +421,9 @@ class OsmScaleSpec extends SparkSuite {
       assert(badZips == 0)
 
       // SCALE CAVEAT (observed): Spark's XML source does NOT split a single
-      // file — one 100 GB .osm would be one task. Mitigation 1: pre-sharded
-      // landing zone (many files → per-file parallelism). Demonstrated:
+      // file — one 100 GB .osm would be one task (OsmSplittable, the
+      // default scan, splits it). Mitigation 1: pre-sharded landing zone
+      // (many files → per-file parallelism). Demonstrated:
       val shards = s"$dir/shards"
       Files.createDirectories(Paths.get(shards))
       (0 until 4).foreach { s =>
@@ -435,19 +433,6 @@ class OsmScaleSpec extends SparkSuite {
       assert(sharded.rdd.getNumPartitions >= 4,
         s"expected >=4 partitions over 4 shards, got ${sharded.rdd.getNumPartitions}")
       assert(sharded.count() == (nNodes / 20) * 4L)
-
-      // Mitigation 2: OsmShard — one constant-memory pass cuts the
-      // monolith into element-aligned shards; the full pipeline over the
-      // shard directory must agree exactly with the single-file run.
-      val cut = s"$dir/cut"
-      val shardPaths = graft.osm.OsmShard.shard(xml, cut, 4L * 1024 * 1024)
-      assert(shardPaths.length >= 8, s"expected >=8 shards, got ${shardPaths.length}")
-      val ts = OsmPipeline.process(spark, s"$cut/*.osm")
-      assert(ts.nodes.count() == nNodes)
-      assert(ts.nodeTags.count() == nNodes * 3L)
-      assert(ts.ways.count() == nWays)
-      assert(ts.wayNodes.count() == nWays * 2L)
-      assert(OsmPipeline.readNodesRaw(spark, s"$cut/*.osm").rdd.getNumPartitions >= 8)
     } finally {
       spark.conf.unset("spark.sql.files.maxPartitionBytes")
     }

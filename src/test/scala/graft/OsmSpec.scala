@@ -140,6 +140,29 @@ class OsmSpec extends SparkSuite {
     } finally graft.util.TempDirs.deleteRecursively(dir)
   }
 
+  test("a way whose nd list from_xml cannot finish fails validation instead of losing nds") {
+    // from_xml's array parse stops at the first unparseable ref: for nds
+    // 1, "", 2, <nd/>, 1 the way read as ONE nd and `validated` passed.
+    // The reference's cerberus `coerce: int` raises on such a ref.
+    val dir = java.nio.file.Files.createTempDirectory("osm_bad_nd")
+    try for ((bad, i) <- Seq("<nd ref=\"\"/>", "<nd ref=\"x\"/>").zipWithIndex) {
+      val xml = dir.resolve(s"nd$i.osm")
+      java.nio.file.Files.write(xml, ("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n" +
+        "<osm version=\"0.6\">\n" +
+        "  <way id=\"9\" version=\"1\" timestamp=\"2016-01-01T00:00:00Z\" changeset=\"1\"" +
+        " uid=\"1\" user=\"u\">\n" +
+        s"    <nd ref=\"1\"/>\n    $bad\n    <nd ref=\"2\"/>\n    <nd/>\n    <nd ref=\"1\"/>\n" +
+        "  </way>\n</osm>\n").getBytes("UTF-8"))
+      val t = OsmPipeline.process(spark, xml.toString)
+      // no truncated nd list: one all-null way row, and no nds
+      assert(t.ways.collect().toSeq == Seq(Row(Seq.fill(6)(null): _*)), bad)
+      assert(t.wayNodes.count() == 0, bad)
+      val e = intercept[Exception](OsmPipeline.validated(t).ways.count())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("validation failed: ways.id is null")), bad)
+    } finally graft.util.TempDirs.deleteRecursively(dir)
+  }
+
   test("CSV round-trip preserves rows, column order, and typed values") {
     val dir = java.nio.file.Files.createTempDirectory("osm_csv").toString
     OsmPipeline.writeCsv(t, dir)

@@ -202,8 +202,7 @@ class PipelineOps10Spec extends SparkSuite {
       assert(r.getLong(1) + r.getLong(2) == counts(r.getLong(0)))
     }
     // and the planted identical-halves case: drift exactly 0 per label
-    val iv = dup.select($"vec_id", $"label",
-      expr(graft.ext.Similarity.intVec).as("v"))
+    val iv = graft.ext.VectorSearch.quantized(dup, "label")
     val c = iv.select($"label", ($"vec_id" % 2).as("side"), posexplode($"v").as(Seq("i0", "x")))
       .groupBy($"label", $"side", $"i0").agg(sum($"x").as("s"), count(lit(1)).as("n"))
     val a = c.filter($"side" === 0).select($"label", $"i0", ($"s" / $"n").as("ma"))

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{EmbedDedup, EmbedLsh, PipelineOps9, Sketches}
+import graft.ext.{EmbedDedup, EmbedLsh, PipelineOps9, Sketches, VectorSearch}
 
 /** KMV sketch (merge property, exact-below-k), duplicated spans (planted
   * fixtures), JL projection (self-similarity, sign agreement with the LSH
@@ -161,21 +161,20 @@ class PipelineOps9Spec extends SparkSuite {
 
   test("JL projection: identical vectors project identically; cos_proj(self-clone) = 1") {
     val cfg = EmbedLsh(dims = 64, planes = 16)
-    val emb = Tables(spark, dir, "embeddings").limit(20)
-      .select(col("vec_id"), expr(graft.ext.Similarity.intVec).as("v"))
-      .withColumn("p", PipelineOps9.jlProject(cfg))
+    val emb = VectorSearch.quantized(Tables(spark, dir, "embeddings").limit(20))
+      .withColumn("p", VectorSearch.jlProject(cfg))
     val rows = emb.select(col("vec_id"), col("p")).collect()
     assert(rows.forall(_.getSeq[Double](1).length == 16))
     // projection is a pure function of v: re-computing must match exactly
-    val again = emb.select(col("vec_id"), PipelineOps9.jlProject(cfg).as("p2")).collect()
+    val again = emb.select(col("vec_id"), VectorSearch.jlProject(cfg).as("p2")).collect()
     assert(rows.map(_.getSeq[Double](1)).toSeq == again.map(_.getSeq[Double](1)).toSeq)
   }
 
   test("JL projection signs equal the LSH sign bits (shared hyperplane matrix)") {
     val cfg = EmbedLsh(dims = 64, planes = 16)
     val emb = Tables(spark, dir, "embeddings").limit(50)
-    val proj = emb.select(col("vec_id"), expr(graft.ext.Similarity.intVec).as("v"))
-      .withColumn("p", PipelineOps9.jlProject(cfg))
+    val proj = VectorSearch.quantized(emb)
+      .withColumn("p", VectorSearch.jlProject(cfg))
       .select(col("vec_id"), expr("transform(p, x -> CASE WHEN x > 0 THEN 1 ELSE 0 END)").as("sp"))
     val bits = EmbedDedup.signatures(emb, cfg).select(col("vec_id"), col("bits"))
     val joined = proj.join(bits, "vec_id").collect()

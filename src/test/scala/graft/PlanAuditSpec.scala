@@ -457,6 +457,16 @@ class PlanAuditSpec extends SparkSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("x_sim2: bucket signatures are one narrow projection — no generator") {
+    // the 8 sign planes are dot products against literal rows, not an
+    // 8 × 64-row explode per vector
+    val df = SparkEntry.queries("x_sim2_lsh_buckets")(spark, "/root/testdata/sf0.001")
+    df.write.format("noop").mode("overwrite").save()
+    val gens = nodes(df.queryExecution.executedPlan)
+      .collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+    assert(gens.isEmpty, gens.map(_.simpleString(400)).mkString("\n"))
+  }
+
   test("x_ded19: cell assignment broadcasts centroids; within-cell join is keyed by cell") {
     val df = SparkEntry.queries("x_ded19_semdedup")(spark, "/root/testdata/sf0.001")
     df.write.format("noop").mode("overwrite").save()

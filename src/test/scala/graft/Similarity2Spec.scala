@@ -23,8 +23,7 @@ class Similarity2Spec extends SparkSuite {
 
   test("PQ ADC top-5 substantially overlaps the exact-L2 top-5") {
     graft.GraftExtensions.register(spark)
-    val iv = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), expr(graft.ext.Similarity.intVec).as("v"))
+    val iv = graft.ext.VectorSearch.quantized(Tables(spark, dir, "embeddings"))
     val q = iv.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
     val c = iv.select(col("vec_id").as("c_id"), col("v").as("cv"))
